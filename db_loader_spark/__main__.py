@@ -169,7 +169,6 @@ def main(argv: list[str] | None = None) -> int:
 
     from db_loader_spark.plans.clojush import parse_clojush_logs
     from db_loader_spark.session import get_spark
-    from db_loader_spark.sinks.csv_sink import write_csv_table
 
     path = normalize_path(argmap["filename"])
     if path.endswith((".tgz", ".tar.gz")):
@@ -184,10 +183,9 @@ def main(argv: list[str] | None = None) -> int:
     cfg = save_config(config_path, cfg, argmap.get("problemname"))
 
     spark = get_spark("db_loader_cli")
-    # persist_shared: the four sink writes below each materialize a
-    # table derived from ONE routed line frame — without it, listing +
-    # gzip decode + the sessionize window run once per table (4× the
-    # scan work; measured 4.6 → 3.8 s on the e2e fixture).
+    # persist_shared: the four writes below all derive from ONE routed
+    # line frame; the eager checkpoint scans, decodes and routes it once
+    # instead of once per table.
     tables = parse_clojush_logs(
         spark,
         path,
@@ -198,74 +196,60 @@ def main(argv: list[str] | None = None) -> int:
         persist_shared=True,
     )
     shared_lines = tables.pop("_shared")
+    try:
+        # S5/JN5: auto-detect the EDN sidecar index next to the logs and
+        # append its argmap rows to the experiment EAV table, keyed by the
+        # uuid embedded in each filename (src/db_loader.clj:332-336,282-292).
+        p = Path(path)
+        index_file = (p if p.is_dir() else p.parent) / "index.clj"
+        if index_file.exists():
+            from db_loader_spark.plans.clojush import append_sidecar_params
 
-    # S5/JN5: auto-detect the EDN sidecar index next to the logs and
-    # append its argmap rows to the experiment EAV table, keyed by the
-    # uuid embedded in each filename (src/db_loader.clj:332-336,282-292).
-    p = Path(path)
-    index_file = (p if p.is_dir() else p.parent) / "index.clj"
-    if index_file.exists():
-        from db_loader_spark.plans.clojush import append_sidecar_params
-        from pyspark.sql import functions as F
+            tables["experiment"] = append_sidecar_params(
+                spark, tables["experiment"], tables["experiments"], str(index_file)
+            )
+            print(f"joined sidecar index {index_file}")
 
-        file_ids = tables["experiments"].select(
-            F.col("logfile_location").alias("file"), "id"
-        )
-        tables["experiment"] = append_sidecar_params(
-            spark, tables["experiment"], file_ids, str(index_file)
-        )
-        print(f"joined sidecar index {index_file}")
+        jdbc_url = argmap.get("jdbc-url")
+        if jdbc_url:
+            from db_loader_spark.sinks.jdbc_sink import jdbc_write
 
-    jdbc_url = argmap.get("jdbc-url")
-    if jdbc_url:
-        from db_loader_spark.sinks.jdbc_sink import jdbc_write
+            for name in TABLE_NAMES:
+                jdbc_write(tables[name], jdbc_url, name)
+                print(f"loaded {name} via jdbc")
+        else:
+            _append_all(spark, tables, csv_dir)
+    finally:
+        from db_loader_spark.cache import free_local_checkpoint
 
-        for name in TABLE_NAMES:
-            jdbc_write(tables[name], jdbc_url, name)
-            print(f"loaded {name} via jdbc")
-    else:
-        # First write alone: its job materializes the shared lazy
-        # checkpoint (concurrent first actions on an unmaterialized
-        # lazy checkpoint would each recompute the scan pipeline).
-        # The remaining three are then independent single-table jobs
-        # over the checkpointed blocks, each appending to its own
-        # disjoint dir — submit them from a small thread pool (guide
-        # §2.6 "overlap independent jobs") so one job's straggler tail
-        # back-fills with the next job's tasks instead of idling the
-        # executors. FIFO scheduling gives exactly that back-fill.
-        # (The JDBC branch above stays sequential: one remote DB, and
-        # the streaming ingest's per-epoch loop also stays sequential
-        # because its pluggable publish callback may assume order.)
-        # Appends were never atomic ACROSS tables (a mid-loop failure
-        # always left earlier tables appended); overlap widens that
-        # window to in-flight siblings of a failed write — same
-        # recovery either way: fix the cause, ':clean', re-run.
-        def _append(name: str) -> str:
-            dest = str(Path(csv_dir) / name)
-            write_csv_table(tables[name], dest)
-            return f"appended {name} -> {dest}"
-
-        first, *rest = TABLE_NAMES
-        print(_append(first))
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        # inheritable_thread_target: under py4j's pinned-thread mode
-        # (the PySpark default) a plain Python thread's paired JVM
-        # thread outlives it — repeated in-process main() calls (the
-        # bench, the test suite) would accumulate ~3 JVM threads per
-        # run. The wrapper ties the connection to the Python thread's
-        # lifetime (and inherits the JVM-thread-local properties).
-        # Session-aware form (ADVICE r15): the bare-callable form
-        # neither propagates session tags to the pooled threads nor
-        # stays quiet about it (a UserWarning per CSV-mode run).
-        with ThreadPoolExecutor(max_workers=len(rest)) as pool:
-            for msg in pool.map(inheritable_thread_target(spark)(_append), rest):
-                print(msg)
-    del shared_lines  # checkpoint blocks reclaimed via ContextCleaner
+        free_local_checkpoint(shared_lines)
     return 0
+
+
+def _append_all(spark, tables: dict, csv_dir: str) -> None:
+    """Append the four tables to their CSV dirs at the same time.
+
+    Each is a single-stage job over the already materialized checkpoint,
+    appending to its own dir, so running them from a small thread pool
+    lets one job's straggler tail back-fill with the others' tasks
+    instead of idling the executors. The JDBC branch stays sequential:
+    one remote DB. Appends were never atomic ACROSS tables (a failure
+    always left earlier tables appended); running them together widens
+    that to in-flight siblings of a failed write — same recovery either
+    way: fix the cause, ':clean', re-run."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from db_loader_spark.session import thread_target
+    from db_loader_spark.sinks.csv_sink import write_csv_table
+
+    def append(name: str) -> str:
+        dest = str(Path(csv_dir) / name)
+        write_csv_table(tables[name], dest)
+        return f"appended {name} -> {dest}"
+
+    with ThreadPoolExecutor(max_workers=len(TABLE_NAMES)) as pool:
+        for msg in pool.map(thread_target(spark, append), TABLE_NAMES):
+            print(msg)
 
 
 if __name__ == "__main__":

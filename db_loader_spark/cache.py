@@ -120,23 +120,23 @@ def release() -> int:
 
 
 def free_local_checkpoint(df: DataFrame) -> None:
-    """Release a SUPERSEDED lazy ``localCheckpoint`` frame's storage
-    blocks NOW instead of waiting for the ContextCleaner to GC the
-    Python/JVM references (guide §5; VERDICT r15 #3: the iterative
-    fixpoint loops — connected components, BPE training — otherwise
-    keep every round's checkpoint blocks live until the cleaner gets
-    around to them, which at 100 TB label/vocab sizes is real executor
-    storage pressure growing with the round count).
+    """Release a ``localCheckpoint`` frame's storage blocks NOW instead
+    of waiting for the ContextCleaner to GC the Python/JVM references
+    (guide §5). Iterative fixpoint loops (connected components, BPE
+    training) would otherwise keep every round's checkpoint live until
+    the cleaner gets around to it — storage that grows with the round
+    count — and a loader would hold its shared line frame past its
+    writes.
 
     ``df`` must be a frame returned by ``DataFrame.localCheckpoint``
     whose data is no longer needed: the unpersist truncates it
-    irrecoverably (locally checkpointed RDDs drop their lineage), so
-    callers only pass round k-1's frame AFTER round k's checkpoint has
-    materialized. Best-effort by design — the analyzed plan of a
-    checkpointed frame is a ``LogicalRDD`` whose ``rdd()`` accessor is
-    internal API; if the reach-through ever fails on a future Spark,
-    the ContextCleaner remains the (lazy) backstop, exactly the
-    pre-r16 behavior."""
+    irrecoverably (locally checkpointed RDDs drop their lineage), so a
+    loop only passes round k-1's frame AFTER round k's checkpoint has
+    materialized, and a loader only after its last write. Best-effort
+    by design — the analyzed plan of a checkpointed frame is a
+    ``LogicalRDD`` whose ``rdd()`` accessor is internal API; if the
+    reach-through ever fails on a future Spark, the ContextCleaner
+    remains the (lazy) backstop."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:

@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from db_loader_spark.session import local_frame
+
 END_OF_WORD = "</w>"
 
 MERGE_SCHEMA = StructType(
@@ -173,4 +175,4 @@ def bpe_train(
         vocab = vocab.select(
             "word", "freq", F.expr(_apply_merge("syms", lhs, rhs)).alias("syms")
         ).localCheckpoint(eager=False)
-    return spark.createDataFrame(merges, MERGE_SCHEMA), vocab
+    return local_frame(spark, merges, MERGE_SCHEMA), vocab

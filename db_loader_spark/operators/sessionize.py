@@ -67,24 +67,20 @@ def route_sections(
 ) -> DataFrame:
     """J2: tag each row with its section's kind:
     header (first section) / summary (last) / generation (has marker) /
-    noise. One small per-(file,section) aggregate broadcast back on."""
+    noise. Pure window columns over ``(file, section_id)`` and
+    ``(file)``: the per-file hash partitioning that :func:`seq_split`
+    already needs satisfies both, so routing adds no exchange and
+    scans the input once."""
     per_file = W.partitionBy(file_col)
-    sec = (
-        sectioned.groupBy(file_col, "section_id")
-        .agg(F.max(F.col(line_col).rlike(marker).cast("int")).alias("has_marker"))
-        .withColumn("min_sec", F.min("section_id").over(per_file))
-        .withColumn("max_sec", F.max("section_id").over(per_file))
-        .select(
-            file_col,
-            "section_id",
-            F.when(F.col("section_id") == F.col("min_sec"), "header")
-            .when(F.col("section_id") == F.col("max_sec"), "summary")
-            .when(F.col("has_marker") == 1, "generation")
-            .otherwise("noise")
-            .alias("section_kind"),
-        )
+    per_section = W.partitionBy(file_col, "section_id")
+    has_marker = F.max(F.col(line_col).rlike(marker)).over(per_section)
+    return sectioned.withColumn(
+        "section_kind",
+        F.when(F.col("section_id") == F.min("section_id").over(per_file), "header")
+        .when(F.col("section_id") == F.max("section_id").over(per_file), "summary")
+        .when(has_marker, "generation")
+        .otherwise("noise"),
     )
-    return sectioned.join(sec, [file_col, "section_id"])
 
 
 def merge_continuations(

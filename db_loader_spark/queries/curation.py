@@ -253,7 +253,7 @@ def curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _curation_e2e_sized(spark, sf_dir, D, TX, PACK_BUDGET, pack_doc_bins) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    from db_loader_spark.session import thread_target
 
     docs = load_table(spark, sf_dir, "documents")
     is_bench = F.expr("substring(md5(CAST(doc_id AS STRING)), 1, 1) = '0'")
@@ -272,7 +272,7 @@ def _curation_e2e_sized(spark, sf_dir, D, TX, PACK_BUDGET, pack_doc_bins) -> Dat
     bench_sh, sizing = D.eval_shingle_side(bench, n=3)
     pool = ThreadPoolExecutor(max_workers=1)
     try:
-        sizing_fut = pool.submit(inheritable_thread_target(spark)(sizing.first))
+        sizing_fut = pool.submit(thread_target(spark, sizing.first))
 
         # stage 1: exact dedup (reuse the operator, same keep policy)
         keep1 = D.exact_duplicates(corpus).select(F.col("keep_id").alias("doc_id"))

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from db_loader_spark.queries import QuerySpec
+from db_loader_spark.session import local_frame
 from db_loader_spark.tables import load_table
 
 
@@ -473,11 +474,10 @@ def _e2e_cli_run(spark, stage, out, main) -> DataFrame:
                 F.sum(F.col("value").cast("bigint")).alias("sum_cents"),
             )
         )
-        rows = agg.collect()
-        schema = agg.schema
+        table = agg.toArrow()
     finally:
         shutil.rmtree(out, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, table)
 
 
 _E2E_CLI_ORACLE = f"""

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from db_loader_spark.queries import QuerySpec
+from db_loader_spark.session import local_frame
 from db_loader_spark.tables import load_table
 
 
@@ -374,8 +375,8 @@ def jn2_contains_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastNestedLoopJoin (the only correct physical shape for a
     non-equi predicate with a tiny side)."""
     d = _t(spark, sf_dir, "documents")
-    words = spark.createDataFrame(
-        [("spark",), ("window",), ("join",), ("vector",)], ["word"]
+    words = local_frame(
+        spark, [("spark",), ("window",), ("join",), ("vector",)], "word string"
     )
     return (
         d.join(F.broadcast(words), F.col("text").contains(F.col("word")))

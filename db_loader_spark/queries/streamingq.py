@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from db_loader_spark.queries import QuerySpec
+from db_loader_spark.session import local_frame
 
 # Scratch+rename stage installation — shared implementation in
 # db_loader_spark/staging.py since the r11 review found the same
@@ -254,12 +255,11 @@ def t_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rows; the per-call checkpoint + epoch copies of events would
         # otherwise accumulate unbounded /tmp debris across bench and
         # driver runs.
-        rows = agg.collect()
-        schema = agg.schema
+        table = agg.toArrow()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(run_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, table)
 
 
 _STREAM_DEDUP_ORACLE = """
@@ -364,12 +364,11 @@ def t_stream_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize before deleting the run dir (same contract as
         # t_stream_dedup): the pair set is overlap-sized, not corpus
         # -sized, so the collect is bounded
-        rows = out.collect()
-        schema = out.schema
+        table = out.toArrow()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(run_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, table)
 
 
 def _stream_signatures_oracle() -> str:
@@ -474,12 +473,11 @@ def t_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize the (≤5-row) aggregate before removing the run dir
         # (same contract as t_stream_dedup): no lazy dependence on files
         # we are about to delete, no /tmp debris across runs
-        rows = agg.collect()
-        schema = agg.schema
+        table = agg.toArrow()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(run_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, table)
 
 
 def t_stream_mview(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,12 +548,11 @@ def t_stream_mview(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rk") == 1)
             .select("user_id", "n_events", "sum_value")
         )
-        rows = view.collect()
-        schema = view.schema
+        table = view.toArrow()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(run_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, table)
 
 
 _STREAM_MVIEW_ORACLE = """
@@ -804,12 +801,11 @@ def t_stream_lakehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        rows = agg.collect()
-        schema = agg.schema
+        table = agg.toArrow()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(run_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, table)
 
 
 _STREAM_LAKEHOUSE_ORACLE = """
@@ -883,12 +879,11 @@ def t_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("neighbor_id").cast("long").alias("sum_id"),
             )
         )
-        rows = agg.collect()  # cell-count-sized (16 cells)
-        schema = agg.schema
+        table = agg.toArrow()  # cell-count-sized (16 cells)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(run_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, table)
 
 
 def _stream_ann_index_oracle() -> str:

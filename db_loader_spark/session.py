@@ -9,10 +9,22 @@ Arrow — are the ones you would ship to a 1000-executor cluster. Only
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def usable_cpus() -> int:
+    """Cores this process may run on (its affinity mask, which honours
+    container CPU sets), not the host's core count."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # platforms without sched_getaffinity
+        return os.cpu_count() or 1
+
+
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(usable_cpus())
 
 
 def get_spark(app_name: str = "db_loader_spark", cpus: str | None = None) -> SparkSession:
@@ -26,7 +38,7 @@ def get_spark(app_name: str = "db_loader_spark", cpus: str | None = None) -> Spa
     - Session timezone pinned to UTC so timestamps agree with
       UTC-naive parquet/DuckDB semantics.
     """
-    cpus = cpus or _DEFAULT_CPUS
+    cpus = cpus or DEFAULT_CPUS
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -62,6 +74,50 @@ def get_spark(app_name: str = "db_loader_spark", cpus: str | None = None) -> Spa
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType | None = None) -> DataFrame:
+    """Driver-side rows → a DataFrame that plans as a ``LocalRelation``.
+
+    ``rows`` is a sequence of tuples in ``schema`` order (a DDL string
+    or StructType), or a ``pyarrow.Table`` such as ``df.toArrow()``,
+    which carries its own schema. ``createDataFrame`` over a Python
+    list plans as a ``LogicalRDD`` whose every use runs a stage on
+    Python workers; an Arrow table becomes a ``LocalRelation`` held in
+    the JVM, whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    says, so no use of it starts a Python worker. Naive datetimes are
+    read as UTC."""
+    import pyarrow as pa
+
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows)
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table)
+
+
+def thread_target(spark: SparkSession, fn: Callable) -> Callable:
+    """``fn`` wrapped to run Spark actions from a pool thread.
+
+    Under py4j's pinned-thread mode (the PySpark default) each Python
+    thread gets its own JVM thread; ``inheritable_thread_target`` ties
+    that JVM thread's lifetime to the Python thread (repeated in-process
+    runs would otherwise leak JVM threads) and carries the session's
+    local properties and tags over. With ``PYSPARK_PIN_THREAD=false``
+    PySpark hands the session back unwrapped instead of a decorator, so
+    ``fn`` runs as it is."""
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)
 
 
 def stop_spark() -> None:

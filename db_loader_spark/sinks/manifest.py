@@ -80,6 +80,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from db_loader_spark.session import local_frame
+
 _DATA = "data"
 _MANIFESTS = "_manifests"
 _CURRENT = "_CURRENT"
@@ -507,7 +509,7 @@ def _dv_anti_join(
     if len(rels) <= _DV_ISIN_MAX:
         dv = dv.where(F.col("f").isin(rels))
     else:
-        scanned = spark.createDataFrame([(r,) for r in rels], "f string")
+        scanned = local_frame(spark, [(r,) for r in rels], "f string")
         dv = dv.join(F.broadcast(scanned), "f", "left_semi")
     return ann.join(
         dv, (F.col(rc) == dv["f"]) & (F.col(pc) == dv["pos"]), "left_anti"

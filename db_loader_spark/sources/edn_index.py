@@ -7,7 +7,8 @@ joins it to log files by the uuid embedded in the filename.
 EDN is driver-side config-scale data (one small file per log folder),
 so we parse it in plain Python — a from-scratch subset parser for
 maps/vectors/strings/numbers/keywords/bools/nil — and hand Spark a
-small DataFrame to broadcast-join (JN5). No Clojure dependency, no UDF.
+small JVM-local DataFrame to broadcast-join (JN5). No Clojure
+dependency, no UDF.
 """
 
 from __future__ import annotations
@@ -114,4 +115,6 @@ def read_edn_index(spark: SparkSession, index_path: str) -> DataFrame:
         uuid = str(cm.get("uuid", ""))
         for k, v in (cm.get("argmap") or {}).items():
             rows.append((uuid, str(k), render(v)))
-    return spark.createDataFrame(rows, "uuid string, parameter string, value string")
+    from db_loader_spark.session import local_frame
+
+    return local_frame(spark, rows, "uuid string, parameter string, value string")

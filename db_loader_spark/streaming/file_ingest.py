@@ -28,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from db_loader_spark.cache import free_local_checkpoint
 from db_loader_spark.plans.clojush import parse_clojush_lines
 from db_loader_spark.sources.text_logs import number_lines
 
@@ -48,7 +49,9 @@ def stream_log_tables(
 
     Default publish appends parquet under ``out_dir/<table>``; pass
     ``publish(table_name, df, epoch_id)`` to route to JDBC
-    (sinks.jdbc_sink) or anywhere else. Returns the StreamingQuery.
+    (sinks.jdbc_sink) or anywhere else. ``publish`` must finish with
+    ``df`` before it returns: the batch's line checkpoint is freed once
+    all four tables are published. Returns the StreamingQuery.
     """
 
     raw = (
@@ -66,26 +69,28 @@ def stream_log_tables(
         if not batch_df.take(1):
             return
         lines = number_lines(batch_df)
-        # persist_shared: the four per-epoch writes below would each
-        # re-run the sessionize window over this batch's lines (same
-        # 4×-scan fold as the CLI write loop, __main__.main)
+        # persist_shared: the four per-epoch writes below all derive
+        # from one routed line frame (same fold as the CLI, __main__.main)
         tables = parse_clojush_lines(
             batch_df.sparkSession, lines, persist_shared=True, **parse_kwargs
         )
-        tables.pop("_shared")  # blocks reclaimed via ContextCleaner at batch end
-        for name in TABLE_NAMES:
-            df = tables[name]
-            if publish is not None:
-                publish(name, df, epoch_id)
-            else:
-                # Idempotent under foreachBatch's at-least-once retries:
-                # each epoch owns a partition dir it OVERWRITES, so a
-                # replayed epoch (crash between tables, before the
-                # checkpoint commit) replaces its own half-written
-                # output instead of appending duplicates (T2/T5).
-                df.write.mode("overwrite").parquet(
-                    os.path.join(out_dir, name, f"epoch={epoch_id}")
-                )
+        shared = tables.pop("_shared")
+        try:
+            for name in TABLE_NAMES:
+                df = tables[name]
+                if publish is not None:
+                    publish(name, df, epoch_id)
+                else:
+                    # Idempotent under foreachBatch's at-least-once retries:
+                    # each epoch owns a partition dir it OVERWRITES, so a
+                    # replayed epoch (crash between tables, before the
+                    # checkpoint commit) replaces its own half-written
+                    # output instead of appending duplicates (T2/T5).
+                    df.write.mode("overwrite").parquet(
+                        os.path.join(out_dir, name, f"epoch={epoch_id}")
+                    )
+        finally:
+            free_local_checkpoint(shared)
 
     writer = raw.writeStream.option("checkpointLocation", checkpoint_dir).foreachBatch(
         process_batch

@@ -37,7 +37,8 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from db_loader_spark.session import DEFAULT_CPUS as cpus
+
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("gap-probe")

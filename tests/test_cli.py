@@ -162,3 +162,59 @@ def test_cli_sql_tsv_escaping(spark, tmp_path, capsys):
     assert len(lines) == 2
     assert all(len(ln.split("\t")) == 3 for ln in lines)
     assert lines[1].split("\t") == ["1", "a b c", "plain"]
+
+
+def test_cli_releases_shared_checkpoint(spark, tmp_path):
+    """The load's shared line checkpoint is freed when main() returns,
+    not whenever the ContextCleaner gets to it: no RDD blocks outlive
+    the run."""
+    log = tmp_path / "run_u1.log"
+    log.write_text(LOG)
+
+    def stored() -> set[int]:
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = stored()
+    assert main([":filename", str(log), ":csv-dir", str(tmp_path / "csv")]) == 0
+    assert stored() - before == set()
+
+
+_PIN_OFF_SCRIPT = """\
+import sys
+sys.path.insert(0, {repo!r})
+from db_loader_spark.__main__ import main
+from db_loader_spark.session import get_spark, thread_target
+rc = main([":filename", {log!r}, ":csv-dir", {out!r}, ":config", {cfg!r}])
+assert thread_target(get_spark(), lambda: 7)() == 7
+sys.exit(rc)
+"""
+
+
+def test_cli_write_pool_with_pinned_threads_off(tmp_path):
+    """With PYSPARK_PIN_THREAD=false PySpark's inheritable_thread_target
+    returns the session instead of a decorator; the CLI's write pool
+    (and curation's sizing thread, same helper) must still run."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    log = tmp_path / "run_u1.log"
+    log.write_text(LOG)
+    out = tmp_path / "csv"
+    script = _PIN_OFF_SCRIPT.format(
+        repo=repo, log=str(log), out=str(out), cfg=str(tmp_path / "cfg.edn")
+    )
+    env = {
+        **os.environ,
+        "PYSPARK_PIN_THREAD": "false",
+        "SPARK_GRAFT_CPUS": "2",
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=300, cwd=str(tmp_path), env=env,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    for name in ("experiments", "experiment", "generations", "summary"):
+        assert any((out / name).glob("part-*")), name

@@ -6,7 +6,6 @@ from __future__ import annotations
 import pytest
 
 from db_loader_spark.plans.clojush import append_sidecar_params, parse_clojush_logs
-from db_loader_spark.sources.text_logs import read_log_lines
 
 LOG_A = """\
 population-size = 1000
@@ -118,18 +117,22 @@ def test_experiments_context(tables):
 
 
 def test_sidecar_join(tables, spark, log_dir):
-    lines = read_log_lines(spark, str(log_dir) + "/*.log")
-    from db_loader_spark.operators.ids import assign_file_ids
-
-    with_ids = assign_file_ids(lines, mode="dense", base_id=100)
     merged = append_sidecar_params(
-        spark, tables["experiment"], with_ids, str(log_dir / "index.clj")
+        spark, tables["experiment"], tables["experiments"], str(log_dir / "index.clj")
     )
-    rows = {(r.id, r.parameter): r.value for r in merged.collect()}
-    assert rows[(101, "max-points")] == "50"  # JN5 uuid join (P16)
-    assert rows[(101, "trivial-geography")] == "true"
-    assert not any(p == "ignored" for (_, p) in rows)  # unmatched uuid dropped
-    assert len(rows) == 8
+    # a list, not a dict: a duplicated run row would duplicate EAV rows
+    assert sorted(merged.collect()) == sorted(
+        [
+            (101, "population-size", "1000"),
+            (101, "Clojush version", "3f9a2c1"),
+            (101, "problem-name", "regression"),
+            (101, "max-points", "50"),  # JN5 uuid join (P16)
+            (101, "trivial-geography", "true"),
+            (102, "population-size", "500"),
+            (102, "Clojush version", "deadbee"),
+            (102, "problem-name", "parity"),
+        ]
+    )  # the unmatched uuid's "ignored" param is dropped
 
 
 def test_idempotent_reingest(tables, spark, log_dir):

@@ -572,3 +572,69 @@ def test_pagerank_iterations_reuse_contrib_partitioning(spark):
     # the Final and Initial plans — assert on the property, not a count)
     assert "REPARTITION_BY_COL" in plan, plan
     assert "ENSURE_REQUIREMENTS" not in plan, plan
+
+
+CLOJUSH_LOG = """\
+Clojush version = 1.2
+problem-name = demo
+;;;;;;;;;;
+;; -*- Report at generation 0
+f: 7
+;;;;;;;;;;
+SUCCESS at generation 0
+"""
+
+
+def _formatted(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_clojush_load_one_exchange_then_checkpoint(spark, tmp_path):
+    """The CLI's Clojush load: each table's plan holds exactly one
+    Exchange (the per-file hash partitioning every window reuses) before
+    the shared checkpoint, and none after it — the four writes are then
+    single-stage jobs over the checkpoint blocks."""
+    from db_loader_spark.cache import free_local_checkpoint
+    from db_loader_spark.plans.clojush import parse_clojush_logs
+
+    (tmp_path / "run_u1.log").write_text(CLOJUSH_LOG)
+    path = str(tmp_path / "*.log")
+    lazy = parse_clojush_logs(spark, path, problem_map={"demo": "1"})
+    for name, df in lazy.items():
+        assert count_ops(_formatted(df), "Exchange") == 1, name
+    tables = parse_clojush_logs(spark, path, problem_map={"demo": "1"}, persist_shared=True)
+    shared = tables.pop("_shared")
+    try:
+        for name, df in tables.items():
+            assert count_ops(_formatted(df), "Exchange") == 0, name
+        assert [r.problem_id for r in tables["experiments"].collect()] == ["1"]
+    finally:
+        free_local_checkpoint(shared)
+
+
+def test_clojush_dimension_frames_are_local_relations(spark, tmp_path):
+    """Driver-side dimension rows (the problem map, the EDN sidecar
+    index) plan as LocalRelations held in the JVM — not as Python-RDD
+    scans — even with Arrow off, as on a vanilla session."""
+    from db_loader_spark.plans.clojush import parse_clojush_logs
+    from db_loader_spark.sources.edn_index import read_edn_index
+
+    (tmp_path / "run_u1.log").write_text(CLOJUSH_LOG)
+    (tmp_path / "index.clj").write_text('{:command-maps [{:uuid "u1" :argmap {:a 1}}]}')
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        index = read_edn_index(spark, str(tmp_path / "index.clj"))
+        experiments = parse_clojush_logs(
+            spark, str(tmp_path / "*.log"), problem_map={"demo": "1"}
+        )["experiments"]
+        for df in (index, experiments):
+            plan = df._jdf.queryExecution().analyzed().toString()
+            assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+        assert [tuple(r) for r in index.collect()] == [("u1", "a", "1")]
+    finally:
+        spark.conf.set(key, prev)
