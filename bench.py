@@ -35,7 +35,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from db_loader_spark.queries import all_queries
-from db_loader_spark.session import get_spark
+from db_loader_spark.session import get_spark, scoped_conf
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -381,15 +381,11 @@ def _bench_bucketed(spark, sf_dir: str, timings, spreads) -> None:
             facts["lineitem"], facts["orders"], cust, nat
         ),
     }
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         for name, make in variants.items():
             make().count()  # warm codegen
             spark._jvm.System.gc()  # same GC discipline as the main loop
             timings[name], spreads[name] = _timed_runs(lambda: make().count())
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
 
 
 def _bench_partitioned(spark, sf_dir: str, timings, spreads) -> None:
@@ -687,16 +683,10 @@ def _bench_runtime_filters(spark, sf_dir: str, timings, spreads) -> None:
         ),
     ]
     for name, make, confs in arms:
-        prev = {k: spark.conf.get(k) for k in confs}
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
+        with scoped_conf(spark, confs):
             make().count()  # warm
             spark._jvm.System.gc()
             timings[name], spreads[name] = _timed_runs(lambda: make().count())
-        finally:
-            for k, v in prev.items():
-                spark.conf.set(k, v)
 
 
 def _bench_manifest_zonemap(spark, sf_dir: str, timings, spreads) -> None:

@@ -144,6 +144,28 @@ DRIVER_WINDOW_SIZE = 50
 # All six displaced keys carry r14 green rows and MUST front the r17
 # window (rule-1-oldest by construction — see the prep note below).
 #
+# RULE-2 RE-ENTRIES for the shared drain (streaming/run.py: one conf
+# scope, run dir, availableNow drain and epoch publish behind every
+# t_stream_* key) and session.scoped_conf (now behind
+# data_sized_shuffle): the four stream keys outside the window
+# (t_stream_mview, t_stream_sessions, t_stream_lakehouse,
+# t_stream_ann_index) and curation_funnel (data_sized_shuffle) enter.
+# The other nine touched keys (t_stream_rollup/dedup/signatures/join,
+# e2e_cli_ingest, text_decontaminate, curation_e2e,
+# dedup_embedding_components, g_pagerank) are in the window already.
+# Five untouched keys with r16 green rows make room, each with
+# siblings that stay:
+#   a1_distinct_pairs — a4_count_distinct / a6_run_summary /
+#     a7_id_assignment;
+#   p10_find_first — p9_summary_parse / p14_continuation_merge /
+#     p_json_props;
+#   q_top_customers — q3_segment_revenue / q10_returned_items;
+#   jn_range_join — jn_asof_join / jn5_sidecar_join;
+#   ann_lsh_topk — ann_sq_rerank / ann_ivf_topk.
+# None of the six r16-displaced keys is involved. The re-entries'
+# costs (marked *) were measured by window_cost.py at sf0.01 on a
+# 4-core box (115.7 s over the 50 keys), the rest at r16 close.
+#
 # HARNESS INSURANCE (VERDICT r8 #4, carried): ordered CHEAPEST FIRST
 # by measured per-key sweep cost at sf0.01 (Spark + DuckDB oracle
 # wall time, scripts/window_cost.py, measured 2026-08-18 at r16
@@ -152,8 +174,6 @@ DRIVER_WINDOW_SIZE = 50
 # (driver checks set membership of the first 50).
 WINDOW = [
     "text_fingerprint",  # 0.23s
-    "a1_distinct_pairs",  # 0.30s
-    "p10_find_first",  # 0.32s
     "p9_summary_parse",  # 0.34s
     "j1_sessionize",  # 0.36s
     "text_chunk",  # 0.38s
@@ -172,8 +192,6 @@ WINDOW = [
     "jn_asof_join",  # 0.52s
     "text_repetition",  # 0.54s
     "curation_source_cap",  # 0.54s
-    "q_top_customers",  # 0.56s
-    "jn_range_join",  # 0.57s
     "text_kmv_vocab",  # 0.60s
     "text_tfidf_topterms",  # 0.76s
     "rollup_revenue",  # 0.80s
@@ -184,12 +202,15 @@ WINDOW = [
     "q10_returned_items",  # 1.01s
     "q3_segment_revenue",  # 1.01s
     "text_repeated_passages",  # 1.01s
+    "t_stream_lakehouse",  # 1.28s*
     "text_decontaminate",  # 1.42s
     "ecj_star",  # 1.69s
     "dedup_simhash",  # 2.01s
+    "t_stream_mview",  # 2.36s*
+    "t_stream_ann_index",  # 2.41s*
     "ann_sq_rerank",  # 2.71s
     "t_stream_rollup",  # 2.77s
-    "ann_lsh_topk",  # 2.86s
+    "curation_funnel",  # 3.01s*
     "dedup_embedding_components",  # 3.05s
     "e2e_cli_ingest",  # 4.05s
     "t_stream_signatures",  # 4.12s
@@ -201,6 +222,7 @@ WINDOW = [
     "text_bpe_train",  # 5.17s
     "ann_ivf_topk",  # 6.15s
     "curation_e2e",  # 6.92s
+    "t_stream_sessions",  # 9.98s*
 ]
 
 # WINDOW-OVERFLOW QUEUE (policy, r6): brand-new keys beyond window

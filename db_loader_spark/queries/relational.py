@@ -1381,17 +1381,16 @@ def g_pagerank(
     )
     if bcast_scores:
         # cluster the static frame by the aggregation key ONCE; every
-        # iteration's groupBy(dst) then reuses this partitioning.
-        # r16 (VERDICT r15 #5): the partition COUNT follows the contrib
-        # frame's own volume (~48 B × 2m rows under the repo's 32 MB/
-        # partition rule, session-ceiling-clamped) instead of
-        # inheriting spark.sql.shuffle.partitions — at the local SF
-        # that is the 8-partition floor (fewer tasks per iteration);
-        # at a gate-boundary graph (2m = 128M rows) it is ~192
-        # partitions regardless of how a deployment seeded the session
-        # default. Any count satisfies the groupBy's clustered-
-        # distribution requirement, so the zero-in-loop-Exchange pin
-        # is unaffected.
+        # iteration's groupBy(dst) then reuses this partitioning. The
+        # partition COUNT follows the contrib frame's own volume
+        # (~48 B × 2m rows, session.sized_partitions) with the session's
+        # spark.sql.shuffle.partitions as a CEILING, not a target: at the
+        # local SF the volume asks for the 8-partition floor, so a
+        # 4-core session gets 4 and an 8-core one 8; at a gate-boundary
+        # graph (2m = 128M rows) it asks for ~192, so a deployment that
+        # sets 64 gets 64 and one that sets 512 gets 192. Any count
+        # satisfies the groupBy's clustered-distribution requirement, so
+        # the zero-in-loop-Exchange pin is unaffected.
         from db_loader_spark.session import sized_partitions
 
         contrib = contrib.repartition(

@@ -31,60 +31,33 @@ from pyspark.sql import functions as F
 
 from db_loader_spark.queries import QuerySpec
 from db_loader_spark.session import local_frame
-
-# Scratch+rename stage installation — shared implementation in
-# db_loader_spark/staging.py since the r11 review found the same
-# in-place bug class at five non-streaming sites (CDC/lineage/upsert/
-# zone-map roots, CLI e2e corpus); the private aliases keep the
-# streaming call sites and the storm tests reading naturally.
+# the stage-race tests drive both staging primitives through this module
 from db_loader_spark.staging import build_stage as _build_stage
-from db_loader_spark.staging import stage_current as _stage_current
+from db_loader_spark.staging import stage_current as _stage_current  # noqa: F401
+from db_loader_spark.streaming.run import (
+    drain,
+    drain_scope,
+    epoch_writer,
+    file_stream,
+    stream_shuffle,
+)
 from db_loader_spark.tables import load_table
 
-# Staged files → micro-batches (maxFilesPerTrigger=1). Two batches
-# already witness genuine multi-batch incremental execution (state
-# carried across a batch boundary: dedup guard, join buffers, index
-# maintenance, one manifest commit per batch), and every micro-batch
-# pays ~1-1.5 s of fixed machinery regardless of rows — the r9
-# fixed-cost shave (VERDICT r8 #4) moved the r9-windowed keys from 4
-# staged shards to SHARDS_SHAVED=2, and r10 completes it for the
-# remaining four (rollup/dedup/signatures/join) now that their window
-# slots are up (rule-2-safe). SHARDS_SHAVED = 2 is the FLOOR, not a
-# tunable (VERDICT r9 "what's wrong" #3): one batch boundary must
-# always remain — a single-shard drain would witness nothing about
-# cross-batch state, which is the entire point of these keys.
-#
-# Every staged layout carries a ":shards{n}" stamp suffix
-# UNCONDITIONALLY (r10, closes ADVICE r9 #1 as a class, not an
-# instance): the r9 form suppressed the suffix at the then-default
-# layout, so a future default change could silently reuse a stale
-# suffix-less stage at the wrong layout. With the suffix always
-# present, stamp text and layout are in bijection and that class is
-# gone. Rule-2 note for the shared-helper edit: the r9-witnessed
-# keys (mview/lakehouse/ann_index) already passed shards=SHARDS_SHAVED
-# explicitly, so their stamp text (":shards2") and staged bytes are
-# bit-identical before and after this edit — the changed suffix line
-# is externally witnessed THIS round by the windowed rollup/join keys
-# that exercise it with restaging layouts (the same shared-text
-# argument the r9 _KM_CELLS_CTES touch used).
+# Staged files → micro-batches (one file per trigger). Two is the
+# floor, not a tunable: one batch boundary must always remain, since a
+# single-file drain would witness nothing about the state carried
+# across batches (dedup guard, join buffers, index maintenance, one
+# manifest commit per batch), which is the entire point of these keys.
+# More files only add fixed cost: every micro-batch pays ~1-1.5 s of
+# machinery regardless of rows.
 SHARDS_SHAVED = 2
-
-# State-store partition count for the streaming queries. Stateful
-# operators instantiate one state store PER shuffle partition PER
-# micro-batch, and the count is frozen by the first batch's checkpoint
-# — so it must be sized to STREAM VOLUME, not CPU count: the rollup
-# state here is a few thousand rows, and the session default of 32
-# partitions × 4 batches = 128 store instantiations was pure overhead
-# (measured: 3.5-4.0 s → ~2.2 s at 8). At production volume raise it —
-# the knob is per-query via the conf set/restore in the wrappers.
-STREAM_SHUFFLE_PARTITIONS = 8
 
 
 def _source_stamp(sf_dir: str, table: str = "events") -> str:
     """Size+mtime fingerprint of a source table. Staged copies are
-    keyed on it: the driver has re-shipped testdata between rounds
-    before (r3), and a bare done-marker would keep serving the STALE
-    staged copy — a guaranteed hash mismatch against the fresh oracle."""
+    keyed on it: testdata can be re-shipped in place, and a bare
+    done-marker would keep serving the STALE staged copy — a
+    guaranteed hash mismatch against the fresh oracle."""
     st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
     return f"{st.st_size}:{st.st_mtime_ns}"
 
@@ -103,9 +76,9 @@ def _stage_table(
     into a REAL multi-batch run."""
     key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     stage = os.path.join(tempfile.gettempdir(), f"db_loader_stream_{tag}_{key}")
-    # Stamp ALWAYS carries the shard layout (see module comment): a
-    # warm stage can never be reused at a layout other than the one
-    # that built it, whatever the default becomes.
+    # The stamp always carries the shard layout, so stamp text and
+    # layout are in bijection: a warm stage is never reused at a layout
+    # other than the one that built it, whatever the default becomes.
     stamp = _source_stamp(sf_dir, table) + f":shards{shards}"
     return _build_stage(
         stage,
@@ -137,10 +110,8 @@ def t_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = _staged_events(spark, sf_dir)
     qname = "t_stream_rollup_" + hashlib.md5(stage.encode()).hexdigest()[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
-        q = stream_event_rollup(
+    with stream_shuffle(spark):
+        stream_event_rollup(
             spark,
             stage,
             watermark="1 hour",
@@ -148,10 +119,7 @@ def t_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             query_name=qname,
             output_mode="complete",
             max_files_per_trigger=1,
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        ).awaitTermination()
     # memory sink registered the final rollup as a temp view
     return spark.table(qname)
 
@@ -189,14 +157,10 @@ def t_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every row of one copy — a silent hash mismatch if testdata ever
     ships duplicate ids. One count≡countDistinct check per (re)staging
     turns that drift into a loud error naming the precondition."""
-    import shutil
-
     key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     stage = os.path.join(tempfile.gettempdir(), f"db_loader_stream_dup_{key}")
-    # r10 shave: 2 shards × 2 copies = 4 files = 4 micro-batches —
-    # still ≥3 batch boundaries carrying dedup state, half the fixed
-    # machinery. The layout-versioned stamp forces stale 8-file stages
-    # to restage.
+    # SHARDS_SHAVED shards × 2 copies = 4 micro-batches, 3 boundaries
+    # carrying dedup state; the stamp carries the layout
     stamp = _source_stamp(sf_dir) + f":shards{SHARDS_SHAVED}"
 
     def build(scratch: str) -> None:
@@ -217,48 +181,21 @@ def t_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.write.mode("append").parquet(scratch)
 
     _build_stage(stage, stamp, build)
-    static = spark.read.parquet(stage)
-    run_dir = tempfile.mkdtemp(prefix="db_loader_stream_dedup_run_")
-    out_dir = os.path.join(run_dir, "out")
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .dropDuplicates(["event_id"])
-    )
-
-    def publish(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
-        q = (
-            stream.writeStream.option(
-                "checkpointLocation", os.path.join(run_dir, "ckpt")
-            )
-            .foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = file_stream(spark, stage).dropDuplicates(["event_id"])
+    with drain_scope(spark) as run_dir:
+        out_dir = os.path.join(run_dir, "out")
+        drain(stream.writeStream.foreachBatch(epoch_writer(out_dir)), run_dir)
         deduped = spark.read.parquet(os.path.join(out_dir, "epoch=*"))
         agg = deduped.groupBy("event_type").agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
-        # Materialize the (few-row) aggregate BEFORE deleting the run
-        # dir — the result must not lazily depend on files we are about
-        # to remove. One benign driver-side collect of ≤ |event_type|
-        # rows; the per-call checkpoint + epoch copies of events would
-        # otherwise accumulate unbounded /tmp debris across bench and
-        # driver runs.
+        # Materialize the (few-row) aggregate BEFORE the run dir is
+        # removed — the result must not lazily depend on files about to
+        # go. One benign driver-side collect of ≤ |event_type| rows; the
+        # per-call checkpoint + epoch copies of events would otherwise
+        # accumulate unbounded /tmp debris across bench and driver runs.
         table = agg.toArrow()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(run_dir, ignore_errors=True)
     return local_frame(spark, table)
 
 
@@ -317,57 +254,21 @@ def t_stream_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     here witnesses genuine multi-batch incremental execution
     (SHARDS_SHAVED staged shards, 1 file per trigger), not a one-shot
     recompute."""
-    import shutil
-
-    from db_loader_spark.tables import load_table as _load
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"db_loader_stream_docs_{key}")
-    # r10 shave: 2 shards = 2 micro-batches, the documented floor —
-    # one boundary still carries the signature index across batches.
-    # Layout-versioned stamp.
-    stamp = _source_stamp(sf_dir, "documents") + f":shards{SHARDS_SHAVED}"
-    _build_stage(
-        stage,
-        stamp,
-        lambda scratch: _load(spark, sf_dir, "documents")
-        .repartition(SHARDS_SHAVED)
-        .write.mode("overwrite")
-        .parquet(scratch),
-    )
-    static = spark.read.parquet(stage)
-    run_dir = tempfile.mkdtemp(prefix="db_loader_stream_sig_run_")
-    sig_dir = os.path.join(run_dir, "signatures")
-    pairs_dir = os.path.join(run_dir, "pairs")
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    maintain_index = make_index_maintainer(spark, sig_dir, pairs_dir)
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
-        q = (
-            stream.writeStream.option(
-                "checkpointLocation", os.path.join(run_dir, "ckpt")
-            )
-            .foreachBatch(maintain_index)
-            .trigger(availableNow=True)
-            .start()
+    stage = _stage_table(spark, sf_dir, "documents", "docs")
+    stream = file_stream(spark, stage)
+    with drain_scope(spark) as run_dir:
+        pairs_dir = os.path.join(run_dir, "pairs")
+        maintain_index = make_index_maintainer(
+            spark, os.path.join(run_dir, "signatures"), pairs_dir
         )
-        q.awaitTermination()
+        drain(stream.writeStream.foreachBatch(maintain_index), run_dir)
         out = spark.read.parquet(os.path.join(pairs_dir, "epoch=*")).select(
             "doc_a", "doc_b", "est_sim"
         )
-        # materialize before deleting the run dir (same contract as
+        # materialize before the run dir goes (same contract as
         # t_stream_dedup): the pair set is overlap-sized, not corpus
         # -sized, so the collect is bounded
         table = out.toArrow()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(run_dir, ignore_errors=True)
     return local_frame(spark, table)
 
 
@@ -375,6 +276,40 @@ def _stream_signatures_oracle() -> str:
     from db_loader_spark.queries.dedup import _MINHASH_ORACLE
 
     return _MINHASH_ORACLE
+
+
+# The interval join's condition: same orderkey, shipped within 60 days
+# of the order date.
+ORDER_ITEM_JOIN = (
+    "l_orderkey = o_orderkey"
+    " AND l_shipdate >= o_orderdate"
+    " AND l_shipdate <= o_orderdate + INTERVAL 60 DAYS"
+)
+
+
+def order_item_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The watermarked stream-stream interval join ``t_stream_join``
+    drains: orders and lineitem, each staged as SHARDS_SHAVED files and
+    read one file per micro-batch per side, joined on
+    ``ORDER_ITEM_JOIN``. All columns of both sides are kept.
+
+    The watermark delay covers the corpus's full time span (~7 years),
+    so nothing is evicted before its partner arrives and the drain is
+    exactly the batch join. The source dates are TIMESTAMP_NTZ;
+    watermarks require an LTZ timestamp, and the session timezone is
+    pinned UTC (session.py), so the cast is a pure type relabel — both
+    sides shift identically."""
+    orders = (
+        file_stream(spark, _stage_table(spark, sf_dir, "orders", "ord"))
+        .withColumn("o_orderdate", F.col("o_orderdate").cast("timestamp"))
+        .withWatermark("o_orderdate", "3700 days")
+    )
+    items = (
+        file_stream(spark, _stage_table(spark, sf_dir, "lineitem", "li"))
+        .withColumn("l_shipdate", F.col("l_shipdate").cast("timestamp"))
+        .withWatermark("l_shipdate", "3700 days")
+    )
+    return orders.join(items, F.expr(ORDER_ITEM_JOIN))
 
 
 def t_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -407,61 +342,12 @@ def t_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-file loop feeding tables other queries join); the reference
     never does this incrementally — it reloads, which is exactly the
     per-query recompute this operator retires."""
-    import shutil
-
-    o_stage = _stage_table(spark, sf_dir, "orders", "ord")
-    l_stage = _stage_table(spark, sf_dir, "lineitem", "li")
-    o_schema = spark.read.parquet(o_stage).schema
-    l_schema = spark.read.parquet(l_stage).schema
-    run_dir = tempfile.mkdtemp(prefix="db_loader_stream_join_run_")
-    out_dir = os.path.join(run_dir, "out")
-
-    # span-covering delay (corpus spans ~7 years): nothing is evicted
-    # before its partner arrives, so the drain is exactly the batch join.
-    # The source dates are TIMESTAMP_NTZ; watermarks require an LTZ
-    # timestamp, and the session timezone is pinned UTC (session.py), so
-    # the cast is a pure type relabel — both sides shift identically and
-    # no output column carries a timestamp.
-    orders = (
-        spark.readStream.schema(o_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(o_stage)
-        .withColumn("o_orderdate", F.col("o_orderdate").cast("timestamp"))
-        .withWatermark("o_orderdate", "3700 days")
+    joined = order_item_stream(spark, sf_dir).select(
+        "o_orderpriority", "l_orderkey", "l_extendedprice", "l_discount"
     )
-    items = (
-        spark.readStream.schema(l_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(l_stage)
-        .withColumn("l_shipdate", F.col("l_shipdate").cast("timestamp"))
-        .withWatermark("l_shipdate", "3700 days")
-    )
-    joined = orders.join(
-        items,
-        F.expr(
-            "l_orderkey = o_orderkey"
-            " AND l_shipdate >= o_orderdate"
-            " AND l_shipdate <= o_orderdate + INTERVAL 60 DAYS"
-        ),
-    ).select("o_orderpriority", "l_orderkey", "l_extendedprice", "l_discount")
-
-    def publish(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
-        q = (
-            joined.writeStream.option(
-                "checkpointLocation", os.path.join(run_dir, "ckpt")
-            )
-            .foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with drain_scope(spark) as run_dir:
+        out_dir = os.path.join(run_dir, "out")
+        drain(joined.writeStream.foreachBatch(epoch_writer(out_dir)), run_dir)
         matched = spark.read.parquet(os.path.join(out_dir, "epoch=*"))
         agg = matched.groupBy("o_orderpriority").agg(
             F.count("*").alias("n_items"),
@@ -470,13 +356,9 @@ def t_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue"),
         )
-        # materialize the (≤5-row) aggregate before removing the run dir
-        # (same contract as t_stream_dedup): no lazy dependence on files
-        # we are about to delete, no /tmp debris across runs
+        # materialize the (≤5-row) aggregate before the run dir goes
+        # (same contract as t_stream_dedup)
         table = agg.toArrow()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(run_dir, ignore_errors=True)
     return local_frame(spark, table)
 
 
@@ -499,48 +381,26 @@ def t_stream_mview(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment would publish each epoch through sinks/manifest.py
     instead of epoch dirs). State is the running aggregate per user —
     bounded by key cardinality, not stream length."""
-    import shutil
+    from pyspark.sql import Window as W
 
-    # own "mv" tag (not the rollup-shared "stage"): the r9 shard
-    # shaved since r9 — see the SHARDS_SHAVED module comment
-    stage = _stage_table(spark, sf_dir, "events", "mv", shards=SHARDS_SHAVED)
-    static = spark.read.parquet(stage)
-    run_dir = tempfile.mkdtemp(prefix="db_loader_stream_mview_run_")
-    out_dir = os.path.join(run_dir, "out")
-
+    stage = _stage_table(spark, sf_dir, "events", "mv")
     agg = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+        file_stream(spark, stage)
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
-
-    def merge(batch_df: DataFrame, epoch_id: int) -> None:
-        # the epoch=N hive dir IS the epoch column on read-back
-        # (numeric values, so partition type inference is safe here)
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
+    with drain_scope(spark) as run_dir:
+        out_dir = os.path.join(run_dir, "out")
+        drain(
+            agg.writeStream.outputMode("update").foreachBatch(epoch_writer(out_dir)),
+            run_dir,
         )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-            .foreachBatch(merge)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        from pyspark.sql import Window as W
-
         # read the PARENT dir (not the epoch=* glob): partition
         # discovery then surfaces the epoch dir key as a column
+        # (numeric values, so partition type inference is safe here)
         upd = spark.read.parquet(out_dir)
         w = W.partitionBy("user_id").orderBy(F.col("epoch").desc())
         view = (
@@ -549,9 +409,6 @@ def t_stream_mview(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", "n_events", "sum_value")
         )
         table = view.toArrow()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(run_dir, ignore_errors=True)
     return local_frame(spark, table)
 
 
@@ -580,35 +437,31 @@ def _stage_time_chunks(spark: SparkSession, sf_dir: str) -> str:
     (the stateful stream's watermark contract: replay respects event
     order, so nothing is ever late) plus ONE sentinel chunk past the
     horizon, mtimes ascending so the file source drains them in order.
-    Two data chunks, not four (r9, VERDICT r8 #4 fixed-cost shave):
-    each applyInPandasWithState micro-batch carries ~1.3 s of fixed
-    machinery regardless of rows, and two data batches already witness
-    multi-batch ordered replay.
+    Two data chunks, not more: each applyInPandasWithState micro-batch
+    carries ~1.3 s of fixed machinery regardless of rows, and two data
+    batches already witness multi-batch ordered replay.
 
     The sentinels (user_id = -1, at max_ts + 2h and + 4h) are the
     end-of-stream flush protocol: the first advances the watermark past
     every real session's close + gap, the second gives the engine the
     extra micro-batch in which event-time TIMEOUTS actually fire
     (watermarks update at batch end; timeouts fire in the NEXT batch).
-    r15 batch-count shave (guide §1.2 — each micro-batch is ~1.3 s of
-    fixed machinery): the FIRST sentinel needs no batch of its own, it
-    only needs to be SEEN before the last batch so the watermark it
-    implies is in force when that batch runs — so it rides in the
-    second data chunk, and only the + 4h sentinel gets its own file.
-    3 micro-batches, not 4; the emitted session set is bit-identical
-    (sentinel rows are user -1, filtered at publish; every real
-    session's timeout < max_ts + 2h - delay, so all fire in the final
-    batch exactly as before). After the drain, every real-user session
-    has been emitted — which is what makes stream ≡ batch an EQUALITY
-    the driver can hash, not the subset relation the local pytest
-    settles for."""
+    The FIRST sentinel needs no batch of its own, it only needs to be
+    SEEN before the last batch so the watermark it implies is in force
+    when that batch runs — so it rides in the second data chunk, and
+    only the + 4h sentinel gets its own file: 3 micro-batches (sentinel
+    rows are user -1, filtered at publish; every real session's timeout
+    < max_ts + 2h - delay, so all fire in the final batch). After the
+    drain, every real-user session has been emitted — which is what
+    makes stream ≡ batch an EQUALITY the driver can hash, not the
+    subset relation the local pytest settles for."""
     import datetime as dt
     import shutil
 
     key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     stage = os.path.join(tempfile.gettempdir(), f"db_loader_stream_sess_{key}")
-    # layout-versioned stamp: a warm stage from the pre-r15 4-file
-    # (separate-sentinel) layout must rebuild, not be silently reused
+    # the stamp carries the chunk layout, so a warm stage from another
+    # layout rebuilds instead of being silently reused
     stamp = _source_stamp(sf_dir) + ":chunks2s1"
 
     def build(scratch: str) -> None:
@@ -658,56 +511,36 @@ def t_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is 4 numbers per open user session, partitioned by user_id,
     evicted on flush — the shape that scales to any key cardinality.
 
-    Publish path (r7, VERDICT r6 #2): each micro-batch's flushed
-    sessions land as epoch-owned parquet via ``foreachBatch`` (the
-    same exactly-once epoch-overwrite its siblings t_stream_dedup /
-    t_stream_join / t_stream_mview use) and the wrapper returns a LAZY
-    read of the published epochs — session rows never pass through the
-    driver, so driver memory is independent of session count (the old
-    memory-sink + collect wrapper held the full session table in the
-    driver twice). The output dir is stable and source-stamp-keyed;
-    each call clears and rewrites it, so the returned frame must be
-    consumed before the next call for the same sf_dir — the driver
-    collects immediately (and any sink publish would too)."""
+    Publish path: each micro-batch's flushed sessions land as
+    epoch-owned parquet via ``foreachBatch`` (the same exactly-once
+    epoch-overwrite its siblings t_stream_dedup / t_stream_join /
+    t_stream_mview use) and the wrapper returns a LAZY read of the
+    published epochs — session rows never pass through the driver, so
+    driver memory is independent of session count. The output dir is
+    stable and source-stamp-keyed; each call clears and rewrites it, so
+    the returned frame must be consumed before the next call for the
+    same sf_dir — the driver collects immediately (and any sink publish
+    would too)."""
     import shutil
 
     from db_loader_spark.streaming.stateful import sessionize_stream
 
     stage = _stage_time_chunks(spark, sf_dir)
-    static = spark.read.parquet(os.path.join(stage, "chunk_0.parquet"))
     key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     out_dir = os.path.join(tempfile.gettempdir(), f"db_loader_stream_sess_out_{key}")
     shutil.rmtree(out_dir, ignore_errors=True)
-    run_dir = tempfile.mkdtemp(prefix="db_loader_stream_sess_run_")
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "chunk_*.parquet")
-        .parquet(stage)
+    sessions = sessionize_stream(
+        file_stream(spark, stage), gap_minutes=30, watermark="5 seconds"
     )
-    sessions = sessionize_stream(stream, gap_minutes=30, watermark="5 seconds")
+    publish_epoch = epoch_writer(out_dir)
 
     def publish(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.filter(F.col("user_id") >= 0).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
+        publish_epoch(batch_df.filter(F.col("user_id") >= 0), epoch_id)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
-        q = (
-            sessions.writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-            .foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # only the checkpoint is per-run scratch; the published epochs
-        # are the result and must outlive the wrapper (lazy read below)
-        shutil.rmtree(run_dir, ignore_errors=True)
+    # only the checkpoint is per-run scratch; the published epochs are
+    # the result and must outlive the wrapper (lazy read below)
+    with drain_scope(spark) as run_dir:
+        drain(sessions.writeStream.outputMode("append").foreachBatch(publish), run_dir)
     return spark.read.parquet(os.path.join(out_dir, "epoch=*"))
 
 
@@ -734,41 +567,22 @@ def t_stream_lakehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep the hash FP-free. The final aggregate is event-type-sized;
     it is collected before the per-run scratch dir is removed (same
     bounded-collect epilogue as t_stream_dedup)."""
-    import shutil
-
     from db_loader_spark.sinks import manifest as M
 
-    stage = _stage_table(spark, sf_dir, "events", "lake", shards=SHARDS_SHAVED)
-    static = spark.read.parquet(stage)
-    run_dir = tempfile.mkdtemp(prefix="db_loader_stream_lake_run_")
-    root = os.path.join(run_dir, "tbl")
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    stream = file_stream(spark, _stage_table(spark, sf_dir, "events", "lake"))
+    with drain_scope(spark) as run_dir:
+        root = os.path.join(run_dir, "tbl")
 
-    def publish(batch_df: DataFrame, epoch_id: int) -> None:
-        M.publish(
-            batch_df,
-            root,
-            snapshot_id=f"epoch-{epoch_id:06d}",
-            append=True,
-            stats_cols=["event_id"],
-        )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
-        q = (
-            stream.writeStream.option(
-                "checkpointLocation", os.path.join(run_dir, "ckpt")
+        def publish(batch_df: DataFrame, epoch_id: int) -> None:
+            M.publish(
+                batch_df,
+                root,
+                snapshot_id=f"epoch-{epoch_id:06d}",
+                append=True,
+                stats_cols=["event_id"],
             )
-            .foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+
+        drain(stream.writeStream.foreachBatch(publish), run_dir)
         lineage = M.snapshots(root)
         if len(lineage) < SHARDS_SHAVED:
             raise RuntimeError(
@@ -802,9 +616,6 @@ def t_stream_lakehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         table = agg.toArrow()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(run_dir, ignore_errors=True)
     return local_frame(spark, table)
 
 
@@ -817,7 +628,7 @@ FROM events GROUP BY event_type
 
 def t_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN-INDEX MAINTENANCE — the embedding sibling of the
-    r6 MinHash row (`t_stream_signatures`): new vectors arriving in
+    MinHash row (`t_stream_signatures`): new vectors arriving in
     micro-batches are assigned to their nearest cell of the FIXED
     trained coarse quantizer (broadcast centroids — the production
     shape: the quantizer trains offline on a prior corpus version;
@@ -834,43 +645,21 @@ def t_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the SAME shared `_ivf_index` cache the serving arms use —
     one quantizer per corpus version feeding search, SemDeDup, and
     now ingest."""
-    import shutil
-
     from db_loader_spark.functions import similarity as S
     from db_loader_spark.queries.similarity import _ivf_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents, _ = _ivf_index(spark, sf_dir, emb)
-    stage = _stage_table(spark, sf_dir, "embeddings", "emb", shards=SHARDS_SHAVED)
-    static = spark.read.parquet(stage)
-    run_dir = tempfile.mkdtemp(prefix="db_loader_stream_ann_run_")
-    out_dir = os.path.join(run_dir, "out")
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    stream = file_stream(spark, _stage_table(spark, sf_dir, "embeddings", "emb"))
+    with drain_scope(spark) as run_dir:
+        out_dir = os.path.join(run_dir, "out")
+        publish_epoch = epoch_writer(out_dir)
 
-    def publish(batch_df: DataFrame, epoch_id: int) -> None:
-        assigned = S.ivf_inverted_lists(batch_df, cents).select(
-            "cell", "neighbor_id"
-        )
-        assigned.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
+        def publish(batch_df: DataFrame, epoch_id: int) -> None:
+            assigned = S.ivf_inverted_lists(batch_df, cents)
+            publish_epoch(assigned.select("cell", "neighbor_id"), epoch_id)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
-        q = (
-            stream.writeStream.option(
-                "checkpointLocation", os.path.join(run_dir, "ckpt")
-            )
-            .foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(stream.writeStream.foreachBatch(publish), run_dir)
         agg = (
             spark.read.parquet(os.path.join(out_dir, "epoch=*"))
             .groupBy("cell")
@@ -880,9 +669,6 @@ def t_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         table = agg.toArrow()  # cell-count-sized (16 cells)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(run_dir, ignore_errors=True)
     return local_frame(spark, table)
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -126,62 +127,74 @@ def stop_spark() -> None:
         active.stop()
 
 
-def sized_partitions(
-    spark: SparkSession,
-    est_bytes: int,
-    bytes_per_partition: int = 32 * 1024 * 1024,
-    floor: int = 8,
-) -> int:
-    """The data_sized_shuffle rule as a NUMBER, for a single explicit
-    ``repartition`` whose input size the caller already knows (e.g.
-    g_pagerank's contrib frame: ~48 B × 2m edge rows) — bytes-per-
-    partition bound, floored, clamped to the session's configured
-    ceiling exactly like the context manager. Scale-correct by
-    construction: the same formula that yields the floor on a MB-sized
-    frame yields hundreds of partitions on a 100 TB one (then capped
-    at the cluster's configured budget)."""
-    target = max(floor, est_bytes // bytes_per_partition)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    return int(min(int(prev), target)) if str(prev).isdigit() else int(target)
+# The data-sized shuffle rule: one partition per this many input bytes,
+# never fewer than the floor, never more than the session's configured
+# ``spark.sql.shuffle.partitions`` (the ceiling a cluster deployment
+# sets to its executor-core budget).
+BYTES_PER_PARTITION = 32 * 1024 * 1024
+PARTITION_FLOOR = 8
 
 
-@__import__("contextlib").contextmanager
-def data_sized_shuffle(
-    spark: SparkSession,
-    *paths: str,
-    bytes_per_partition: int = 32 * 1024 * 1024,
-    floor: int = 8,
-):
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict):
+    """Set every key of ``conf`` for the body, then restore each one,
+    also when the body raises. A key that was not set before goes back
+    to unset: ``spark.conf.get(k, None)`` is ``None`` for a key that was
+    never set, even one that has a default, and restoring that by
+    ``set`` would pin the default as an explicit value."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def sized_partitions(spark: SparkSession, est_bytes: int) -> int:
+    """The shuffle partition count for ``est_bytes`` of input: one per
+    ``BYTES_PER_PARTITION``, floored at ``PARTITION_FLOOR`` and clamped
+    to the session's ``spark.sql.shuffle.partitions``. Used directly
+    for a single explicit ``repartition`` whose input size the caller
+    knows (g_pagerank's contrib frame: ~48 B × 2m edge rows). The same
+    rule that yields the floor on a MB-sized frame yields hundreds of
+    partitions on a 100 TB one, capped at the configured ceiling."""
+    target = max(PARTITION_FLOOR, est_bytes // BYTES_PER_PARTITION)
+    ceiling = spark.conf.get("spark.sql.shuffle.partitions")
+    return min(int(ceiling), target) if str(ceiling).isdigit() else target
+
+
+def _path_bytes(path: str) -> int:
+    if os.path.isdir(path):
+        return sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(path)
+            for f in files
+        )
+    return os.path.getsize(path) if os.path.exists(path) else 0
+
+
+@contextmanager
+def data_sized_shuffle(spark: SparkSession, *paths: str):
     """Scope ``spark.sql.shuffle.partitions`` to the INPUT DATA SIZE
-    for a multi-stage query, then restore.
+    (``sized_partitions`` of the bytes under ``paths``) for a
+    multi-stage query, then restore.
 
-    Rationale: AQE coalesces post-shuffle partitions by size, but a
-    composed pipeline of 20+ jobs over a small input still pays
-    per-stage scheduling for ``shuffle.partitions`` map-side tasks in
-    every exchange — measured 6.6 → 5.1 s on curation_e2e at sf0.1
-    purely from right-sizing this bound. Sizing by bytes/partition is
-    the rule that stays correct at 100 TB: the same formula that
-    yields the floor on a 5 MB corpus yields thousands of partitions
-    on a 100 TB one (then clamped to the session's configured ceiling,
-    which a cluster deployment sets to its executor-core budget).
+    AQE coalesces post-shuffle partitions by size, but a composed
+    pipeline of 20+ jobs over a small input still pays per-stage
+    scheduling for ``shuffle.partitions`` map-side tasks in every
+    exchange — measured 6.6 → 5.1 s on curation_e2e at sf0.1 purely
+    from right-sizing this bound.
 
     ONLY valid around wrappers that MATERIALIZE inside the scope
     (the settle pattern): shuffle.partitions is read at execution
     time, so a lazily returned plan executed after restore would not
     see the sizing.
     """
-    total = 0
-    for p in paths:
-        if os.path.isdir(p):
-            for root, _dirs, files in os.walk(p):
-                total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        elif os.path.exists(p):
-            total += os.path.getsize(p)
-    target = max(floor, total // bytes_per_partition)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    sized = min(int(prev), target) if str(prev).isdigit() else target
-    spark.conf.set("spark.sql.shuffle.partitions", str(sized))
-    try:
+    sized = sized_partitions(spark, sum(_path_bytes(p) for p in paths))
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(sized)}):
         yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)

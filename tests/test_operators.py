@@ -402,11 +402,9 @@ def test_data_sized_shuffle_restores_on_exception(spark):
     would silently throttle every later query in the session."""
     import pytest
 
-    from db_loader_spark.session import data_sized_shuffle
+    from db_loader_spark.session import data_sized_shuffle, scoped_conf
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "64")
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "64"}):
         with pytest.raises(RuntimeError, match="boom"):
             with data_sized_shuffle(
                 spark, "/root/testdata/sf0.001/events.parquet"
@@ -415,8 +413,6 @@ def test_data_sized_shuffle_restores_on_exception(spark):
                 assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
                 raise RuntimeError("boom")
         assert spark.conf.get("spark.sql.shuffle.partitions") == "64"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_subsplit_cells_partitions_rows_exactly(spark):

@@ -376,6 +376,7 @@ def test_bloom_runtime_filter_semi_filters_shuffle_join(spark, sf_dir):
     (might_contain appears on the fact scan's filter), and results are
     unchanged with the filter disabled. The shuffle-volume reducer for
     fact-to-dim joins too big to broadcast."""
+    from db_loader_spark.session import scoped_conf
     from db_loader_spark.sinks.ddl import slice_tag_dim
 
     ev = load_table(spark, sf_dir, "events")
@@ -384,31 +385,25 @@ def test_bloom_runtime_filter_semi_filters_shuffle_join(spark, sf_dir):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
     }
-    prev = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        joined = (
+
+    def pick_join():
+        return (
             ev.join(dim.filter(F.col("tag") == "pick"), "user_id")
             .groupBy("event_type")
             .agg(F.count("*").alias("n"))
         )
+
+    with scoped_conf(spark, confs):
+        joined = pick_join()
         plan = _fmt(joined)
         assert "might_contain" in plan, plan
         with_bloom = sorted(map(tuple, joined.collect()))
-        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-        joined_off = (
-            ev.join(dim.filter(F.col("tag") == "pick"), "user_id")
-            .groupBy("event_type")
-            .agg(F.count("*").alias("n"))
-        )
-        plan_off = _fmt(joined_off)
-        assert "might_contain" not in plan_off
-        assert sorted(map(tuple, joined_off.collect())) == with_bloom
-    finally:
-        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        for k, v in prev.items():
-            spark.conf.set(k, v)
+        bloom_off = {"spark.sql.optimizer.runtime.bloomFilter.enabled": "false"}
+        with scoped_conf(spark, bloom_off):
+            joined_off = pick_join()
+            plan_off = _fmt(joined_off)
+            assert "might_contain" not in plan_off
+            assert sorted(map(tuple, joined_off.collect())) == with_bloom
 
 
 def test_write_zordered_tightens_both_dimensions(spark, tmp_path):

@@ -234,32 +234,31 @@ def test_decontaminate_oversized_eval_degrades_to_shuffle_join(spark):
     disabled to model a side too big for ANY broadcast path."""
     from db_loader_spark import cache
     from db_loader_spark.functions.dedup import decontaminate
+    from db_loader_spark.session import scoped_conf
     from db_loader_spark.tables import load_table
     from pyspark.sql import functions as F
 
     docs = load_table(spark, SF, "documents")
     is_b = F.expr("substring(md5(CAST(doc_id AS STRING)), 1, 1) = '0'")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        big = decontaminate(
-            docs.filter(~is_b), docs.filter(is_b), broadcast_limit_bytes=0
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            big.explain("formatted")
-        s = buf.getvalue()
-        assert count_ops(s, "BroadcastHashJoin") == 0, s
-        assert (
-            count_ops(s, "SortMergeJoin") + count_ops(s, "ShuffledHashJoin") >= 1
-        ), s
-        # identical answer on both paths (the gate changes the plan only)
-        small = decontaminate(docs.filter(~is_b), docs.filter(is_b))
-        assert sorted(map(tuple, big.collect())) == sorted(
-            map(tuple, small.collect())
-        )
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            big = decontaminate(
+                docs.filter(~is_b), docs.filter(is_b), broadcast_limit_bytes=0
+            )
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                big.explain("formatted")
+            s = buf.getvalue()
+            assert count_ops(s, "BroadcastHashJoin") == 0, s
+            assert (
+                count_ops(s, "SortMergeJoin") + count_ops(s, "ShuffledHashJoin") >= 1
+            ), s
+            # identical answer on both paths (the gate changes the plan only)
+            small = decontaminate(docs.filter(~is_b), docs.filter(is_b))
+            assert sorted(map(tuple, big.collect())) == sorted(
+                map(tuple, small.collect())
+            )
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         cache.release()
 
 
@@ -621,13 +620,11 @@ def test_clojush_dimension_frames_are_local_relations(spark, tmp_path):
     scans — even with Arrow off, as on a vanilla session."""
     from db_loader_spark.plans.clojush import parse_clojush_logs
     from db_loader_spark.sources.edn_index import read_edn_index
+    from db_loader_spark.session import scoped_conf
 
     (tmp_path / "run_u1.log").write_text(CLOJUSH_LOG)
     (tmp_path / "index.clj").write_text('{:command-maps [{:uuid "u1" :argmap {:a 1}}]}')
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
+    with scoped_conf(spark, {"spark.sql.execution.arrow.pyspark.enabled": "false"}):
         index = read_edn_index(spark, str(tmp_path / "index.clj"))
         experiments = parse_clojush_logs(
             spark, str(tmp_path / "*.log"), problem_map={"demo": "1"}
@@ -636,5 +633,3 @@ def test_clojush_dimension_frames_are_local_relations(spark, tmp_path):
             plan = df._jdf.queryExecution().analyzed().toString()
             assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
         assert [tuple(r) for r in index.collect()] == [("u1", "a", "1")]
-    finally:
-        spark.conf.set(key, prev)

@@ -1,12 +1,16 @@
-"""Session helpers: the default core count, driver-side local frames."""
+"""Session helpers: the default core count, driver-side local frames,
+the conf scope."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import subprocess
 import sys
 
-from db_loader_spark.session import local_frame
+import pytest
+
+from db_loader_spark.session import local_frame, scoped_conf
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -38,3 +42,22 @@ def test_local_frame_keeps_schema_and_rows(spark):
     assert again.schema == agg.schema
     assert sorted(again.collect()) == sorted(agg.collect())
     assert "LocalRelation" in again._jdf.queryExecution().analyzed().toString()
+
+
+@pytest.mark.parametrize("body_raises", [True, False])
+def test_scoped_conf_restores_set_and_unset_keys(spark, body_raises):
+    """A key set before the scope gets its old value back; a key that
+    was unset is unset again, not pinned to its default — also when
+    the body raises."""
+    was_set = "spark.sql.autoBroadcastJoinThreshold"  # set by get_spark
+    was_unset = "spark.sql.adaptive.skewJoin.skewedPartitionFactor"
+    before = spark.conf.get(was_set)
+    assert spark.conf.get(was_unset, None) is None
+    with pytest.raises(RuntimeError) if body_raises else contextlib.nullcontext():
+        with scoped_conf(spark, {was_set: "-1", was_unset: "2"}):
+            assert spark.conf.get(was_set) == "-1"
+            assert spark.conf.get(was_unset) == "2"
+            if body_raises:
+                raise RuntimeError("boom")
+    assert spark.conf.get(was_set) == before
+    assert spark.conf.get(was_unset, None) is None

@@ -43,10 +43,9 @@ def _skewed_pair(spark, n=300_000, n_keys=50):
 
 
 def test_aqe_splits_skewed_join_partition(spark):
-    prev = {k: spark.conf.get(k, None) for k in _SKEW_CONFS}
-    for k, v in _SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    from db_loader_spark.session import scoped_conf
+
+    with scoped_conf(spark, _SKEW_CONFS):
         fact, dim = _skewed_pair(spark)
         j = fact.join(dim, "k")
         # collect() (not count()) — count builds a NEW QueryExecution;
@@ -58,10 +57,6 @@ def test_aqe_splits_skewed_join_partition(spark):
         s = buf.getvalue()
         assert "isFinalPlan=true" in s
         assert "skew=true" in s, s  # the hot partition was split
-    finally:
-        for k, v in prev.items():
-            if v is not None:
-                spark.conf.set(k, v)
 
 
 def test_salted_join_equals_plain_join(spark):

@@ -10,6 +10,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from db_loader_spark.session import scoped_conf
+from db_loader_spark.streaming.run import drain, file_stream
+
 
 def _write_shard(spark, path, rows, schema):
     spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(path)
@@ -45,18 +48,8 @@ def test_left_outer_join_emits_unmatched_after_watermark(spark, tmp_path, delay)
             spark, right_dir, [(rid, ts(f"2024-01-01 {h}:00:05"), lid)], rschema
         )
 
-    left = (
-        spark.readStream.schema(lschema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(left_dir)
-        .withWatermark("lts", delay)
-    )
-    right = (
-        spark.readStream.schema(rschema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(right_dir)
-        .withWatermark("rts", delay)
-    )
+    left = file_stream(spark, left_dir).withWatermark("lts", delay)
+    right = file_stream(spark, right_dir).withWatermark("rts", delay)
     joined = left.join(
         right,
         F.expr(
@@ -69,20 +62,8 @@ def test_left_outer_join_emits_unmatched_after_watermark(spark, tmp_path, delay)
     def collect_batch(batch_df, epoch_id):
         out.extend((r["lid"], r["rid"]) for r in batch_df.collect())
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            joined.writeStream.option(
-                "checkpointLocation", str(tmp_path / "ckpt")
-            )
-            .foreachBatch(collect_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+        drain(joined.writeStream.foreachBatch(collect_batch), str(tmp_path))
 
     got = sorted(out)
     # batch-side truth: every left row, matched where a qualifying

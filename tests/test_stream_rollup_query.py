@@ -145,58 +145,24 @@ def test_stream_join_is_multi_batch_and_complete(spark, tmp_path):
     buffered state) and the union over epochs is EXACTLY the batch interval
     join — no row dropped by the span-covering watermark, none
     duplicated across epochs."""
-    from db_loader_spark.queries.streamingq import (
-        STREAM_SHUFFLE_PARTITIONS,
-        _stage_table,
-    )
+    from db_loader_spark.queries.streamingq import ORDER_ITEM_JOIN, order_item_stream
+    from db_loader_spark.streaming.run import drain, stream_shuffle
     from db_loader_spark.tables import load_table
 
-    o_stage = _stage_table(spark, SF, "orders", "ord")
-    l_stage = _stage_table(spark, SF, "lineitem", "li")
-    cond = (
-        "l_orderkey = o_orderkey"
-        " AND l_shipdate >= o_orderdate"
-        " AND l_shipdate <= o_orderdate + INTERVAL 60 DAYS"
-    )
-    orders = (
-        spark.readStream.schema(spark.read.parquet(o_stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(o_stage)
-        .withColumn("o_orderdate", F.col("o_orderdate").cast("timestamp"))
-        .withWatermark("o_orderdate", "3700 days")
-    )
-    items = (
-        spark.readStream.schema(spark.read.parquet(l_stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(l_stage)
-        .withColumn("l_shipdate", F.col("l_shipdate").cast("timestamp"))
-        .withWatermark("l_shipdate", "3700 days")
-    )
     per_epoch: dict[int, int] = {}
 
     def count_epoch(batch_df, epoch_id):
         per_epoch[epoch_id] = batch_df.count()
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
-        q = (
-            orders.join(items, F.expr(cond))
-            .select("l_orderkey", "l_linenumber")
-            .writeStream.option("checkpointLocation", str(tmp_path / "ckpt"))
-            .foreachBatch(count_epoch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    joined = order_item_stream(spark, SF).select("l_orderkey", "l_linenumber")
+    with stream_shuffle(spark):
+        drain(joined.writeStream.foreachBatch(count_epoch), str(tmp_path))
 
     producing = [e for e, n in per_epoch.items() if n > 0]
     assert len(producing) >= 2, f"matches confined to one epoch: {per_epoch}"
     batch_n = (
         load_table(spark, SF, "orders")
-        .join(load_table(spark, SF, "lineitem"), F.expr(cond))
+        .join(load_table(spark, SF, "lineitem"), F.expr(ORDER_ITEM_JOIN))
         .count()
     )
     assert sum(per_epoch.values()) == batch_n
@@ -213,52 +179,25 @@ def test_stream_join_survives_stop_and_resume(spark, tmp_path):
     import os
     import time as _time
 
-    from db_loader_spark.queries.streamingq import _stage_table
+    from db_loader_spark.queries.streamingq import ORDER_ITEM_JOIN, order_item_stream
+    from db_loader_spark.streaming.run import drain, epoch_writer
     from db_loader_spark.tables import load_table
 
-    o_stage = _stage_table(spark, SF, "orders", "ord")
-    l_stage = _stage_table(spark, SF, "lineitem", "li")
     out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    cond = (
-        "l_orderkey = o_orderkey"
-        " AND l_shipdate >= o_orderdate"
-        " AND l_shipdate <= o_orderdate + INTERVAL 60 DAYS"
-    )
 
-    def publish(batch_df, epoch_id):
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
-
-    def start(available_now: bool):
-        orders = (
-            spark.readStream.schema(spark.read.parquet(o_stage).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(o_stage)
-            .withColumn("o_orderdate", F.col("o_orderdate").cast("timestamp"))
-            .withWatermark("o_orderdate", "3700 days")
-        )
-        items = (
-            spark.readStream.schema(spark.read.parquet(l_stage).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(l_stage)
-            .withColumn("l_shipdate", F.col("l_shipdate").cast("timestamp"))
-            .withWatermark("l_shipdate", "3700 days")
-        )
-        w = (
-            orders.join(items, F.expr(cond))
+    def writer():
+        return (
+            order_item_stream(spark, SF)
             .select("l_orderkey", "l_linenumber")
-            .writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch(publish)
+            .writeStream.foreachBatch(epoch_writer(out_dir))
         )
-        if available_now:
-            w = w.trigger(availableNow=True)
-        else:
-            w = w.trigger(processingTime="0 seconds")
-        return w.start()
 
-    q = start(available_now=False)
+    q = (
+        writer()
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
     deadline = _time.time() + 120
     while _time.time() < deadline:
         done = len(os.listdir(out_dir)) if os.path.isdir(out_dir) else 0
@@ -269,61 +208,45 @@ def test_stream_join_survives_stop_and_resume(spark, tmp_path):
     q.awaitTermination()
     assert os.path.isdir(out_dir) and len(os.listdir(out_dir)) >= 1
 
-    q2 = start(available_now=True)
-    q2.awaitTermination()
+    drain(writer(), str(tmp_path))  # resumes on tmp_path/ckpt
 
     got = spark.read.parquet(os.path.join(out_dir, "epoch=*")).select(
         "l_orderkey", "l_linenumber"
     )
     batch = (
         load_table(spark, SF, "orders")
-        .join(load_table(spark, SF, "lineitem"), F.expr(cond))
+        .join(load_table(spark, SF, "lineitem"), F.expr(ORDER_ITEM_JOIN))
         .select("l_orderkey", "l_linenumber")
     )
     assert got.exceptAll(batch).count() == 0
     assert batch.exceptAll(got).count() == 0
 
 
-def test_stream_mview_emits_per_key_updates_across_batches(spark, tmp_path):
+def test_stream_mview_emits_per_key_updates_across_batches(spark):
     """Update-mode witness: (1) multiple micro-batches emit, (2) at
     least one user's aggregate is RE-emitted in a later epoch (the
     state update that distinguishes update mode from append), and
     (3) each batch emits only changed keys — strictly fewer rows than
     a complete-mode emission after the first batch would total."""
-    from db_loader_spark.queries.streamingq import (
-        STREAM_SHUFFLE_PARTITIONS,
-        _stage_table,
-    )
+    from db_loader_spark.queries.streamingq import _stage_table
+    from db_loader_spark.streaming.run import drain, drain_scope, file_stream
 
-    stage = _stage_table(spark, SF, "events", "stage")
-    static = spark.read.parquet(stage)
     per_epoch: dict[int, set] = {}
 
     def capture(batch_df, epoch_id):
         per_epoch[epoch_id] = {(r["user_id"], r["day"]) for r in batch_df.collect()}
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
-        q = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            # (user_id, day) keys: far more groups than rows per
-            # micro-batch, so each batch touches a strict subset and
-            # the only-changed-keys property is observable (with bare
-            # user_id, 15 users all change every batch)
-            .groupBy("user_id", F.to_date("ts").alias("day"))
-            .agg(F.count("*").alias("n"))
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .foreachBatch(capture)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    updates = (
+        file_stream(spark, _stage_table(spark, SF, "events", "stage"))
+        # (user_id, day) keys: far more groups than rows per
+        # micro-batch, so each batch touches a strict subset and
+        # the only-changed-keys property is observable (with bare
+        # user_id, 15 users all change every batch)
+        .groupBy("user_id", F.to_date("ts").alias("day"))
+        .agg(F.count("*").alias("n"))
+    )
+    with drain_scope(spark) as run_dir:
+        drain(updates.writeStream.outputMode("update").foreachBatch(capture), run_dir)
 
     assert len(per_epoch) >= 2, f"single-batch drain: {sorted(per_epoch)}"
     epochs = sorted(per_epoch)
