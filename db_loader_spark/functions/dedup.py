@@ -19,10 +19,10 @@ Scale design (the point of each algorithm at 100 TB):
   pairs sharing a band (standard Manku et al., WWW'07 trick). Band
   width is the scale knob: 16-bit bands give 65,536 buckets per band,
   so bucket occupancy is ~n/65,536 and the self-join output stays
-  near-linear (the r01 32-bit/8-bit-band version had only 256 buckets
-  per band — effectively quadratic; VERDICT r01 #2). The Hamming
-  threshold ships INSIDE the join condition so non-near pairs die in
-  the join operator instead of surviving into the distinct's shuffle.
+  near-linear (8-bit bands would give only 256 buckets per band —
+  effectively quadratic). The Hamming threshold ships INSIDE the join
+  condition so non-near pairs die in the join operator instead of
+  surviving into the distinct's shuffle.
 
 All of it is Column-expression work — no Python UDFs — so the whole
 pipeline stays inside whole-stage codegen. Wide unrolled expressions
@@ -44,15 +44,26 @@ HEX_DIGITS = "0123456789abcdef"
 
 
 def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as an array column (empty if < n tokens)."""
+    """Word n-gram shingles as an array column, in token order (empty
+    if < n tokens).
+
+    Gram i is token i joined with the n-1 tokens after it, so the array
+    is a fold of ``zip_with`` over n shifted slices of the token array
+    (each of length size - (n-1), floored at 0 so short texts give
+    empty slices). The token array must stay OUTSIDE every lambda:
+    Spark does no common-subexpression elimination inside lambda
+    bodies, so a lambda that indexed ``tokens(text)`` would re-run the
+    whole split/lower/trim/filter chain once per gram — O(tokens²)
+    regex work per document. As slice arguments it runs n times per
+    row, whatever the document length."""
     toks = tokens(text)
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(toks, i + off) for off in range(n)]
-    )
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    return F.when(F.size(toks) >= n, F.transform(idx, gram)).otherwise(
-        F.array().cast("array<string>")
-    )
+    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    grams = F.slice(toks, 1, m)
+    for off in range(1, n):
+        grams = F.zip_with(
+            grams, F.slice(toks, 1 + off, m), lambda g, t: F.concat(g, F.lit(" "), t)
+        )
+    return grams
 
 
 def shingle_frame(
@@ -63,10 +74,8 @@ def shingle_frame(
     Dedup happens INSIDE the row (``array_distinct`` before the
     explode), not via ``.distinct()`` after it: a doc's shingles all
     live in its own array, so per-doc uniqueness needs no shuffle at
-    all — the old row-level distinct moved every (id, shingle) pair
-    through an exchange first, a corpus-sized shuffle that pure
-    projection replaces. Identical output rows (pinned by the oracle
-    hash-matches of every downstream query).
+    all, where a row-level distinct would move every (id, shingle)
+    pair through a corpus-sized exchange.
 
     PRECONDITION: ``id_col`` must be unique per input row. The in-row
     distinct can only dedup within one row's array, so duplicate-id
@@ -172,9 +181,9 @@ def band_collision_counts(
     would produce on a deterministic ¼-sample of the docs.
 
     One explode + one aggregate over the (tiny: one row per sampled
-    doc) signature frame — the cheap statistic SCALE.md's r2 experiment
-    said to derive banding from, instead of hand-picking band_size per
-    corpus. Collisions are counted WITHOUT materializing any join:
+    doc) signature frame — the cheap statistic SCALE.md's banding
+    experiment said to derive banding from, instead of hand-picking
+    band_size per corpus. Collisions are counted WITHOUT materializing any join:
     Σ_buckets n·(n-1)/2. Returns ({b: sample_pairs}, n_total, n_sample).
 
     The sample is md5-bucketed on the doc id (first hex digit in 0-3),
@@ -316,6 +325,21 @@ def lsh_pairs_against(
     )
 
 
+def _first_band(num_hashes: int, band_size: int) -> Column:
+    """Index of the lowest-numbered band in which the joined rows ``a``
+    and ``b`` agree on every component (NULL when none does)."""
+    whens = " ".join(
+        "WHEN {} THEN {}".format(
+            " AND ".join(
+                f"a.h{i} = b.h{i}" for i in range(b * band_size, (b + 1) * band_size)
+            ),
+            b,
+        )
+        for b in range(num_hashes // band_size)
+    )
+    return F.expr(f"CASE {whens} END")
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     num_hashes: int = 8,
@@ -332,32 +356,42 @@ def lsh_candidate_pairs(
     collision rate (tuned_band_size) instead of trusting a default that
     SCALE.md showed to be corpus-dependent.
 
+    Each pair is emitted exactly once, from the lowest-numbered band it
+    collides in, so no trailing ``distinct`` (and no hash aggregate or
+    exchange of its own) is needed. A residual join predicate keeps a
+    joined row only when its ``band_idx`` is the first band whose
+    components are all equal. That is exact: equal band keys mean equal
+    components (``concat_ws('|')`` over non-negative longs cannot alias),
+    and est_sim is computed from the whole signature, so it is the same
+    in every band a pair shares.
+
     ``min_est_sim`` pushes the similarity threshold INSIDE the join as a
     residual predicate (the same trick the SimHash Hamming search uses):
-    low-sim band collisions die in the join operator and never reach the
-    trailing distinct's shuffle. This is the first knob to reach for on
-    head-heavy (Zipf) corpora, where baseline Jaccard between unrelated
-    docs makes 2-row bands collide freely — measured in SCALE.md:
-    candidates grow ~n² at the defaults there, and the in-join threshold
-    (or wider bands) restores near-linear candidate volume.
+    low-sim band collisions die in the join operator. This is the first
+    knob to reach for on head-heavy (Zipf) corpora, where baseline
+    Jaccard between unrelated docs makes 2-row bands collide freely —
+    measured in SCALE.md: candidates grow ~n² at the defaults there,
+    and the in-join threshold (or wider bands) restores near-linear
+    candidate volume.
 
     The full signature rides along through the band explode, so est_sim
     comes straight off the joined rows — no second join back to the
-    signature frame (which would recompute its whole lineage twice).
-    ``materialize`` persists the (tiny: one row per doc) signature frame
-    so the self-join's two branches share one computation. The frame is
-    registered in :mod:`db_loader_spark.cache` — registry wrappers
-    release it via ``settle(result, *cache.drain())`` once the result
-    is materialized; sessions driving this function directly call
-    ``cache.release()``. Pass ``materialize=False`` to skip caching
-    entirely (recompute per branch).
+    signature frame. With a fixed ``band_size`` nothing is persisted:
+    the signature frame ends in its ``groupBy(id)`` exchange, which
+    adaptive execution reuses for both sides of the self-join, so the
+    signature is computed once per execution. Only the self-tuning path
+    (``band_size=None``) persists it, because the tuner reads it three
+    times before the join; with ``materialize`` (the default) that
+    frame is registered in :mod:`db_loader_spark.cache` — registry
+    wrappers release it via ``settle(result, *cache.drain())``,
+    sessions driving this function directly call ``cache.release()``.
+    ``materialize=False`` recomputes the signature per read instead.
     """
-    if materialize:
-        from db_loader_spark import cache
-
-        signatures = cache.track(signatures)
     if band_size is None:
-        # Self-tuning banding: measure, then pick (see tuned_band_size).
+        if materialize:
+            from db_loader_spark import cache
+
+            signatures = cache.track(signatures)
         band_size = tuned_band_size(signatures, num_hashes)
     banded = _banded(signatures, num_hashes, band_size)
     a = banded.alias("a")
@@ -372,18 +406,15 @@ def lsh_candidate_pairs(
         (F.col("a.band_idx") == F.col("b.band_idx"))
         & (F.col("a.band_key") == F.col("b.band_key"))
         & (F.col("a.id") < F.col("b.id"))
+        & (F.col("a.band_idx") == _first_band(num_hashes, band_size))
     )
     if min_est_sim is not None:
         # Residual (non-equi) predicate: far pairs never leave the join.
         cond = cond & (est_sim >= min_est_sim)
-    return (
-        a.join(b, cond)
-        .select(
-            F.col("a.id").alias("doc_a"),
-            F.col("b.id").alias("doc_b"),
-            est_sim.alias("est_sim"),
-        )
-        .distinct()
+    return a.join(b, cond).select(
+        F.col("a.id").alias("doc_a"),
+        F.col("b.id").alias("doc_b"),
+        est_sim.alias("est_sim"),
     )
 
 
@@ -744,10 +775,13 @@ def simhash_near_pairs(
     ``materialize`` persists the signature frame (tiny: one row per doc,
     ``bits/16`` ints) so the self-join's two branches share ONE
     signature computation instead of re-running the full
-    scan→tokenize→vote lineage per side — the same cache-lifetime
-    policy as lsh_candidate_pairs (tracked in
-    :mod:`db_loader_spark.cache`, released by the registry wrappers'
-    ``settle(result, *cache.drain())``)."""
+    scan→tokenize→vote lineage per side. :func:`lsh_candidate_pairs`
+    needs no such cache on its fixed-band path because its signature
+    ends in a ``groupBy(id)`` exchange that both join sides reuse; this
+    signature is a shuffle-free projection, so there is no exchange to
+    reuse. The frame is tracked in :mod:`db_loader_spark.cache` and
+    released by the registry wrappers' ``settle(result,
+    *cache.drain())``."""
     if materialize:
         from db_loader_spark import cache
 

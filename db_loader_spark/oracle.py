@@ -168,11 +168,19 @@ def compare(
 def run_all(
     spark: SparkSession, sf_dir: str, only: list[str] | None = None
 ) -> list[CompareResult]:
-    from db_loader_spark.queries import all_queries
+    """Compare every registry query (or the ``only`` names, which may
+    also be diagnostics-tier specs) against its oracle."""
+    from db_loader_spark.queries import all_queries, diagnostic_queries
 
+    specs = all_queries()
+    if only:
+        specs = {**specs, **diagnostic_queries()}
+        unknown = sorted(set(only) - set(specs))
+        if unknown:
+            raise KeyError(f"no registry or diagnostics query named {unknown}")
     con = duck_connection(sf_dir)
     results = []
-    for name, spec in all_queries().items():
+    for name, spec in specs.items():
         if only and name not in only:
             continue
         df = spec.spark(spark, sf_dir)

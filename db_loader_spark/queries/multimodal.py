@@ -86,7 +86,7 @@ def multimodal_embed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its query and corpus branches, which would run the mapInPandas
     # encoder twice -- with a real model that doubles the single most
     # expensive stage. CacheManager dedups the entry by plan across
-    # repeated builds (see lsh_candidate_pairs for the pattern).
+    # repeated builds.
     from db_loader_spark.queries import settle
 
     emb = extract_embedding(attach_binary(docs)).persist()

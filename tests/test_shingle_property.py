@@ -1,18 +1,18 @@
-"""Property test: shingle_frame vs an independent pure-Python reference.
+"""Property tests: shingles and shingle_frame vs a pure-Python reference.
 
-The shingle family underpins jaccard / MinHash / decontamination, and
-r4 moved its dedup inside the array (array_distinct pre-explode) — this
-pins the semantics against arbitrary text, not just the corpus: for any
-input, the (id, shingle) set equals {distinct n-grams of the
-lowercased, whitespace-split token stream}.
+The shingle family underpins jaccard / MinHash / decontamination. For
+any input text, ``shingles(text, n)`` equals the ordered n-grams of the
+lowercased, whitespace-split token stream, and the (id, shingle) set of
+``shingle_frame`` equals the distinct ones.
 """
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from db_loader_spark.functions.dedup import shingle_frame
+from db_loader_spark.functions.dedup import shingle_frame, shingles
 
 # whitespace-heavy alphabet to stress the tokenizer's cleanup paths
 _TEXT = st.text(
@@ -20,9 +20,13 @@ _TEXT = st.text(
 )
 
 
-def _py_shingles(text: str | None, n: int = 3) -> set[str]:
+def _py_ordered_shingles(text: str | None, n: int) -> list[str]:
     toks = [t for t in (text or "").lower().strip().split() if t]
-    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+def _py_shingles(text: str | None, n: int = 3) -> set[str]:
+    return set(_py_ordered_shingles(text, n))
 
 
 @settings(
@@ -40,3 +44,27 @@ def test_shingle_frame_matches_python(spark, texts):
         got.setdefault(r["id"], set()).add(r["shingle"])
     for i, t in enumerate(texts):
         assert got.get(i, set()) == _py_shingles(t), (i, t)
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(texts=st.lists(st.one_of(st.none(), _TEXT), min_size=1, max_size=6))
+@example(texts=[None, "", "  \t\n ", "a", "a b", "a b c", "A  b\tc  d e"])
+def test_shingles_are_ordered_ngrams(spark, texts):
+    """shingles(text, n) is the ordered n-gram list — duplicates kept —
+    for n = 1..4, including NULL, empty, whitespace-only and
+    shorter-than-n texts (all of which give an empty array)."""
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    ns = (1, 2, 3, 4)
+    rows = docs.select(
+        "doc_id", *[shingles(F.col("text"), n).alias(f"s{n}") for n in ns]
+    ).collect()
+    for r in rows:
+        t = texts[r["doc_id"]]
+        for n in ns:
+            assert r[f"s{n}"] == _py_ordered_shingles(t, n), (n, t)
