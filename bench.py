@@ -36,6 +36,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from db_loader_spark.queries import all_queries
 from db_loader_spark.session import get_spark, scoped_conf
+from db_loader_spark.staging import (
+    build_stage,
+    mark_current,
+    source_stamp,
+    stage_current,
+    stage_path,
+)
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -239,31 +246,17 @@ def _timed_runs(
     return round(med, 4), round(spread, 3)
 
 
-def _source_stamp(*paths: str) -> str:
-    """Size+mtime fingerprint of the driver source files a derived
-    layout was built from. ADVICE r4: the layouts were cached on a bare
-    _SUCCESS marker, so when the driver re-ships a table between rounds
-    (it did in r3) the derived layouts kept measuring STALE data — an
-    apples-to-oranges comparison against the fresh-source variants."""
-    parts = []
-    for p in paths:
-        st = os.stat(p)
-        parts.append(f"{os.path.basename(p)}={st.st_size}:{st.st_mtime_ns}")
-    return "|".join(parts)
+def _stage(path: str, stamp: str, build) -> str:
+    """Install a derived layout through ``staging.build_stage`` (keyed on
+    the source stamp, so a re-shipped table rebuilds it), logging each
+    rebuild to stderr. Layout builds are one-time setup, never timed."""
+    if not stage_current(path, stamp):
+        print(f"[bench] staging {os.path.basename(path)}", file=sys.stderr, flush=True)
+    return build_stage(path, stamp, build)
 
 
-def _layout_current(out_dir: str, stamp: str) -> bool:
-    try:
-        with open(os.path.join(out_dir, "_SOURCE_STAMP")) as f:
-            return f.read() == stamp
-    except OSError:
-        return False
-
-
-def _write_stamp(out_dir: str, stamp: str) -> None:
-    # underscore-prefixed: parquet scans ignore it like _SUCCESS
-    with open(os.path.join(out_dir, "_SOURCE_STAMP"), "w") as f:
-        f.write(stamp)
+def _events_stamp(sf_dir: str) -> str:
+    return source_stamp(os.path.join(sf_dir, "events.parquet"))
 
 
 # Scale-invariant witnesses for the layout A/B pairs (VERDICT r12 #6):
@@ -338,17 +331,25 @@ def _bucketed_fact_tables(spark, sf_dir: str):
     for tbl, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
         name = f"bench_{tbl}_bucketed"
         loc = os.path.join(warehouse, name)
-        stamp = _source_stamp(os.path.join(sf_dir, f"{tbl}.parquet"))
-        if not (spark.catalog.tableExists(name) and _layout_current(loc, stamp)):
-            # The default in-memory catalog forgets tables between
-            # sessions while their warehouse files persist — clear the
-            # stale location or saveAsTable dies with
-            # LOCATION_ALREADY_EXISTS. The stamp check also rebuilds
-            # when the driver re-ships the source table (r3 did).
+        stamp = source_stamp(os.path.join(sf_dir, f"{tbl}.parquet"))
+        if not stage_current(loc, stamp):
+            # saveAsTable writes where the catalog says, so this layout
+            # cannot be renamed into place: it is dropped and rebuilt.
+            # Clear the location too, or saveAsTable dies with
+            # LOCATION_ALREADY_EXISTS.
+            print(f"[bench] staging {name}", file=sys.stderr, flush=True)
             spark.sql(f"DROP TABLE IF EXISTS {name}")
             shutil.rmtree(loc, ignore_errors=True)
             write_bucketed(load_table(spark, sf_dir, tbl), name, key, n_buckets=32)
-            _write_stamp(loc, stamp)
+            mark_current(loc, stamp)
+        elif not spark.catalog.tableExists(name):
+            # the default in-memory catalog forgets tables between
+            # sessions while their files persist: register them again
+            cols = spark.read.parquet(loc).schema.toDDL()
+            spark.sql(
+                f"CREATE TABLE {name} ({cols}) USING parquet CLUSTERED BY ({key})"
+                f" SORTED BY ({key}) INTO 32 BUCKETS LOCATION '{loc}'"
+            )
         out[tbl] = spark.table(name)
     return out
 
@@ -397,7 +398,6 @@ def _bench_partitioned(spark, sf_dir: str, timings, spreads) -> None:
     table's storage format. At bench SF the whole table is one small
     file so the delta is modest; at 100 TB the pruned scan reads ~10%
     of a 30-day table and ~0.3% of a multi-year one."""
-    import shutil
     from urllib.parse import urlparse
 
     from pyspark.sql import functions as F
@@ -406,14 +406,13 @@ def _bench_partitioned(spark, sf_dir: str, timings, spreads) -> None:
     from db_loader_spark.tables import load_table
 
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    path = os.path.join(warehouse, "bench_events_by_date")
-    stamp = _source_stamp(os.path.join(sf_dir, "events.parquet"))
-    if not _layout_current(path, stamp):
-        shutil.rmtree(path, ignore_errors=True)
-        write_partitioned(
-            load_table(spark, sf_dir, "events"), path, F.to_date("ts"), "event_date"
-        )
-        _write_stamp(path, stamp)
+    path = _stage(
+        os.path.join(warehouse, "bench_events_by_date"),
+        _events_stamp(sf_dir),
+        lambda scratch: write_partitioned(
+            load_table(spark, sf_dir, "events"), scratch, F.to_date("ts"), "event_date"
+        ),
+    )
     start, end = "2024-01-10", "2024-01-13"
     plain = load_table(spark, sf_dir, "events").filter(
         (F.col("ts") >= F.lit(start)) & (F.col("ts") < F.lit(end))
@@ -466,7 +465,6 @@ def _bench_compaction(spark, sf_dir: str, timings, spreads) -> None:
     to remove, now measured instead of asserted (VERDICT r4 #7).
     Layout writes are one-time setup, source-stamped like the other
     derived layouts."""
-    import shutil
     from urllib.parse import urlparse
 
     from pyspark.sql import functions as F
@@ -475,19 +473,20 @@ def _bench_compaction(spark, sf_dir: str, timings, spreads) -> None:
     from db_loader_spark.tables import load_table
 
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shat = os.path.join(warehouse, "bench_events_shattered")
-    comp = os.path.join(warehouse, "bench_events_compacted")
-    stamp = _source_stamp(os.path.join(sf_dir, "events.parquet"))
-    if not _layout_current(shat, stamp):
-        shutil.rmtree(shat, ignore_errors=True)
-        load_table(spark, sf_dir, "events").repartition(1000).write.mode(
-            "overwrite"
-        ).parquet(shat)
-        _write_stamp(shat, stamp)
-    if not _layout_current(comp, stamp):
-        shutil.rmtree(comp, ignore_errors=True)
-        compact_parquet(spark, shat, comp, target_mb=128)
-        _write_stamp(comp, stamp)
+    stamp = _events_stamp(sf_dir)
+    shat = _stage(
+        os.path.join(warehouse, "bench_events_shattered"),
+        stamp,
+        lambda scratch: load_table(spark, sf_dir, "events")
+        .repartition(1000)
+        .write.mode("overwrite")
+        .parquet(scratch),
+    )
+    comp = _stage(
+        os.path.join(warehouse, "bench_events_compacted"),
+        stamp,
+        lambda scratch: compact_parquet(spark, shat, scratch, target_mb=128),
+    )
     start, end = "2024-01-10", "2024-01-13"
 
     def slice_of(path: str):
@@ -521,7 +520,6 @@ def _bench_sorted(spark, sf_dir: str, timings, spreads) -> None:
     coverage pinned in tests/test_partitioned_layout.py). 1-D keeps
     `ev_value_*` as its own-column best case; Z-order is the layout
     when two columns genuinely share the workload."""
-    import shutil
     from urllib.parse import urlparse
 
     from pyspark.sql import functions as F
@@ -530,30 +528,29 @@ def _bench_sorted(spark, sf_dir: str, timings, spreads) -> None:
     from db_loader_spark.tables import load_table
 
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    stamp = _source_stamp(os.path.join(sf_dir, "events.parquet"))
-    srt = os.path.join(warehouse, "bench_events_sorted")
-    uns = os.path.join(warehouse, "bench_events_unsorted")
-    zrd = os.path.join(warehouse, "bench_events_zordered")
-    if not _layout_current(srt, stamp):
-        shutil.rmtree(srt, ignore_errors=True)
-        write_sorted(
-            load_table(spark, sf_dir, "events"), srt, "user_id",
-            row_group_bytes=128 * 1024,
-        )
-        _write_stamp(srt, stamp)
-    if not _layout_current(uns, stamp):
-        shutil.rmtree(uns, ignore_errors=True)
-        load_table(spark, sf_dir, "events").write.option(
-            "parquet.block.size", 128 * 1024
-        ).mode("overwrite").parquet(uns)
-        _write_stamp(uns, stamp)
-    if not _layout_current(zrd, stamp):
-        shutil.rmtree(zrd, ignore_errors=True)
-        write_zordered(
-            load_table(spark, sf_dir, "events"), zrd, "user_id", "value",
-            row_group_bytes=128 * 1024,
-        )
-        _write_stamp(zrd, stamp)
+    stamp = _events_stamp(sf_dir)
+    ev = load_table(spark, sf_dir, "events")
+    srt = _stage(
+        os.path.join(warehouse, "bench_events_sorted"),
+        stamp,
+        lambda scratch: write_sorted(
+            ev, scratch, "user_id", row_group_bytes=128 * 1024
+        ),
+    )
+    uns = _stage(
+        os.path.join(warehouse, "bench_events_unsorted"),
+        stamp,
+        lambda scratch: ev.write.option("parquet.block.size", 128 * 1024)
+        .mode("overwrite")
+        .parquet(scratch),
+    )
+    zrd = _stage(
+        os.path.join(warehouse, "bench_events_zordered"),
+        stamp,
+        lambda scratch: write_zordered(
+            ev, scratch, "user_id", "value", row_group_bytes=128 * 1024
+        ),
+    )
 
     def slice_of(path: str):
         df = spark.read.parquet(path)
@@ -607,7 +604,6 @@ def _bench_runtime_filters(spark, sf_dir: str, timings, spreads) -> None:
     ships ~5%, and the build cost stays dim-sized. Same honest-pair
     framing as the salted-vs-AQE rows (operators/skew.py): the pair
     documents when the knob pays, not that it always does."""
-    import shutil
     from urllib.parse import urlparse
 
     from pyspark.sql import functions as F
@@ -617,29 +613,29 @@ def _bench_runtime_filters(spark, sf_dir: str, timings, spreads) -> None:
 
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     fact_path = os.path.join(warehouse, "bench_events_by_date")  # _bench_partitioned built it
-    stamp = _source_stamp(os.path.join(sf_dir, "events.parquet"))
-    ddim_path = os.path.join(warehouse, "bench_date_dim")
-    udim_path = os.path.join(warehouse, "bench_user_dim")
+    stamp = _events_stamp(sf_dir)
     fact = spark.read.parquet(fact_path)
     start, end = "2024-01-10", "2024-01-13"
-    if not _layout_current(ddim_path, stamp):
-        shutil.rmtree(ddim_path, ignore_errors=True)
-        slice_tag_dim(
+    ddim_path = _stage(
+        os.path.join(warehouse, "bench_date_dim"),
+        stamp,
+        lambda scratch: slice_tag_dim(
             fact,
             F.col("event_date"),
             "event_date",
             (F.col("event_date") >= F.lit(start)) & (F.col("event_date") < F.lit(end)),
-        ).write.parquet(ddim_path)
-        _write_stamp(ddim_path, stamp)
-    if not _layout_current(udim_path, stamp):
-        shutil.rmtree(udim_path, ignore_errors=True)
-        slice_tag_dim(
+        ).write.mode("overwrite").parquet(scratch),
+    )
+    udim_path = _stage(
+        os.path.join(warehouse, "bench_user_dim"),
+        stamp,
+        lambda scratch: slice_tag_dim(
             load_table(spark, sf_dir, "events"),
             F.col("user_id"),
             "user_id",
             F.col("user_id") % 20 == 0,
-        ).write.parquet(udim_path)
-        _write_stamp(udim_path, stamp)
+        ).write.mode("overwrite").parquet(scratch),
+    )
 
     def dpp_query():
         dim = spark.read.parquet(ddim_path).filter(F.col("tag") == "pick")
@@ -750,18 +746,13 @@ def _bench_mor_read(spark, sf_dir: str, timings, spreads) -> None:
     the purge. Staged once per source stamp like the other layouts —
     a scattered delete (~1/37 of rows, touching every file) is the
     shape where vectors accumulate in practice."""
-    import hashlib
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from db_loader_spark.sinks import manifest as M
-    from db_loader_spark.staging import build_stage
     from db_loader_spark.tables import load_table
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"db_loader_morbench_{key}")
-    stamp = _source_stamp(os.path.join(sf_dir, "events.parquet")) + ":v1"
+    root = stage_path(sf_dir, "morbench")
+    stamp = _events_stamp(sf_dir) + ":v1"
 
     def build(scratch: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
@@ -779,7 +770,7 @@ def _bench_mor_read(spark, sf_dir: str, timings, spreads) -> None:
         )
         M.purge_deletes(spark, scratch, snapshot_id="p1")
 
-    build_stage(root, stamp, build)
+    _stage(root, stamp, build)
 
     def units(sid: str) -> dict:
         man = M._manifest(root, sid)
@@ -841,7 +832,6 @@ def _bench_scaled_datapath(spark, sf_dir: str, timings, spreads) -> None:
     tight median) and are EXCLUDED from the suite noise band so the
     band stays comparable across rounds; TAIL_RESERVE_S covers their
     wall so the headline loop's deadline projection stays honest."""
-    import shutil
     from urllib.parse import urlparse
 
     from pyspark.sql import functions as F
@@ -849,14 +839,12 @@ def _bench_scaled_datapath(spark, sf_dir: str, timings, spreads) -> None:
     from db_loader_spark.tables import load_table
 
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    root = os.path.join(warehouse, "bench_scaled_datapath")
-    stamp = _source_stamp(
+    stamp = source_stamp(
         os.path.join(sf_dir, "lineitem.parquet"),
         os.path.join(sf_dir, "documents.parquet"),
     ) + ":li8:doc4:v1"
-    if not _layout_current(root, stamp):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+
+    def build(scratch: str) -> None:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
         )
@@ -873,7 +861,7 @@ def _bench_scaled_datapath(spark, sf_dir: str, timings, spreads) -> None:
                 ).alias("l_partkey"),
             )
             .write.mode("overwrite")
-            .parquet(os.path.join(root, "lineitem.parquet"))
+            .parquet(os.path.join(scratch, "lineitem.parquet"))
         )
         docs = load_table(spark, sf_dir, "documents")
         (
@@ -889,9 +877,10 @@ def _bench_scaled_datapath(spark, sf_dir: str, timings, spreads) -> None:
                 *[c for c in docs.columns if c not in ("doc_id", "text")],
             )
             .write.mode("overwrite")
-            .parquet(os.path.join(root, "documents.parquet"))
+            .parquet(os.path.join(scratch, "documents.parquet"))
         )
-        _write_stamp(root, stamp)
+
+    root = _stage(os.path.join(warehouse, "bench_scaled_datapath"), stamp, build)
     registry = all_queries()
     for name, key in (
         ("g_pagerank_x8", "g_pagerank"),

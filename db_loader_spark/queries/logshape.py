@@ -372,21 +372,18 @@ def _stage_cli_logs(spark: SparkSession, sf_dir: str) -> str:
     operator under test is the CLI plan, which stays fully
     distributed."""
     import gzip
-    import hashlib
     import os
-    import tempfile
 
-    from db_loader_spark.staging import build_stage
+    from db_loader_spark.staging import build_stage, source_stamp, stage_path
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"db_loader_cli_e2e_{key}")
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    stamp = f"{st.st_size}:{st.st_mtime_ns}:cap={CLI_USER_CAP}:layout=v1:install=v2"
+    stage = stage_path(sf_dir, "cli_e2e")
+    stamp = (
+        source_stamp(os.path.join(sf_dir, "events.parquet"))
+        + f":cap={CLI_USER_CAP}:layout=v1:install=v2"
+    )
 
-    # scratch+rename install (r11 review — the CLI corpus was the last
-    # in-place stage build; a racing rebuild could leave a stamp-valid
-    # dir with a mixed set of run_*.log.gz from two generations, which
-    # the glob dispatch would happily ingest as one corpus)
+    # installed whole: the glob dispatch ingests every run_*.log.gz in
+    # the dir, so a mix of two generations would be read as one corpus
     def build(scratch: str) -> None:
         rows = (
             load_table(spark, sf_dir, "events")

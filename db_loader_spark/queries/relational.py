@@ -776,12 +776,9 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     okey%10 < 8; v2 = keys with okey%10 >= 2, +$5.00 on okey%7 == 0),
     so DuckDB recomputes the identical delta from the raw table.
     Prices are compared as integer cents — exact, no FP channel."""
-    import hashlib
-    import tempfile
-
     from db_loader_spark.operators.cdc import snapshot_diff
     from db_loader_spark.sinks import manifest as M
-    from db_loader_spark.staging import build_stage
+    from db_loader_spark.staging import build_stage, source_stamp, stage_path
 
     o = _t(spark, sf_dir, "orders")
     cents = F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)")
@@ -792,14 +789,10 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = o.filter(F.col("o_orderkey") % 10 >= 2).select(
         "o_orderkey", (cents + bump).alias("cents")
     )
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"db_loader_cdc_{key}")
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    stamp = f"{st.st_size}:{st.st_mtime_ns}:install=v2"
+    root = stage_path(sf_dir, "cdc")
+    stamp = source_stamp(os.path.join(sf_dir, "orders.parquet")) + ":install=v2"
 
-    # scratch+rename install (r11 review: this root was still built
-    # in place — the mixed-generation class build_stage closes;
-    # manifests hold root-relative paths, so a renamed root is intact)
+    # manifests hold root-relative paths, so the renamed root is intact
     def build(scratch: str) -> None:
         M.publish(v1, scratch, snapshot_id="v1")
         M.publish(v2, scratch, snapshot_id="v2")  # lineage: v2.parent = v1
@@ -815,18 +808,12 @@ def _append_lineage_root(spark: SparkSession, sf_dir: str) -> str:
     from THREE append commits — events thirds by event_id % 3 — so the
     lineage v1 → v2 → v3 has real per-snapshot file deltas for the
     incremental-scan query."""
-    import hashlib
-    import tempfile
-
     from db_loader_spark.sinks import manifest as M
-    from db_loader_spark.staging import build_stage
+    from db_loader_spark.staging import build_stage, source_stamp, stage_path
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"db_loader_incr_{key}")
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    stamp = f"{st.st_size}:{st.st_mtime_ns}:install=v2"
+    root = stage_path(sf_dir, "incr")
+    stamp = source_stamp(os.path.join(sf_dir, "events.parquet")) + ":install=v2"
 
-    # scratch+rename install (r11 review — same class as the cdc root)
     def build(scratch: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
@@ -906,18 +893,12 @@ def t_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot equals DuckDB recomputing the merge from the raw table —
     a wrong anti-join, a double-applied update, or a dropped carried
     file all flip the sum."""
-    import hashlib
-    import tempfile
-
     from db_loader_spark.sinks import manifest as M
-    from db_loader_spark.staging import build_stage
+    from db_loader_spark.staging import build_stage, source_stamp, stage_path
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"db_loader_upsert_{key}")
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    stamp = f"{st.st_size}:{st.st_mtime_ns}:install=v2"
+    root = stage_path(sf_dir, "upsert")
+    stamp = source_stamp(os.path.join(sf_dir, "orders.parquet")) + ":install=v2"
 
-    # scratch+rename install (r11 review — same class as the cdc root)
     def build(scratch: str) -> None:
         base = _t(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("k"),
@@ -981,18 +962,12 @@ def _zonemap_root(spark: SparkSession, sf_dir: str) -> str:
     ranges, so a selective range predicate can drop most files from
     the scan plan entirely. Shared by the registry query and the
     bench pair."""
-    import hashlib
-    import tempfile
-
     from db_loader_spark.sinks import manifest as M
-    from db_loader_spark.staging import build_stage
+    from db_loader_spark.staging import build_stage, source_stamp, stage_path
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"db_loader_zonemap_{key}")
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    stamp = f"{st.st_size}:{st.st_mtime_ns}:install=v2"
+    root = stage_path(sf_dir, "zonemap")
+    stamp = source_stamp(os.path.join(sf_dir, "events.parquet")) + ":install=v2"
 
-    # scratch+rename install (r11 review — same class as the cdc root)
     def build(scratch: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
@@ -1523,7 +1498,7 @@ QUERIES: dict[str, QuerySpec] = {
 # this key's slot bought no new external evidence. Value check
 # retained by tests/test_oracle_queries.py.
 def t_mor_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge-on-read DELETE + row-level UPDATE, oracle-graded (r13):
+    """Merge-on-read DELETE + row-level UPDATE, oracle-graded:
     an orderkey-clustered orders snapshot gets a scattered MOR delete
     (``k % 131 = 0`` — vectors only, zero data files rewritten) and
     then an UPDATE (``k % 113 = 0`` → cents + 101) whose COW rewrite
@@ -1533,16 +1508,11 @@ def t_mor_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     a resurrected row, a lost vector through the update's carry, or a
     double-applied update all flip the sum against DuckDB recomputing
     the same DML from the raw table."""
-    import hashlib
-    import tempfile
-
     from db_loader_spark.sinks import manifest as M
-    from db_loader_spark.staging import build_stage
+    from db_loader_spark.staging import build_stage, source_stamp, stage_path
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"db_loader_mor_{key}")
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    stamp = f"{st.st_size}:{st.st_mtime_ns}:install=v1"
+    root = stage_path(sf_dir, "mor")
+    stamp = source_stamp(os.path.join(sf_dir, "orders.parquet")) + ":install=v1"
 
     def build(scratch: str) -> None:
         base = _t(spark, sf_dir, "orders").select(
@@ -1592,23 +1562,16 @@ FROM live GROUP BY pr
 
 def _clog_paths(sf_dir: str, variant: str = "") -> tuple:
     """(source root, replica root, stamp) for the staged commit-log
-    tables — ONE derivation (fifth r14 review: a second inline copy
-    of the key/stamp would let the stage versions silently drift on a
-    recipe bump; r15 review re-applied the rule when the evolving
-    variant almost copied it). ``variant`` suffixes the prefixes so
+    tables — one derivation, so the source and replica stages cannot
+    drift apart on a recipe bump. ``variant`` suffixes the prefixes so
     the six-verb pair and the evolving-history pair stage apart while
     sharing key and stamp."""
-    import hashlib
-    import tempfile
+    from db_loader_spark.staging import source_stamp, stage_path
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    stamp = f"{st.st_size}:{st.st_mtime_ns}:install=v1"
-    tmp = tempfile.gettempdir()
     return (
-        os.path.join(tmp, f"db_loader_clog{variant}_{key}"),
-        os.path.join(tmp, f"db_loader_replica{variant}_{key}"),
-        stamp,
+        stage_path(sf_dir, f"clog{variant}"),
+        stage_path(sf_dir, f"replica{variant}"),
+        source_stamp(os.path.join(sf_dir, "orders.parquet")) + ":install=v1",
     )
 
 
@@ -1662,10 +1625,9 @@ def _clog_root(spark: SparkSession, sf_dir: str) -> str:
 
 
 def t_commit_log_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The commit-log WALK itself, oracle-graded (r14, VERDICT r13
-    #3): a staged orders-derived manifest table runs a six-verb
-    history — publish → append → MOR delete → MOR merge → MOR update
-    → OPTIMIZE — and the query reconstructs the FINAL table purely
+    """The commit-log WALK itself, oracle-graded: a staged
+    orders-derived manifest table runs a six-verb history — publish →
+    append → MOR delete → MOR merge → MOR update → OPTIMIZE — and the query reconstructs the FINAL table purely
     from the changelog: every commit's ``read_event_row_changes``
     frame (each priced by that commit's own changed files) unioned
     with a commit sequence number, folded by last-change-per-key
@@ -1737,7 +1699,7 @@ FROM t3 GROUP BY pr
 
 
 def t_replica_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CDC APPLY side, oracle-graded (r14): a replica is
+    """The CDC APPLY side, oracle-graded: a replica is
     bootstrapped from the staged six-verb table's GENESIS snapshot and
     then synced purely through the change feed —
     ``read_table_changes`` over the whole history applied by
@@ -1761,7 +1723,7 @@ def t_replica_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(scratch: str) -> None:
         # the SOURCE stages lazily, inside build: when the replica
         # stage is already current the source is never read, so the
-        # six-verb staging run must not be paid (fifth r14 review)
+        # six-verb staging run must not be paid
         src = _clog_root(spark, sf_dir)
         M.publish(
             M.read_snapshot(spark, src, "base"),
@@ -1794,9 +1756,9 @@ def _clog_ev_paths(sf_dir: str) -> tuple:
 
 
 def t_replica_sync_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CDC circle ACROSS SCHEMA EVOLUTION, oracle-graded (r15,
-    VERDICT r14 #3): the source runs publish → merge_schema append
-    (new ``tag`` column) → MOR update ON the new column → MOR delete;
+    """The CDC circle ACROSS SCHEMA EVOLUTION, oracle-graded: the
+    source runs publish → merge_schema append (new ``tag`` column) →
+    MOR update ON the new column → MOR delete;
     a replica bootstrapped from the PRE-evolution genesis is synced
     purely through ``read_table_changes`` (whose pre-evolution commits
     NULL-backfill ``tag``, Delta-CDF semantics) applied by

@@ -2,12 +2,15 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from db_loader_spark import cache
 from db_loader_spark.functions import similarity as S
 from db_loader_spark.queries import QuerySpec
+from db_loader_spark.staging import build_stage, source_stamp, stage_path
 from db_loader_spark.tables import load_table
 
 
@@ -146,19 +149,21 @@ FROM (
 """
 
 
-# Session-scoped IVF index cache: (applicationId, sf_dir, n_bits,
-# iters) → (trained centroid table, persisted inverted lists). Index
-# construction is deterministic (exact-integer means, fixed seeds), so
-# a cache hit is value-identical to rebuilding — it only removes the
-# repeated Lloyd jobs and the O(n × cells × dim) assignment scan. This
-# makes "the centroid table IS the index" literally true: in a driver
-# run ann_ivf_topk and ann_recall build once and serve many — the
-# deployment shape, where the index is a table written once per corpus
-# version (inverted lists partitioned by cell). Keyed on applicationId
-# so a new session rebuilds instead of touching another session's
-# checkpointed/persisted blocks. Capped at _IVF_INDEX_MAX entries: a
-# session cycling many corpora evicts (and unpersists) the oldest
-# index instead of accumulating inverted lists forever (VERDICT r4 #3).
+# Session-scoped IVF index cache: (applicationId, sf_dir, embeddings
+# source stamp, n_bits, iters) → (trained centroid table, persisted
+# inverted lists). Index construction is deterministic (exact-integer
+# means, fixed seeds), so a cache hit is value-identical to rebuilding
+# — it only removes the repeated Lloyd jobs and the O(n × cells × dim)
+# assignment scan. This makes "the centroid table IS the index"
+# literally true: in a driver run ann_ivf_topk and ann_recall build
+# once and serve many — the deployment shape, where the index is a
+# table written once per corpus version (inverted lists partitioned by
+# cell). Keyed on applicationId so a new session rebuilds instead of
+# touching another session's persisted blocks, and on the source stamp
+# so a corpus re-shipped mid-session is never served from the old
+# index. Capped at _IVF_INDEX_MAX entries: a session cycling many
+# corpora evicts (and unpersists) the oldest index instead of
+# accumulating inverted lists forever.
 _IVF_INDEX: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 _IVF_INDEX_MAX = 4
 
@@ -171,10 +176,15 @@ def clear_ivf_cache() -> None:
     _IVF_INDEX.clear()
 
 
+def _emb_stamp(sf_dir: str) -> str:
+    return source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
+
+
 def _ivf_index(
     spark: SparkSession, sf_dir: str, emb: DataFrame, n_bits: int = 4, iters: int = 2
 ) -> tuple[DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir, n_bits, iters)
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir, _emb_stamp(sf_dir), n_bits, iters)
     idx = _IVF_INDEX.get(key)
     if idx is None:
         while len(_IVF_INDEX) >= _IVF_INDEX_MAX:
@@ -422,8 +432,6 @@ def dedup_embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a recursive CTE. r8: shuffle sizing scoped to the input (the
     curation_e2e rule) — the CC fixpoint's log-round exchanges pay the
     configured map-task count every iteration."""
-    import os
-
     from db_loader_spark.functions.dedup import connected_components
     from db_loader_spark.session import data_sized_shuffle
 
@@ -455,330 +463,34 @@ FROM reach GROUP BY id
 """
 
 
-def _versioned_artifact(base: str, stamp: str, build) -> str:
-    """The versioned-prefix + atomic-pointer commit protocol shared by
-    every on-disk index artifact (r8 — extracted from _ivf_disk_index
-    so the PQ/IVF-PQ artifacts get the identical treatment, VERDICT r7
-    #6): ``stamp`` names a version id; if ``_CURRENT`` already points
-    at a complete dir for it, serve that; otherwise ``build(vdir)``
-    writes the whole artifact under ``versions/<id>/`` and the pointer
-    flips via write-temp + rename ONLY after the build returns.
-    A crashed build leaves an unreferenced scratch dir, swept after
-    the next successful flip; a reader resolving mid-rebuild serves
-    the complete old version until the flip.
-
-    CONCURRENT BUILDERS (r8): two processes resolving the same stamp
-    simultaneously (a bench run and a test session were observed doing
-    exactly this) must not interleave writes into one version dir.
-    Each builder writes into its OWN scratch prefix and RENAMES it to
-    ``versions/<id>/`` when complete — rename into an existing name
-    fails on POSIX for non-empty dirs, so exactly one builder lands
-    the artifact and the loser discards its identical scratch copy
-    (same stamp ⇒ same deterministic bytes, so either copy is
-    correct).
-
-    COMPLETENESS SENTINEL (r9, ADVICE r8): a version dir is adopted
-    WITHOUT rebuilding only if it carries the ``_COMPLETE`` sentinel,
-    written into the scratch as the build's LAST file so the atomic
-    rename publishes data and proof together. A sentinel-less dir at
-    the version path (residue of the pre-r8 build-in-place protocol,
-    or any non-rename writer) is a crashed partial — it is removed
-    and rebuilt instead of being committed as current. The
-    ``_CURRENT``-named fast path skips the check: the pointer only
-    ever flips after a complete build lands, so pointer ⇒ complete.
-
-    DELAYED VACUUM (r9, VERDICT r8 #3): the post-flip sweep age-gates
-    version dirs exactly like ``.build-`` scratch (1 h mtime), for two
-    live-reader races the immediate reap allowed: (a) two builders
-    resolving DIFFERENT stamps concurrently — the first flipper's
-    sweep deleted the other's just-landed version before its pointer
-    flip, leaving ``_CURRENT`` naming a missing dir; (b) a session
-    cache holding lazy (unpersisted) parquet scans of a superseded
-    version — its next action would hit FileNotFound mid-plan. An
-    hour bounds both (no build or cached serve spans one); a shared
-    store would vacuum on retention like sinks/manifest.vacuum.
-
-    REAP-VS-RE-ADOPT TOCTOU CLOSED (r11, the staged ADVICE r9 #2
-    touch): the old sweep read the pointer ONCE before iterating, so a
-    re-adopter flipping ``_CURRENT`` back to an hour-stale version
-    mid-sweep could still lose the dir and strand the pointer until
-    the next resolve rebuilt it. Two complementary guards now make a
-    stranded pointer unreachable: (a) sweeper side — each reap first
-    CLAIMS the dir with an atomic rename, then re-reads the pointer
-    and restores the dir untouched if a re-adopter flipped to it;
-    (b) flipper side — every flip verifies its version dir still
-    exists after the sweep and rebuilds+re-flips if a racing sweep
-    won (the rebuild is marker-free, hence unreapable inside the
-    horizon, so the retry settles in ≤2 rounds). The flip's
-    writer-unique temp file is unlinked on exception paths and crash
-    residue (``_CURRENT.tmp-*``, ``*.reap-*``) is age-swept with the
-    versions (ADVICE r10)."""
-    import hashlib
-    import os
-    import shutil
-    import uuid as _uuid
-
-    def _shed_marker(d: str) -> None:
-        """Clear a version dir's retirement clock (idempotent)."""
-        try:
-            os.remove(os.path.join(d, "_SUPERSEDED_AT"))
-        except OSError:
-            pass
-
-    import time as _time
-
-    def _pointer() -> str | None:
-        try:
-            with open(cur) as f:
-                return f.read()
-        except OSError:
-            return None
-
-    vid = hashlib.md5(stamp.encode()).hexdigest()[:12]
-    vroot = os.path.join(base, "versions")
-    vdir = os.path.join(vroot, vid)
-    cur = os.path.join(base, "_CURRENT")
-    if _pointer() == vid and os.path.isdir(vdir):
-        # CURRENT must never carry a retirement clock: a concurrent
-        # different-stamp flipper's sweep may have marked this dir in
-        # the window before OUR flip won — left in place, its next real
-        # supersession would read the stale marker and reap instantly
-        # under live readers (r9 review #2).
-        _shed_marker(vdir)
-        return vdir
-    # Build + flip + sweep, retried if a concurrent sweep reaps the
-    # just-flipped dir (r11, closes ADVICE r9 #2's residual window from
-    # the flipper's side; the sweeper's side is the claim-and-re-read
-    # below). A reaped re-adoption rebuilds marker-free, which no sweep
-    # can touch inside the hour horizon — so the loop settles in ≤2
-    # iterations; 3 is headroom, not a tunable.
-    for _attempt in range(3):
-        if os.path.isdir(vdir) and not os.path.exists(
-            os.path.join(vdir, "_COMPLETE")
-        ):
-            # sentinel-less dir at the version path: crashed partial
-            # from a non-rename writer — never adopt; rebuild
-            shutil.rmtree(vdir, ignore_errors=True)
-        if not os.path.isdir(vdir):
-            scratch = os.path.join(vroot, f".build-{vid}-{_uuid.uuid4().hex[:8]}")
-            os.makedirs(scratch, exist_ok=True)
-            build(scratch)
-            with open(os.path.join(scratch, "_COMPLETE"), "w") as f:
-                f.write(stamp)  # last write: rename publishes data + proof
-            try:
-                os.rename(scratch, vdir)  # atomic: first complete build wins
-            except OSError:
-                # another builder landed the same version first; ours is
-                # an identical deterministic copy — discard it
-                shutil.rmtree(scratch, ignore_errors=True)
-        # A re-adopted version (corpus reverted to an old stamp) must
-        # shed any supersession marker from its previous retirement, or
-        # its next retirement would inherit the stale timestamp and
-        # reap instantly.
-        _shed_marker(vdir)
-        # The flip's temp file is WRITER-UNIQUE (r10): this protocol
-        # explicitly supports concurrent builders, and two flippers
-        # sharing one literal "_CURRENT.tmp" raced write→replace. The
-        # finally-unlink clears exception-path residue (ADVICE r10);
-        # process-crash residue is swept below with the versions.
-        tmp = f"{cur}.tmp-{_uuid.uuid4().hex[:8]}"
-        try:
-            with open(tmp, "w") as f:
-                f.write(vid)
-            os.replace(tmp, cur)  # THE commit point: one atomic rename
-        finally:
-            try:
-                os.unlink(tmp)  # no-op when the replace consumed it
-            except OSError:
-                pass
-        # Re-read the pointer before sweeping: a concurrent different-
-        # stamp builder may have flipped _CURRENT after our flip above —
-        # the dir the pointer NOW names must be neither marked nor
-        # reaped (its readers are live by definition; r9 review #2). If
-        # that concurrent flipper already marked OUR vdir in the same
-        # window, the fast path clears it on the next resolve.
-        pointed = _pointer() or vid
-        for old in os.listdir(vroot):
-            if old == vid or old == pointed:
-                # the currently-pointed dir also sheds any marker a
-                # racing sweep left on it, so its eventual retirement
-                # starts from its real supersession time
-                _shed_marker(os.path.join(vroot, old))
-                continue
-            p = os.path.join(vroot, old)
-            # DELAYED VACUUM. Scratch dirs and crashed reap claims age
-            # on mtime (last build/claim activity). Version dirs age on
-            # TIME SINCE SUPERSESSION, not build mtime (r9 review): a
-            # version built at t0 and superseded at t0+2h would
-            # otherwise be reaped at the instant of supersession,
-            # yanking files from a live session's lazy scans — the race
-            # the protocol exists to prevent. The first sweep that sees
-            # a superseded version writes _SUPERSEDED_AT inside it
-            # (underscore-prefixed: parquet scans ignore it); it is
-            # reaped one hour after THAT. No build/serve spans 1 h.
-            if old.startswith(".build-") or ".reap-" in old:
-                try:
-                    if _time.time() - os.path.getmtime(p) < 3600:
-                        continue
-                except OSError:
-                    continue
-                shutil.rmtree(p, ignore_errors=True)  # crashed residue
-                continue
-            marker = os.path.join(p, "_SUPERSEDED_AT")
-            try:
-                with open(marker) as f:
-                    t_sup = float(f.read())
-            except (OSError, ValueError):
-                try:
-                    with open(marker, "w") as f:
-                        f.write(str(_time.time()))
-                except OSError:
-                    # Marker can be neither read nor written (transient
-                    # ENOSPC/EMFILE, or read-only residue): DEFER —
-                    # retry at the next sweep. Never fall back to the
-                    # dir mtime here: mtime is the BUILD time (rename
-                    # preserves it), so a transient write failure at
-                    # the moment of supersession would reap an
-                    # hours-old version under a live reader's lazy
-                    # scans — the exact race this protocol prevents.
-                    # Genuinely read-only residue is unreapable by
-                    # rmtree(ignore_errors) anyway; a shared store
-                    # handles it via retention-based vacuum
-                    # (sinks/manifest.vacuum), not this sweep.
-                    pass
-                continue  # clock starts (or retries) at a later sweep
-            if _time.time() - t_sup < 3600:
-                continue
-            # PER-REAP POINTER RE-READ (r11, the staged ADVICE r9 #2
-            # touch — closes the hour-stale re-adoption TOCTOU from the
-            # sweeper's side): CLAIM the dir with an atomic rename
-            # first, then re-read the pointer. A re-adopter that
-            # flipped to this version between our marker read and the
-            # claim is detected and the dir is restored untouched; a
-            # re-adopter that passed its isdir check before our claim
-            # but flips after finds the dir missing at its post-flip
-            # verify and rebuilds (the loop above) — either way the
-            # pointer can never settle on a missing dir.
-            # CLAIM INTO A FRESH BOX (r11 review, twice-hardened): a
-            # bare rename would present the claimed dir under a PRESERVED
-            # >1h-old mtime — a concurrent sweeper's residue branch
-            # would read the live claim as aged crash debris and rmtree
-            # it during our claim→re-read window (and a post-rename
-            # utime still leaves a syscall-wide stale instant). Instead
-            # the claim is a rename INTO a box directory created fresh
-            # a moment before: sweepers age top-level entries, the box
-            # is born with a now-mtime BEFORE any stale content enters
-            # it, so there is no instant at which a live claim presents
-            # a stale mtime. A crashed holder leaves the box to age
-            # into ordinary '.reap-' residue (swept with its contents).
-            box = os.path.join(vroot, f".reap-{_uuid.uuid4().hex[:8]}")
-            try:
-                os.mkdir(box)
-            except OSError:
-                continue  # defer to a later sweep
-            claim = os.path.join(box, "claimed")
-            try:
-                os.rename(p, claim)
-            except OSError:
-                os.rmdir(box)  # another sweeper claimed it, or it vanished
-                continue
-            if _pointer() == old:
-                try:
-                    os.rename(claim, p)  # restore under the live pointer
-                except OSError:
-                    # a re-adopter already rebuilt at p: drop our claim
-                    pass
-                _shed_marker(p)
-                shutil.rmtree(box, ignore_errors=True)
-                continue
-            shutil.rmtree(box, ignore_errors=True)  # stale version
-        # Crashed-flip tmp residue (ADVICE r10): writer-unique names
-        # mean nothing ever reuses them — sweep any older than the
-        # same 1 h horizon.
-        for fn in os.listdir(base):
-            if not fn.startswith("_CURRENT.tmp-"):
-                continue
-            fp = os.path.join(base, fn)
-            try:
-                if _time.time() - os.path.getmtime(fp) >= 3600:
-                    os.unlink(fp)
-            except OSError:
-                pass
-        if os.path.isdir(vdir):
-            return vdir
-        # a concurrent sweep reaped the just-flipped dir (it read the
-        # pointer before our flip): rebuild — marker-free, unreapable
-        # inside the horizon — and re-flip
-    # Unreachable under a sane wall clock (a reaped re-adoption rebuilds
-    # marker-free and is unreapable inside the 1h horizon); if it ever
-    # trips, the likely cause is clock skew defeating the horizon — so
-    # the message carries the pointer/dir state a postmortem needs
-    # (r11 ADVICE: make a skew-induced trip diagnosable).
-    raise RuntimeError(
-        f"versioned artifact {vid} at {base!r} could not settle after 3 "
-        "build+flip attempts — sweeps kept reaping the flipped version "
-        f"(pointer now {_pointer()!r}, wanted {vid!r}; "
-        f"dir exists={os.path.isdir(vdir)}; repeated trips here suggest "
-        "wall-clock skew >1h defeating the reap horizon)"
-    )
-
-
-def _emb_source_stamp(sf_dir: str) -> str:
-    import os
-
-    src = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    return f"{src.st_size}:{src.st_mtime_ns}"
-
-
 def _ivf_disk_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the IVF index AS A TABLE ON DISK — the deployment
     shape SCALE.md describes: inverted lists hive-partitioned by cell
-    (one directory per cell), centroids as a sibling parquet table,
-    keyed on the embeddings source stamp so a re-shipped corpus
-    rebuilds. Probing then prunes cell DIRECTORIES at planning time,
-    exactly like the date layout prunes time — no index scan ever
-    lists the unprobed cells' files.
+    (one directory per cell), centroids as a sibling parquet table.
+    Probing then prunes cell DIRECTORIES at planning time, exactly like
+    the date layout prunes time — no index scan ever lists the
+    unprobed cells' files.
 
-    VERSIONED-PREFIX + ATOMIC-POINTER commit (r7 — the manifest sink's
-    protocol applied to the index artifact): each (source, quantizer-
-    params) stamp builds under its OWN ``versions/<id>/`` prefix, and
-    ``_CURRENT`` flips to it via write-temp + rename only after the
-    centroids AND every cell dir are complete. The previous scheme
-    rebuilt in place, so a reader resolving the dir mid-rebuild (a
-    corpus re-ship during a serving query — exactly the r3 driver
-    re-ship scenario) could scan a half-written index; now it serves
-    the complete old version until the flip, and a crashed rebuild
-    leaves only an unreferenced version dir. Superseded versions are
-    pruned AFTER the flip (single-host serving; a shared store would
-    vacuum on a delay like sinks/manifest.vacuum). Index retrains at
-    100 TB are routine (every corpus snapshot), which makes atomic
-    swap a correctness feature, not polish.
-
-    Returns the CURRENT version's directory."""
-    import hashlib
-    import os
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"db_loader_ivf_index_{key}")
+    Installed through ``staging.build_stage``, so the stage only ever
+    holds one complete index; a corpus re-ship or a quantizer revision
+    rebuilds it. Returns the stage directory."""
     # the stamp encodes the quantizer PARAMETERS, not just the source:
     # this dir outlives the process (unlike the session caches), so a
     # code revision changing n_bits/iters/KM_SCALE or the lists schema
-    # must invalidate it — the r3/r4 stale-derived-artifact class
-    stamp = (
-        f"{_emb_source_stamp(sf_dir)}"
-        f":n_bits=4:iters=2:scale={S.KM_SCALE}:layout=v2"
-    )
+    # must invalidate it
+    stamp = f"{_emb_stamp(sf_dir)}:n_bits=4:iters=2:scale={S.KM_SCALE}:layout=v2"
 
-    def build(vdir: str) -> None:
+    def build(scratch: str) -> None:
         from db_loader_spark.sinks.ddl import write_partitioned
 
         emb = load_table(spark, sf_dir, "embeddings")
         cents, lists = _ivf_index(spark, sf_dir, emb)
-        cents.write.mode("overwrite").parquet(os.path.join(vdir, "centroids"))
-        write_partitioned(lists, os.path.join(vdir, "lists"), F.col("cell"), "cell")
+        cents.write.mode("overwrite").parquet(os.path.join(scratch, "centroids"))
+        write_partitioned(
+            lists, os.path.join(scratch, "lists"), F.col("cell"), "cell"
+        )
 
-    return _versioned_artifact(base, stamp, build)
+    return build_stage(stage_path(sf_dir, "ivf_index"), stamp, build)
 
 
 def ann_ivf_disk_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -794,8 +506,6 @@ def ann_ivf_disk_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at planning time; plan-pinned) before the broadcast rescoring join.
     The corpus-sized assignment scan never reruns at serve time, and
     unprobed cells cost zero I/O."""
-    import os
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -930,13 +640,10 @@ _PQ_INDEX_MAX = 2
 
 
 def _evict_pq_entry(entry: tuple[list[DataFrame], DataFrame]) -> None:
-    """Release EVERY pinned block an index entry holds: the persisted
-    coded corpus and any codebook blocks (VERDICT r7: evicting only
-    `coded` leaked book frames per entry across a long driver session
-    running all three ANN families). Since the r8 disk-artifact
-    refactor the cached books are plain parquet reads — unpersist is a
-    safe no-op there, and this stays correct for any future entry that
-    persists its books again."""
+    """Release every pinned block an index entry holds: the persisted
+    coded corpus and any codebook blocks. The cached books are plain
+    parquet reads, so unpersisting them is a no-op today; it keeps
+    eviction correct for an entry that persists its books."""
     books, coded = entry
     coded.unpersist()
     for b in books:
@@ -944,27 +651,17 @@ def _evict_pq_entry(entry: tuple[list[DataFrame], DataFrame]) -> None:
 
 
 def _pq_disk_artifact(spark: SparkSession, sf_dir: str) -> str:
-    """The PQ index AS A VERSIONED ON-DISK ARTIFACT (r8 — VERDICT r7
-    #6: the coded corpus and codebooks previously existed only as
-    session-cached persists; a production coded-corpus serving path
-    needs the same ``versions/<id>/`` + ``_CURRENT`` atomic-flip
-    treatment the IVF index got in r7). Layout: ``book{0..M-1}/``
-    (subspace codebooks) + ``codes/`` (vec_id, code0..code{M-1}).
-    Stamped on source bytes AND every quantizer parameter, so a
-    corpus re-ship or a PQ_* / KM_SCALE revision rebuilds under a new
-    version id while readers keep serving the complete old one."""
-    import hashlib
-    import os
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"db_loader_pq_index_{key}")
+    """The PQ index as an on-disk stage: ``book{0..M-1}/`` (subspace
+    codebooks) + ``codes/`` (vec_id, code0..code{M-1}). Stamped on the
+    source bytes AND every quantizer parameter, so a corpus re-ship or
+    a PQ_* / KM_SCALE revision rebuilds it. Returns the stage
+    directory."""
     stamp = (
-        f"{_emb_source_stamp(sf_dir)}:M={PQ_M}:n_bits={PQ_NBITS}"
+        f"{_emb_stamp(sf_dir)}:M={PQ_M}:n_bits={PQ_NBITS}"
         f":iters={PQ_ITERS}:scale={S.KM_SCALE}:layout=v1"
     )
 
-    def build(vdir: str) -> None:
+    def build(scratch: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         codes = emb.select("vec_id")
         for s in range(PQ_M):
@@ -975,7 +672,7 @@ def _pq_disk_artifact(spark: SparkSession, sf_dir: str) -> str:
             cents = S.kmeans_centroids(
                 sub, "sub", n_bits=PQ_NBITS, iters=PQ_ITERS, dim=PQ_SUBDIM
             )
-            cents.write.mode("overwrite").parquet(os.path.join(vdir, f"book{s}"))
+            cents.write.mode("overwrite").parquet(os.path.join(scratch, f"book{s}"))
             asg = S.ivf_inverted_lists(
                 sub, cents, vec_col="sub", dim=PQ_SUBDIM
             ).select(
@@ -983,34 +680,33 @@ def _pq_disk_artifact(spark: SparkSession, sf_dir: str) -> str:
                 F.col("cell").alias(f"code{s}"),
             )
             codes = codes.join(asg, "vec_id")
-        codes.write.mode("overwrite").parquet(os.path.join(vdir, "codes"))
+        codes.write.mode("overwrite").parquet(os.path.join(scratch, "codes"))
 
-    return _versioned_artifact(base, stamp, build)
+    return build_stage(stage_path(sf_dir, "pq_index"), stamp, build)
 
 
 def _pq_index(
     spark: SparkSession, sf_dir: str, emb: DataFrame
 ) -> tuple[list[DataFrame], DataFrame]:
-    """Serve the PQ index FROM THE VERSIONED DISK ARTIFACT — ``books[s]``
-    is the subspace-s codebook (cid, m[SUBDIM] integer codes), ``codes``
-    the packed corpus (vec_id, code0..code{M-1}), the PQ-compressed
+    """Serve the PQ index from its disk stage — ``books[s]`` is the
+    subspace-s codebook (cid, m[SUBDIM] integer codes), ``codes`` the
+    packed corpus (vec_id, code0..code{M-1}), the PQ-compressed
     representation ADC scans instead of raw vectors. The session cache
-    holds lazy reads of the CURRENT version (codes persisted for the
-    repeated ADC joins); a corpus re-ship rebuilds the artifact under
-    a new version id and the next serve reads it."""
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir)
+    holds lazy reads of the stage (codes persisted for the repeated ADC
+    joins) and is keyed on the embeddings stamp: a re-shipped corpus
+    rebuilds the stage, which deletes the generation the old entry
+    reads, so the old entry must never be served again."""
+    key = (spark.sparkContext.applicationId, sf_dir, _emb_stamp(sf_dir))
     idx = _PQ_INDEX.get(key)
     if idx is None:
         while len(_PQ_INDEX) >= _PQ_INDEX_MAX:
             _evict_pq_entry(_PQ_INDEX.pop(next(iter(_PQ_INDEX))))
-        vdir = _pq_disk_artifact(spark, sf_dir)
+        stage = _pq_disk_artifact(spark, sf_dir)
         books = [
-            spark.read.parquet(os.path.join(vdir, f"book{s}"))
+            spark.read.parquet(os.path.join(stage, f"book{s}"))
             for s in range(PQ_M)
         ]
-        codes = spark.read.parquet(os.path.join(vdir, "codes")).persist()
+        codes = spark.read.parquet(os.path.join(stage, "codes")).persist()
         codes.count()
         idx = (books, codes)
         _PQ_INDEX[key] = idx
@@ -1317,38 +1013,29 @@ _IVFPQ_INDEX: dict[tuple, tuple[list[DataFrame], DataFrame]] = {}
 
 
 def _ivfpq_disk_artifact(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
-    """IVF-PQ residual index as a versioned on-disk artifact (r8, the
-    _pq_disk_artifact treatment): ``book{s}/`` residual codebooks +
-    ``coded/`` (vec_id, cell, code0..code{M-1}). The stamp covers the
-    COARSE quantizer's parameters too — residual codes are meaningless
-    against a retrained coarse quantizer, so either revision flips the
-    version."""
-    import hashlib
-    import os
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"db_loader_ivfpq_index_{key}")
+    """The IVF-PQ residual index as an on-disk stage: ``book{s}/``
+    residual codebooks + ``coded/`` (vec_id, cell, code0..code{M-1}).
+    The stamp covers the COARSE quantizer's parameters too — residual
+    codes are meaningless against a retrained coarse quantizer, so
+    either revision rebuilds it. Returns the stage directory."""
     stamp = (
-        f"{_emb_source_stamp(sf_dir)}:coarse_bits=4:coarse_iters=2"
+        f"{_emb_stamp(sf_dir)}:coarse_bits=4:coarse_iters=2"
         f":M={PQ_M}:n_bits={PQ_NBITS}:iters={PQ_ITERS}"
         f":scale={S.KM_SCALE}:layout=v1"
     )
 
-    def build(vdir: str) -> None:
-        books, coded = _ivfpq_train(spark, sf_dir, emb, vdir)
-        coded.write.mode("overwrite").parquet(os.path.join(vdir, "coded"))
+    def build(scratch: str) -> None:
+        books, coded = _ivfpq_train(spark, sf_dir, emb, scratch)
+        coded.write.mode("overwrite").parquet(os.path.join(scratch, "coded"))
 
-    return _versioned_artifact(base, stamp, build)
+    return build_stage(stage_path(sf_dir, "ivfpq_index"), stamp, build)
 
 
 def _ivfpq_train(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, vdir: str
+    spark: SparkSession, sf_dir: str, emb: DataFrame, out_dir: str
 ) -> tuple[list[DataFrame], DataFrame]:
-    """Residual training + coding (the r7 construction, now writing
-    each trained codebook into the artifact dir as it completes)."""
-    import os
-
+    """Residual training + coding; each trained codebook is written
+    into the build dir ``out_dir`` as it completes."""
     cents, lists = _ivf_index(spark, sf_dir, emb)
     m_tbl = cents.select(F.col("cid").alias("cell"), F.col("m").alias("cm"))
     res = (
@@ -1377,7 +1064,7 @@ def _ivfpq_train(
         book = S.kmeans_centroids(
             sub, "sub", n_bits=PQ_NBITS, iters=PQ_ITERS, dim=PQ_SUBDIM
         )
-        book.write.mode("overwrite").parquet(os.path.join(vdir, f"book{s}"))
+        book.write.mode("overwrite").parquet(os.path.join(out_dir, f"book{s}"))
         asg = S.ivf_inverted_lists(
             sub, book, vec_col="sub", dim=PQ_SUBDIM
         ).select(
@@ -1392,25 +1079,23 @@ def _ivfpq_train(
 def _ivfpq_index(
     spark: SparkSession, sf_dir: str, emb: DataFrame
 ) -> tuple[list[DataFrame], DataFrame]:
-    """Serve the IVF-PQ index from the versioned disk artifact (the
-    _pq_index discipline): residual codebooks + coded corpus read from
-    the CURRENT version, coded persisted for the probed ADC joins.
-    Shares the coarse quantizer with `_ivf_index` — one centroid table
-    per corpus version feeding IVF, SemDeDup, the streaming maintainer,
-    and the residual coder."""
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir)
+    """Serve the IVF-PQ index from its disk stage (the _pq_index
+    discipline, keyed on the embeddings stamp): residual codebooks +
+    coded corpus, coded persisted for the probed ADC joins. Shares the
+    coarse quantizer with `_ivf_index` — one centroid table per corpus
+    version feeding IVF, SemDeDup, the streaming maintainer, and the
+    residual coder."""
+    key = (spark.sparkContext.applicationId, sf_dir, _emb_stamp(sf_dir))
     idx = _IVFPQ_INDEX.get(key)
     if idx is None:
         while len(_IVFPQ_INDEX) >= _PQ_INDEX_MAX:
             _evict_pq_entry(_IVFPQ_INDEX.pop(next(iter(_IVFPQ_INDEX))))
-        vdir = _ivfpq_disk_artifact(spark, sf_dir, emb)
+        stage = _ivfpq_disk_artifact(spark, sf_dir, emb)
         books = [
-            spark.read.parquet(os.path.join(vdir, f"book{s}"))
+            spark.read.parquet(os.path.join(stage, f"book{s}"))
             for s in range(PQ_M)
         ]
-        coded = spark.read.parquet(os.path.join(vdir, "coded")).persist()
+        coded = spark.read.parquet(os.path.join(stage, "coded")).persist()
         coded.count()
         idx = (books, coded)
         _IVFPQ_INDEX[key] = idx

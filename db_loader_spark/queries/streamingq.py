@@ -24,16 +24,13 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from db_loader_spark.queries import QuerySpec
 from db_loader_spark.session import local_frame
-# the stage-race tests drive both staging primitives through this module
-from db_loader_spark.staging import build_stage as _build_stage
-from db_loader_spark.staging import stage_current as _stage_current  # noqa: F401
+from db_loader_spark.staging import build_stage, source_stamp, stage_path
 from db_loader_spark.streaming.run import (
     drain,
     drain_scope,
@@ -53,15 +50,6 @@ from db_loader_spark.tables import load_table
 SHARDS_SHAVED = 2
 
 
-def _source_stamp(sf_dir: str, table: str = "events") -> str:
-    """Size+mtime fingerprint of a source table. Staged copies are
-    keyed on it: testdata can be re-shipped in place, and a bare
-    done-marker would keep serving the STALE staged copy — a
-    guaranteed hash mismatch against the fresh oracle."""
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return f"{st.st_size}:{st.st_mtime_ns}"
-
-
 def _stage_table(
     spark: SparkSession,
     sf_dir: str,
@@ -74,15 +62,13 @@ def _stage_table(
     reused across calls — staging is the table's storage layout, not
     per-query work). The shards are what turns the availableNow drain
     into a REAL multi-batch run."""
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"db_loader_stream_{tag}_{key}")
     # The stamp always carries the shard layout, so stamp text and
     # layout are in bijection: a warm stage is never reused at a layout
     # other than the one that built it, whatever the default becomes.
-    stamp = _source_stamp(sf_dir, table) + f":shards{shards}"
-    return _build_stage(
-        stage,
-        stamp,
+    stamp = source_stamp(os.path.join(sf_dir, f"{table}.parquet"))
+    return build_stage(
+        stage_path(sf_dir, f"stream_{tag}"),
+        f"{stamp}:shards{shards}",
         lambda scratch: load_table(spark, sf_dir, table)
         .repartition(shards)
         .write.mode("overwrite")
@@ -157,11 +143,11 @@ def t_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every row of one copy — a silent hash mismatch if testdata ever
     ships duplicate ids. One count≡countDistinct check per (re)staging
     turns that drift into a loud error naming the precondition."""
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"db_loader_stream_dup_{key}")
+    stage = stage_path(sf_dir, "stream_dup")
     # SHARDS_SHAVED shards × 2 copies = 4 micro-batches, 3 boundaries
     # carrying dedup state; the stamp carries the layout
-    stamp = _source_stamp(sf_dir) + f":shards{SHARDS_SHAVED}"
+    stamp = source_stamp(os.path.join(sf_dir, "events.parquet"))
+    stamp += f":shards{SHARDS_SHAVED}"
 
     def build(scratch: str) -> None:
         ev = load_table(spark, sf_dir, "events").repartition(SHARDS_SHAVED)
@@ -180,7 +166,7 @@ def t_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # second verbatim copy, distinct file names → 2×SHARDS_SHAVED files
         ev.write.mode("append").parquet(scratch)
 
-    _build_stage(stage, stamp, build)
+    build_stage(stage, stamp, build)
     stream = file_stream(spark, stage).dropDuplicates(["event_id"])
     with drain_scope(spark) as run_dir:
         out_dir = os.path.join(run_dir, "out")
@@ -458,11 +444,10 @@ def _stage_time_chunks(spark: SparkSession, sf_dir: str) -> str:
     import datetime as dt
     import shutil
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"db_loader_stream_sess_{key}")
+    stage = stage_path(sf_dir, "stream_sess")
     # the stamp carries the chunk layout, so a warm stage from another
     # layout rebuilds instead of being silently reused
-    stamp = _source_stamp(sf_dir) + ":chunks2s1"
+    stamp = source_stamp(os.path.join(sf_dir, "events.parquet")) + ":chunks2s1"
 
     def build(scratch: str) -> None:
         e = load_table(spark, sf_dir, "events").select("ts", "user_id", "value")
@@ -494,7 +479,7 @@ def _stage_time_chunks(spark: SparkSession, sf_dir: str) -> str:
             shutil.rmtree(tmp, ignore_errors=True)
             os.utime(final, (1_700_000_000 + i * 10,) * 2)
 
-    return _build_stage(stage, stamp, build)
+    return build_stage(stage, stamp, build)
 
 
 def t_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -526,8 +511,7 @@ def t_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from db_loader_spark.streaming.stateful import sessionize_stream
 
     stage = _stage_time_chunks(spark, sf_dir)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    out_dir = os.path.join(tempfile.gettempdir(), f"db_loader_stream_sess_out_{key}")
+    out_dir = stage_path(sf_dir, "stream_sess_out")
     shutil.rmtree(out_dir, ignore_errors=True)
     sessions = sessionize_stream(
         file_stream(spark, stage), gap_minutes=30, watermark="5 seconds"

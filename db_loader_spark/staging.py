@@ -1,71 +1,104 @@
-"""Scratch+rename installation for stamp-keyed staged directories.
+"""The one install protocol for derived, source-stamped directories.
 
-Extracted from queries/streamingq.py (r11 review): the scratch+rename
-fix originally closed the mixed-generation race for the STREAMING
-stage dirs only, while five sibling sites (the CDC root, the
-append-lineage root, the upsert root, the zone-map root, the CLI e2e
-corpus) still built in place with the same clear + write + stamp-last
-pattern — the identical bug class, one module over. This module is the
-single implementation; every stamp-keyed stage in the repo installs
-through it.
+A stage is a directory derived from source files (a re-sharded table,
+a manifest history, an on-disk ANN index, a bench layout). This module
+owns the three things every stage needs:
 
-Protocol (see ``build_stage``): build into a builder-unique scratch,
-write the stamp INSIDE the scratch as the last file, move any other
-generation aside with an atomic rename, and publish with one atomic
-rename — so the stage path only ever holds COMPLETE SINGLE-GENERATION
-builds, under any interleaving of concurrent builders (thread- and
-process-storm tested in tests/test_stage_build_race.py and
+- where it lives: ``stage_path(sf_dir, tag)``;
+- what it was built from: ``source_stamp(*paths)`` (size and mtime of
+  each source), plus any layout suffix the caller appends;
+- how it is installed: ``build_stage(stage, stamp, build)``.
+
+Protocol: build into a builder-unique scratch, write the stamp INSIDE
+the scratch as the last file, move any other generation aside with an
+atomic rename, and publish with one atomic rename. Thread and process
+storms pin it (tests/test_stage_build_race.py,
 tests/test_multiprocess_races.py).
+
+Reader contract:
+
+- the stage path only ever holds a COMPLETE SINGLE-GENERATION build;
+- a superseded generation is deleted when the new one installs, so a
+  reader still holding paths into it (lazy parquet scans) fails loudly
+  with FileNotFound on its next action — it never reads mixed values;
+- a session cache over a stage must therefore key on the source stamp,
+  so a re-shipped source is never served from the superseded build.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
+
+_STAMP_FILE = "_SOURCE_STAMP"  # underscore-prefixed: parquet scans skip it
+
+
+def stage_path(sf_dir: str, tag: str) -> str:
+    """``<tmp>/db_loader_<tag>_<key>``, keyed by the absolute sf_dir."""
+    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+    return os.path.join(tempfile.gettempdir(), f"db_loader_{tag}_{key}")
+
+
+def source_stamp(*paths: str) -> str:
+    """``size:mtime_ns`` of each path, comma-joined. Testdata can be
+    re-shipped in place, so a stage keyed on a bare done-marker would
+    keep serving stale derived data. A missing path stamps as ``-``:
+    its build then fails loudly, and a cache keyed on it rebuilds once
+    the file appears."""
+    parts = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except FileNotFoundError:
+            parts.append("-")
+            continue
+        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
+    return ",".join(parts)
 
 
 def stage_current(stage: str, stamp: str) -> bool:
     """True if ``stage`` carries exactly ``stamp``. The stamp is the
-    LAST file written into the build scratch, and the scratch is
-    RENAMED into place whole (``build_stage``), so a dir whose stamp
-    validates is always a complete single-generation build — a crashed
-    or half-done build can never pass."""
+    last file written into the build scratch and the scratch is renamed
+    into place whole, so a validating stage is always a complete
+    single-generation build."""
     try:
-        with open(os.path.join(stage, "_SOURCE_STAMP")) as f:
+        with open(os.path.join(stage, _STAMP_FILE)) as f:
             return f.read() == stamp
     except OSError:
         return False
 
 
-def build_stage(stage: str, stamp: str, build) -> str:
-    """Install ``build(scratch)``'s output at ``stage`` atomically.
+def mark_current(stage: str, stamp: str) -> None:
+    """Write ``stamp`` into ``stage``. ``build_stage`` writes it last
+    into its scratch. Called directly only for locations a catalog owns
+    (``saveAsTable``), which cannot be renamed into place: the caller
+    drops and rebuilds the whole location before stamping it, with no
+    concurrent builder."""
+    with open(os.path.join(stage, _STAMP_FILE), "w") as f:
+        f.write(stamp)
 
-    The retired in-place protocol (clear + write chunks + stamp last)
-    could interleave under two sessions racing a layout/source
-    transition into a mixed-generation dir whose stamp validates while
-    stale files from the other generation linger — and directory-scan
-    readers (parquet globs, manifest roots) read every file, so the
-    mix silently changes VALUES. After this protocol the stage path
-    only ever holds complete single-generation builds:
+
+def build_stage(stage: str, stamp: str, build) -> str:
+    """Install ``build(scratch)``'s output at ``stage`` atomically and
+    return ``stage``.
 
     - same-stamp racers: one rename wins; the loser sees the winner's
       stamp validate and discards its identical scratch copy
-      (deterministic bytes ⇒ either copy is correct);
+      (deterministic bytes, so either copy is correct);
     - different-stamp racers: the other generation is moved aside to a
-      doomed name (rename, atomic) before install, so generations
-      never share the live path; last installer wins and every
+      doomed name (an atomic rename) before install, so generations
+      never share the live path; the last installer wins and every
       intermediate state is a complete build of one generation;
     - a reader listing files during the swap can hit FileNotFound —
-      loud crash-class, not silent wrong values; callers in this repo
-      are sequential (driver, bench, pytest each run alone) and the
-      thread/process storms pin the invariant under deliberate races.
+      loud, never silently wrong values.
 
-    The install dance retries bounded under contention: between the
+    The install retries a bounded number of times: between the
     move-aside and the rename another racer can occupy the path (its
-    install rename is atomic), failing ours with ENOTEMPTY — found by
-    the opposing-layouts thread storm. Each attempt either adopts a
-    same-stamp winner, installs, or moves the other generation aside;
-    the bound only trips under a pathological persistent storm, never
-    a caller pattern.
+    install rename is atomic), failing ours with ENOTEMPTY. Each
+    attempt either adopts a same-stamp winner, installs, or moves the
+    other generation aside; the bound only trips under a pathological
+    persistent storm.
     """
     import shutil
     import uuid as _uuid
@@ -79,8 +112,7 @@ def build_stage(stage: str, stamp: str, build) -> str:
         # Spark writers tolerate an existing empty dir in overwrite mode
         os.makedirs(scratch, exist_ok=True)
         build(scratch)
-        with open(os.path.join(scratch, "_SOURCE_STAMP"), "w") as f:
-            f.write(stamp)  # last write: rename publishes data + proof
+        mark_current(scratch, stamp)  # last write: rename publishes data + proof
         for _ in range(16):
             if stage_current(stage, stamp):
                 # a same-stamp racer finished first: its copy is

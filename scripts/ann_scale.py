@@ -32,24 +32,18 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 
 from db_loader_spark.session import get_spark
+from db_loader_spark.staging import stage_path
 
 BASE_VECTORS = 2_000  # driver sf0.1 scale as the 1x point
 DIM = 64
 
 
 def _sweep_artifact_bases(sf_dir: str) -> list[str]:
-    """The versioned on-disk PQ/IVF-PQ/IVF artifacts a sweep pass
-    creates for a SYNTHETIC corpus dir — removed with the corpus so
-    repeated sweeps don't accumulate orphaned index versions in /tmp
-    (the testdata corpora's artifacts are deliberately kept)."""
-    import hashlib
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    return [
-        os.path.join(tempfile.gettempdir(), f"db_loader_{kind}_index_{key}")
-        for kind in ("ivf", "pq", "ivfpq")
-    ]
+    """The on-disk PQ/IVF-PQ/IVF index stages a sweep pass creates for
+    a SYNTHETIC corpus dir — removed with the corpus so repeated sweeps
+    don't accumulate orphaned indexes in the temp dir (the testdata
+    corpora's stages are deliberately kept)."""
+    return [stage_path(sf_dir, f"{kind}_index") for kind in ("ivf", "pq", "ivfpq")]
 
 
 def synth_dir(spark, scale: int) -> str:

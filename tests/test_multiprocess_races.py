@@ -1,20 +1,19 @@
 """Cross-PROCESS storms for the lock-free commit protocols.
 
-The r10/r11 thread storms witness the invariants under concurrent
-threads, but both protocols' real contract is concurrent SESSIONS —
-separate processes (a bench run racing a test session was the original
-r8 observation). Threads share the GIL, which serializes bytecode and
-can mask interleavings that real processes hit; these tests re-run the
-same storms across genuine fork boundaries:
+The thread storms witness the invariants under concurrent threads, but
+both protocols' real contract is concurrent SESSIONS — separate
+processes (a bench run racing a test session). Threads share the GIL,
+which serializes bytecode and can mask interleavings that real
+processes hit; these tests re-run the storms across genuine fork
+boundaries:
 
-- ``_build_stage``: N processes race the same layout transition (and an
-  opposing-layouts variant) on one stage path. Invariant: the live dir
-  is only ever a COMPLETE SINGLE-GENERATION build; no scratch/doomed
-  residue; every process exits 0.
-- ``_versioned_artifact``: N processes cycle stamps through one
-  artifact base. Invariant: every resolve returns an existing dir whose
-  ``_COMPLETE`` sentinel and payload match the requested stamp; the
-  final pointer names a complete dir; every process exits 0.
+- ``staging.build_stage``: N processes race the same layout transition
+  (and an opposing-layouts variant) on one stage path. Invariant: the
+  live dir is only ever a COMPLETE SINGLE-GENERATION build; no
+  scratch/doomed residue; every process exits 0.
+- the manifest commit: N processes race append commits against one
+  table root. Invariant: no commit is lost and the lineage is
+  contiguous.
 
 Workers rendezvous on a start-marker file (subprocess spawn jitter
 would otherwise serialize them) and re-check the invariants after
@@ -35,7 +34,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _STAGE_WORKER = """
 import os, sys, time
 sys.path.insert(0, {repo!r})
-from db_loader_spark.queries.streamingq import _build_stage, _stage_current
+from db_loader_spark.staging import build_stage as _build_stage, stage_current as _stage_current
 
 stage, start_marker, gen, n_files, rounds = (
     sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4]), int(sys.argv[5])
@@ -64,39 +63,6 @@ for _ in range(rounds):
         sys.exit(7)
 print("ok")
 """
-
-_ARTIFACT_WORKER = """
-import os, sys, time
-sys.path.insert(0, {repo!r})
-from db_loader_spark.queries.similarity import _versioned_artifact
-
-base, start_marker, seed, rounds = (
-    sys.argv[1], sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
-)
-stamps = ["stamp-a", "stamp-b", "stamp-c"]
-
-def make_build(stamp):
-    def build(d):
-        time.sleep(0.002)
-        with open(os.path.join(d, "payload"), "w") as f:
-            f.write("payload-for-" + stamp)
-    return build
-
-while not os.path.exists(start_marker):
-    time.sleep(0.001)
-for i in range(rounds):
-    stamp = stamps[(seed + i) % len(stamps)]
-    vdir = _versioned_artifact(base, stamp, make_build(stamp))
-    with open(os.path.join(vdir, "_COMPLETE")) as f:
-        got = f.read()
-    with open(os.path.join(vdir, "payload")) as f:
-        payload = f.read()
-    if got != stamp or payload != "payload-for-" + stamp:
-        print("CONTAMINATED:", stamp, got, payload, file=sys.stderr)
-        sys.exit(7)
-print("ok")
-"""
-
 
 def _run_storm(script: str, args_per_proc: list[list[str]], start_marker: str):
     procs = [
@@ -161,25 +127,6 @@ def test_stage_build_cross_process_opposing_layouts(tmp_path):
     assert residue == []
 
 
-def test_versioned_artifact_cross_process_storm(tmp_path):
-    base = str(tmp_path / "art")
-    start = str(tmp_path / "go")
-    script = _ARTIFACT_WORKER.format(repo=REPO)
-    _run_storm(script, [[base, start, str(i), "10"] for i in range(6)], start)
-
-    with open(os.path.join(base, "_CURRENT")) as f:
-        vid = f.read()
-    vroot = os.path.join(base, "versions")
-    assert os.path.isdir(os.path.join(vroot, vid))
-    assert os.path.exists(os.path.join(vroot, vid, "_COMPLETE"))
-    for entry in os.listdir(vroot):
-        if entry.startswith(".build-") or ".reap-" in entry:
-            continue  # loser scratch / crashed claim: age-swept later
-        assert os.path.exists(
-            os.path.join(vroot, entry, "_COMPLETE")
-        ), f"incomplete version dir {entry} left published"
-
-
 _MANIFEST_WORKER = """
 import os, sys, time
 sys.path.insert(0, {repo!r})
@@ -216,11 +163,11 @@ print("ok")
 
 
 def test_manifest_commit_cross_process_storm(tmp_path):
-    """r12 (VERDICT r11 #3): N processes race APPEND commits against
-    one manifest root through the REAL commit protocol —
-    ``_commit_staged`` with its manifest rebuild-and-retry loop over
-    the ``os.link`` generation CAS (``publish`` minus only Spark's
-    parquet staging, which is parent-independent and uncontended).
+    """N processes race APPEND commits against one manifest root
+    through the REAL commit protocol — ``_commit_staged`` with its
+    manifest rebuild-and-retry loop over the ``os.link`` generation
+    CAS (``publish`` minus only Spark's parquet staging, which is
+    parent-independent and uncontended).
     Invariants: every process exits 0; every commit is in the final
     lineage (NO lost snapshot — the upgrade's headline guarantee);
     each lineage step strictly grows the file set (appends serialized,

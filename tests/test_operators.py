@@ -359,41 +359,60 @@ def test_semdedup_hot_cell_is_subsplit_and_bounded(spark):
     assert cold_keys == ["cold:"] and sizes["cold:"] == 5
 
 
-def test_ivf_disk_index_atomic_versioning(spark):
-    """The r7 versioned-prefix commit for the on-disk IVF index: the
-    pointer names a COMPLETE version; crash residue (a partial version
-    dir that never got the pointer flip) is invisible to serving and
-    swept by the next successful build once stale (r9: delayed
-    vacuum)."""
+def _drop_pq_caches() -> None:
+    """Evict the session PQ/IVF-PQ caches: their lazy book reads list
+    the stage's files, which a rebuilt stage replaces."""
+    import db_loader_spark.queries.similarity as qs
+
+    for cache in (qs._PQ_INDEX, qs._IVFPQ_INDEX):
+        while cache:
+            qs._evict_pq_entry(cache.popitem()[1])
+
+
+def _check_stage_contract(resolve, subdirs: list[str]) -> str:
+    """The one stage contract every index artifact takes: the resolve
+    returns a stage holding ``subdirs`` and its stamp; a warm resolve
+    serves the same directory (no rebuild — a rebuild renames a new
+    dir into place, so the inode would change); a removed stage is
+    rebuilt at the same path."""
     import os
-    import time
+    import shutil
+
+    stage = resolve()
+    for d in subdirs:
+        assert os.path.isdir(os.path.join(stage, d)), d
+    assert os.path.isfile(os.path.join(stage, "_SOURCE_STAMP"))
+    ino = os.stat(stage).st_ino
+    assert resolve() == stage
+    assert os.stat(stage).st_ino == ino  # warm: served, not rebuilt
+    shutil.rmtree(stage)
+    assert resolve() == stage  # rebuilt at the same path
+    for d in subdirs:
+        assert os.path.isdir(os.path.join(stage, d)), d
+    _drop_pq_caches()
+    return stage
+
+
+def test_ivf_disk_index_atomic_versioning(spark):
+    """The on-disk IVF index installs through staging.build_stage: a
+    partial directory at the stage path (an in-place writer's crash
+    residue, no stamp) is never served — the next resolve replaces it
+    with a complete stamped build."""
+    import os
+    import shutil
 
     from db_loader_spark.queries.similarity import _ivf_disk_index
+    from db_loader_spark.staging import stage_path
 
     sf = "/root/testdata/sf0.001"
-    vdir = _ivf_disk_index(spark, sf)
-    base = os.path.dirname(os.path.dirname(vdir))
-    with open(os.path.join(base, "_CURRENT")) as fh:
-        assert fh.read() == os.path.basename(vdir)
-    assert os.path.isdir(os.path.join(vdir, "centroids"))
-    # simulate a crashed rebuild: partial version dir, no pointer flip
-    crashed = os.path.join(base, "versions", "deadbeefcrash")
-    os.makedirs(os.path.join(crashed, "lists"), exist_ok=True)
-    assert _ivf_disk_index(spark, sf) == vdir  # still serves current
-    with open(os.path.join(base, "_CURRENT")) as fh:
-        assert fh.read() == os.path.basename(vdir)  # pointer untouched
-    # a successful (cache-hit) resolve never deletes the current
-    # version; the crashed dir is swept only by the next real build —
-    # force one by dropping the pointer
-    os.remove(os.path.join(base, "_CURRENT"))
-    # r9 marker protocol: version dirs age from SUPERSESSION (the
-    # _SUPERSEDED_AT a sweep writes on first sight), not build mtime —
-    # simulate "observed superseded >1h ago" by writing a stale marker
-    with open(os.path.join(crashed, "_SUPERSEDED_AT"), "w") as fh:
-        fh.write(str(time.time() - 7200))
-    vdir2 = _ivf_disk_index(spark, sf)
-    assert vdir2 == vdir  # same stamp → same version id
-    assert not os.path.isdir(crashed)  # stale residue swept after flip
+    stage = stage_path(sf, "ivf_index")
+    assert _ivf_disk_index(spark, sf) == stage
+    shutil.rmtree(stage)
+    os.makedirs(os.path.join(stage, "lists", "cell=crashed"))
+    assert _ivf_disk_index(spark, sf) == stage
+    assert os.path.isdir(os.path.join(stage, "centroids"))
+    assert os.path.isfile(os.path.join(stage, "_SOURCE_STAMP"))
+    assert not os.path.exists(os.path.join(stage, "lists", "cell=crashed"))
 
 
 def test_data_sized_shuffle_restores_on_exception(spark):
@@ -451,532 +470,72 @@ def test_subsplit_cells_partitions_rows_exactly(spark):
 
 
 def test_pq_disk_artifact_atomic_versioning(spark):
-    """r8 (VERDICT r7 #6): the PQ coded corpus + codebooks get the same
-    versioned-prefix + atomic-pointer commit the IVF index got in r7 —
-    pointer names a complete version, crash residue invisible, swept
-    by the next successful flip once stale (r9: delayed vacuum)."""
-    import os
-    import time
-
+    """The PQ coded corpus + codebooks take the stage contract."""
     from db_loader_spark.queries.similarity import PQ_M, _pq_disk_artifact
+    from db_loader_spark.staging import stage_path
 
     sf = "/root/testdata/sf0.001"
-    vdir = _pq_disk_artifact(spark, sf)
-    base = os.path.dirname(os.path.dirname(vdir))
-    with open(os.path.join(base, "_CURRENT")) as fh:
-        assert fh.read() == os.path.basename(vdir)
-    for s in range(PQ_M):
-        assert os.path.isdir(os.path.join(vdir, f"book{s}"))
-    assert os.path.isdir(os.path.join(vdir, "codes"))
-    crashed = os.path.join(base, "versions", "deadbeefcrash")
-    os.makedirs(os.path.join(crashed, "codes"), exist_ok=True)
-    assert _pq_disk_artifact(spark, sf) == vdir  # still serves current
-    with open(os.path.join(base, "_CURRENT")) as fh:
-        assert fh.read() == os.path.basename(vdir)  # pointer untouched
-    os.remove(os.path.join(base, "_CURRENT"))
-    with open(os.path.join(crashed, "_SUPERSEDED_AT"), "w") as fh:
-        fh.write(str(time.time() - 7200))  # observed superseded >1h ago
-    vdir2 = _pq_disk_artifact(spark, sf)
-    assert vdir2 == vdir  # same stamp → same version id
-    assert not os.path.isdir(crashed)  # stale residue swept after flip
+    stage = _check_stage_contract(
+        lambda: _pq_disk_artifact(spark, sf),
+        [f"book{s}" for s in range(PQ_M)] + ["codes"],
+    )
+    assert stage == stage_path(sf, "pq_index")
 
 
 def test_ivfpq_disk_artifact_atomic_versioning(spark):
-    """Same protocol for the IVF-PQ residual artifact; its stamp also
+    """Same contract for the IVF-PQ residual artifact; its stamp also
     covers the coarse quantizer params (residual codes are meaningless
     against a retrained coarse quantizer)."""
-    import os
-    import time
-
-    from db_loader_spark.queries.similarity import (
-        PQ_M,
-        _ivfpq_disk_artifact,
-    )
+    from db_loader_spark.queries.similarity import PQ_M, _ivfpq_disk_artifact
+    from db_loader_spark.staging import stage_path
     from db_loader_spark.tables import load_table
 
     sf = "/root/testdata/sf0.001"
     emb = load_table(spark, sf, "embeddings")
-    vdir = _ivfpq_disk_artifact(spark, sf, emb)
-    base = os.path.dirname(os.path.dirname(vdir))
-    with open(os.path.join(base, "_CURRENT")) as fh:
-        assert fh.read() == os.path.basename(vdir)
-    for s in range(PQ_M):
-        assert os.path.isdir(os.path.join(vdir, f"book{s}"))
-    assert os.path.isdir(os.path.join(vdir, "coded"))
-    crashed = os.path.join(base, "versions", "deadbeefcrash")
-    os.makedirs(os.path.join(crashed, "coded"), exist_ok=True)
-    assert _ivfpq_disk_artifact(spark, sf, emb) == vdir
-    os.remove(os.path.join(base, "_CURRENT"))
-    with open(os.path.join(crashed, "_SUPERSEDED_AT"), "w") as fh:
-        fh.write(str(time.time() - 7200))  # observed superseded >1h ago
-    assert _ivfpq_disk_artifact(spark, sf, emb) == vdir
-    assert not os.path.isdir(crashed)
-
-
-def test_versioned_artifact_concurrent_builder_semantics(tmp_path):
-    """r8 hardening of the shared artifact protocol: builders write
-    into private scratch prefixes and RENAME into place — exactly one
-    lands the version; an existing complete version is adopted without
-    rebuilding; a LIVE concurrent builder's scratch dir survives the
-    winner's sweep while stale crash residue is reaped."""
-    import os
-    import time
-
-    from db_loader_spark.queries.similarity import _versioned_artifact
-
-    base = str(tmp_path / "art")
-    calls = []
-
-    def build(vdir):
-        calls.append(vdir)
-        with open(os.path.join(vdir, "payload"), "w") as fh:
-            fh.write("x")
-
-    v1 = _versioned_artifact(base, "stamp-a", build)
-    assert len(calls) == 1 and os.path.isfile(os.path.join(v1, "payload"))
-    assert ".build-" in calls[0] and calls[0] != v1  # built in scratch
-    # resolve again: served from _CURRENT, no rebuild
-    assert _versioned_artifact(base, "stamp-a", build) == v1
-    assert len(calls) == 1
-    # pointer lost but version dir complete -> adopt, never rebuild
-    os.remove(os.path.join(base, "_CURRENT"))
-    assert _versioned_artifact(base, "stamp-a", build) == v1
-    assert len(calls) == 1
-    # a FRESH concurrent scratch survives the sweep; a stale one is reaped
-    vroot = os.path.join(base, "versions")
-    live = os.path.join(vroot, ".build-other-live")
-    stale = os.path.join(vroot, ".build-other-stale")
-    os.makedirs(live)
-    os.makedirs(stale)
-    old = time.time() - 7200
-    os.utime(stale, (old, old))
-    _versioned_artifact(base, "stamp-b", build)  # new version, sweeps
-    assert os.path.isdir(live)
-    assert not os.path.isdir(stale)
-    # r9 (VERDICT r8 #3 + review): superseded versions age from
-    # SUPERSESSION, not build mtime — the stamp-b flip's sweep saw v1
-    # newly superseded and started its clock by writing _SUPERSEDED_AT
-    # inside it; a live session's lazy scans of v1 keep their files
-    # for an hour from THAT moment, however old the build is.
-    assert os.path.isdir(v1)
-    marker = os.path.join(v1, "_SUPERSEDED_AT")
-    assert os.path.isfile(marker)  # clock started at the flip
-    with open(marker, "w") as fh:
-        fh.write(str(time.time() - 7200))  # now stale
-    # a re-resolve of the CURRENT stamp fast-paths without sweeping —
-    # only the next pointer FLIP (a new stamp) runs the vacuum
-    _versioned_artifact(base, "stamp-c", build)
-    assert not os.path.isdir(v1)  # stale superseded version swept
-
-
-def test_versioned_artifact_two_stamp_delayed_vacuum(tmp_path):
-    """r9 (VERDICT r8 #3 + ADVICE r8): (a) a sentinel-less dir at the
-    version path is a crashed partial (pre-r8 in-place writer residue)
-    — rebuilt, never adopted as current; (b) the post-flip sweep
-    age-gates VERSION dirs like scratch, so a concurrent builder
-    resolving a DIFFERENT stamp (corpus re-ship during serving) keeps
-    its just-landed version through the other builder's flip."""
-    import os
-    import time
-
-    from db_loader_spark.queries.similarity import _versioned_artifact
-
-    base = str(tmp_path / "art")
-    calls = []
-
-    def build(vdir):
-        calls.append(vdir)
-        with open(os.path.join(vdir, "payload"), "w") as fh:
-            fh.write("x")
-
-    # (a) sentinel written last, inside the atomic rename
-    v_a = _versioned_artifact(base, "stamp-a", build)
-    assert os.path.isfile(os.path.join(v_a, "_COMPLETE"))
-    os.remove(os.path.join(base, "_CURRENT"))
-    os.remove(os.path.join(v_a, "_COMPLETE"))  # simulate a partial dir
-    assert _versioned_artifact(base, "stamp-a", build) == v_a
-    assert len(calls) == 2  # rebuilt — a partial is never adopted
-    assert os.path.isfile(os.path.join(v_a, "_COMPLETE"))
-
-    # (b) two builders, two stamps: B lands stamp-b and flips; A then
-    # re-flips stamp-a — A's sweep must NOT reap B's fresh version
-    v_b = _versioned_artifact(base, "stamp-b", build)
-    assert len(calls) == 3
-    assert _versioned_artifact(base, "stamp-a", build) == v_a
-    assert os.path.isdir(v_b)  # B's just-landed version survives A's flip
-    assert _versioned_artifact(base, "stamp-b", build) == v_b
-    assert len(calls) == 3  # both adoptions served complete versions
-    # re-adoption must clear the retirement clock: v_b was superseded
-    # by A's flip (marker written), and flipping BACK to stamp-b must
-    # remove it, or v_b's next retirement would inherit the old stamp
-    # and reap instantly under a live reader (r9 review)
-    assert not os.path.isfile(os.path.join(v_b, "_SUPERSEDED_AT"))
-    # delayed vacuum: only once stale-since-supersession is it reaped
-    with open(os.path.join(v_b, "_SUPERSEDED_AT"), "w") as fh:
-        fh.write(str(time.time() - 7200))
-    _versioned_artifact(base, "stamp-a", build)
-    assert not os.path.isdir(v_b)
-
-    # (c) the FAST PATH also sheds a marker: a racing different-stamp
-    # sweep can mark the dir that ends up current (it re-reads the
-    # pointer before sweeping, but the mark-vs-flip window exists) —
-    # a plain resolve of the current stamp must clear it, or the
-    # version's eventual real retirement would inherit a stale clock
-    # and reap instantly under live readers (r9 review #2)
-    with open(os.path.join(v_a, "_SUPERSEDED_AT"), "w") as fh:
-        fh.write(str(time.time() - 7200))
-    assert _versioned_artifact(base, "stamp-a", build) == v_a  # fast path
-    assert not os.path.isfile(os.path.join(v_a, "_SUPERSEDED_AT"))
+    stage = _check_stage_contract(
+        lambda: _ivfpq_disk_artifact(spark, sf, emb),
+        [f"book{s}" for s in range(PQ_M)] + ["coded"],
+    )
+    assert stage == stage_path(sf, "ivfpq_index")
+    with open(f"{stage}/_SOURCE_STAMP") as fh:
+        assert ":coarse_bits=4:coarse_iters=2:" in fh.read()
 
 
 def test_pq_artifact_rebuild_is_deterministic(spark):
     """The artifact boundary must not introduce nondeterminism: wiping
-    the versioned PQ artifact and rebuilding from the same source must
-    reproduce the coded corpus row-for-row (the exact-integer trainer
-    contract, now pinned ACROSS the disk round trip — a drift here
-    would mean serving results depend on which process happened to
-    build the artifact)."""
+    the PQ stage and rebuilding from the same source must reproduce the
+    coded corpus row-for-row (the exact-integer trainer contract,
+    pinned ACROSS the disk round trip — a drift here would mean serving
+    results depend on which process happened to build the artifact)."""
     import os
     import shutil
 
     from db_loader_spark.queries.similarity import _pq_disk_artifact
 
     sf = "/root/testdata/sf0.001"
-    v1 = _pq_disk_artifact(spark, sf)
+    stage = _pq_disk_artifact(spark, sf)
     codes1 = sorted(
-        map(tuple, spark.read.parquet(os.path.join(v1, "codes")).collect())
+        map(tuple, spark.read.parquet(os.path.join(stage, "codes")).collect())
     )
-    base = os.path.dirname(os.path.dirname(v1))
-    shutil.rmtree(base)  # wipe versions + pointer: force a full rebuild
-    v2 = _pq_disk_artifact(spark, sf)
+    shutil.rmtree(stage)  # force a full rebuild
+    assert _pq_disk_artifact(spark, sf) == stage
     codes2 = sorted(
-        map(tuple, spark.read.parquet(os.path.join(v2, "codes")).collect())
+        map(tuple, spark.read.parquet(os.path.join(stage, "codes")).collect())
     )
+    _drop_pq_caches()
     assert codes1 == codes2
 
 
 def test_ivf_disk_index_heals_pointer_to_missing_dir(spark):
-    """r10, pinning the documented sweep-race blast radius: if the
-    race ever leaves _CURRENT naming a missing version dir, the next
-    resolve must not serve garbage or raise — it rebuilds the version
-    for the current stamp deterministically and re-flips. One wasted
-    build is the whole cost."""
-    import os
-    import shutil
-
+    """A removed IVF index stage (a racing rebuild's swap window, or a
+    temp-dir sweep) costs one rebuild: the next resolve builds the
+    index for the current stamp at the same path, never serving
+    garbage or raising."""
     from db_loader_spark.queries.similarity import _ivf_disk_index
+    from db_loader_spark.staging import stage_path
 
     sf = "/root/testdata/sf0.001"
-    vdir = _ivf_disk_index(spark, sf)
-    base = os.path.dirname(os.path.dirname(vdir))
-    # the raced end-state: pointer names a dir that no longer exists
-    shutil.rmtree(vdir)
-    with open(os.path.join(base, "_CURRENT"), "w") as fh:
-        fh.write(os.path.basename(vdir))
-    vdir2 = _ivf_disk_index(spark, sf)
-    assert vdir2 == vdir  # same stamp → same version id, rebuilt
-    assert os.path.isdir(os.path.join(vdir2, "centroids"))
-    with open(os.path.join(base, "_CURRENT")) as fh:
-        assert fh.read() == os.path.basename(vdir2)
-
-
-def test_versioned_artifact_thread_storm_invariants(tmp_path):
-    """r10 stress witness: the scripted interleaving tests above pin
-    specific races; this one hammers _versioned_artifact from six
-    threads cycling three stamps concurrently and asserts the
-    invariants that must hold under ANY interleaving within the 1 h
-    vacuum horizon (nothing is reapable in a seconds-long storm, so
-    every landed version dir must persist intact): every call returns
-    a directory that exists, carries the _COMPLETE sentinel for the
-    requested stamp, and contains that stamp's exact deterministic
-    payload (no cross-stamp contamination from racing builders); and
-    after the storm _CURRENT names an existing complete dir and every
-    versions/ entry is either a complete version or .build- scratch."""
-    import os
-    import threading
-    import time as _time
-
-    from db_loader_spark.queries.similarity import _versioned_artifact
-
-    base = str(tmp_path / "art")
-    stamps = ["stamp-a", "stamp-b", "stamp-c"]
-
-    def make_build(stamp):
-        def build(d):
-            # widen the race windows a little; rename still publishes
-            # atomically after this returns
-            _time.sleep(0.002)
-            with open(os.path.join(d, "payload"), "w") as f:
-                f.write(f"payload-for-{stamp}")
-        return build
-
-    errors: list[str] = []
-
-    def worker(tid):
-        # any escape (e.g. the shared-tmp-name flip crash this test
-        # originally caught) must FAIL the test, not silently shrink
-        # its coverage — hence the blanket except into errors
-        try:
-            for i in range(15):
-                stamp = stamps[(tid + i) % len(stamps)]
-                vdir = _versioned_artifact(base, stamp, make_build(stamp))
-                with open(os.path.join(vdir, "_COMPLETE")) as f:
-                    got_stamp = f.read()
-                with open(os.path.join(vdir, "payload")) as f:
-                    got_payload = f.read()
-                if got_stamp != stamp:
-                    errors.append(f"t{tid}/{i}: sentinel {got_stamp!r} != {stamp!r}")
-                    return
-                if got_payload != f"payload-for-{stamp}":
-                    errors.append(f"t{tid}/{i}: cross-stamp payload {got_payload!r}")
-                    return
-        except Exception as e:  # noqa: BLE001
-            errors.append(f"t{tid}: worker crashed: {e!r}")
-
-    threads = [threading.Thread(target=worker, args=(t,)) for t in range(6)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=120)
-    assert errors == [], errors
-    assert all(not t.is_alive() for t in threads)
-    with open(os.path.join(base, "_CURRENT")) as f:
-        vid = f.read()
-    vroot = os.path.join(base, "versions")
-    assert os.path.isdir(os.path.join(vroot, vid))
-    assert os.path.exists(os.path.join(vroot, vid, "_COMPLETE"))
-    for entry in os.listdir(vroot):
-        if entry.startswith(".build-"):
-            continue  # loser-builder scratch, swept by the 1 h horizon
-        assert os.path.exists(
-            os.path.join(vroot, entry, "_COMPLETE")
-        ), f"incomplete version dir {entry} left published"
-
-
-def test_reap_claim_restores_dir_under_readopted_pointer(tmp_path, monkeypatch):
-    """r11 (the staged ADVICE r9 #2 touch, sweeper side): a reap first
-    CLAIMS the stale dir with an atomic rename, then RE-READS the
-    pointer — a re-adopter whose flip lands just before the claim is
-    detected and the dir restored untouched, so the pointer can never
-    settle on a missing dir. The hook lands the re-adopter's flip at
-    the worst instant: inside the claim rename itself."""
-    import hashlib
-    import os
-    import shutil
-    import time
-
-    from db_loader_spark.queries.similarity import _versioned_artifact
-
-    base = str(tmp_path / "art")
-    cur = os.path.join(base, "_CURRENT")
-
-    def make_build(stamp):
-        def build(d):
-            with open(os.path.join(d, "payload"), "w") as fh:
-                fh.write(f"payload-for-{stamp}")
-
-        return build
-
-    vid_a = hashlib.md5(b"stamp-a").hexdigest()[:12]
-    v_a = os.path.join(base, "versions", vid_a)
-    _versioned_artifact(base, "stamp-a", make_build("stamp-a"))
-    _versioned_artifact(base, "stamp-b", make_build("stamp-b"))
-    # stamp-b's sweep started v_a's retirement clock; make it hour-stale
-    with open(os.path.join(v_a, "_SUPERSEDED_AT"), "w") as fh:
-        fh.write(str(time.time() - 7200))
-
-    real_rename = os.rename
-    flips = []
-
-    def rename_hook(src, dst, **kw):
-        if src == v_a and ".reap-" in str(dst):
-            # the re-adopter's flip lands between the sweeper's marker
-            # read and its claim
-            with open(cur, "w") as fh:
-                fh.write(vid_a)
-            flips.append(vid_a)
-        return real_rename(src, dst, **kw)
-
-    monkeypatch.setattr(os, "rename", rename_hook)
-    v_c = _versioned_artifact(base, "stamp-c", make_build("stamp-c"))
-    monkeypatch.setattr(os, "rename", real_rename)
-    assert flips == [vid_a]  # the race actually fired
-    # the re-adopted dir was restored, not reaped, and is intact
-    assert os.path.isdir(v_a)
-    with open(os.path.join(v_a, "payload")) as fh:
-        assert fh.read() == "payload-for-stamp-a"
-    # its retirement clock was shed: a later real retirement restarts it
-    assert not os.path.isfile(os.path.join(v_a, "_SUPERSEDED_AT"))
-    # the pointer names an existing dir (the re-adopter's)
-    with open(cur) as fh:
-        pointed = fh.read()
-    assert pointed == vid_a
-    assert os.path.isdir(os.path.join(base, "versions", pointed))
-    assert os.path.isdir(v_c)  # the sweeper's own version landed too
-    shutil.rmtree(base)
-
-
-def test_flip_rebuilds_when_concurrent_sweep_reaps_flipped_dir(
-    tmp_path, monkeypatch
-):
-    """r11 (flipper side): a concurrent sweep that read the pointer
-    BEFORE our flip can reap the dir we just flipped to (the hour-stale
-    re-adoption TOCTOU). The flipper now verifies its dir still exists
-    after its own sweep and rebuilds+re-flips — the resolve returns an
-    existing dir and the pointer is never left stranded. The hook reaps
-    at the worst instant: immediately after the pointer commit."""
-    import hashlib
-    import os
-    import shutil
-
-    from db_loader_spark.queries.similarity import _versioned_artifact
-
-    base = str(tmp_path / "art")
-    cur = os.path.join(base, "_CURRENT")
-    vid = hashlib.md5(b"stamp-a").hexdigest()[:12]
-    vdir = os.path.join(base, "versions", vid)
-    calls = []
-
-    def build(d):
-        calls.append(d)
-        with open(os.path.join(d, "payload"), "w") as fh:
-            fh.write("payload-for-stamp-a")
-
-    real_replace = os.replace
-    state = {"reaped": False}
-
-    def replace_hook(src, dst, **kw):
-        real_replace(src, dst, **kw)
-        if str(dst) == cur and not state["reaped"]:
-            state["reaped"] = True
-            shutil.rmtree(vdir, ignore_errors=True)
-
-    monkeypatch.setattr(os, "replace", replace_hook)
-    got = _versioned_artifact(base, "stamp-a", build)
-    monkeypatch.setattr(os, "replace", real_replace)
-    assert state["reaped"]  # the race actually fired
-    assert got == vdir and os.path.isdir(got)
-    assert len(calls) == 2  # one wasted build is the whole cost
-    with open(os.path.join(got, "payload")) as fh:
-        assert fh.read() == "payload-for-stamp-a"
-    with open(cur) as fh:
-        assert fh.read() == vid
-
-
-def test_flip_tmp_residue_is_unlinked_and_age_swept(tmp_path, monkeypatch):
-    """r11 (ADVICE r10): a crashed flip's writer-unique _CURRENT.tmp-*
-    no longer accumulates — exception paths unlink it in a finally,
-    and process-crash residue older than the reap horizon is swept by
-    the next flip (fresh residue survives: its writer may be mid-flip)."""
-    import os
-    import time
-
-    from db_loader_spark.queries.similarity import _versioned_artifact
-
-    base = str(tmp_path / "art")
-
-    def build(d):
-        with open(os.path.join(d, "payload"), "w") as fh:
-            fh.write("x")
-
-    # exception path: os.replace fails once — the tmp must not survive
-    real_replace = os.replace
-    state = {"failed": False}
-
-    def replace_boom(src, dst, **kw):
-        if str(dst).endswith("_CURRENT") and not state["failed"]:
-            state["failed"] = True
-            raise OSError(28, "simulated ENOSPC")
-        return real_replace(src, dst, **kw)
-
-    monkeypatch.setattr(os, "replace", replace_boom)
-    try:
-        _versioned_artifact(base, "stamp-a", build)
-    except OSError:
-        pass
-    else:  # pragma: no cover
-        raise AssertionError("simulated flip failure must propagate")
-    monkeypatch.setattr(os, "replace", real_replace)
-    assert not [f for f in os.listdir(base) if f.startswith("_CURRENT.tmp-")]
-
-    # crash residue: an aged tmp is swept by the next flip, a fresh
-    # one (a concurrent flipper mid-commit) survives
-    _versioned_artifact(base, "stamp-a", build)
-    old_tmp = os.path.join(base, "_CURRENT.tmp-deadbeef")
-    new_tmp = os.path.join(base, "_CURRENT.tmp-cafebabe")
-    for p in (old_tmp, new_tmp):
-        with open(p, "w") as fh:
-            fh.write("junk")
-    past = time.time() - 7200
-    os.utime(old_tmp, (past, past))
-    _versioned_artifact(base, "stamp-b", build)  # a flip runs the sweep
-    assert not os.path.exists(old_tmp)
-    assert os.path.exists(new_tmp)
-
-    # crashed reap claims age-sweep like scratch dirs
-    vroot = os.path.join(base, "versions")
-    stale_claim = os.path.join(vroot, "0123456789ab.reap-deadbeef")
-    os.makedirs(stale_claim)
-    os.utime(stale_claim, (past, past))
-    fresh_claim = os.path.join(vroot, "0123456789ab.reap-cafebabe")
-    os.makedirs(fresh_claim)
-    _versioned_artifact(base, "stamp-c", build)
-    assert not os.path.isdir(stale_claim)
-    assert os.path.isdir(fresh_claim)
-
-
-def test_live_reap_claims_look_fresh_to_concurrent_sweeps(
-    tmp_path, monkeypatch
-):
-    """r11 review: os.rename preserves the claimed dir's mtime, which
-    for a reap-eligible version equals the >1h-old marker write — so a
-    concurrent sweeper's residue branch would read a LIVE claim as
-    aged crash debris and rmtree it during the holder's
-    claim→pointer-recheck window (re-opening the stranded-pointer race
-    from a third side). Claims therefore live inside a BOX directory
-    created fresh a moment before the rename — born with a now-mtime
-    before any stale content enters it, so there is no instant at
-    which a live claim presents a stale top-level mtime. Pin: every
-    '.reap-' path that reaches rmtree is younger than the 1 h
-    horizon."""
-    import os
-    import shutil
-    import time
-
-    from db_loader_spark.queries.similarity import _versioned_artifact
-
-    base = str(tmp_path / "art")
-
-    def build(d):
-        with open(os.path.join(d, "payload"), "w") as fh:
-            fh.write("x")
-
-    v_a = _versioned_artifact(base, "stamp-a", build)
-    _versioned_artifact(base, "stamp-b", build)  # supersedes A, marks it
-    with open(os.path.join(v_a, "_SUPERSEDED_AT"), "w") as fh:
-        fh.write(str(time.time() - 7200))
-    # the dir itself must LOOK old too (the marker write above bumped
-    # the dir mtime; rewind it to the supersession time — the state a
-    # real >1h-old version is in)
-    past = time.time() - 7200
-    os.utime(v_a, (past, past))
-
-    ages_at_rmtree = []
-    real_rmtree = shutil.rmtree
-
-    def spy_rmtree(path, *a, **kw):
-        if ".reap-" in str(path):
-            try:
-                ages_at_rmtree.append(time.time() - os.path.getmtime(path))
-            except OSError:
-                pass
-        return real_rmtree(path, *a, **kw)
-
-    monkeypatch.setattr(shutil, "rmtree", spy_rmtree)
-    _versioned_artifact(base, "stamp-c", build)  # sweep reaps stale A
-    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
-    assert not os.path.isdir(v_a)  # the stale version was reaped
-    assert ages_at_rmtree, "the reap must go through a claim"
-    # the claim was fresh the whole time — no residue sweep could
-    # have mistaken it for >1h-old crash debris
-    assert all(age < 3600 for age in ages_at_rmtree), ages_at_rmtree
+    stage = _check_stage_contract(
+        lambda: _ivf_disk_index(spark, sf), ["centroids", "lists"]
+    )
+    assert stage == stage_path(sf, "ivf_index")

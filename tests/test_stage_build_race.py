@@ -1,20 +1,16 @@
 """Thread-storm witnesses for the scratch+rename stage-build protocol
-(queries/streamingq._build_stage — the r11 staged touch closing the
-r10-audit concurrency contract).
+(``staging.build_stage``).
 
-The retired in-place protocol (clear + write chunks + stamp last)
-could interleave under two sessions racing a LAYOUT TRANSITION into a
+An in-place protocol (clear + write chunks + stamp last) can
+interleave under two sessions racing a LAYOUT TRANSITION into a
 mixed-generation stage whose stamp validates while stale chunks from
 the other generation linger — and the file-source stream reads every
-parquet in the dir, so the mix silently changes VALUES (the same bug
-class the r8 versioned-artifact fix closed for index artifacts, and
-the r10 thread-storm tests closed for pointer flips and manifest
-lineage walks). These tests pin the invariant the fix buys: the stage
-path only ever holds COMPLETE SINGLE-GENERATION builds, under both
-same-stamp and different-stamp racers, with no scratch/doomed residue
-left behind.
+parquet in the dir, so the mix silently changes VALUES. These tests
+pin the invariant the protocol buys: the stage path only ever holds
+COMPLETE SINGLE-GENERATION builds, under both same-stamp and
+different-stamp racers, with no scratch/doomed residue left behind.
 
-Pure-filesystem tests (no Spark): _build_stage is layout-agnostic —
+Pure-filesystem tests (no Spark): build_stage is layout-agnostic —
 the real callers pass Spark writers as the build fn, but the protocol
 under test is the install dance itself.
 """
@@ -25,7 +21,7 @@ import os
 import threading
 import time
 
-from db_loader_spark.queries.streamingq import _build_stage, _stage_current
+from db_loader_spark.staging import build_stage as _build_stage, stage_current as _stage_current
 
 N_THREADS = 8
 N_ROUNDS = 6

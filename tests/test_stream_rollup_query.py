@@ -70,11 +70,8 @@ def test_stale_layout_stage_restages_under_new_stamp(spark, tmp_path):
     import os
     import shutil
 
-    from db_loader_spark.queries.streamingq import (
-        SHARDS_SHAVED,
-        _source_stamp,
-        _stage_table,
-    )
+    from db_loader_spark.queries.streamingq import SHARDS_SHAVED, _stage_table
+    from db_loader_spark.staging import source_stamp
 
     src = tmp_path / "sfdir"
     src.mkdir()
@@ -93,7 +90,7 @@ def test_stale_layout_stage_restages_under_new_stamp(spark, tmp_path):
                 os.path.join(stage, f), os.path.join(stage, f"part-fake{i}.parquet")
             )
     with open(stamp_path, "w") as fh:
-        fh.write(_source_stamp(str(src)))
+        fh.write(source_stamp(str(src / "events.parquet")))
     stage2 = _stage_table(spark, str(src), "events", "migr")
     assert stage2 == stage
     assert open(stamp_path).read() == new_stamp
@@ -105,18 +102,13 @@ def test_stream_dedup_actually_removes_duplicates(spark):
     """The staged input really is 2× the table (the dedup has work to
     do), and the streamed output equals exactly one copy."""
     from db_loader_spark.queries import all_queries
-    from db_loader_spark.queries.streamingq import _staged_events  # noqa: F401
-    import hashlib
-    import os
-    import tempfile
-
+    from db_loader_spark.staging import stage_path
     from db_loader_spark.tables import load_table
 
     n_one = load_table(spark, SF, "events").count()
     out = all_queries()["t_stream_dedup"].spark(spark, SF)
     assert out.agg(F.sum("n_events")).first()[0] == n_one
-    key = hashlib.md5(os.path.abspath(SF).encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"db_loader_stream_dup_{key}")
+    stage = stage_path(SF, "stream_dup")
     assert spark.read.parquet(stage).count() == 2 * n_one
 
 
