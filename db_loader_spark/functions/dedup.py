@@ -24,46 +24,63 @@ Scale design (the point of each algorithm at 100 TB):
   condition so non-near pairs die in the join operator instead of
   surviving into the distinct's shuffle.
 
-All of it is Column-expression work — no Python UDFs — so the whole
-pipeline stays inside whole-stage codegen. Wide unrolled expressions
-(k hash columns, 32 bit-votes, Hamming sums) are assembled as single
-``F.expr`` SQL strings: one py4j call instead of hundreds, which takes
-plan construction from ~1 s of driver time to ~1 ms with an identical
-Catalyst tree.
+All of it is JVM expression work — no Python UDFs — so the whole
+pipeline stays inside whole-stage codegen. The plans are built as SQL
+text (``selectExpr`` / ``F.expr``), one string per projection: every
+Column-API call costs several py4j round trips, so the k hash columns,
+band structs and join predicates built as Columns would take about a
+thousand of them (~0.4 s of driver time before the first job) for the
+same Catalyst tree, where the SQL text takes a few per projection.
+
+Rule for that SQL text: no regex and no user-supplied value goes into
+it. ``spark.sql.parser.escapedStringLiterals`` changes how a backslash
+in a SQL string literal parses, so a regex in SQL text silently matches
+something else under a driver that sets it; regexes therefore stay
+Column expressions (:func:`tokens`' ``\\s+``), thresholds enter as
+``F.lit``, column names through ``session.sql_ident``, and only
+integers and this module's own constants are formatted into the text.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from db_loader_spark.functions import fan_out
 from db_loader_spark.functions.text import tokens
+from db_loader_spark.session import sql_ident
 
 HEX_DIGITS = "0123456789abcdef"
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as an array column, in token order (empty
-    if < n tokens).
+def shingles(toks: str, n: int = 3) -> str:
+    """SQL text of the word n-gram array over the token-array column
+    ``toks``, in token order (empty if < n tokens).
 
     Gram i is token i joined with the n-1 tokens after it, so the array
     is a fold of ``zip_with`` over n shifted slices of the token array
     (each of length size - (n-1), floored at 0 so short texts give
-    empty slices). The token array must stay OUTSIDE every lambda:
-    Spark does no common-subexpression elimination inside lambda
-    bodies, so a lambda that indexed ``tokens(text)`` would re-run the
-    whole split/lower/trim/filter chain once per gram — O(tokens²)
-    regex work per document. As slice arguments it runs n times per
-    row, whatever the document length."""
-    toks = tokens(text)
-    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    grams = F.slice(toks, 1, m)
-    for off in range(1, n):
-        grams = F.zip_with(
-            grams, F.slice(toks, 1 + off, m), lambda g, t: F.concat(g, F.lit(" "), t)
-        )
+    empty slices). The tokens come in as a column, projected once by
+    the caller (:func:`_token_frame`): Spark does no common-subexpression
+    elimination inside lambda bodies, so a lambda that indexed
+    ``tokens(text)`` would re-run the whole split/lower/trim/filter
+    chain once per gram, and even as slice arguments it would run n
+    times per row."""
+    c = sql_ident(toks)
+    m = f"greatest(size({c}) - {int(n) - 1}, 0)"
+    grams = f"slice({c}, 1, {m})"
+    for off in range(1, int(n)):
+        grams = f"zip_with({grams}, slice({c}, {1 + off}, {m}), (_g, _t) -> concat(_g, ' ', _t))"
     return grams
+
+
+def _token_frame(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, toks): the fanned-out docs with their text tokenized once."""
+    return (
+        fan_out(docs)
+        .withColumn("_toks", tokens(text_col))
+        .selectExpr(f"{sql_ident(id_col)} AS id", "_toks AS toks")
+    )
 
 
 def shingle_frame(
@@ -83,9 +100,8 @@ def shingle_frame(
     downstream count (Jaccard sizes, decontamination n_shingles).
     Run :func:`exact_duplicates` (or any id-level dedup) first when
     ids can repeat; the driver tables guarantee uniqueness."""
-    return fan_out(docs).select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(shingles(F.col(text_col), n))).alias("shingle"),
+    return _token_frame(docs, id_col, text_col).selectExpr(
+        "id", f"explode(array_distinct({shingles('toks', n)})) AS shingle"
     )
 
 
@@ -155,18 +171,17 @@ def minhash_signatures(
     the shuffle carries only one 8-long row per doc. No distinct on
     shingles: MIN is idempotent under duplicates.
     """
-    toks = shingles(F.col(text_col), n)
-    sh = fan_out(docs).select(
-        F.col(id_col).alias("id"), F.explode(toks).alias("shingle")
+    sh = _token_frame(docs, id_col, text_col).selectExpr(
+        "id", f"explode({shingles('toks', n)}) AS shingle"
     )
-    hcols = [
-        F.expr(
-            f"CAST(conv(substring(md5(concat('{i}|', shingle)), 1, 8), 16, 10) AS BIGINT)"
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.select("id", *hcols).groupBy("id").agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
+    return sh.groupBy("id").agg(
+        *[
+            F.expr(
+                "MIN(CAST(conv(substring(md5(concat("
+                f"'{i}|', shingle)), 1, 8), 16, 10) AS BIGINT)) AS h{i}"
+            )
+            for i in range(int(num_hashes))
+        ]
     )
 
 
@@ -249,24 +264,51 @@ def _banded(signatures: DataFrame, num_hashes: int, band_size: int) -> DataFrame
     the shared banding step of the self-join and incremental LSH paths.
     The full signature rides along so est_sim comes straight off the
     joined rows (no join back to the signature frame)."""
-    n_bands = num_hashes // band_size
-    sig_cols = [f"h{i}" for i in range(num_hashes)]
-    band_structs = ", ".join(
-        "struct({b} AS band_idx, concat_ws('|', {keys}) AS band_key)".format(
+    bands = ", ".join(
+        "named_struct('band_idx', {b}, 'band_key', concat_ws('|', {keys}))".format(
             b=b,
             keys=", ".join(f"h{b * band_size + j}" for j in range(band_size)),
         )
-        for b in range(n_bands)
+        for b in range(num_hashes // band_size)
     )
-    bands = F.expr(f"array({band_structs})")
-    return signatures.select(
-        "id", *sig_cols, F.explode(bands).alias("band")
-    ).select(
-        "id",
-        *sig_cols,
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_key").alias("band_key"),
+    return signatures.selectExpr(
+        "id", *[f"h{i}" for i in range(num_hashes)], f"inline(array({bands}))"
     )
+
+
+def _band_join(
+    a_sigs: DataFrame,
+    b_sigs: DataFrame,
+    num_hashes: int,
+    band_size: int,
+    min_est_sim: float | None,
+    first_band: bool,
+) -> DataFrame:
+    """The band equi-join of two signature frames → (doc_a, doc_b,
+    est_sim), shared by :func:`lsh_candidate_pairs` (``first_band``: a
+    self-join keeping ``a.id < b.id`` from the first colliding band
+    only) and :func:`lsh_pairs_against` (any two distinct ids,
+    normalized to (least, greatest); the caller de-duplicates).
+
+    est_sim = matching components / num_hashes, rounded to 4 places.
+    ``min_est_sim`` is a residual join predicate: far pairs never leave
+    the join operator."""
+    k, w = int(num_hashes), int(band_size)
+    matches = " + ".join(f"(CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END)" for i in range(k))
+    est_sim = f"ROUND(CAST({matches} AS DOUBLE) / {k}, 4)"
+    cond = "a.band_idx = b.band_idx AND a.band_key = b.band_key"
+    if first_band:
+        cond += f" AND a.id < b.id AND a.band_idx = {_first_band(k, w)}"
+        ids = ("a.id AS doc_a", "b.id AS doc_b")
+    else:
+        cond += " AND a.id != b.id"
+        ids = ("least(a.id, b.id) AS doc_a", "greatest(a.id, b.id) AS doc_b")
+    on = F.expr(cond)
+    if min_est_sim is not None:
+        on = on & (F.expr(est_sim) >= F.lit(float(min_est_sim)))
+    a = _banded(a_sigs, k, w)
+    b = a if b_sigs is a_sigs else _banded(b_sigs, k, w)
+    return a.alias("a").join(b.alias("b"), on).selectExpr(*ids, f"{est_sim} AS est_sim")
 
 
 def lsh_pairs_against(
@@ -299,35 +341,15 @@ def lsh_pairs_against(
     bucketed/partitioned signature table the corpus side's shuffle is
     layout-reusable. ``min_est_sim`` stays a residual predicate inside
     the join."""
-    a = _banded(new_sigs, num_hashes, band_size).alias("a")
-    b = _banded(corpus_sigs, num_hashes, band_size).alias("b")
-    matches = F.expr(
-        " + ".join(
-            f"(CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END)" for i in range(num_hashes)
-        )
-    )
-    est_sim = F.round(matches.cast("double") / num_hashes, 4)
-    cond = (
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_key") == F.col("b.band_key"))
-        & (F.col("a.id") != F.col("b.id"))
-    )
-    if min_est_sim is not None:
-        cond = cond & (est_sim >= min_est_sim)
-    return (
-        a.join(b, cond)
-        .select(
-            F.least(F.col("a.id"), F.col("b.id")).alias("doc_a"),
-            F.greatest(F.col("a.id"), F.col("b.id")).alias("doc_b"),
-            est_sim.alias("est_sim"),
-        )
-        .distinct()
-    )
+    return _band_join(
+        new_sigs, corpus_sigs, num_hashes, band_size, min_est_sim, first_band=False
+    ).distinct()
 
 
-def _first_band(num_hashes: int, band_size: int) -> Column:
-    """Index of the lowest-numbered band in which the joined rows ``a``
-    and ``b`` agree on every component (NULL when none does)."""
+def _first_band(num_hashes: int, band_size: int) -> str:
+    """SQL text: the index of the lowest-numbered band in which the
+    joined rows ``a`` and ``b`` agree on every component (NULL when
+    none does)."""
     whens = " ".join(
         "WHEN {} THEN {}".format(
             " AND ".join(
@@ -337,7 +359,7 @@ def _first_band(num_hashes: int, band_size: int) -> Column:
         )
         for b in range(num_hashes // band_size)
     )
-    return F.expr(f"CASE {whens} END")
+    return f"CASE {whens} END"
 
 
 def lsh_candidate_pairs(
@@ -393,28 +415,8 @@ def lsh_candidate_pairs(
 
             signatures = cache.track(signatures)
         band_size = tuned_band_size(signatures, num_hashes)
-    banded = _banded(signatures, num_hashes, band_size)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    matches = F.expr(
-        " + ".join(
-            f"(CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END)" for i in range(num_hashes)
-        )
-    )
-    est_sim = F.round(matches.cast("double") / num_hashes, 4)
-    cond = (
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_key") == F.col("b.band_key"))
-        & (F.col("a.id") < F.col("b.id"))
-        & (F.col("a.band_idx") == _first_band(num_hashes, band_size))
-    )
-    if min_est_sim is not None:
-        # Residual (non-equi) predicate: far pairs never leave the join.
-        cond = cond & (est_sim >= min_est_sim)
-    return a.join(b, cond).select(
-        F.col("a.id").alias("doc_a"),
-        F.col("b.id").alias("doc_b"),
-        est_sim.alias("est_sim"),
+    return _band_join(
+        signatures, signatures, num_hashes, band_size, min_est_sim, first_band=True
     )
 
 

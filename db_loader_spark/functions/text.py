@@ -25,8 +25,9 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "to")
 
 
-def tokens(text: Column) -> Column:
-    """Whitespace tokenization with empty-token cleanup (lowercased).
+def tokens(text: Column | str) -> Column:
+    """Whitespace tokenization with empty-token cleanup (lowercased) of a
+    column or column name.
 
     NULL text tokenizes as empty ([]), not NULL — otherwise
     ``size(tokens)`` returns -1 and every downstream ratio/score goes

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from db_loader_spark.session import sql_ident
+
 
 def assign_file_ids(
     lines: DataFrame,
@@ -28,7 +30,7 @@ def assign_file_ids(
 ) -> DataFrame:
     """Attach a per-file run ``id`` column to every row."""
     if mode == "hash":
-        return lines.withColumn("id", F.abs(F.xxhash64(F.col(file_col))))
+        return lines.withColumn("id", F.expr(f"abs(xxhash64({sql_ident(file_col)}))"))
     if mode == "dense":
         files = lines.select(file_col).distinct()
         w = W.orderBy(file_col)

@@ -16,6 +16,15 @@ P14 (group-gen, src/parse_logs_ecj.clj:107-116): continuation lines
 
 Scale: the window partitions by file, so parallelism = number of files;
 no global ordering or single-partition stage anywhere.
+
+Plan construction: each regex is matched once, as a Column expression,
+into a boolean column; every window over it is then one ``selectExpr``
+of SQL text. A Column-API call costs several py4j round trips, so the
+windows built as Columns cost dozens of them per operator. No regex or caller
+value enters the SQL text — ``spark.sql.parser.escapedStringLiterals``
+changes how a backslash in a SQL string literal parses, so a regex
+there could silently match something else — only backtick-quoted
+column names (``session.sql_ident``) do.
 """
 
 from __future__ import annotations
@@ -23,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+
+from db_loader_spark.session import sql_ident
 
 
 def _cum_window(file_col: str, order_col: str):
@@ -33,9 +44,18 @@ def _cum_window(file_col: str, order_col: str):
     )
 
 
+def _flag(frame: DataFrame, name: str, pattern: str | Column, line_col: str) -> DataFrame:
+    """``frame`` plus boolean column ``name``: ``line_col`` matched
+    against the regex ``pattern``, or ``pattern`` itself when the
+    caller already projected the flag as a Column."""
+    if isinstance(pattern, str):
+        pattern = F.col(line_col).rlike(pattern)
+    return frame.withColumn(name, pattern)
+
+
 def seq_split(
     lines: DataFrame,
-    delim: str = r";+$",
+    delim: str | Column = r";+$",
     file_col: str = "file",
     order_col: str = "line_no",
     line_col: str = "line",
@@ -43,43 +63,49 @@ def seq_split(
 ) -> DataFrame:
     """Add ``section_id`` (0-based per file); drop delimiter rows.
 
+    ``delim`` is a regex matched against ``line_col``, or a boolean
+    Column the caller already computed (so its regex runs once).
     Section 0 = lines before the first delimiter — matching the
     reference where the delimiter starts a new group and is consumed.
     Runs of consecutive delimiters simply yield empty sections, which
     never materialize as rows (same observable output as the reference).
     """
-    is_delim = F.col(line_col).rlike(delim)
-    out = lines.withColumn(
-        "section_id",
-        F.sum(is_delim.cast("int")).over(_cum_window(file_col, order_col))
-        - is_delim.cast("int"),
+    f, o = sql_ident(file_col), sql_ident(order_col)
+    out = _flag(lines, "_is_delim", delim, line_col).selectExpr(
+        "*",
+        f"SUM(CAST(_is_delim AS INT)) OVER (PARTITION BY {f} ORDER BY {o}"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+        " - CAST(_is_delim AS INT) AS section_id",
     )
     if not keep_delimiters:
-        out = out.filter(~is_delim)
-    return out
+        out = out.where("NOT _is_delim")
+    return out.drop("_is_delim")
 
 
 def route_sections(
     sectioned: DataFrame,
-    marker: str = "-\\*-",
+    marker: str | Column = "-\\*-",
     file_col: str = "file",
     line_col: str = "line",
 ) -> DataFrame:
     """J2: tag each row with its section's kind:
     header (first section) / summary (last) / generation (has marker) /
-    noise. Pure window columns over ``(file, section_id)`` and
-    ``(file)``: the per-file hash partitioning that :func:`seq_split`
-    already needs satisfies both, so routing adds no exchange and
-    scans the input once."""
-    per_file = W.partitionBy(file_col)
-    per_section = W.partitionBy(file_col, "section_id")
-    has_marker = F.max(F.col(line_col).rlike(marker)).over(per_section)
-    return sectioned.withColumn(
-        "section_kind",
-        F.when(F.col("section_id") == F.min("section_id").over(per_file), "header")
-        .when(F.col("section_id") == F.max("section_id").over(per_file), "summary")
-        .when(has_marker, "generation")
-        .otherwise("noise"),
+    noise. ``marker`` is a regex or a precomputed boolean Column, as
+    ``delim`` in :func:`seq_split`. Pure window columns over
+    ``(file, section_id)`` and ``(file)``: the per-file hash
+    partitioning that :func:`seq_split` already needs satisfies both,
+    so routing adds no exchange and scans the input once."""
+    f = sql_ident(file_col)
+    return (
+        _flag(sectioned, "_is_marker", marker, line_col)
+        .selectExpr(
+            "*",
+            f"CASE WHEN section_id = min(section_id) OVER (PARTITION BY {f}) THEN 'header'"
+            f" WHEN section_id = max(section_id) OVER (PARTITION BY {f}) THEN 'summary'"
+            f" WHEN max(_is_marker) OVER (PARTITION BY {f}, section_id) THEN 'generation'"
+            " ELSE 'noise' END AS section_kind",
+        )
+        .drop("_is_marker")
     )
 
 

@@ -6,6 +6,14 @@ the four tables are filters of it. Its only shuffle is the per-file
 hash partitioning the line numbering needs, which every later window
 reuses.
 
+The plan is built as SQL text: every regex is matched once per line,
+as a Column expression, in the first projection; each window layer and
+table projection after it is one ``selectExpr`` over plain columns, a
+few py4j calls where the Column API took dozens. No regex and no
+caller value (``user``, ``problem_name``) goes into that text, because
+``spark.sql.parser.escapedStringLiterals`` changes how a backslash in a
+SQL string literal parses; caller values enter as ``F.lit``.
+
 Reference bugs intentionally fixed (SURVEY.md §7): the
 ``[SUCCESS|FAILURE]`` char-class regex (P9), the NPE on summary-less
 logs (we emit no summary row instead), unquoted CSV output (K1 — the
@@ -16,36 +24,55 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from db_loader_spark.operators.ids import assign_file_ids
 from db_loader_spark.operators.sessionize import route_sections, seq_split
+from db_loader_spark.schemas import EXPERIMENTS_SCHEMA
 from db_loader_spark.session import local_frame
 from db_loader_spark.sources.text_logs import read_log_lines
 
 MARKER = r"-\*-"  # generation header marker (src/db_loader.clj:171,231)
 DELIM = r";+$"  # section delimiter (src/db_loader.clj:229)
+STATUS = r"(SUCCESS|FAILURE) at generation (\d+)"  # P9, regex fixed
+GEN_NO = r"(\d+)\s*$"  # generation number ending a marker line
 
 
 class _KV(NamedTuple):
-    is_kv: Column
-    parameter: Column
-    value: Column
+    """SQL text over ``line`` for 'key<sep>value' lines (P1/P2/P4/P6):
+    the line holds ``sep`` and a non-empty key; key and value are the
+    trimmed text before and after its first occurrence
+    (src/db_loader.clj:139-143,175-178). ``sep`` is matched literally,
+    so no regex enters the text."""
+
+    is_kv: str
+    parameter: str
+    value: str
 
 
-def _kv_split(where: Column, sep: str) -> _KV:
-    """P1/P2/P4/P6: split 'key<sep>value' lines; keep only 2-arity rows;
-    trim both sides (src/db_loader.clj:139-143,175-178). Columns, not a
-    frame, so the run-level windows can aggregate over the same rows."""
-    parts = F.split(F.col("line"), sep, 2)
-    parameter = F.trim(parts.getItem(0))
+def _kv(sep: str) -> _KV:
+    parameter = f"trim(substring_index(line, '{sep}', 1))"
     return _KV(
-        where & F.col("line").contains(sep) & (parameter != ""),
+        f"instr(line, '{sep}') > 0 AND {parameter} != ''",
         parameter,
-        F.trim(parts.getItem(1)),
+        f"trim(substring(line, instr(line, '{sep}') + {len(sep)}))",
     )
+
+
+_HEADER_KV = _kv(" = ")
+_GEN_KV = _kv(": ")
+# The experiments row per run; ``user`` is a placeholder for its F.lit.
+_EXPERIMENTS_COLS = (
+    "id",
+    "CAST(NULL AS STRING) AS user",
+    "CAST(file_mtime AS TIMESTAMP) AS rundate",
+    "problem_name",
+    "CAST(NULL AS STRING) AS problem_id",
+    "clojush_version",
+    "file AS logfile_location",
+    "current_timestamp() AS csv_write_time",
+)
 
 
 def parse_clojush_logs(
@@ -114,98 +141,86 @@ def parse_clojush_lines(
     so the writes never race to materialize it. The caller releases the
     blocks with ``cache.free_local_checkpoint`` once it has written
     every table."""
+    # Every regex runs once per line, here, as a Column expression; the
+    # windows and table projections below are SQL text over the
+    # resulting plain columns.
     if "file_mtime" not in lines.columns:
         lines = lines.withColumn("file_mtime", F.lit(None).cast("timestamp"))
+    lines = (
+        lines.withColumn("_delim_line", F.regexp_like("line", F.lit(DELIM)))
+        .withColumn("_marker_line", F.regexp_like("line", F.lit(MARKER)))
+        .withColumn("_gen_no", F.regexp_extract("line", GEN_NO, 1))
+        .withColumn("_status", F.regexp_extract("line", STATUS, 1))
+        .withColumn("_status_gen", F.regexp_extract("line", STATUS, 2))
+    )
     lines = assign_file_ids(lines, mode=id_mode, base_id=base_id)
-    routed = route_sections(seq_split(lines, DELIM), MARKER)
+    routed = route_sections(
+        seq_split(lines, F.expr("_delim_line")), F.expr("_marker_line")
+    )
 
-    kind = F.col("section_kind")
-    is_marker = F.col("line").rlike(MARKER)
-    header_kv = _kv_split(kind == "header", " = ")
-    gen_kv = _kv_split((kind == "generation") & ~is_marker, ": ")
-    status_re = r"(SUCCESS|FAILURE) at generation (\d+)"
-    status = F.regexp_extract(F.col("line"), status_re, 1)
-    is_status = (kind == "summary") & (status != "")
-    per_file = W.partitionBy("file")
+    header_kv = f"section_kind = 'header' AND {_HEADER_KV.is_kv}"
+    status = "section_kind = 'summary' AND _status != ''"
 
-    def header_value(name: str) -> Column:  # P10 find-first — params are unique per header
-        return F.max(F.when(header_kv.is_kv & (header_kv.parameter == name), header_kv.value))
+    def header_value(name: str) -> str:  # P10 find-first — params are unique per header
+        return (
+            f"max(CASE WHEN {header_kv} AND {_HEADER_KV.parameter} = '{name}'"
+            f" THEN {_HEADER_KV.value} END) OVER (PARTITION BY file)"
+        )
 
-    def first_line(flag: Column) -> Column:  # the one row per run that carries its values
-        return F.col("line_no") == F.min(F.when(flag, F.col("line_no"))).over(per_file)
+    def first_line(flag: str) -> str:  # the one row per run that carries its values
+        return f"line_no = min(CASE WHEN {flag} THEN line_no END) OVER (PARTITION BY file)"
 
-    routed = routed.select(
+    routed = routed.selectExpr(
         "*",
-        F.max(
-            F.when(
-                (kind == "generation") & is_marker,
-                F.regexp_extract(F.col("line"), r"(\d+)\s*$", 1).cast("int"),
-            )
-        )
-        .over(W.partitionBy("file", "section_id"))
-        .alias("gennum"),
-        header_value("Clojush version").over(per_file).alias("clojush_version"),
-        header_value("problem-name").over(per_file).alias("problem_name"),
-        first_line(header_kv.is_kv).alias("is_run_row"),
-        F.max(F.when(is_status, status == "SUCCESS")).over(per_file).alias("successp"),
-        F.max(
-            F.when(is_status, F.regexp_extract(F.col("line"), status_re, 2).cast("int"))
-        )
-        .over(per_file)
-        .alias("maxgen"),
-        first_line(is_status).alias("is_summary_row"),
+        "max(CASE WHEN section_kind = 'generation' AND _marker_line"
+        " THEN CAST(_gen_no AS INT) END) OVER (PARTITION BY file, section_id) AS gennum",
+        f"{header_value('Clojush version')} AS clojush_version",
+        f"{header_value('problem-name')} AS problem_name",
+        f"{first_line(header_kv)} AS is_run_row",
+        f"max(CASE WHEN {status} THEN _status = 'SUCCESS' END)"
+        " OVER (PARTITION BY file) AS successp",
+        f"max(CASE WHEN {status} THEN CAST(_status_gen AS INT) END)"
+        " OVER (PARTITION BY file) AS maxgen",
+        f"{first_line(status)} AS is_summary_row",
     )
     if persist_shared:
         routed = routed.localCheckpoint(eager=True)
 
     # --- experiment (EAV header params, src/db_loader.clj:139-143) ----
-    experiment = routed.filter(header_kv.is_kv).select(
-        "id", header_kv.parameter.alias("parameter"), header_kv.value.alias("value")
+    experiment = routed.where(header_kv).selectExpr(
+        "id", f"{_HEADER_KV.parameter} AS parameter", f"{_HEADER_KV.value} AS value"
     )
     if skip_nils:  # P5 (src/db_loader.clj:141-142)
-        experiment = experiment.filter(F.col("value") != "nil")
+        experiment = experiment.where("value != 'nil'")
 
     # --- generations (EAV + gennum, src/db_loader.clj:169-178) --------
-    generations = routed.filter(gen_kv.is_kv).select(
-        "id", "gennum", gen_kv.parameter.alias("parameter"), gen_kv.value.alias("value")
-    )
+    generations = routed.where(
+        f"section_kind = 'generation' AND NOT _marker_line AND {_GEN_KV.is_kv}"
+    ).selectExpr("id", "gennum", f"{_GEN_KV.parameter} AS parameter", f"{_GEN_KV.value} AS value")
     if skip_nils:
-        generations = generations.filter(F.col("value") != "nil")
+        generations = generations.where("value != 'nil'")
 
     # --- summary (src/db_loader.clj:204-209, regex fixed) -------------
-    summary = routed.filter("is_summary_row").select("id", "successp", "maxgen")
+    summary = routed.where("is_summary_row").selectExpr("id", "successp", "maxgen")
 
     # --- experiments (context row per run, src/db_loader.clj:103-118) -
-    pname = F.col("problem_name")
-    if problem_name is not None:  # CLI :problemname override (P19)
-        pname = F.lit(problem_name).alias("problem_name")
-    experiments = routed.filter("is_run_row").select(
-        "id",
-        F.lit(user).alias("user"),
-        F.col("file_mtime").cast("timestamp").alias("rundate"),
-        pname,
-        "clojush_version",
-        F.col("file").alias("logfile_location"),
-        F.current_timestamp().alias("csv_write_time"),
+    # ``user`` and the :problemname override are caller values: they
+    # replace their placeholder columns as F.lit, never as SQL text.
+    experiments = routed.where("is_run_row").selectExpr(*_EXPERIMENTS_COLS).withColumn(
+        "user", F.lit(user)
     )
+    if problem_name is not None:  # CLI :problemname override (P19)
+        experiments = experiments.withColumn("problem_name", F.lit(problem_name))
     # JN6: problem_name → problem_id via the config dimension map
     if problem_map:
         dim = local_frame(
             spark, list(problem_map.items()), "problem_name string, problem_id string"
         )
-        experiments = experiments.join(F.broadcast(dim), "problem_name", "left")
-    else:
-        experiments = experiments.withColumn("problem_id", F.lit(None).cast("string"))
-    experiments = experiments.select(
-        "id",
-        "user",
-        "rundate",
-        "problem_name",
-        "problem_id",
-        "clojush_version",
-        "logfile_location",
-        "csv_write_time",
-    )
+        experiments = (
+            experiments.drop("problem_id")
+            .join(F.broadcast(dim), "problem_name", "left")
+            .selectExpr(*EXPERIMENTS_SCHEMA.fieldNames())
+        )
 
     tables = {
         "experiments": experiments,

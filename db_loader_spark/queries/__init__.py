@@ -222,64 +222,100 @@ DRIVER_WINDOW_SIZE = 50
 #   dedup_simhash — dedup_minhash_lsh stays.
 # These nineteen front the next rotation.
 #
+# RULE-2 RE-ENTRIES for the SQL-text plan builders (MinHash/LSH:
+# shingles, minhash_signatures, _banded and the shared band join;
+# Clojush: read_log_lines/number_lines, assign_file_ids, seq_split,
+# route_sections, parse_clojush_lines) and the load_table schema memo
+# (tables._read_parquet): j2_section_routing and p9_summary_parse
+# enter. dedup_minhash_lsh, text_decontaminate, curation_funnel,
+# curation_e2e, t_stream_signatures, e2e_cli_ingest and ecj_star are
+# in the window already; dedup_minhash_tuned, dedup_components and
+# dedup_ngram_jaccard are diagnostics-tier. load_table is in nearly
+# every lineage, so its evidence is the full-registry check_oracle
+# sweep at both SFs, not window slots.
+# FRONTING THE NINETEEN DISPLACED KEYS above: all nineteen enter
+# (j2_section_routing and p9_summary_parse among them). Nineteen
+# untouched keys with r16 green rows make room, each family keeping
+# members in the window:
+#   a4_count_distinct / a6_run_summary / a7_id_assignment — a1 / a2 /
+#     a3 / a_outlier_filter enter;
+#   q3_segment_revenue / q10_returned_items — q1_pricing_summary /
+#     q_top_customers enter;
+#   w_event_gap — w_moving_avg enters, w_topk_per_group stays;
+#   text_repetition / text_chunk / text_kmv_vocab / text_pii_scrub /
+#     text_bpe_tokenize — text_fingerprint, text_tfidf_topterms,
+#     text_repeated_passages and text_quality_score enter,
+#     text_lang_id and text_bpe_train stay;
+#   curation_source_cap — curation_shard_assign enters,
+#     curation_dsir_weight stays;
+#   p14_continuation_merge / p_json_props — p9 / p10 enter;
+#   j1_sessionize — j2_section_routing enters;
+#   jn_asof_join — jn_range_join enters, jn5_sidecar_join stays;
+#   ann_sq_rerank — ann_lsh_topk enters;
+#   rollup_revenue / eav_pivot — set_ops enters.
+# Keys touched since CORRECTNESS_r16 with no driver row since (the
+# staged layouts, the shared drain's t_stream_* keys, curation_funnel,
+# dedup_embedding_components, g_pagerank, ann_ivf_topk) all stay.
+# These nineteen front the next rotation.
+#
 # HARNESS INSURANCE (VERDICT r8 #4, carried): ordered CHEAPEST FIRST
 # by measured per-key sweep cost at sf0.01 (Spark + DuckDB oracle
 # wall time, scripts/window_cost.py on a 4-core box after the
-# rotation above: 171.2s/50 keys with cold stages, 50/50 OK) — a
+# rotation above: 140.1s/50 keys, 50/50 OK) — a
 # wall-clock-capped prefix run lands the maximum number of rows.
 # Ordering is evidence-neutral (driver checks set membership of the
 # first 50).
 WINDOW = [
-    "a6_run_summary",  # 0.28s
-    "w_event_gap",  # 0.42s
-    "a4_count_distinct",  # 0.45s
-    "curation_source_cap",  # 0.50s
-    "a7_id_assignment",  # 0.52s
-    "jn_asof_join",  # 0.55s
-    "text_repetition",  # 0.61s
-    "p14_continuation_merge",  # 0.64s
-    "q3_segment_revenue",  # 0.88s
-    "p_json_props",  # 0.89s
-    "q10_returned_items",  # 0.89s
-    "j1_sessionize",  # 0.93s
-    "scan_manifest_pruned",  # 0.95s
-    "cdc_snapshot_diff",  # 0.99s
-    "text_bpe_tokenize",  # 1.06s
-    "text_kmv_vocab",  # 1.08s
-    "text_chunk",  # 1.20s
-    "rollup_revenue",  # 1.20s
-    "jn5_sidecar_join",  # 1.32s
-    "w_topk_per_group",  # 1.50s
-    "curation_dsir_weight",  # 1.66s
-    "t_snapshot_incremental",  # 1.69s
-    "text_pii_scrub",  # 1.82s
-    "t_snapshot_upsert",  # 2.12s
-    "ann_sq_rerank",  # 2.12s
-    "eav_pivot",  # 2.23s
-    "text_decontaminate",  # 2.44s
-    "ecj_star",  # 2.63s
-    "t_stream_lakehouse",  # 2.87s
-    "dedup_minhash_lsh",  # 2.91s
-    "t_stream_ann_index",  # 2.92s
-    "text_lang_id",  # 3.30s
-    "multimodal_decode_jpeg",  # 3.52s
-    "dedup_semantic",  # 3.70s
-    "t_stream_mview",  # 4.29s
-    "e2e_cli_ingest",  # 4.35s
-    "ann_ivf_disk_topk",  # 4.54s
-    "curation_funnel",  # 4.71s
-    "dedup_embedding_components",  # 4.80s
-    "g_pagerank",  # 5.57s
-    "t_stream_rollup",  # 5.82s
-    "t_stream_signatures",  # 6.07s
-    "t_stream_dedup",  # 6.18s
-    "t_stream_join",  # 7.14s
-    "ann_ivf_topk",  # 8.21s
-    "text_bpe_train",  # 9.01s
-    "ann_pq_topk",  # 9.70s
-    "curation_e2e",  # 9.75s
-    "t_stream_sessions",  # 11.74s
-    "ann_ivfpq_topk",  # 16.55s
+    "a2_max_id",  # 0.17s
+    "text_fingerprint",  # 0.18s
+    "a3_filtered_count",  # 0.19s
+    "p10_find_first",  # 0.23s
+    "a1_distinct_pairs",  # 0.24s
+    "text_quality_score",  # 0.29s
+    "q_top_customers",  # 0.34s
+    "w_moving_avg",  # 0.36s
+    "p9_summary_parse",  # 0.36s
+    "curation_shard_assign",  # 0.43s
+    "jn_range_join",  # 0.57s
+    "set_ops",  # 0.60s
+    "q1_pricing_summary",  # 0.63s
+    "j2_section_routing",  # 0.64s
+    "t_snapshot_upsert",  # 0.65s
+    "text_lang_id",  # 0.65s
+    "text_repeated_passages",  # 0.93s
+    "text_tfidf_topterms",  # 1.00s
+    "w_topk_per_group",  # 1.11s
+    "a_outlier_filter",  # 1.16s
+    "jn5_sidecar_join",  # 1.90s
+    "dedup_simhash",  # 1.93s
+    "t_snapshot_incremental",  # 1.95s
+    "ann_lsh_topk",  # 1.96s
+    "scan_manifest_pruned",  # 2.23s
+    "dedup_minhash_lsh",  # 2.37s
+    "t_stream_rollup",  # 2.46s
+    "ann_ivf_topk",  # 2.62s
+    "cdc_snapshot_diff",  # 2.65s
+    "t_stream_lakehouse",  # 3.10s
+    "ecj_star",  # 3.36s
+    "multimodal_decode_jpeg",  # 3.47s
+    "t_stream_dedup",  # 3.75s
+    "e2e_cli_ingest",  # 3.78s
+    "text_decontaminate",  # 3.79s
+    "ann_pq_topk",  # 3.79s
+    "dedup_embedding_components",  # 4.02s
+    "curation_funnel",  # 4.04s
+    "t_stream_signatures",  # 4.07s
+    "ann_ivf_disk_topk",  # 4.59s
+    "t_stream_mview",  # 4.59s
+    "curation_dsir_weight",  # 4.74s
+    "text_bpe_train",  # 4.93s
+    "ann_ivfpq_topk",  # 5.01s
+    "dedup_semantic",  # 5.47s
+    "g_pagerank",  # 5.86s
+    "t_stream_join",  # 6.03s
+    "t_stream_ann_index",  # 8.61s
+    "curation_e2e",  # 10.30s
+    "t_stream_sessions",  # 12.02s
 ]
 
 # WINDOW-OVERFLOW QUEUE (policy, r6): brand-new keys beyond window

@@ -105,6 +105,12 @@ def local_frame(spark: SparkSession, rows, schema: str | StructType | None = Non
     return spark.createDataFrame(table)
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier: the only form in
+    which a caller-supplied column name enters SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def thread_target(spark: SparkSession, fn: Callable) -> Callable:
     """``fn`` wrapped to run Spark actions from a pool thread.
 

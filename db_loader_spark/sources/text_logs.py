@@ -19,13 +19,20 @@ At 100 TB: millions of small log files is the scale profile here; one
 ``read.text`` over a glob produces one task per file-group, no
 driver-side per-file loop (the reference spawned a JVM per file,
 scripts/load_csv_to_cloud.sh:123).
+
+Plans are built as SQL text, one ``selectExpr`` per projection: a
+Column-API call costs several py4j round trips, a SQL string a few per
+projection. No regex or caller value enters that text, only
+backtick-quoted column names (``session.sql_ident``), because
+``spark.sql.parser.escapedStringLiterals`` changes how a backslash in a
+SQL string literal parses.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import Window as W
+
+from db_loader_spark.session import sql_ident
 
 
 def number_lines(raw: DataFrame, file_col: str = "file") -> DataFrame:
@@ -39,12 +46,13 @@ def number_lines(raw: DataFrame, file_col: str = "file") -> DataFrame:
     (the split's byte offset, selected from ``_metadata.file_block_start``
     at read time — see :func:`read_log_lines`) the window orders by
     (block offset, _mid), which is correct for any file size."""
-    order = ["_block_start", "_mid"] if "_block_start" in raw.columns else ["_mid"]
-    w = W.partitionBy(file_col).orderBy(*order)
-    return (
-        raw.withColumn("_mid", F.monotonically_increasing_id())
-        .withColumn("line_no", F.row_number().over(w) - 1)
-        .drop("_mid", "_block_start")
+    cols = raw.columns
+    order = "_block_start, _mid" if "_block_start" in cols else "_mid"
+    keep = [sql_ident(c) for c in cols if c != "_block_start"]
+    return raw.selectExpr("*", "monotonically_increasing_id() AS _mid").selectExpr(
+        *keep,
+        f"row_number() OVER (PARTITION BY {sql_ident(file_col)} ORDER BY {order}) - 1"
+        " AS line_no",
     )
 
 
@@ -64,13 +72,13 @@ def read_log_lines(
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     cols = [
-        F.input_file_name().alias("file"),
-        F.col("value").alias("line"),
+        "input_file_name() AS file",
+        "value AS line",
         # Split byte-offset: makes line numbering correct even when one
         # file spans several input splits (ADVICE r01 — split-packing is
         # not offset-ordered). Dropped again inside number_lines.
-        F.col("_metadata.file_block_start").alias("_block_start"),
+        "_metadata.file_block_start AS _block_start",
     ]
     if with_mtime:
-        cols.append(F.col("_metadata.file_modification_time").alias("file_mtime"))
-    return number_lines(reader.text(path).select(*cols))
+        cols.append("_metadata.file_modification_time AS file_mtime")
+    return number_lines(reader.text(path).selectExpr(*cols))

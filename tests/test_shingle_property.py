@@ -13,6 +13,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from db_loader_spark.functions.dedup import shingle_frame, shingles
+from db_loader_spark.functions.text import tokens
 
 # whitespace-heavy alphabet to stress the tokenizer's cleanup paths
 _TEXT = st.text(
@@ -61,9 +62,11 @@ def test_shingles_are_ordered_ngrams(spark, texts):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     ns = (1, 2, 3, 4)
-    rows = docs.select(
-        "doc_id", *[shingles(F.col("text"), n).alias(f"s{n}") for n in ns]
-    ).collect()
+    rows = (
+        docs.select("doc_id", tokens(F.col("text")).alias("toks"))
+        .selectExpr("doc_id", *[f"{shingles('toks', n)} AS s{n}" for n in ns])
+        .collect()
+    )
     for r in rows:
         t = texts[r["doc_id"]]
         for n in ns:
