@@ -77,6 +77,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -585,6 +586,11 @@ def _file_stats(path: str, cols: list[str]) -> dict:
     return out
 
 
+def _new_sid() -> str:
+    """A fresh snapshot id: millisecond commit time, then a random tag."""
+    return f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
+
+
 def publish(
     df: DataFrame,
     root: str,
@@ -654,7 +660,7 @@ def publish(
     lineage (no recorded schema) stays legacy until overwritten."""
     data_dir, man_dir, _ = _paths(root)
     os.makedirs(man_dir, exist_ok=True)
-    sid = snapshot_id or f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
+    sid = snapshot_id or _new_sid()
     observed_gen, observed = _read_pointer(root)
     if _require_parent is not None:
         # _NO_PARENT pins "derived from an empty table": the observed
@@ -1121,21 +1127,24 @@ def _scrub_lost_attempt(
         pass  # no residue (pre-check loss) or already scrubbed
 
 
-def _occ_loop(root: str, snapshot_id: str | None, retries: int, attempt):
-    """The shared OCC retry protocol merge_upsert / delete_where /
-    compact_snapshot all speak (one definition, three users — finding
-    of the r12 close review): read the current snapshot, honor the
-    exactly-once replay guard (``parent == snapshot_id`` — the token
-    already committed, possibly finished by a twin mid-rebase;
-    re-deriving would apply the batch to ITS OWN RESULT), run
-    ``attempt(parent)`` (the op-specific derive + publish), and on a
-    lost pointer race scrub the same-token residue and re-derive on
-    the fresh current, up to ``retries`` times. Exhaustion re-raises
-    the final ``ConcurrentPublishError``."""
+def _occ_loop(
+    root: str, snapshot_id: str | None, retries: int | None, attempt
+) -> tuple[str, bool]:
+    """The OCC retry protocol every derived commit speaks: read the
+    current snapshot, honor the exactly-once replay guard (``parent ==
+    snapshot_id`` — the token already committed, possibly finished by
+    a twin mid-rebase; re-deriving would apply the batch to ITS OWN
+    RESULT), run ``attempt(parent)`` (the op-specific derive + commit,
+    returning ``(sid, committed)``), and on a lost pointer race scrub
+    the same-token residue and re-derive on the fresh current, up to
+    ``retries`` times (None means ``_REBASE_RETRIES``). Exhaustion
+    re-raises the final ``ConcurrentPublishError``. A replay resolved
+    here returns ``(snapshot_id, False)``: this call minted nothing."""
+    retries = _REBASE_RETRIES if retries is None else retries
     for i in range(retries + 1):
         parent = current_snapshot(root)
         if snapshot_id is not None and parent == snapshot_id:
-            return snapshot_id
+            return snapshot_id, False
         if (
             snapshot_id is not None
             and os.path.exists(
@@ -1145,10 +1154,8 @@ def _occ_loop(root: str, snapshot_id: str | None, retries: int, attempt):
         ):
             # committed then SUPERSEDED by another writer: publish
             # would no-op this anyway (lineage-walk adjudication), but
-            # only after attempt() re-ran the full derivation — catch
-            # it here and skip the wasted Spark work (r12 close
-            # review, pass 2)
-            return snapshot_id
+            # only after attempt() re-ran the full derivation
+            return snapshot_id, False
         try:
             return attempt(parent)
         except ConcurrentPublishError:
@@ -1172,7 +1179,9 @@ def merge_upsert(
     ``key_col`` value; unmatched keys insert. Data files stay
     immutable — the commit rewrites ONLY the files that can contain a
     matched key and lists every other parent file unchanged, so the
-    write is sized to the touched slice, not the table.
+    write is sized to the touched slice, not the table. An empty
+    batch against an existing snapshot is the documented no-op
+    (parent id, no commit).
 
     Touched-file targeting uses the manifest's zone maps when present:
     a parent file whose [min, max] for ``key_col`` contains ANY update
@@ -1198,481 +1207,53 @@ def merge_upsert(
     consumer read the SAME materialization; sources should still be
     deterministic (every table format demands it of MERGE batches).
 
-    CONCURRENCY (r12b — the Delta/Iceberg OCC retry loop): a merge
-    that loses the pointer race to an interloping commit auto-REBASES
-    up to ``rebase_retries`` times (default ``_REBASE_RETRIES``):
-    re-read the fresh current, RE-DERIVE survivors against it, and
-    re-commit. Re-derivation IS the conflict resolution — the retry
-    re-executes the merge on the winner's result, so the outcome
-    equals the serial order "winner, then this merge": a concurrent
-    append's rows are seen (and updated if their keys match the
-    batch); a concurrent merge's result is merged into last-writer-
-    wins per key. ``rebase_retries=0`` restores raise-to-caller
+    CONCURRENCY (the Delta/Iceberg OCC retry loop): a merge that loses
+    the pointer race to an interloping commit auto-REBASES up to
+    ``rebase_retries`` times (default ``_REBASE_RETRIES``): re-read the
+    fresh current, RE-DERIVE survivors against it, and re-commit.
+    Re-derivation IS the conflict resolution — the retry re-executes
+    the merge on the winner's result, so the outcome equals the serial
+    order "winner, then this merge": a concurrent append's rows are
+    seen (and updated if their keys match the batch); a concurrent
+    merge's result is merged into last-writer-wins per key.
+    ``rebase_retries=0`` restores raise-to-caller
     (``ConcurrentPublishError``). Exhaustion re-raises.
 
-    ``mode="mor"`` (r13 — Delta's deletion-vector MERGE shape): mask
-    the matched rows' positions with vectors and APPEND the batch as
-    new files — no parent file rewritten, commit write cost sized to
-    the BATCH. Same logical result as COW (pinned by test), same OCC
-    loop and token; the right mode for scattered-key CDC batches
-    against huge clustered tables, where COW's touched set degrades
-    toward a full rewrite. See ``_merge_mor_pinned``."""
+    ``mode="mor"`` (Delta's deletion-vector MERGE shape): mask the
+    matched rows' positions with vectors and APPEND the batch as new
+    files — no parent file rewritten, commit write cost sized to the
+    BATCH. Same logical result as COW (pinned by test), same OCC loop
+    and token; the right mode for scattered-key CDC batches against
+    huge clustered tables, where COW's touched set degrades toward a
+    full rewrite. See ``_mor_write``."""
     if mode not in ("cow", "mor"):
         raise ValueError(f"merge_upsert mode must be 'cow' or 'mor', got {mode!r}")
-    retries = _REBASE_RETRIES if rebase_retries is None else rebase_retries
 
-    def attempt(parent):
-        if parent is None:
-            # Empty table: a plain publish, PINNED to "derived from no
-            # parent" (_NO_PARENT) — a concurrent first-writer landing
-            # between our current_snapshot() read and publish's own
-            # pointer read raises ConcurrentPublishError at the
-            # pre-check, and the rebase loop re-enters through the
-            # real merge path against it. (parent_check alone only
-            # fires when the CAS itself loses, i.e. commits landing
-            # AFTER publish's pointer read — ADVICE r12 #1.)
-            return publish(
-                df, root, snapshot_id=snapshot_id,
-                _require_parent=_NO_PARENT,
-            )
-        pm = _manifest(root, parent)
-        if mode == "mor":
-            return _merge_mor_pinned(
-                spark, df, root, key_col, snapshot_id, pm
-            )
-        return _merge_upsert_pinned(
-            spark, df, root, key_col, snapshot_id, pm,
-            pm.get("files_meta", {}),
+    def derive(pm):
+        n = _merge_contract_checks(df, pm, key_col, "merge_upsert")
+        keys = df.select(key_col).distinct()
+        return _Edit(
+            _key_touched_files(keys, key_col, pm), keys=keys,
+            key_col=key_col, batch=df, batch_rows=n,
         )
 
-    df = df.persist()
-    try:
-        return _occ_loop(root, snapshot_id, retries, attempt)
-    finally:
-        df.unpersist()
-
-
-def _merge_mor_pinned(
-    spark: SparkSession,
-    df: DataFrame,
-    root: str,
-    key_col: str,
-    snapshot_id: str | None,
-    pm: dict,
-) -> str:
-    """Merge-on-read MERGE (Delta's DV-backed MERGE shape): matched
-    rows' positions are MASKED with deletion vectors and the whole
-    batch is APPENDED as new data files — no parent file is rewritten,
-    so the commit's write cost is sized to the BATCH, not the touched
-    files. The logical result is exactly the COW merge's (masked old
-    rows ≡ anti-joined-away rows; appended batch ≡ unioned batch);
-    ``tests/test_mor_delete.py`` pins the equivalence row-for-row.
-
-    At 100 TB this is the CDC-ingest shape: a stream of small upsert
-    batches against a huge clustered table pays per-batch cost even
-    when the batch's keys scatter across thousands of files — the case
-    where COW's touched-set rewrite degrades to a near-full-table
-    write. Read-side cost is the usual vector anti-join until
-    ``purge_deletes``/``compact_snapshot`` absorbs; the batch's new
-    files carry zone maps so later reads and merges stay prunable."""
-    from pyspark.sql import functions as F
-
-    meta = pm.get("files_meta", {})
-    sid = snapshot_id or f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-    data_dir, man_dir, _ = _paths(root)
-    os.makedirs(man_dir, exist_ok=True)
-    staged = os.path.join(data_dir, sid)
-    # guard FIRST, Spark work after (third r13 review: the delete path
-    # already ordered it this way) — a replay of a committed-then-
-    # reaped token must not pay the contract aggregation
-    if os.path.isdir(staged) and _prefix_live(root, sid):
-        return sid  # committed, superseded, manifest reaped: no-op
-    _merge_contract_checks(df, pm, key_col)
-    keys = df.select(key_col).distinct()
-    # zone-map targeting, same as the COW path (third r13 review): the
-    # position scan reads only the files whose stats CAN contain a
-    # batch key — on a clustered table the scan is batch-localized,
-    # not table-sized (shared with merge_apply via _mor_mask_hits)
-    assoc, dv_tmp = _mor_mask_hits(spark, root, pm, keys, key_col, staged)
-    # the batch write pays the same file-count bound as MOR UPDATE
-    # (r14 review, same class): a 200-shuffle-partition CDC batch
-    # would otherwise land 200 tiny files on EVERY epoch commit.
-    # df.count() reads the cache merge_upsert pinned; range-clustering
-    # on the key keeps the appended files' zone maps selective.
-    batch = _sized_batch(df, df.count(), meta, key_col)
-    return _mor_mask_append_commit(
-        root, sid, pm, staged, dv_tmp, assoc, batch,
-        "merge_upsert(mor)", "merge",
-    )
-
-
-def _stats_cols(meta: dict) -> list[str]:
-    """Every column any file's zone map records — THE one definition
-    of the stats-column derivation (r14 review found it copied across
-    the DML verbs; r15 consolidated the remaining COW/compact inline
-    copies while their manifest witnesses were in-window, VERDICT r14
-    #2). All write paths — MOR mask-and-append, COW merge/delete/
-    update rewrites, compaction — derive the recorded columns here."""
-    return sorted({c for m in meta.values() for c in m.get("stats", {})})
-
-
-def _sized_batch(df: DataFrame, rows: int, meta: dict, cluster_col):
-    """Bound an appended batch's FILE COUNT to its ROW count: size the
-    output like the table's own files (average rows/file from manifest
-    metadata; 1M-row default on stat-less tables, 256-file cap) so a
-    mask-and-append commit can never strew scan-partition-count tiny
-    files (r14 review). ``cluster_col`` range-clusters the output so
-    the new files carry selective zone maps — round-robin would give
-    every appended file the full key range and poison later pruning.
-    The shuffle this costs is batch-sized."""
-    per_file = [m["rows"] for m in meta.values() if m.get("rows")]
-    target = max(1, sum(per_file) // len(per_file)) if per_file else 1_000_000
-    n_out = min(256, max(1, -(-rows // target)))
-    if cluster_col is not None:
-        return df.repartitionByRange(n_out, cluster_col)
-    return df.repartition(n_out)
-
-
-def _mor_mask_append_commit(
-    root: str,
-    sid: str,
-    pm: dict,
-    staged: str,
-    dv_tmp: str,
-    assoc: list,
-    batch: DataFrame | None,
-    op_label: str,
-    verb: str,
-) -> str:
-    """The shared mask-and-append commit tail of the MOR MERGE and MOR
-    UPDATE (one definition — r14 review: the two verbs had ~45
-    duplicated lines, exactly the DML-divergence class the r13
-    extractions closed for vector loading): stage ``batch`` as the
-    appended data files, move the freshly written vector parts in
-    beside them under dv- names, harvest zone maps for the new files,
-    extend the parent's delete map, precheck the pointer against the
-    derivation parent, and CAS-commit the parent's file list verbatim
-    plus the appends."""
-    parent = pm["snapshot_id"]
-    meta = pm.get("files_meta", {})
-    # stage the BATCH as the appended data files, then move the
-    # vectors in beside them under dv- names (the overwrite clears any
-    # prior attempt's residue first, so the move must come after).
-    # batch=None = mask-only commit (merge_apply's pure-delete case):
-    # no data file is written at all, not even a 0-row part.
-    if batch is not None:
-        batch.write.mode("overwrite").parquet(staged)
-    else:
-        shutil.rmtree(staged, ignore_errors=True)  # prior-attempt residue
-        os.makedirs(staged, exist_ok=True)
-    for p in os.listdir(dv_tmp):
-        if p.endswith(".parquet"):
-            os.replace(
-                os.path.join(dv_tmp, p), os.path.join(staged, f"dv-{p}")
-            )
-    shutil.rmtree(dv_tmp, ignore_errors=True)
-    data_files = sorted(
-        f for f in os.listdir(staged)
-        if f.endswith(".parquet") and not f.startswith("dv-")
-    )
-    new_files = [os.path.join(_DATA, sid, f) for f in data_files]
-    stats_cols = _stats_cols(meta) or None
-    new_meta = (
-        {
-            os.path.join(_DATA, sid, f): _file_stats(
-                os.path.join(staged, f), stats_cols
-            )
-            for f in data_files
-        }
-        if stats_cols
-        else {}
-    )
-    merged = _merge_dv_entries(
-        pm, assoc,
-        lambda p: os.path.join(_DATA, sid, f"dv-{p}"),
-        f"{op_label} at {root!r}",
-    )
-    pin = _mor_pointer_precheck(root, sid, parent, verb)
-    if pin is None:
-        return sid  # a same-token twin finished this commit
-    observed_gen, observed = pin
-    return _commit_staged(
-        root,
-        sid,
-        new_files,
-        new_meta=new_meta,
-        append=False,
-        parent_check=True,
-        inherit_files=list(pm["files"]),
-        inherit_meta=dict(meta),
-        observed_gen=observed_gen,
-        observed=observed,
-        schema=pm.get("schema"),
-        deletes=merged,
-    )
-
-
-def _key_touched_files(
-    keys: DataFrame, key_col: str, pm: dict, meta: dict
-) -> list[str]:
-    """Parent files whose zone maps CAN contain any batch key — the
-    shared targeting of the COW merge's rewrite set and the MOR
-    merge's position scan (third r13 review: the MOR path was
-    full-scanning). Per-file check against the key SET, not its global
-    range: a single far-away insert key would otherwise widen
-    [min, max] to cover every file. CDC batches are driver-bounded by
-    nature; past the cap, fall back to the range check (conservative —
-    more files scanned/rewritten, never wrongness). Files without
-    stats are conservatively included."""
-    import bisect
-
-    from pyspark.sql import functions as F
-
-    key_cap = 100_000
-    sample = [r[0] for r in keys.limit(key_cap + 1).collect()]
-    key_sorted = sorted(sample) if len(sample) <= key_cap else None
-    lo = hi = None
-    if key_sorted is None:
-        b = keys.agg(
-            F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
-        ).first()
-        lo, hi = b["lo"], b["hi"]
-
-    def touched(rel: str) -> bool:
-        fm = meta.get(rel, {})
-        nc = fm.get("nulls", {}).get(key_col)
-        if nc is not None and nc == fm.get("rows"):
-            return False  # key provably all-NULL: no batch key matches
-        st = fm.get("stats", {}).get(key_col)
-        if st is None:
-            return True  # no stats -> must assume it can match
-        if key_sorted is not None:
-            i = bisect.bisect_left(key_sorted, st[0])
-            return i < len(key_sorted) and key_sorted[i] <= st[1]
-        return lo is not None and st[1] >= lo and st[0] <= hi
-
-    return [f for f in pm["files"] if touched(f)]
-
-
-def _collect_dv_assoc(spark: SparkSession, dv_dir: str) -> list:
-    """Read back a freshly staged vector directory and return the
-    driver-bounded per-data-file association: [(f, n, [part names])].
-    One definition for both MOR verbs (third r13 review)."""
-    from pyspark.sql import functions as F
-
-    back = spark.read.schema("f string, pos long").parquet(dv_dir)
-    return (
-        back.groupBy("f")
-        .agg(
-            F.count("*").alias("n"),
-            F.sort_array(
-                F.collect_set(
-                    F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-                )
-            ).alias("parts"),
-        )
-        .collect()
-    )
-
-
-def _merge_dv_entries(pm: dict, assoc: list, rel_of_part, op: str) -> dict:
-    """The parent's deletes map extended with a commit's new vector
-    entries (``rel_of_part`` maps a staged part NAME to its final
-    manifest-relative path). Validates every matched file against the
-    parent manifest — a mapping miss is out-of-contract, never
-    silently recorded."""
-    from urllib.parse import unquote
-
-    known = set(pm["files"])
-    merged = {f: dict(e) for f, e in (pm.get("deletes") or {}).items()}
-    for r in assoc:
-        f = unquote(r["f"])
-        if f not in known:
-            raise RuntimeError(
-                f"{op}: matched file {f!r} is not in the parent "
-                "manifest — file-name mapping is out of contract"
-            )
-        entry = merged.setdefault(f, {"dv": [], "rows": 0})
-        entry["dv"] = list(entry["dv"]) + [rel_of_part(p) for p in r["parts"]]
-        entry["rows"] = entry["rows"] + r["n"]
-    return merged
-
-
-def _mor_pointer_precheck(root: str, sid: str, parent: str, op: str):
-    """The MOR commit's derivation pin: returns (gen, observed) for
-    the CAS, None if a same-token twin already finished the commit,
-    and raises ConcurrentPublishError if an interloper moved the
-    pointer past the derivation parent."""
-    observed_gen, observed = _read_pointer(root)
-    if observed == sid:
-        return None  # a same-token twin finished this commit
-    if observed != parent:
-        raise ConcurrentPublishError(
-            f"concurrent publish detected at {root!r}: this {op}'s "
-            f"positions were derived from {parent!r} but current is "
-            f"{observed!r}; re-derive on top of the new current snapshot"
-        )
-    return observed_gen, observed
-
-
-def _merge_contract_checks(df: DataFrame, pm: dict, key_col: str) -> None:
-    """The MERGE batch contract, shared by the COW and MOR paths:
-    batch columns must equal the recorded table schema exactly (every
-    format's rule — a narrower batch would record a narrower schema /
-    hide carried columns), shared names must have IDENTICAL types (no
-    implicit casts, ever — a widened batch type would be recorded as
-    the table contract and bind carried files' parquet wrongly), and
-    source keys must be unique (duplicated batch keys would land as
-    duplicated TABLE rows — fail loudly, never corrupt)."""
-    from pyspark.sql import functions as F
-
-    pschema = pm.get("schema")
-    if pschema is not None:
-        want = {f["name"]: f["type"] for f in pschema["fields"]}
-        # raw df.columns, not a dict: a dict would collapse DUPLICATE
-        # batch column names and let them through to a confusing
-        # AnalysisException downstream (r12 close review, pass 2)
-        if sorted(df.columns) != sorted(want):
-            raise ValueError(
-                f"merge_upsert batch columns {sorted(df.columns)} != "
-                f"table schema columns {sorted(want)} at the manifest root"
-            )
-        got = {
-            f["name"]: f["type"] for f in df.schema.jsonValue()["fields"]
-        }
-        clash = [
-            c for c in want
-            if _type_fingerprint(got[c]) != _type_fingerprint(want[c])
-        ]
-        if clash:
-            raise ValueError(
-                f"merge_upsert batch type mismatch on {clash} (batch "
-                f"{[got[c] for c in clash]} vs table "
-                f"{[want[c] for c in clash]}) — no implicit casts; "
-                "align the types explicitly"
-            )
-    counts = df.agg(
-        F.count("*").alias("n"), F.countDistinct(key_col).alias("d")
-    ).first()
-    if counts["n"] != counts["d"]:
-        raise ValueError(
-            f"merge_upsert batch has duplicate {key_col!r} values "
-            f"({counts['n']} rows, {counts['d']} distinct)"
+    def first_publish():
+        # Empty table: a plain publish, PINNED to "derived from no
+        # parent" (_NO_PARENT) — a concurrent first-writer landing
+        # between the OCC loop's current_snapshot() read and publish's
+        # own pointer read raises ConcurrentPublishError at the
+        # pre-check, and the rebase loop re-enters through the real
+        # merge path against it. (parent_check alone only fires when
+        # the CAS itself loses, i.e. commits landing AFTER publish's
+        # pointer read.)
+        return publish(
+            df, root, snapshot_id=snapshot_id, _require_parent=_NO_PARENT
         )
 
-
-def _merge_upsert_pinned(
-    spark: SparkSession,
-    df: DataFrame,
-    root: str,
-    key_col: str,
-    snapshot_id: str | None,
-    pm: dict,
-    meta: dict,
-) -> str:
-    from pyspark.sql import functions as F
-
-    pschema = pm.get("schema")
-    _merge_contract_checks(df, pm, key_col)
-    keys = df.select(key_col).distinct()
-    touched_rel = _key_touched_files(keys, key_col, pm, meta)
-    carried = [f for f in pm["files"] if f not in set(touched_rel)]
-    if touched_rel:
-        # bind to the parent's recorded schema (when present) so a
-        # merge against an EVOLVED lineage reads every survivor column
-        # — including ones the touched files predate (as NULL) — and
-        # the unionByName with the batch stays total; a LEGACY lineage
-        # gets the footer-union read so heterogeneous survivors keep
-        # every column they physically hold
-        old_rows = _apply_deletes(
-            spark, root, pm,
-            _manifest_reader(spark, pm, legacy_union=True).parquet(
-                *[os.path.join(root, f) for f in touched_rel]
-            ),
-            files=touched_rel,
-        )
-        survivors = old_rows.join(keys, key_col, "left_anti")
-        # On a RECORDED lineage the contract check above guarantees
-        # the column sets match and this is a plain union. On a LEGACY
-        # lineage there is no contract, so the footer-union survivors
-        # may carry columns the batch lacks (and vice versa) —
-        # allowMissingColumns fills either side with NULL, which is
-        # the merge semantics a schema-less table can honestly offer
-        # (r12 close review, pass 2: the strict union crashed here).
-        staged_df = survivors.unionByName(
-            df, allowMissingColumns=pschema is None
-        )
-    else:
-        # No file touched: the batch alone is staged. Bind its COLUMN
-        # ORDER to the parent's recorded schema — the contract check
-        # above is order-insensitive (sorted()), and the touched-file
-        # path records the parent's order (unionByName keeps the
-        # survivor side) — so without this select the table's recorded
-        # field order would churn nondeterministically across merges
-        # depending on whether any file was touched (ADVICE r12 #3).
-        staged_df = (
-            df.select([f["name"] for f in pschema["fields"]])
-            if pschema is not None
-            else df
-        )
-    stats_cols = _stats_cols(meta) or None
-    dels = pm.get("deletes") or {}
-    return publish(
-        staged_df,
-        root,
-        snapshot_id=snapshot_id,
-        stats_cols=stats_cols,
-        _inherit_files=carried,
-        _inherit_meta={f: meta[f] for f in carried if f in meta},
-        # carried files keep their deletion vectors (the rewritten
-        # touched files materialized theirs via the masked read above)
-        _inherit_deletes={f: dels[f] for f in carried if f in dels},
-        # the survivor rows and carried file list were derived from
-        # pm's snapshot: commit conditionally on it (r12 — a racing
-        # commit between our derivation read and the pointer CAS must
-        # surface, not be clobbered by stale derivations)
-        _require_parent=pm["snapshot_id"],
-        _record_schema=pschema is not None,
-    )
-
-
-def _annotated_scan(
-    spark: SparkSession,
-    root: str,
-    pm: dict,
-    rel_files: list[str],
-    rc: str,
-    pc: str,
-) -> DataFrame:
-    """The DML derivation scan: ``pm``'s listed ``rel_files`` with two
-    scratch columns — ``rc`` (manifest-relative file path) and ``pc``
-    (parquet row position) — projected AT SCAN TIME, then the
-    snapshot's deletion vectors anti-joined away. Projecting the
-    ``_metadata`` fields before any join matters: the hidden column
-    resolves only against the file-source relation, so every DML
-    operation derives (file, position) identity here, first, and then
-    composes joins/filters freely."""
-    from pyspark.sql import functions as F
-
-    ann = (
-        _manifest_reader(spark, pm, legacy_union=True)
-        .parquet(*[os.path.join(root, f) for f in rel_files])
-        .withColumn(rc, _rel_file_expr())
-        .withColumn(pc, F.col("_metadata.row_index"))
-    )
-    dels = pm.get("deletes") or {}
-    scanned = set(rel_files)
-    dels = {f: e for f, e in dels.items() if f in scanned}
-    return _dv_anti_join(spark, root, dels, ann, rc, pc)
-
-
-# Data files a MOR delete's position shuffle lands in — per-commit
-# deletion-vector file count. Positions hash-cluster by DATA FILE, so
-# each data file's positions live in exactly ONE DV file and the
-# manifest records that exact association (a pruned read fetches only
-# the DV files covering its slice). Commit cost stays matched-rows-
-# sized; raise for commits deleting billions of positions.
-_DV_FILES = 4
+    return _row_dml(
+        spark, root, snapshot_id, rebase_retries, mode, "merge_upsert",
+        derive, src=df, on_empty=first_publish,
+    )[0]
 
 
 def delete_where(
@@ -1701,8 +1282,8 @@ def delete_where(
     rewritten files' entries drop (their rewrite materializes the
     mask). The write is sized to the TOUCHED FILES.
 
-    ``mode="mor"`` (merge-on-read, r13 — Delta deletion vectors /
-    Iceberg positional deletes): no data file is rewritten at all. The
+    ``mode="mor"`` (merge-on-read — Delta deletion vectors / Iceberg
+    positional deletes): no data file is rewritten at all. The
     matched rows' (file, position) pairs are staged as parquet
     deletion-vector sidecars under the new snapshot's prefix and the
     commit records, per touched data file, WHICH DV file masks it plus
@@ -1729,159 +1310,144 @@ def delete_where(
     WITHOUT a CAS, which is still linearizable: a concurrent commit
     adding matching rows after our read serializes AFTER this (empty)
     delete — exactly the outcome the parent-id return describes."""
-    from pyspark.sql import functions as F
-
     if mode not in ("cow", "mor"):
         raise ValueError(f"delete_where mode must be 'cow' or 'mor', got {mode!r}")
-    retries = _REBASE_RETRIES if rebase_retries is None else rebase_retries
+    return _row_dml(
+        spark, root, snapshot_id, rebase_retries, mode, "delete_where",
+        lambda pm: _Edit(pm["files"], predicate=predicate),
+    )[0]
 
-    def attempt(parent):
-        if parent is None:
-            raise FileNotFoundError(f"no current snapshot at {root!r}")
-        pm = _manifest(root, parent)
-        tag = uuid.uuid4().hex[:8]
-        rc, pc = f"_dml_rel_{tag}", f"_dml_pos_{tag}"
-        ann = _annotated_scan(spark, root, pm, pm["files"], rc, pc)
-        if mode == "mor":
-            return _delete_mor_pinned(
-                spark, ann, root, predicate, snapshot_id, pm, rc, pc
+
+def update_where(
+    spark: SparkSession,
+    root: str,
+    predicate: str,
+    set_exprs: dict[str, str],
+    snapshot_id: str | None = None,
+    rebase_retries: int | None = None,
+    mode: str = "cow",
+) -> str:
+    """Row-level ``UPDATE … SET … WHERE …`` as a manifest commit.
+    Rows where ``predicate`` evaluates TRUE get each ``set_exprs``
+    column replaced by its Spark SQL expression (evaluated against the
+    PRE-update row, standard SQL UPDATE semantics — ``{"a": "b",
+    "b": "a"}`` swaps); rows where it is NULL or FALSE are untouched.
+    A predicate matching nothing is the documented no-op (parent id
+    returned, no commit).
+
+    ``mode="cow"`` (default) is ``delete_where``'s touched-file
+    machinery with a column rewrite instead of a row drop: only files
+    containing matching rows are rewritten; every other file carries
+    over by reference with its deletion-vector entries intact. Write
+    cost = the TOUCHED FILES.
+
+    ``mode="mor"`` is the MOR merge's mask-and-append machinery keyed
+    by the predicate instead of a batch join: the matched positions
+    are masked with deletion-vector sidecars and the updated versions
+    of exactly those rows are appended as new data files — no parent
+    file is rewritten, so the commit's write cost is sized to the
+    MATCHED ROWS. The scattered small update (a handful of rows across
+    thousands of clustered files — where COW degrades toward a
+    full-table rewrite) commits at rows-matched cost; read-side pays
+    the usual vector anti-join until
+    ``purge_deletes``/``compact_snapshot`` absorbs. Result is pinned
+    row-for-row ≡ the COW update in tests/test_mor_delete.py.
+
+    ``set_exprs`` may only name EXISTING columns and each expression
+    must preserve the column's exact type — no implicit casts, ever
+    (the module-wide rule). Cast explicitly if you mean it.
+
+    CONCURRENCY: the same OCC rebase loop and exactly-once
+    ``snapshot_id`` token as the other DML verbs; a lost pointer race
+    re-derives the matched set against the fresh current."""
+    if mode not in ("cow", "mor"):
+        raise ValueError(f"update_where mode must be cow|mor, got {mode!r}")
+    return _row_dml(
+        spark, root, snapshot_id, rebase_retries, mode, "update_where",
+        lambda pm: _Edit(pm["files"], predicate=predicate, set_exprs=set_exprs),
+    )[0]
+
+
+def merge_apply(
+    spark: SparkSession,
+    batch: DataFrame,
+    root: str,
+    key_col: str,
+    delete_col: str = "_delete",
+    snapshot_id: str | None = None,
+    rebase_retries: int | None = None,
+    return_status: bool = False,
+) -> str | tuple[str, bool]:
+    """MERGE with deletes in ONE merge-on-read commit (Delta's
+    ``WHEN MATCHED [AND cond] DELETE`` / the CDC-apply primitive):
+    ``batch`` carries the table's full schema plus a boolean
+    ``delete_col``. Every batch key's current position is MASKED with
+    deletion vectors (zone-map-targeted scan, same machinery as the
+    MOR merge); only the NON-delete rows are appended. The result
+    equals delete-then-upsert, in one atomic snapshot and at
+    batch-sized write cost — exactly what applying a change-feed
+    micro-batch to a downstream replica needs
+    (``streaming.commit_log.apply_table_changes`` is that glue).
+
+    Contract: batch keys unique; batch-minus-flag columns must equal
+    the recorded table schema exactly (the shared MERGE contract);
+    ``delete_col`` must be BOOLEAN and non-NULL. Deleting an absent
+    key is a no-op (its position scan finds nothing); an EMPTY batch
+    is the documented no-op (parent id, no commit), as is a batch
+    that nets to nothing (absent-key deletes only). Same OCC rebase
+    loop and exactly-once ``snapshot_id`` token as every DML verb.
+
+    ``return_status=True`` returns ``(sid, committed)`` where
+    ``committed`` says whether THIS CALL minted a new snapshot —
+    False on every no-op path (empty batch, nets-to-zero, and the
+    tokened replay whose commit already exists). Callers that must
+    distinguish "this range minted a commit" from "the head moved"
+    (the untokened CDC apply path) need the flag: inferring it from a
+    pre-read head races a concurrent writer committing between the
+    read and a net-zero apply."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import BooleanType
+
+    if delete_col not in batch.columns:
+        raise ValueError(
+            f"merge_apply batch is missing the {delete_col!r} flag column"
+        )
+    if not isinstance(batch.schema[delete_col].dataType, BooleanType):
+        raise ValueError(
+            f"merge_apply {delete_col!r} must be BOOLEAN, got "
+            f"{batch.schema[delete_col].dataType}"
+        )
+
+    def derive(pm):
+        # one probe job for emptiness + the NULL-flag guard: separate
+        # jobs would multiply under the OCC retry loop
+        probe = batch.agg(
+            F.count("*").alias("n"),
+            F.count(F.when(F.col(delete_col).isNull(), 1)).alias("nulls"),
+        ).first()
+        if probe["n"] == 0:
+            return None  # empty batch: the table is unchanged
+        if probe["nulls"]:
+            raise ValueError(
+                f"merge_apply {delete_col!r} must be non-NULL (TRUE=delete, "
+                "FALSE=upsert) — NULL is refused, not guessed"
             )
-        return _delete_cow_pinned(
-            spark, ann, root, predicate, snapshot_id, pm, rc
+        _merge_contract_checks(
+            batch.drop(delete_col), pm, key_col,
+            f"merge_apply (flag column {delete_col!r} stripped)",
+        )
+        keys = batch.select(key_col).distinct()
+        upserts = batch.where(~F.col(delete_col)).drop(delete_col)
+        return _Edit(
+            _key_touched_files(keys, key_col, pm), keys=keys,
+            key_col=key_col, batch=upserts, batch_rows=upserts.count(),
         )
 
-    return _occ_loop(root, snapshot_id, retries, attempt)
-
-
-def _delete_cow_pinned(
-    spark: SparkSession,
-    ann: DataFrame,
-    root: str,
-    predicate: str,
-    snapshot_id: str | None,
-    pm: dict,
-    rc: str,
-) -> str:
-    from urllib.parse import unquote
-
-    from pyspark.sql import functions as F
-
-    meta = pm.get("files_meta", {})
-    dels = pm.get("deletes") or {}
-    # _metadata.file_path is URL-encoded (a space is %20): decode
-    # before matching against the manifest's raw relative paths
-    hit_rel = {
-        unquote(r["f"])
-        for r in ann.where(predicate)
-        .select(F.col(rc).alias("f"))
-        .distinct()
-        .collect()
-    }
-    touched_rel = [f for f in pm["files"] if f in hit_rel]
-    if len(touched_rel) != len(hit_rel):
-        raise RuntimeError(
-            f"delete_where at {root!r}: {len(hit_rel)} hit files "
-            f"resolved to {len(touched_rel)} manifest entries — "
-            "file-name mapping is out of contract"
-        )
-    if not touched_rel:
-        return pm["snapshot_id"]  # nothing matched: table unchanged
-    touched = set(touched_rel)
-    carried = [f for f in pm["files"] if f not in touched]
-    # second scan over ONLY the touched files (file-list pruning in
-    # the plan itself, not a post-scan filter on the derived path
-    # column), deletion-vector-masked so previously MOR-deleted rows
-    # are never resurrected into the rewrite
-    tag2 = uuid.uuid4().hex[:8]
-    rc2, pc2 = f"_dml_rel_{tag2}", f"_dml_pos_{tag2}"
-    survivors = (
-        _annotated_scan(spark, root, pm, touched_rel, rc2, pc2)
-        .where(~F.coalesce(F.expr(predicate), F.lit(False)))
-        .drop(rc2, pc2)
+    out, committed = _row_dml(
+        spark, root, snapshot_id, rebase_retries, "mor", "merge_apply",
+        derive, src=batch,
     )
-    stats_cols = _stats_cols(meta) or None
-    return publish(
-        survivors,
-        root,
-        snapshot_id=snapshot_id,
-        stats_cols=stats_cols,
-        _inherit_files=carried,
-        _inherit_meta={f: meta[f] for f in carried if f in meta},
-        # carried files keep their deletion vectors; the rewritten
-        # files materialized theirs
-        _inherit_deletes={f: dels[f] for f in carried if f in dels},
-        _require_parent=pm["snapshot_id"],
-        _record_schema=pm.get("schema") is not None,
-    )
-
-
-def _uri_rel(rel: str) -> str:
-    """The URL-encoded form of a manifest-relative path, as
-    ``_metadata.file_path``'s last components will render it."""
-    from urllib.parse import quote
-
-    return quote(rel, safe="/")
-
-
-def _delete_mor_pinned(
-    spark: SparkSession,
-    ann: DataFrame,
-    root: str,
-    predicate: str,
-    snapshot_id: str | None,
-    pm: dict,
-    rc: str,
-    pc: str,
-) -> str:
-    from pyspark.sql import functions as F
-
-    parent = pm["snapshot_id"]
-    sid = snapshot_id or f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-    data_dir, man_dir, _ = _paths(root)
-    os.makedirs(man_dir, exist_ok=True)
-    staged = os.path.join(data_dir, sid)
-    if os.path.isdir(staged) and _prefix_live(root, sid):
-        # replay of a committed token whose manifest vacuum reaped but
-        # whose deletion vectors still mask live files: rewriting (or,
-        # on a now-empty match, rmtree'ing) data/<sid> would destroy
-        # vectors the CURRENT manifest resolves — the reference proves
-        # the commit landed; no-op (r13 review)
-        return sid
-    # one shuffle sized to the MATCHED ROWS: positions hash-cluster by
-    # data file so each file's mask lives in exactly one DV sidecar
-    hits = (
-        ann.where(predicate)
-        .select(F.col(rc).alias("f"), F.col(pc).alias("pos"))
-        .repartition(_DV_FILES, "f")
-    )
-    hits.write.mode("overwrite").parquet(staged)
-    assoc = _collect_dv_assoc(spark, staged)
-    if not assoc:
-        shutil.rmtree(staged, ignore_errors=True)
-        return parent  # nothing matched: table unchanged, no commit
-    merged = _merge_dv_entries(
-        pm, assoc,
-        lambda p: os.path.join(_DATA, sid, p),
-        f"delete_where(mor) at {root!r}",
-    )
-    pin = _mor_pointer_precheck(root, sid, parent, "delete")
-    if pin is None:
-        return sid  # a same-token twin finished this commit
-    observed_gen, observed = pin
-    return _commit_staged(
-        root,
-        sid,
-        [],  # NO data files added: the commit is vectors + metadata
-        new_meta={},
-        append=False,
-        parent_check=True,
-        inherit_files=list(pm["files"]),
-        inherit_meta=dict(pm.get("files_meta", {})),
-        observed_gen=observed_gen,
-        observed=observed,
-        schema=pm.get("schema"),
-        deletes=merged,
-    )
+    return (out, committed) if return_status else out
 
 
 def purge_deletes(
@@ -1911,15 +1477,9 @@ def purge_deletes(
     and the choice is made from manifest metadata alone. Same OCC
     rebase loop and exactly-once ``snapshot_id`` token as every other
     DML verb."""
-    retries = _REBASE_RETRIES if rebase_retries is None else rebase_retries
 
-    def attempt(parent):
-        if parent is None:
-            raise FileNotFoundError(f"no current snapshot at {root!r}")
-        pm = _manifest(root, parent)
+    def derive(pm):
         dels = pm.get("deletes") or {}
-        if not dels:
-            return parent  # nothing masked: the table is already clean
         meta = pm.get("files_meta", {})
 
         def masked_fraction(f: str) -> float:
@@ -1928,55 +1488,530 @@ def purge_deletes(
                 return 1.0  # no row count recorded: purge conservatively
             return dels[f]["rows"] / rows
 
-        touched_rel = [
+        touched = [
             f for f in pm["files"]
             if f in dels and masked_fraction(f) >= min_masked_fraction
         ]
-        if not touched_rel:
-            return parent  # every mask is below the threshold
-        carried = [f for f in pm["files"] if f not in set(touched_rel)]
-        tag = uuid.uuid4().hex[:8]
-        rc, pc = f"_dml_rel_{tag}", f"_dml_pos_{tag}"
-        survivors = _annotated_scan(
-            spark, root, pm, touched_rel, rc, pc
-        ).drop(rc, pc)
-        stats_cols = _stats_cols(meta) or None
-        return publish(
-            survivors,
-            root,
-            snapshot_id=snapshot_id,
-            stats_cols=stats_cols,
-            _inherit_files=carried,
-            _inherit_meta={f: meta[f] for f in carried if f in meta},
-            _inherit_deletes={f: dels[f] for f in carried if f in dels},
-            _require_parent=parent,
-            _record_schema=pm.get("schema") is not None,
-        )
+        # nothing masked, or every mask below the threshold: no-op
+        return _Edit(touched) if touched else None
 
-    return _occ_loop(root, snapshot_id, retries, attempt)
+    return _row_dml(
+        spark, root, snapshot_id, rebase_retries, "cow", "purge_deletes",
+        derive,
+    )[0]
 
 
-def _check_set_columns(set_exprs: dict, data_cols: list[str]) -> None:
-    """UPDATE's SET contract, shared by the COW and MOR arms: only
+class _Edit(NamedTuple):
+    """One row-level change against a pinned parent, as a verb hands
+    it to the DML core once validation has passed: which parent files
+    to scan, how a row matches (a SQL predicate or a batch-key
+    semi-join; neither = purge, nothing matches) and what replaces a
+    matched row (nothing, the SET expressions, or the batch rows,
+    which are appended whether or not their key matched)."""
+
+    files: list[str]
+    predicate: str | None = None
+    keys: DataFrame | None = None
+    key_col: str | None = None
+    set_exprs: dict[str, str] | None = None
+    batch: DataFrame | None = None
+    batch_rows: int = 0
+
+
+def _row_dml(
+    spark: SparkSession,
+    root: str,
+    snapshot_id: str | None,
+    rebase_retries: int | None,
+    mode: str,
+    verb: str,
+    derive,
+    src: DataFrame | None = None,
+    on_empty=None,
+) -> tuple[str, bool]:
+    """The DML core every row-level verb runs through, inside the OCC
+    loop: a table with no snapshot runs ``on_empty`` (FileNotFoundError
+    without one); the parent's manifest is pinned; a replay of a
+    committed token whose manifest vacuum reaped — its ``data/<sid>``
+    still referenced by the live lineage — is a no-op, decided FIRST
+    so it pays no Spark work and never restages a prefix whose files
+    or vectors the current manifest resolves; ``derive(pm)`` validates
+    against the parent and returns the ``_Edit`` (None: a no-op); the
+    copy-on-write or merge-on-read writer commits it. ``src``, the
+    caller's batch, stays persisted for the whole call so every
+    consumer reads the SAME materialization.
+
+    The one no-op rule both writers share: nothing matched and nothing
+    appended returns the parent id and writes nothing under ``data/``.
+    Returns ``(sid, committed)``."""
+
+    def attempt(parent):
+        if parent is None:
+            if on_empty is None:
+                raise FileNotFoundError(f"no current snapshot at {root!r}")
+            return on_empty(), True
+        pm = _manifest(root, parent)
+        sid = snapshot_id or _new_sid()
+        staged = os.path.join(root, _DATA, sid)
+        if os.path.isdir(staged) and _prefix_live(root, sid):
+            return sid, False  # committed, superseded, manifest reaped
+        edit = derive(pm)
+        if edit is None:
+            return parent, False
+        write = _mor_write if mode == "mor" else _cow_write
+        return write(spark, root, sid, pm, edit, verb)
+
+    if src is not None:
+        src.persist()
+    try:
+        return _occ_loop(root, snapshot_id, rebase_retries, attempt)
+    finally:
+        if src is not None:
+            src.unpersist()
+
+
+def _edit_scan(spark: SparkSession, root: str, pm: dict, edit: _Edit):
+    """``(scan, rc, pc)``: the annotated, vector-masked scan of
+    ``edit.files`` (None when there is none) and its scratch column
+    names. UPDATE's SET contract is checked here, before any job: only
     existing columns may be named — UPDATE never adds columns."""
-    unknown = sorted(set(set_exprs) - set(data_cols))
-    if unknown:
-        raise ValueError(
-            f"update_where SET names columns {unknown} not in the "
-            f"table (columns: {data_cols}) — UPDATE cannot add "
-            "columns; use merge_schema on an append for evolution"
+    tag = uuid.uuid4().hex[:8]
+    rc, pc = f"_dml_rel_{tag}", f"_dml_pos_{tag}"
+    if not edit.files:
+        return None, rc, pc
+    ann = _annotated_scan(spark, root, pm, edit.files, rc, pc)
+    if edit.set_exprs is not None:
+        data_cols = [c for c in ann.columns if c not in (rc, pc)]
+        unknown = sorted(set(edit.set_exprs) - set(data_cols))
+        if unknown:
+            raise ValueError(
+                f"update_where SET names columns {unknown} not in the "
+                f"table (columns: {data_cols}) — UPDATE cannot add "
+                "columns; use merge_schema on an append for evolution"
+            )
+    return ann, rc, pc
+
+
+def _cow_write(
+    spark: SparkSession, root: str, sid: str, pm: dict, edit: _Edit,
+    verb: str,
+) -> tuple[str, bool]:
+    """The copy-on-write writer: rewrite the touched files — matched
+    rows dropped or SET-rewritten, the rest restaged, the batch
+    unioned in — and carry every other parent file by reference WITH
+    its deletion-vector entries, while the rewritten files' entries
+    drop (the masked scan materializes them). One ``publish`` pinned
+    to the parent; the write is sized to the TOUCHED FILES.
+
+    A predicate's touched set is exact, not stats-approximate: one
+    masked scan collects the DISTINCT files holding a matching row
+    (driver-bounded by files-per-snapshot). Key and purge edits
+    rewrite ``edit.files`` as given."""
+    from urllib.parse import unquote
+
+    from pyspark.sql import functions as F
+
+    ann, rc, pc = _edit_scan(spark, root, pm, edit)
+    touched = edit.files
+    if edit.predicate is not None and touched:
+        # _metadata.file_path is URL-encoded (a space is %20): decode
+        # before matching against the manifest's raw relative paths
+        hit = {
+            unquote(r["f"])
+            for r in ann.where(edit.predicate)
+            .select(F.col(rc).alias("f"))
+            .distinct()
+            .collect()
+        }
+        touched = [f for f in pm["files"] if f in hit]
+        if len(touched) != len(hit):
+            raise RuntimeError(
+                f"{verb} at {root!r}: {len(hit)} hit files resolved to "
+                f"{len(touched)} manifest entries — file-name mapping is "
+                "out of contract"
+            )
+        if touched:
+            # second scan over ONLY the touched files (file-list
+            # pruning in the plan itself, not a post-scan filter on the
+            # derived path column), vector-masked so previously
+            # MOR-deleted rows are never resurrected into the rewrite
+            ann = _annotated_scan(spark, root, pm, touched, rc, pc)
+    if not touched and not edit.batch_rows:
+        return pm["snapshot_id"], False  # nothing matched or appended
+    pschema = pm.get("schema")
+    out = None
+    if touched:
+        cond = (  # a NULL predicate does not match
+            F.coalesce(F.expr(edit.predicate), F.lit(False))
+            if edit.predicate is not None
+            else None
         )
+        if edit.set_exprs is not None:
+            out = _apply_set_exprs(ann, edit.set_exprs, cond, (rc, pc))
+        elif edit.keys is not None:
+            out = ann.join(edit.keys, edit.key_col, "left_anti").drop(rc, pc)
+        elif cond is not None:
+            out = ann.where(~cond).drop(rc, pc)
+        else:  # purge: every unmasked row survives
+            out = ann.drop(rc, pc)
+    if edit.batch is not None and out is None:
+        # No file touched: the batch alone is staged. Bind its COLUMN
+        # ORDER to the parent's recorded schema — the contract check
+        # is order-insensitive and the touched-file path records the
+        # survivors' order, so without this select the recorded field
+        # order would churn across merges depending on whether any
+        # file was touched.
+        out = (
+            edit.batch.select([f["name"] for f in pschema["fields"]])
+            if pschema is not None
+            else edit.batch
+        )
+    elif edit.batch is not None:
+        # On a RECORDED lineage the contract check guarantees the
+        # column sets match and this is a plain union. On a LEGACY
+        # lineage the footer-union survivors may carry columns the
+        # batch lacks (and vice versa) — allowMissingColumns fills
+        # either side with NULL, the merge semantics a schema-less
+        # table can honestly offer.
+        out = out.unionByName(edit.batch, allowMissingColumns=pschema is None)
+    meta = pm.get("files_meta", {})
+    dels = pm.get("deletes") or {}
+    touched_set = set(touched)
+    carried = [f for f in pm["files"] if f not in touched_set]
+    return publish(
+        out,
+        root,
+        snapshot_id=sid,
+        stats_cols=_stats_cols(meta) or None,
+        _inherit_files=carried,
+        _inherit_meta={f: meta[f] for f in carried if f in meta},
+        _inherit_deletes={f: dels[f] for f in carried if f in dels},
+        # the rewrite was derived from pm's snapshot: a commit racing
+        # in between must surface, not be clobbered by stale content
+        _require_parent=pm["snapshot_id"],
+        # a LEGACY (pre-schema) lineage must not record the survivors'
+        # frame as its contract — carried files may hold columns it
+        # lacks (the legacy-stays-legacy rule)
+        _record_schema=pschema is not None,
+    ), True
 
 
-def _apply_set_exprs(df, set_exprs: dict, data_cols: list[str], cond):
-    """Project ``data_cols`` with each SET expression applied where
-    ``cond`` holds (evaluated against the PRE-update row — standard
-    SQL UPDATE semantics; ``{"a": "b", "b": "a"}`` swaps), enforcing
-    the module-wide no-implicit-casts rule: an expression that changes
-    the column's exact type is refused (a widened type would be
-    recorded as the table contract and bind every carried file's
-    parquet to the wrong type). One definition for both arms so the
-    when/otherwise type coercion can never diverge between them."""
+# Data files a MOR commit's position shuffle lands in — per-commit
+# deletion-vector file count. Positions hash-cluster by DATA FILE, so
+# each data file's positions live in exactly ONE DV file and the
+# manifest records that exact association (a pruned read fetches only
+# the DV files covering its slice). Commit cost stays matched-rows-
+# sized; raise for commits deleting billions of positions.
+_DV_FILES = 4
+
+
+def _mor_write(
+    spark: SparkSession, root: str, sid: str, pm: dict, edit: _Edit,
+    verb: str,
+) -> tuple[str, bool]:
+    """The merge-on-read writer: no parent file is rewritten. The
+    matched rows' (file, position) pairs are staged as deletion-vector
+    sidecars, and the replacement rows — the SET-rewritten matches or
+    the batch — are appended as new zone-mapped data files; a delete
+    is the mask-only case. The logical result is exactly the COW
+    writer's (masked old rows ≡ dropped rows; appended rows ≡
+    rewritten or unioned rows; ``tests/test_mor_delete.py`` pins the
+    equivalence row-for-row), but the commit's write cost is sized to
+    the MATCHED ROWS plus the batch, not the touched files.
+
+    At 100 TB this is the CDC-ingest shape: a stream of small upsert
+    batches against a huge clustered table pays per-batch cost even
+    when the batch's keys scatter across thousands of files — the case
+    where COW's touched-set rewrite degrades to a near-full-table
+    write. Key edits scan only the files whose zone maps CAN contain a
+    batch key; a predicate is pushed into the parquet reader
+    (row-group stats skip non-matching groups). Read-side cost is the
+    usual vector anti-join until ``purge_deletes``/``compact_snapshot``
+    absorbs."""
+    from pyspark.sql import functions as F
+
+    ann, rc, pc = _edit_scan(spark, root, pm, edit)
+    meta = pm.get("files_meta", {})
+    dv_tmp = os.path.join(root, _DATA, f"{sid}.dvtmp")
+    matched = None
+    if ann is None:  # no parent file can match: mask nothing
+        hits = spark.createDataFrame([], "f string, pos long")
+    else:
+        matched = (
+            ann.where(edit.predicate)
+            if edit.keys is None
+            else ann.join(edit.keys, edit.key_col, "left_semi")
+        )
+        if edit.set_exprs is not None:
+            # matched-rows-sized: the vector write and the updated-row
+            # write share one scan
+            matched = matched.persist()
+        # one shuffle sized to the MATCHED ROWS: positions hash-cluster
+        # by data file so each file's mask lives in exactly one sidecar
+        hits = matched.select(
+            F.col(rc).alias("f"), F.col(pc).alias("pos")
+        ).repartition(_DV_FILES, "f")
+    try:
+        hits.write.mode("overwrite").parquet(dv_tmp)
+        # the driver-bounded per-data-file association: (f, n, parts)
+        assoc = (
+            spark.read.schema("f string, pos long").parquet(dv_tmp)
+            .groupBy("f")
+            .agg(
+                F.count("*").alias("n"),
+                F.sort_array(
+                    F.collect_set(
+                        F.element_at(
+                            F.split(F.col("_metadata.file_path"), "/"), -1
+                        )
+                    )
+                ).alias("parts"),
+            )
+            .collect()
+        )
+        batch, rows, cluster = edit.batch, edit.batch_rows, edit.key_col
+        if edit.set_exprs is not None:
+            sc = _stats_cols(meta)
+            rows, cluster = sum(r["n"] for r in assoc), sc[0] if sc else None
+        if not assoc and not rows:
+            shutil.rmtree(dv_tmp, ignore_errors=True)
+            return pm["snapshot_id"], False  # nothing matched or appended
+        if edit.set_exprs is not None:
+            # every matched row satisfies the predicate, so the gate is
+            # constant-true — routed through the same when/otherwise as
+            # the COW writer so type coercion cannot diverge by mode
+            batch = _apply_set_exprs(
+                matched, edit.set_exprs, F.lit(True), (rc, pc)
+            )
+        # bound the appended FILE COUNT to the rows, not the scan: the
+        # matched rows inherit the table-sized scan partitioning and a
+        # CDC batch its shuffle partitioning, either of which would
+        # strew row-sized files on every commit. Clustering keeps the
+        # appended files' zone maps selective.
+        sized = _sized_batch(batch, rows, meta, cluster) if rows else None
+        return _mor_mask_append_commit(
+            root, sid, pm, dv_tmp, assoc, sized, verb
+        ), True
+    finally:
+        if matched is not None and edit.set_exprs is not None:
+            matched.unpersist()
+
+
+def _mor_mask_append_commit(
+    root: str,
+    sid: str,
+    pm: dict,
+    dv_tmp: str,
+    assoc: list,
+    batch: DataFrame | None,
+    verb: str,
+) -> str:
+    """The merge-on-read commit tail: stage ``batch`` as the appended
+    data files, move the freshly written vector parts in beside them
+    under ``dv-`` names, harvest zone maps for the new files, extend
+    the parent's delete map, precheck the pointer against the
+    derivation parent, and CAS-commit the parent's file list verbatim
+    plus the appends."""
+    from urllib.parse import unquote
+
+    parent = pm["snapshot_id"]
+    meta = pm.get("files_meta", {})
+    staged = os.path.join(root, _DATA, sid)
+    # stage the BATCH as the appended data files, then move the
+    # vectors in beside them (the overwrite clears any prior attempt's
+    # residue first, so the move must come after). batch=None is the
+    # mask-only commit: no data file is written, not even a 0-row part.
+    if batch is not None:
+        batch.write.mode("overwrite").parquet(staged)
+    else:
+        shutil.rmtree(staged, ignore_errors=True)  # prior-attempt residue
+        os.makedirs(staged, exist_ok=True)
+    for p in os.listdir(dv_tmp):
+        if p.endswith(".parquet"):
+            os.replace(
+                os.path.join(dv_tmp, p), os.path.join(staged, f"dv-{p}")
+            )
+    shutil.rmtree(dv_tmp, ignore_errors=True)
+    data_files = sorted(
+        f for f in os.listdir(staged)
+        if f.endswith(".parquet") and not f.startswith("dv-")
+    )
+    stats_cols = _stats_cols(meta)
+    new_meta = {
+        os.path.join(_DATA, sid, f): _file_stats(
+            os.path.join(staged, f), stats_cols
+        )
+        for f in data_files
+    } if stats_cols else {}
+    # every matched file must be in the parent manifest: a mapping miss
+    # is out of contract, never silently recorded
+    known = set(pm["files"])
+    deletes = {f: dict(e) for f, e in (pm.get("deletes") or {}).items()}
+    for r in assoc:
+        f = unquote(r["f"])
+        if f not in known:
+            raise RuntimeError(
+                f"{verb} at {root!r}: matched file {f!r} is not in the "
+                "parent manifest — file-name mapping is out of contract"
+            )
+        entry = deletes.setdefault(f, {"dv": [], "rows": 0})
+        entry["dv"] = entry["dv"] + [
+            os.path.join(_DATA, sid, f"dv-{p}") for p in r["parts"]
+        ]
+        entry["rows"] += r["n"]
+    # the derivation pin: the positions were read from ``parent``
+    observed_gen, observed = _read_pointer(root)
+    if observed == sid:
+        return sid  # a same-token twin finished this commit
+    if observed != parent:
+        raise ConcurrentPublishError(
+            f"concurrent publish detected at {root!r}: this {verb}'s "
+            f"positions were derived from {parent!r} but current is "
+            f"{observed!r}; re-derive on top of the new current snapshot"
+        )
+    return _commit_staged(
+        root,
+        sid,
+        [os.path.join(_DATA, sid, f) for f in data_files],
+        new_meta=new_meta,
+        append=False,
+        parent_check=True,
+        inherit_files=list(pm["files"]),
+        inherit_meta=dict(meta),
+        observed_gen=observed_gen,
+        observed=observed,
+        schema=pm.get("schema"),
+        deletes=deletes,
+    )
+
+
+def _stats_cols(meta: dict) -> list[str]:
+    """Every column any file's zone map records — the one derivation
+    every write path (both DML writers, compaction) uses for the
+    columns it records."""
+    return sorted({c for m in meta.values() for c in m.get("stats", {})})
+
+
+def _sized_batch(df: DataFrame, rows: int, meta: dict, cluster_col):
+    """Bound an appended batch's FILE COUNT to its ROW count: size the
+    output like the table's own files (average rows/file from manifest
+    metadata; 1M-row default on stat-less tables, 256-file cap) so a
+    mask-and-append commit can never strew scan-partition-count tiny
+    files. ``cluster_col`` range-clusters the output so the new files
+    carry selective zone maps — round-robin would give every appended
+    file the full key range and poison later pruning. The shuffle this
+    costs is batch-sized."""
+    per_file = [m["rows"] for m in meta.values() if m.get("rows")]
+    target = max(1, sum(per_file) // len(per_file)) if per_file else 1_000_000
+    n_out = min(256, max(1, -(-rows // target)))
+    if cluster_col is not None:
+        return df.repartitionByRange(n_out, cluster_col)
+    return df.repartition(n_out)
+
+
+def _key_touched_files(keys: DataFrame, key_col: str, pm: dict) -> list[str]:
+    """Parent files whose zone maps CAN contain any batch key — the
+    targeting of both the COW merge's rewrite set and the MOR merge's
+    position scan. Per-file check against the key SET, not its global
+    range: a single far-away insert key would otherwise widen
+    [min, max] to cover every file. CDC batches are driver-bounded by
+    nature; past the cap, fall back to the range check (conservative —
+    more files scanned/rewritten, never wrongness). Files without
+    stats are conservatively included; an empty key set touches
+    nothing."""
+    import bisect
+
+    from pyspark.sql import functions as F
+
+    meta = pm.get("files_meta", {})
+    key_cap = 100_000
+    sample = [r[0] for r in keys.limit(key_cap + 1).collect()]
+    if not sample:
+        return []
+    key_sorted = sorted(sample) if len(sample) <= key_cap else None
+    lo = hi = None
+    if key_sorted is None:
+        b = keys.agg(
+            F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
+        ).first()
+        lo, hi = b["lo"], b["hi"]
+
+    def touched(rel: str) -> bool:
+        fm = meta.get(rel, {})
+        nc = fm.get("nulls", {}).get(key_col)
+        if nc is not None and nc == fm.get("rows"):
+            return False  # key provably all-NULL: no batch key matches
+        st = fm.get("stats", {}).get(key_col)
+        if st is None:
+            return True  # no stats -> must assume it can match
+        if key_sorted is not None:
+            i = bisect.bisect_left(key_sorted, st[0])
+            return i < len(key_sorted) and key_sorted[i] <= st[1]
+        return lo is not None and st[1] >= lo and st[0] <= hi
+
+    return [f for f in pm["files"] if touched(f)]
+
+
+def _merge_contract_checks(
+    df: DataFrame, pm: dict, key_col: str, verb: str
+) -> int:
+    """The MERGE batch contract, shared by both merge verbs and both
+    writers: batch columns must equal the recorded table schema exactly
+    (every format's rule — a narrower batch would record a narrower
+    schema / hide carried columns), shared names must have IDENTICAL
+    types (no implicit casts, ever — a widened batch type would be
+    recorded as the table contract and bind carried files' parquet
+    wrongly), and source keys must be unique (duplicated batch keys
+    would land as duplicated TABLE rows — fail loudly, never corrupt).
+    Errors name ``verb``. Returns the batch row count."""
+    from pyspark.sql import functions as F
+
+    pschema = pm.get("schema")
+    if pschema is not None:
+        want = {f["name"]: f["type"] for f in pschema["fields"]}
+        # raw df.columns, not a dict: a dict would collapse DUPLICATE
+        # batch column names and let them through to a confusing
+        # AnalysisException downstream
+        if sorted(df.columns) != sorted(want):
+            raise ValueError(
+                f"{verb} batch columns {sorted(df.columns)} != "
+                f"table schema columns {sorted(want)} at the manifest root"
+            )
+        got = {
+            f["name"]: f["type"] for f in df.schema.jsonValue()["fields"]
+        }
+        clash = [
+            c for c in want
+            if _type_fingerprint(got[c]) != _type_fingerprint(want[c])
+        ]
+        if clash:
+            raise ValueError(
+                f"{verb} batch type mismatch on {clash} (batch "
+                f"{[got[c] for c in clash]} vs table "
+                f"{[want[c] for c in clash]}) — no implicit casts; "
+                "align the types explicitly"
+            )
+    counts = df.agg(
+        F.count("*").alias("n"), F.countDistinct(key_col).alias("d")
+    ).first()
+    if counts["n"] != counts["d"]:
+        raise ValueError(
+            f"{verb} batch has duplicate {key_col!r} values "
+            f"({counts['n']} rows, {counts['d']} distinct)"
+        )
+    return counts["n"]
+
+
+def _apply_set_exprs(df, set_exprs: dict, cond, scratch: tuple):
+    """Project ``df``'s data columns (all but the ``scratch`` ones)
+    with each SET expression applied where ``cond`` holds (evaluated
+    against the PRE-update row — standard SQL UPDATE semantics;
+    ``{"a": "b", "b": "a"}`` swaps), enforcing the module-wide
+    no-implicit-casts rule: an expression that changes the column's
+    exact type is refused (a widened type would be recorded as the
+    table contract and bind every carried file's parquet to the wrong
+    type). One definition for both writers so the when/otherwise type
+    coercion can never diverge between them."""
     from pyspark.sql import functions as F
 
     updated = df.select(
@@ -1988,7 +2023,8 @@ def _apply_set_exprs(df, set_exprs: dict, data_cols: list[str], cond):
                 if c in set_exprs
                 else F.col(c)
             )
-            for c in data_cols
+            for c in df.columns
+            if c not in scratch
         ]
     )
     before = {
@@ -2007,365 +2043,45 @@ def _apply_set_exprs(df, set_exprs: dict, data_cols: list[str], cond):
     return updated
 
 
-def update_where(
+def _annotated_scan(
     spark: SparkSession,
     root: str,
-    predicate: str,
-    set_exprs: dict[str, str],
-    snapshot_id: str | None = None,
-    rebase_retries: int | None = None,
-    mode: str = "cow",
-) -> str:
-    """Row-level ``UPDATE … SET … WHERE …`` as a manifest commit.
-    Rows where ``predicate`` evaluates TRUE get each ``set_exprs``
-    column replaced by its Spark SQL expression (evaluated against the
-    PRE-update row, standard SQL UPDATE semantics — ``{"a": "b",
-    "b": "a"}`` swaps); rows where it is NULL or FALSE are untouched.
-    A predicate matching nothing is the documented no-op (parent id
-    returned, no commit).
-
-    ``mode="cow"`` (default) is ``delete_where``'s touched-file
-    machinery with a column rewrite instead of a row drop: only files
-    containing matching rows are rewritten; every other file carries
-    over by reference with its deletion-vector entries intact. Write
-    cost = the TOUCHED FILES.
-
-    ``mode="mor"`` (VERDICT r13 #4) is ``_merge_mor_pinned``'s
-    mask-and-append machinery keyed by the predicate instead of a
-    batch join: the matched positions are masked with deletion-vector
-    sidecars and the updated versions of exactly those rows are
-    appended as new data files — no parent file is rewritten, so the
-    commit's write cost is sized to the MATCHED ROWS. The scattered
-    small update (a handful of rows across thousands of clustered
-    files — where COW degrades toward a full-table rewrite) commits at
-    rows-matched cost; read-side pays the usual vector anti-join until
-    ``purge_deletes``/``compact_snapshot`` absorbs. Result is pinned
-    row-for-row ≡ the COW update in tests/test_mor_delete.py.
-
-    ``set_exprs`` may only name EXISTING columns and each expression
-    must preserve the column's exact type — no implicit casts, ever
-    (the module-wide rule). Cast explicitly if you mean it.
-
-    CONCURRENCY: the same OCC rebase loop and exactly-once
-    ``snapshot_id`` token as the other DML verbs; a lost pointer race
-    re-derives the matched set against the fresh current."""
-    from pyspark.sql import functions as F
-
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"update_where mode must be cow|mor, got {mode!r}")
-    retries = _REBASE_RETRIES if rebase_retries is None else rebase_retries
-
-    def attempt(parent):
-        from urllib.parse import unquote
-
-        if parent is None:
-            raise FileNotFoundError(f"no current snapshot at {root!r}")
-        pm = _manifest(root, parent)
-        if mode == "mor":
-            return _update_mor_pinned(
-                spark, root, predicate, set_exprs, snapshot_id, pm
-            )
-        meta = pm.get("files_meta", {})
-        dels = pm.get("deletes") or {}
-        tag = uuid.uuid4().hex[:8]
-        rc, pc = f"_dml_rel_{tag}", f"_dml_pos_{tag}"
-        ann = _annotated_scan(spark, root, pm, pm["files"], rc, pc)
-        data_cols = [c for c in ann.columns if c not in (rc, pc)]
-        _check_set_columns(set_exprs, data_cols)
-        hit_rel = {
-            unquote(r["f"])
-            for r in ann.where(predicate)
-            .select(F.col(rc).alias("f"))
-            .distinct()
-            .collect()
-        }
-        touched_rel = [f for f in pm["files"] if f in hit_rel]
-        if len(touched_rel) != len(hit_rel):
-            raise RuntimeError(
-                f"update_where at {root!r}: {len(hit_rel)} hit files "
-                f"resolved to {len(touched_rel)} manifest entries — "
-                "file-name mapping is out of contract"
-            )
-        if not touched_rel:
-            return parent  # nothing matched: the table is unchanged
-        carried = [f for f in pm["files"] if f not in set(touched_rel)]
-        rewrite = _annotated_scan(spark, root, pm, touched_rel, rc, pc)
-        cond = F.coalesce(F.expr(predicate), F.lit(False))
-        updated = _apply_set_exprs(rewrite, set_exprs, data_cols, cond)
-        stats_cols = _stats_cols(meta) or None
-        return publish(
-            updated,
-            root,
-            snapshot_id=snapshot_id,
-            stats_cols=stats_cols,
-            _inherit_files=carried,
-            _inherit_meta={f: meta[f] for f in carried if f in meta},
-            _inherit_deletes={f: dels[f] for f in carried if f in dels},
-            _require_parent=parent,
-            _record_schema=pm.get("schema") is not None,
-        )
-
-    return _occ_loop(root, snapshot_id, retries, attempt)
-
-
-def _update_mor_pinned(
-    spark: SparkSession,
-    root: str,
-    predicate: str,
-    set_exprs: dict,
-    snapshot_id: str | None,
     pm: dict,
-) -> str:
-    """Merge-on-read UPDATE against a PINNED parent manifest: mask the
-    matched positions with deletion-vector sidecars, append the
-    updated versions of exactly those rows as new data files — the
-    ``_merge_mor_pinned`` shape with the matched set coming from the
-    predicate instead of a batch key join. The parent's file list
-    carries verbatim; the commit's write cost is the matched rows.
-
-    Scan-side pruning note: the matched-row scan is a single pass over
-    the parent's files with ``predicate`` pushed into the parquet
-    reader (row-group stats skip non-matching groups); there is no
-    manifest-level zone-map prefilter here because the predicate is
-    arbitrary SQL, not a key set — the pushed filter is what bounds
-    the read. The matched frame is persisted (matched-rows-sized) so
-    the vector write and the updated-batch write share one scan."""
+    rel_files: list[str],
+    rc: str,
+    pc: str,
+) -> DataFrame:
+    """The DML derivation scan: ``pm``'s listed ``rel_files`` with two
+    scratch columns — ``rc`` (manifest-relative file path) and ``pc``
+    (parquet row position) — projected AT SCAN TIME, then the
+    snapshot's deletion vectors anti-joined away. Projecting the
+    ``_metadata`` fields before any join matters: the hidden column
+    resolves only against the file-source relation, so every DML
+    operation derives (file, position) identity here, first, and then
+    composes joins/filters freely. The read binds to the recorded
+    schema; a legacy lineage gets the footer-union read so
+    heterogeneous files keep every column they physically hold."""
     from pyspark.sql import functions as F
 
-    parent = pm["snapshot_id"]
-    meta = pm.get("files_meta", {})
-    sid = snapshot_id or f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-    data_dir, man_dir, _ = _paths(root)
-    os.makedirs(man_dir, exist_ok=True)
-    staged = os.path.join(data_dir, sid)
-    # guard FIRST, Spark work after: a replay of a committed-then-
-    # reaped token must not pay the matched-row scan
-    if os.path.isdir(staged) and _prefix_live(root, sid):
-        return sid  # committed, superseded, manifest reaped: no-op
-    tag = uuid.uuid4().hex[:8]
-    rc, pc = f"_dml_rel_{tag}", f"_dml_pos_{tag}"
-    ann = _annotated_scan(spark, root, pm, pm["files"], rc, pc)
-    data_cols = [c for c in ann.columns if c not in (rc, pc)]
-    _check_set_columns(set_exprs, data_cols)
-    matched = ann.where(predicate).persist()
-    try:
-        dv_tmp = f"{staged}.dvtmp"
-        (
-            matched.select(F.col(rc).alias("f"), F.col(pc).alias("pos"))
-            .repartition(_DV_FILES, "f")
-            .write.mode("overwrite")
-            .parquet(dv_tmp)
-        )
-        assoc = _collect_dv_assoc(spark, dv_tmp)
-        if not assoc:  # nothing matched: the table is unchanged
-            shutil.rmtree(dv_tmp, ignore_errors=True)
-            return parent
-        # every row in `matched` satisfies the predicate, so the gate
-        # is constant-true — routed through the same when/otherwise as
-        # the COW arm so type coercion cannot diverge between modes
-        updated = _apply_set_exprs(
-            matched, set_exprs, data_cols, F.lit(True)
-        )
-        # bound the appended FILE COUNT to the batch, not the scan
-        # (r14 review): `matched` inherits the table-sized scan
-        # partitioning, so a scattered predicate would otherwise emit
-        # ~one row-sized file per scan partition — table-sized small-
-        # file debris on a matched-rows-sized commit. Cluster on the
-        # table's recorded stats column so the appended files keep
-        # selective zone maps; the shuffle is matched-rows-sized.
-        sc = _stats_cols(meta)
-        batch = _sized_batch(
-            updated, sum(r["n"] for r in assoc), meta,
-            sc[0] if sc else None,
-        )
-        return _mor_mask_append_commit(
-            root, sid, pm, staged, dv_tmp, assoc, batch,
-            "update_where(mor)", "update",
-        )
-    finally:
-        matched.unpersist()
-
-
-def merge_apply(
-    spark: SparkSession,
-    batch: DataFrame,
-    root: str,
-    key_col: str,
-    delete_col: str = "_delete",
-    snapshot_id: str | None = None,
-    rebase_retries: int | None = None,
-    return_status: bool = False,
-) -> str | tuple[str, bool]:
-    """MERGE with deletes in ONE merge-on-read commit (Delta's
-    ``WHEN MATCHED [AND cond] DELETE`` / the CDC-apply primitive,
-    r14): ``batch`` carries the table's full schema plus a boolean
-    ``delete_col``. Every batch key's current position is MASKED with
-    deletion vectors (zone-map-targeted scan, same machinery as the
-    MOR merge); only the NON-delete rows are appended. The result
-    equals delete-then-upsert, in one atomic snapshot and at
-    batch-sized write cost — exactly what applying a change-feed
-    micro-batch to a downstream replica needs
-    (``streaming.commit_log.apply_table_changes`` is that glue).
-
-    Contract: batch keys unique; batch-minus-flag columns must equal
-    the recorded table schema exactly (the shared MERGE contract);
-    ``delete_col`` must be BOOLEAN and non-NULL. Deleting an absent
-    key is a no-op (its position scan finds nothing); an EMPTY batch
-    is the documented no-op (parent id, no commit). Same OCC rebase
-    loop and exactly-once ``snapshot_id`` token as every DML verb.
-
-    ``return_status=True`` returns ``(sid, committed)`` where
-    ``committed`` says whether THIS CALL minted a new snapshot —
-    False on every no-op path (empty batch, nets-to-zero, and the
-    tokened replay whose commit already exists). Callers that must
-    distinguish "this range minted a commit" from "the head moved"
-    (the untokened CDC apply path) need the flag: inferring it from a
-    pre-read head races a concurrent writer committing between the
-    read and a net-zero apply (ADVICE r14 #1)."""
-    from pyspark.sql.types import BooleanType
-
-    retries = _REBASE_RETRIES if rebase_retries is None else rebase_retries
-    if delete_col not in batch.columns:
-        raise ValueError(
-            f"merge_apply batch is missing the {delete_col!r} flag column"
-        )
-    if not isinstance(batch.schema[delete_col].dataType, BooleanType):
-        raise ValueError(
-            f"merge_apply {delete_col!r} must be BOOLEAN, got "
-            f"{batch.schema[delete_col].dataType}"
-        )
-    # reset by every attempt (OCC may retry); only the path that calls
-    # _mor_mask_append_commit sets it True, so replays resolved inside
-    # _occ_loop (which never reach attempt) correctly read False
-    status = {"committed": False}
-
-    def attempt(parent):
-        if parent is None:
-            raise FileNotFoundError(f"no current snapshot at {root!r}")
-        pm = _manifest(root, parent)
-        return _merge_apply_pinned(
-            spark, batch, root, key_col, delete_col, snapshot_id, pm,
-            _status=status,
-        )
-
-    batch_p = batch.persist()
-    try:
-        out = _occ_loop(root, snapshot_id, retries, attempt)
-    finally:
-        batch_p.unpersist()
-    return (out, status["committed"]) if return_status else out
-
-
-def _merge_apply_pinned(
-    spark: SparkSession,
-    batch: DataFrame,
-    root: str,
-    key_col: str,
-    delete_col: str,
-    snapshot_id: str | None,
-    pm: dict,
-    _status: dict | None = None,
-) -> str:
-    """merge_apply against a PINNED parent manifest — the MOR merge
-    body with the append side filtered to the non-delete rows.
-    ``_status['committed']`` reports whether this attempt minted a
-    snapshot (set fresh per attempt: an OCC retry must not inherit a
-    prior attempt's verdict)."""
-    from pyspark.sql import functions as F
-
-    if _status is not None:
-        _status["committed"] = False
-    meta = pm.get("files_meta", {})
-    sid = snapshot_id or f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-    data_dir, man_dir, _ = _paths(root)
-    os.makedirs(man_dir, exist_ok=True)
-    staged = os.path.join(data_dir, sid)
-    if os.path.isdir(staged) and _prefix_live(root, sid):
-        return sid  # committed, superseded, manifest reaped: no-op
-    # one probe job for emptiness + the NULL-flag guard (fourth r14
-    # review: two separate limit(1).count() jobs multiplied under the
-    # OCC retry loop)
-    probe = batch.agg(
-        F.count("*").alias("n"),
-        F.count(F.when(F.col(delete_col).isNull(), 1)).alias("nulls"),
-    ).first()
-    if probe["n"] == 0:
-        return pm["snapshot_id"]  # empty batch: the table is unchanged
-    if probe["nulls"]:
-        raise ValueError(
-            f"merge_apply {delete_col!r} must be non-NULL (TRUE=delete, "
-            "FALSE=upsert) — NULL is refused, not guessed"
-        )
-    try:
-        _merge_contract_checks(batch.drop(delete_col), pm, key_col)
-    except ValueError as e:
-        # the shared check names merge_upsert and sees the batch with
-        # the flag already stripped — rewrite so the error points at
-        # the call the user actually made (registry-lineage rule: the
-        # shared helper itself is not touched)
-        raise ValueError(
-            str(e).replace("merge_upsert", "merge_apply")
-            + f" (the {delete_col!r} flag column is stripped before "
-            "this check)"
-        ) from None
-    keys = batch.select(key_col).distinct()
-    assoc, dv_tmp = _mor_mask_hits(
-        spark, root, pm, keys, key_col, staged
+    ann = (
+        _manifest_reader(spark, pm, legacy_union=True)
+        .parquet(*[os.path.join(root, f) for f in rel_files])
+        .withColumn(rc, _rel_file_expr())
+        .withColumn(pc, F.col("_metadata.row_index"))
     )
-    upserts = batch.where(~F.col(delete_col)).drop(delete_col)
-    n_up = upserts.count()
-    if not assoc and n_up == 0:
-        # nets to nothing (absent-key deletes only, or a token-less
-        # replay whose keys are already gone): the documented DML
-        # convention is NO commit — a zero-change snapshot per
-        # at-least-once replay would grow the lineage unboundedly
-        # (fourth r14 review)
-        shutil.rmtree(dv_tmp, ignore_errors=True)
-        return pm["snapshot_id"]
-    sized = (
-        _sized_batch(upserts, n_up, meta, key_col) if n_up else None
-    )  # pure-delete batch: mask-only commit, zero data files
-    out = _mor_mask_append_commit(
-        root, sid, pm, staged, dv_tmp, assoc, sized,
-        "merge_apply", "merge",
-    )
-    if _status is not None:
-        _status["committed"] = True
-    return out
+    scanned = set(rel_files)
+    dels = {
+        f: e for f, e in (pm.get("deletes") or {}).items() if f in scanned
+    }
+    return _dv_anti_join(spark, root, dels, ann, rc, pc)
 
 
-def _mor_mask_hits(
-    spark: SparkSession,
-    root: str,
-    pm: dict,
-    keys: DataFrame,
-    key_col: str,
-    staged: str,
-) -> tuple:
-    """The shared mask-derivation prelude of the MOR merge and
-    merge_apply (fourth r14 review: it had been copied verbatim):
-    zone-map-target the parent files that CAN contain a batch key,
-    scan them annotated with (file, position), semi-join to the keys,
-    stage the hit positions as vector parquet under ``staged``.dvtmp,
-    and return (driver-bounded association, dv_tmp path)."""
-    from pyspark.sql import functions as F
+def _uri_rel(rel: str) -> str:
+    """The URL-encoded form of a manifest-relative path, as
+    ``_metadata.file_path``'s last components will render it."""
+    from urllib.parse import quote
 
-    meta = pm.get("files_meta", {})
-    scan_rel = _key_touched_files(keys, key_col, pm, meta)
-    tag = uuid.uuid4().hex[:8]
-    rc, pc = f"_dml_rel_{tag}", f"_dml_pos_{tag}"
-    dv_tmp = f"{staged}.dvtmp"
-    if scan_rel:
-        ann = _annotated_scan(spark, root, pm, scan_rel, rc, pc)
-        hits = (
-            ann.join(keys, key_col, "left_semi")
-            .select(F.col(rc).alias("f"), F.col(pc).alias("pos"))
-            .repartition(_DV_FILES, "f")
-        )
-    else:  # no parent file can match: mask nothing
-        hits = spark.createDataFrame([], "f string, pos long")
-    hits.write.mode("overwrite").parquet(dv_tmp)
-    return _collect_dv_assoc(spark, dv_tmp), dv_tmp
+    return quote(rel, safe="/")
 
 
 def compact_snapshot(
@@ -2378,9 +2094,9 @@ def compact_snapshot(
 ) -> str:
     """OPTIMIZE: rewrite the current snapshot's data into
     ``target_files`` right-sized files and commit the result as a new
-    snapshot — the manifest-native twin of ddl.compact_parquet (which
-    the r5 shattered-table bench measured at 5× pure small-file
-    overhead), but SNAPSHOT-SAFE: readers of the old manifest keep
+    snapshot — the manifest-native twin of ddl.compact_parquet (the
+    shattered-table bench measured small files at 5× pure overhead),
+    but SNAPSHOT-SAFE: readers of the old manifest keep
     their exact file list while the rewrite runs; the pointer flip is
     the only visible event, and the old files remain until vacuum.
     This is what absorbs the per-micro-batch file debris a
@@ -2398,16 +2114,14 @@ def compact_snapshot(
     harvested stats. Costs one shuffle (the clustering itself) where
     plain compaction is a coalesce.
 
-    CONCURRENCY (r12b): a commit landing between the compaction's
+    CONCURRENCY: a commit landing between the compaction's
     parent read and its own commit loses the CAS and auto-REBASES —
     re-read the fresh current, re-run the rewrite on IT, re-commit
     (up to ``rebase_retries``, default ``_REBASE_RETRIES``; 0 restores
     raise-to-caller). Unlike a merge there is no cross-commit
     semantics question: a compaction is content-neutral, so rebasing
-    simply compacts the winner's table — the appended rows an r11-era
-    lost race would have required the CALLER to re-absorb now survive
-    into the compacted snapshot automatically."""
-    retries = _REBASE_RETRIES if rebase_retries is None else rebase_retries
+    simply compacts the winner's table, and rows a racing append
+    landed survive into the compacted snapshot."""
 
     def attempt(parent):
         if parent is None:
@@ -2444,9 +2158,9 @@ def compact_snapshot(
             stats_cols=sorted(stats_set) or None,
             _require_parent=parent,
             _record_schema=pm.get("schema") is not None,
-        )
+        ), True
 
-    return _occ_loop(root, snapshot_id, retries, attempt)
+    return _occ_loop(root, snapshot_id, rebase_retries, attempt)[0]
 
 
 def restore_snapshot(
@@ -2485,7 +2199,7 @@ def restore_snapshot(
       commit, whose usual source is merge derivation).
     """
     man_dir = os.path.join(root, _MANIFESTS)
-    new_sid = snapshot_id or f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
+    new_sid = snapshot_id or _new_sid()
     # Replay guards BEFORE target validation (r12 close review): an
     # at-least-once replay of a restore that already committed must
     # no-op even if the TARGET has since been vacuumed — the committed
@@ -2601,7 +2315,7 @@ def evolve_schema(root: str, add, snapshot_id: str | None = None) -> str:
     else:
         add_json = add
     man_dir = os.path.join(root, _MANIFESTS)
-    new_sid = snapshot_id or f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
+    new_sid = snapshot_id or _new_sid()
     for _ in range(_COMMIT_RETRIES):
         observed_gen, observed = _read_pointer(root)
         if observed is None:
