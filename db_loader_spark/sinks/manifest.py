@@ -986,6 +986,11 @@ def _manifest(root: str, sid: str) -> dict:
         return json.load(fh)
 
 
+def _committed_at(root: str, sid: str) -> float:
+    """Epoch seconds of ``sid``'s commit: its manifest file's mtime."""
+    return os.path.getmtime(os.path.join(root, _MANIFESTS, f"{sid}.json"))
+
+
 def read_snapshot(
     spark: SparkSession, root: str, sid: str, merge_schema: bool = False
 ) -> DataFrame:
@@ -1037,17 +1042,7 @@ def read_pruned(
     if sid is None:
         raise FileNotFoundError(f"no current snapshot at {root!r}")
     m = _manifest(root, sid)
-    meta = m.get("files_meta", {})
-
-    def may_match(rel: str) -> bool:
-        fm = meta.get(rel, {})
-        nc = fm.get("nulls", {}).get(col)
-        if nc is not None and nc == fm.get("rows"):
-            return False  # provably all-NULL in col: no range matches
-        st = fm.get("stats", {}).get(col)
-        return st is None or (st[1] >= lower and st[0] <= upper)
-
-    kept_rel = [f for f in m["files"] if may_match(f)]
+    kept_rel = _zone_kept(m, m["files"], col, lower, upper)
     kept = [os.path.join(root, f) for f in kept_rel]
     residual = (F.col(col) >= F.lit(lower)) & (F.col(col) <= F.lit(upper))
     if not kept:
@@ -1059,6 +1054,26 @@ def read_pruned(
         files=kept_rel,
     )
     return scan.filter(residual)
+
+
+def _zone_kept(
+    man: dict, files: list[str], col: str, lower, upper
+) -> list[str]:
+    """The ``files`` of ``man`` whose zone maps may hold a ``col``
+    value in ``[lower, upper]``: a file is dropped when its recorded
+    [min, max] misses the range or its NULL count equals its row count
+    (a range never matches NULL). Files without stats are kept."""
+    meta = man.get("files_meta", {})
+
+    def may_match(rel: str) -> bool:
+        fm = meta.get(rel, {})
+        nc = fm.get("nulls", {}).get(col)
+        if nc is not None and nc == fm.get("rows"):
+            return False
+        st = fm.get("stats", {}).get(col)
+        return st is None or (st[1] >= lower and st[0] <= upper)
+
+    return [f for f in files if may_match(f)]
 
 
 def _prefix_live(root: str, sid: str) -> bool:
@@ -1992,8 +2007,18 @@ def _merge_contract_checks(
                 "align the types explicitly"
             )
     counts = df.agg(
-        F.count("*").alias("n"), F.countDistinct(key_col).alias("d")
+        F.count("*").alias("n"),
+        F.count(key_col).alias("k"),
+        F.countDistinct(key_col).alias("d"),
     ).first()
+    if counts["k"] != counts["n"]:
+        # countDistinct ignores NULL, so without this check a NULL key
+        # would be reported as a duplicate
+        raise ValueError(
+            f"{verb} batch has NULL {key_col!r} values "
+            f"({counts['n'] - counts['k']} of {counts['n']} rows) — "
+            "a merge key must be non-NULL"
+        )
     if counts["n"] != counts["d"]:
         raise ValueError(
             f"{verb} batch has duplicate {key_col!r} values "
@@ -2490,7 +2515,6 @@ def history(root: str) -> list[dict]:
     truncation."""
     import datetime as _dt
 
-    _, man_dir, _ = _paths(root)
     out: list[dict] = []
     sid = current_snapshot(root)
     seen: set[str] = set()
@@ -2501,7 +2525,7 @@ def history(root: str) -> list[dict]:
             )
         seen.add(sid)
         try:
-            mt = os.path.getmtime(os.path.join(man_dir, f"{sid}.json"))
+            mt = _committed_at(root, sid)
             man = _manifest(root, sid)
         except FileNotFoundError:
             if not out:
@@ -2558,7 +2582,6 @@ def snapshot_as_of(root: str, ts) -> str:
     sid = current_snapshot(root)
     if sid is None:
         raise FileNotFoundError(f"no current snapshot at {root!r}")
-    _, man_dir, _ = _paths(root)
     earliest: tuple[float, str] | None = None
     seen: set[str] = set()
     while sid is not None:
@@ -2570,7 +2593,7 @@ def snapshot_as_of(root: str, ts) -> str:
             )
         seen.add(sid)
         try:
-            mt = os.path.getmtime(os.path.join(man_dir, f"{sid}.json"))
+            mt = _committed_at(root, sid)
         except FileNotFoundError:
             if earliest is None:
                 raise  # pointer names a missing manifest: corruption

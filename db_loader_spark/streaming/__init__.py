@@ -14,8 +14,6 @@ from db_loader_spark.streaming.commit_log import (
 )
 from db_loader_spark.streaming.file_ingest import stream_log_tables
 from db_loader_spark.streaming.manifest_source import (
-    manifest_cdc_source,
-    manifest_table_source,
     register_manifest_cdc,
     register_manifest_table,
 )
@@ -31,8 +29,6 @@ __all__ = [
     "read_table_changes",
     "row_changes_for_batch",
     "start_row_change_feed",
-    "manifest_cdc_source",
-    "manifest_table_source",
     "register_manifest_cdc",
     "register_manifest_table",
     "stream_log_tables",

@@ -1,5 +1,5 @@
 """Incremental consumer of a manifest table's commit log — the
-read-side dual of the lakehouse ingest path (VERDICT r12 #4).
+read-side dual of the lakehouse ingest path.
 
 A manifest table's generation log (``sinks/manifest.py`` —
 ``_CURRENT.gen/<n>`` entries advanced by one conditional create per
@@ -42,6 +42,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from db_loader_spark.sinks import manifest as M
+from db_loader_spark.sinks.manifest import _manifest, current_snapshot
 
 
 class CommitLogTruncated(RuntimeError):
@@ -59,8 +60,8 @@ class CommitEvent:
     masked by this commit (a merge-on-read delete); ``dv_removed``
     maps data file → positions UN-masked while the file stays live —
     produced only by a RESTORE to a less-masked snapshot, whose rows
-    resurrect (r13 review: without this an event-folding consumer's
-    mask state silently diverges after such a restore).
+    resurrect (without it an event-folding consumer's mask state
+    would silently diverge after such a restore).
     ``added_files`` list data files new in this commit (an append's
     delta, a merge/update/COW-delete's rewrites, a compaction's
     output); ``removed_files`` left the live set (superseded
@@ -74,11 +75,9 @@ class CommitEvent:
     dv_removed: dict[str, int] = field(default_factory=dict)
 
 
-def _diff(root: str, man: dict, parent_man: dict | None) -> CommitEvent:
-    """``parent_man`` is passed in (r13 review: poll already holds
-    every chain manifest — re-reading each parent doubled the
-    metadata I/O the module advertises as one JSON per new commit)."""
-    parent = man.get("parent")
+def _diff(man: dict, parent_man: dict | None) -> CommitEvent:
+    """``man``'s change set against ``parent_man`` (``None``: genesis
+    or a bootstrap event, so every file and mask entry is new)."""
     pfiles: set[str] = set()
     pdels: dict = {}
     if parent_man is not None:
@@ -99,9 +98,9 @@ def _diff(root: str, man: dict, parent_man: dict | None) -> CommitEvent:
         elif e["rows"] and sorted(e["dv"]) != sorted(pe.get("dv", [])):
             # same COUNT, different VECTORS (a restore sequence can
             # swap WHICH positions are masked without changing how
-            # many — fourth r13 review): the mask changed; emit the
-            # full un-mask + re-mask so folding counts stay right and
-            # row-level readers see the file as changed
+            # many): the mask changed; emit the full un-mask + re-mask
+            # so folding counts stay right and row-level readers see
+            # the file as changed
             dv_removed[f] = before
             dv_added[f] = e["rows"]
     for f, pe in pdels.items():
@@ -110,7 +109,7 @@ def _diff(root: str, man: dict, parent_man: dict | None) -> CommitEvent:
             dv_removed[f] = pe["rows"]
     return CommitEvent(
         snapshot_id=man["snapshot_id"],
-        parent=parent,
+        parent=man.get("parent"),
         added_files=[f for f in files if f not in pfiles],
         removed_files=sorted(pfiles - set(files)),
         dv_added=dv_added,
@@ -129,14 +128,22 @@ class CommitLogConsumer:
     the consumer keeps state (a checkpoint file, a database row) and
     pass it back to resume; polling is stateless beyond it, so crash
     /restart replays at-least-once from the persisted cursor, the
-    Structured Streaming offset contract."""
+    Structured Streaming offset contract.
+
+    The walk calls ``current_snapshot`` and ``_manifest`` by name,
+    never through the ``sinks.manifest`` module object: the data
+    sources pickle this class by value, and a referenced module would
+    travel with its whole namespace."""
 
     def __init__(self, root: str, start_after: str | None = None):
         self.root = root
         self.cursor = start_after
 
-    def poll(self) -> list[CommitEvent]:
-        _, head = M._read_pointer(self.root)
+    def poll_full(self) -> list[tuple[CommitEvent, dict, dict | None]]:
+        """``poll()`` plus the manifests the walk read: a list of
+        ``(event, manifest, parent_manifest)`` triples, oldest first,
+        so a caller never re-reads what the walk just held."""
+        head = current_snapshot(self.root)
         if head is None or head == self.cursor:
             return []
         # walk head -> cursor via parent links (the authoritative
@@ -152,7 +159,7 @@ class CommitLogConsumer:
                 )
             seen.add(sid)
             try:
-                man = M._manifest(self.root, sid)
+                man = _manifest(self.root, sid)
             except FileNotFoundError:
                 if self.cursor is None:
                     # from-genesis consumer meeting the vacuum horizon:
@@ -185,39 +192,27 @@ class CommitLogConsumer:
         # vacuum-reaped (but whose child still names it) cannot be
         # diffed against, the same horizon contract as above
         parents: list[dict | None] = []
-        if ordered and ordered[0].get("parent") is not None:
+        if ordered[0].get("parent") is not None:
             try:
-                parents.append(M._manifest(self.root, ordered[0]["parent"]))
+                parents.append(_manifest(self.root, ordered[0]["parent"]))
             except FileNotFoundError:
                 raise CommitLogTruncated(
-                    f"cursor {self.cursor!r} at {self.root!r} has a "
-                    "vacuum-reaped manifest — its commits cannot be "
-                    "diffed against; bootstrap from read_current() and "
-                    "resume from its snapshot id"
+                    f"cursor {self.cursor!r} at {self.root!r} is behind "
+                    "the vacuum horizon (its manifest was reaped), so "
+                    "its commits cannot be diffed against; bootstrap "
+                    "from read_current() and resume from its snapshot id"
                 ) from None
         else:
             parents.append(None)
         parents.extend(ordered[:-1])
-        events = [
-            _diff(self.root, man, pman)
+        self.cursor = head
+        return [
+            (_diff(man, pman), man, pman)
             for man, pman in zip(ordered, parents)
         ]
-        self.cursor = head
-        self._last_manifests = list(zip(ordered, parents))
-        return events
 
-    def poll_full(self) -> list[tuple]:
-        """``poll()`` plus the manifests it already read: a list of
-        ``(event, manifest, parent_manifest)`` triples, oldest first —
-        for callers (the batch change feed) that would otherwise
-        re-read every manifest the walk just held (third r14 review:
-        read_table_changes paid 2x the advertised metadata I/O)."""
-        events = self.poll()
-        mans = getattr(self, "_last_manifests", []) if events else []
-        return [
-            (ev, man, pman)
-            for ev, (man, pman) in zip(events, mans)
-        ]
+    def poll(self) -> list[CommitEvent]:
+        return [event for event, _, _ in self.poll_full()]
 
     def tail(self, poll_interval_s: float = 1.0, max_polls: int | None = None):
         """Generator form: yield events as they land, sleeping
@@ -232,6 +227,19 @@ class CommitLogConsumer:
                 yield from batch
             elif max_polls is None or polls < max_polls:
                 time.sleep(poll_interval_s)
+
+
+def _through(
+    triples: list, end: str, root: str, start_after: str | None
+) -> list:
+    """``poll_full`` triples up to and including the commit ``end``."""
+    sids = [t[0].snapshot_id for t in triples]
+    if end not in sids:
+        raise ValueError(
+            f"end snapshot {end!r} is not after {start_after!r} in "
+            f"the live lineage of {root!r}"
+        )
+    return triples[: sids.index(end) + 1]
 
 
 def _masked_scan(
@@ -271,7 +279,7 @@ def read_event_appended(
     processing contract ``read_added`` gives batch-side); for a
     rewrite commit (merge/update/COW delete/compact) they include the
     rewritten survivors — file-level CDC semantics, stated plainly."""
-    man = M._manifest(root, event.snapshot_id)
+    man = _manifest(root, event.snapshot_id)
     return _masked_scan(spark, root, man, event.added_files)
 
 
@@ -296,8 +304,8 @@ def read_event_mor_deleted(
         return M.read_snapshot(spark, root, event.snapshot_id).filter(
             F.lit(False)
         )
-    man = M._manifest(root, event.snapshot_id)
-    pm = M._manifest(root, event.parent)
+    man = _manifest(root, event.snapshot_id)
+    pm = _manifest(root, event.parent)
     pfset = set(pm["files"])  # hoisted: not once per dv_added entry
     pfiles = [f for f in event.dv_added if f in pfset]
     if not pfiles:
@@ -432,7 +440,7 @@ def read_event_row_changes(
 
     from db_loader_spark.operators.cdc import snapshot_diff
 
-    man = _man if _man is not None else M._manifest(root, event.snapshot_id)
+    man = _man if _man is not None else _manifest(root, event.snapshot_id)
     dv_changed = sorted(set(event.dv_added) | set(event.dv_removed))
     old_rel = sorted(set(event.removed_files) | set(dv_changed))
     new_rel = sorted(set(event.added_files) | set(dv_changed))
@@ -440,7 +448,7 @@ def read_event_row_changes(
     if event.parent is None:
         old = _masked_scan(spark, root, man, [])  # genesis: nothing before
     else:
-        pm = _pman if _pman is not None else M._manifest(root, event.parent)
+        pm = _pman if _pman is not None else _manifest(root, event.parent)
         # dv-changed files are CARRIED (present in both manifests);
         # removed files exist only in the parent
         pfiles = set(pm["files"])
@@ -587,17 +595,16 @@ def row_changes_for_batch(
         man = man_of(sid)  # walk-read manifests reused, never re-read
         parent = man.get("parent")
         pman = None if parent is None else man_of(parent)
-        events.append((_diff(root, man, pman), man, pman))
+        events.append((_diff(man, pman), man, pman))
     return _cdf_union(spark, root, events, key_cols, compare_cols)
 
 
 def _man_or_truncated(root: str, sid: str) -> dict:
     """Manifest read with the module's horizon contract: a reaped
     manifest surfaces as the typed ``CommitLogTruncated`` (with the
-    bootstrap guidance), never a bare FileNotFoundError (second r14
-    review: the commit's own read was untranslated)."""
+    bootstrap guidance), never a bare FileNotFoundError."""
     try:
-        return M._manifest(root, sid)
+        return _manifest(root, sid)
     except FileNotFoundError:
         raise CommitLogTruncated(
             f"manifest {sid!r} at {root!r} is behind the vacuum "
@@ -616,42 +623,40 @@ def _cdf_union(
     """The Delta-CDF projection shared by the stream glue and the
     batch surface: per-commit ``read_event_row_changes`` frames,
     unioned with ``_commit_snapshot_id``, ``_commit_timestamp`` (the
-    manifest file's mtime — VERDICT r14 #5) and ``_change_type``
-    columns.
+    manifest file's mtime) and ``_change_type`` columns.
     ``events`` holds ``(event, man, pman)`` triples — both callers
-    already read the manifests (r14 review: never re-read what the
-    walk just held). ``_commit_seq`` numbers the commits within THIS
-    range (oldest = 0) so a consumer can fold last-change-per-key
-    without parsing snapshot ids; across stream epochs the epoch id
-    is the outer order. ``None`` for an empty run.
+    already read the manifests, so none is read twice.
+    ``_commit_seq`` numbers the commits within THIS range (oldest = 0)
+    so a consumer can fold last-change-per-key without parsing
+    snapshot ids; across stream epochs the epoch id is the outer
+    order. ``None`` for an empty run.
 
     The per-commit frames union as a BALANCED pairwise tree, not a
-    left-deep chain (ADVICE r14 #3): a from-genesis batch replay over
-    thousands of commits would otherwise build an O(n)-deep Union
-    plan whose driver-side analysis/optimization blows up long before
-    any data moves; depth is now O(log n). The stream path is bounded
-    by poll cadence anyway — the batch surface is the one with no
-    such bound."""
+    left-deep chain: a from-genesis batch replay over thousands of
+    commits would otherwise build an O(n)-deep Union plan whose
+    driver-side analysis/optimization blows up long before any data
+    moves; depth is O(log n). The stream path is bounded by poll
+    cadence anyway — the batch surface is the one with no such
+    bound."""
     from pyspark.sql import functions as F
 
     import datetime
-    import os
 
     # the NULL backfill for columns that predate a commit (schema
-    # evolution, VERDICT r14 #3) types from the table's CURRENT
-    # recorded schema — the Delta-CDF convention (output schema = the
-    # latest table schema), and the reason a CHUNKED replay of an
-    # evolved history works: a chunk wholly before the evolution has
-    # no manifest that knows the column, so typing from the range's
-    # newest manifest would raise exactly where the docstring's own
-    # chunking recipe sends long-history callers (review r15 pass 2
-    # #2). Falls back to the range's newest manifest when the head is
-    # unreadable (racing vacuum) — one extra JSON read per call.
+    # evolution) types from the table's CURRENT recorded schema — the
+    # Delta-CDF convention (output schema = the latest table schema),
+    # and the reason a CHUNKED replay of an evolved history works: a
+    # chunk wholly before the evolution has no manifest that knows the
+    # column, so typing from the range's newest manifest would raise
+    # exactly where the docstring's own chunking recipe sends
+    # long-history callers. Falls back to the range's newest manifest
+    # when the head is unreadable (racing vacuum) — one extra JSON
+    # read per call.
     ref_schema = None
     try:
-        head = M.current_snapshot(root)
+        head = current_snapshot(root)
         if head is not None:
-            ref_schema = M._manifest(root, head).get("schema")
+            ref_schema = _manifest(root, head).get("schema")
     except FileNotFoundError:
         pass
     if ref_schema is None and events:
@@ -662,19 +667,15 @@ def _cdf_union(
             spark, root, ev, key_cols, compare_cols, _man=man, _pman=pman,
             _ref_schema=ref_schema,
         )
-        # _commit_timestamp (VERDICT r14 #5): the manifest file's
-        # mtime — the filesystem's own commit stamp, the same clock
-        # vacuum's keep_hours trusts (snapshot ids are caller-chosen
-        # tokens and cannot carry time). UTC-naive, matching the
+        # _commit_timestamp: the manifest file's mtime — the
+        # filesystem's own commit stamp, the same clock vacuum's
+        # keep_hours trusts (snapshot ids are caller-chosen tokens and
+        # cannot carry time). UTC-naive, matching the
         # repo's timestamp convention; NULL if the manifest was
         # reaped between the walk and this stat (bounded race)
         try:
             ts = datetime.datetime.utcfromtimestamp(
-                os.path.getmtime(
-                    os.path.join(
-                        root, M._MANIFESTS, f"{ev.snapshot_id}.json"
-                    )
-                )
+                M._committed_at(root, ev.snapshot_id)
             )
         except OSError:
             ts = None
@@ -718,7 +719,7 @@ def read_table_changes(
     downstream MERGE keyed on ``key_cols``.
 
     Plan size: the result unions one diff sub-plan PER COMMIT —
-    balanced to O(log n) depth (ADVICE r14 #3) but still O(n) wide,
+    balanced to O(log n) depth but still O(n) wide,
     so a single call over a history of many thousands of commits
     pays proportionate driver-side analysis. For such ranges, chunk:
     walk the ids with ``CommitLogConsumer`` and call this in bounded
@@ -726,16 +727,9 @@ def read_table_changes(
     log replay entirely and diff snapshots
     (``operators/cdc.snapshot_diff``), which is one plan regardless
     of commit count."""
-    consumer = CommitLogConsumer(root, start_after=start_after)
-    triples = consumer.poll_full()  # events + the manifests poll read
+    triples = CommitLogConsumer(root, start_after=start_after).poll_full()
     if end is not None:
-        sids = [t[0].snapshot_id for t in triples]
-        if end not in sids:
-            raise ValueError(
-                f"end snapshot {end!r} is not after {start_after!r} in "
-                f"the live lineage of {root!r}"
-            )
-        triples = triples[: sids.index(end) + 1]
+        triples = _through(triples, end, root, start_after)
     if not triples:
         return None
     return _cdf_union(spark, root, triples, key_cols, compare_cols)
@@ -861,14 +855,14 @@ def apply_table_changes(
         (F.col("_change_type") == F.lit("delete")).alias("_delete"),
     )
     if merge_schema:
-        head = M.current_snapshot(target_root)
+        head = current_snapshot(target_root)
         if head is None:
             # same contract error the merge_schema=False path gives
             # via merge_apply — not FileNotFoundError on 'None.json'
             raise FileNotFoundError(
                 f"no current snapshot at {target_root!r}"
             )
-        pm = M._manifest(target_root, head)
+        pm = _manifest(target_root, head)
         recorded = {
             f["name"] for f in (pm.get("schema") or {}).get("fields", [])
         }

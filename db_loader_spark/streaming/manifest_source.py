@@ -1,687 +1,439 @@
-"""``spark.readStream.format("manifest_cdc")`` — the commit log as a
-first-class Spark streaming source (r13, the full productization of
-VERDICT r12 #4 on top of ``commit_log.CommitLogConsumer``).
+"""Two Spark data sources over a manifest table (``sinks/manifest.py``),
+built on PySpark 4's Python DataSource API.
 
-Built on PySpark 4's Python DataSource API: a
-``SimpleDataSourceStreamReader`` whose offset IS the commit-log cursor
-(one snapshot id), so Structured Streaming's own checkpointing gives
-the consumer durable, exactly-once-per-commit delivery — ``read``
-advances the offset to the current pointer and emits one row per
-physical change (file added/removed, vector rows masked/un-masked);
-``readBetweenOffsets`` replays a committed range deterministically
-after a restart. Batch reads (``spark.read.format("manifest_cdc")``)
-replay the full walkable history.
-
-Row schema (file-level CDC, the same contract as
-``commit_log.CommitEvent`` flattened):
+``manifest_cdc`` is the commit log as a streaming and batch source. A
+``SimpleDataSourceStreamReader``'s offset IS the commit-log cursor (one
+snapshot id), so Structured Streaming's own checkpointing gives the
+consumer durable, exactly-once-per-commit delivery: ``read`` polls a
+``CommitLogConsumer`` from the offset and emits one row per physical
+change; ``readBetweenOffsets`` replays a committed range
+deterministically after a restart. Batch reads
+(``spark.read.format("manifest_cdc")``) replay the walkable history.
+Row schema (``commit_log.CommitEvent`` flattened)::
 
     snapshot_id string, parent string, change string, file string,
     rows bigint
 
 ``change`` ∈ {add_file, remove_file, dv_add, dv_remove}; ``rows`` is
-the file's recorded row count for file changes (NULL when the
-manifest has no stats) and the masked/un-masked position count for
-vector changes.
+the file's recorded row count for file changes (NULL when the manifest
+has no stats) and the masked/un-masked position count for vector
+changes.
 
-PICKLING CONSTRAINT (why the classes live inside a factory): Spark
-plans Python data sources in a separate worker process that
-deserializes the DataSource by cloudpickle. A module-level class
-pickles BY REFERENCE and the worker would need ``db_loader_spark`` on
-its own sys.path — exactly the foreign-cwd failure mode the repo's
-driver-sim exists to catch (a runtime ``sys.path.insert`` does not
-propagate to workers). A factory-scoped class pickles BY VALUE, so
-the source works wherever the driver can import it once. The same
-constraint forces the tiny manifest walk here to be self-contained
-stdlib code rather than imports from ``sinks.manifest``;
-``tests/test_manifest_source.py`` pins this source's events ≡
-``CommitLogConsumer``'s so the two implementations cannot silently
-diverge.
+``manifest`` is the table itself as a batch format, the DataFrame-
+reader face of ``read_snapshot`` / ``read_pruned`` / ``read_added``::
 
-At 100 TB: identical economics to the consumer it wraps — offsets are
-one string, ``read`` is one pointer read plus one manifest JSON per
-new commit, and the emitted rows are metadata-sized; the heavy lifting
-(scanning the named files) belongs to the downstream query via
-``read_event_appended``-style scans of the emitted file names.
+    df = spark.read.format("manifest").option("path", root).load()
+    old = ...option("snapshot", sid)...          # time travel by id
+    ts  = ...option("timestampAsOf", "2026-08-16T12:00:00")...
+    rng = (...option("pruneCol", "k")            # zone-map pruning
+              .option("pruneLower", "10")
+              .option("pruneUpper", "99")...)    # + residual filter
+    inc = ...option("startingSnapshot", sid)...  # read_added face
+
+``partitions()`` is driver-side metadata work (one manifest JSON; the
+zone maps drop files before any task exists, by the rule ``read_pruned``
+uses), then one InputPartition per kept data file, read as Arrow record
+batches (pyarrow scan + vectorized vector mask + residual range
+filter). The function faces stay the JVM-native scan path and the
+recommendation for fact-sized hot paths; this format is the interop
+face, paying one Arrow hop. ``pruneLower``/``pruneUpper`` arrive as
+strings and are parsed by the prune column's declared type
+(int/long/float/double/string/date). A lineage without a recorded
+schema takes its schema from the first file's footer.
+
+Registration by value: Spark plans and reads a Python data source in
+worker processes that unpickle the DataSource class with cloudpickle. A
+class pickled by reference would make every worker import
+``db_loader_spark``, which fails when only the driver put the package
+on ``sys.path`` (a foreign cwd). ``register_manifest_cdc`` and
+``register_manifest_table`` therefore pickle the package BY VALUE for
+the one ``spark.dataSource.register`` call (Spark pickles the class
+there, once): the class travels with the functions it calls from
+``sinks/manifest.py`` and ``commit_log``. This module imports those
+functions by name, never a module object — a module pickled by value
+carries its whole namespace.
+
+The format stays read-only: a write face would be a second commit path
+beside ``publish``; writes stay the function calls
+(``publish``/``merge_upsert``/…).
 """
 
 from __future__ import annotations
 
+import os
 
-def manifest_cdc_source():
-    """Build and return the ``manifest_cdc`` DataSource class. Usage::
+from pyspark import cloudpickle
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    InputPartition,
+    SimpleDataSourceStreamReader,
+)
 
-        spark.dataSource.register(manifest_cdc_source())
-        events = (spark.readStream.format("manifest_cdc")
-                  .option("path", root).load())
-    """
-    import json
-    import os
+import db_loader_spark
+from db_loader_spark.sinks.manifest import (
+    _manifest,
+    _uri_rel,
+    _zone_kept,
+    added_files,
+    current_snapshot,
+    snapshot_as_of,
+    snapshots,
+)
+from db_loader_spark.streaming.commit_log import (
+    CommitLogConsumer,
+    _diff,
+    _through,
+)
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-        SimpleDataSourceStreamReader,
-    )
 
-    SCHEMA = (
-        "snapshot_id string, parent string, change string, "
-        "file string, rows bigint"
-    )
+def _root(options, fmt: str) -> str:
+    root = options.get("path")
+    if not root:
+        raise ValueError(f"{fmt} requires .option('path', <table root>)")
+    return root
 
-    # -- self-contained manifest walk (see module docstring) ---------
-    def read_pointer(root):
-        gen_dir = os.path.join(root, "_CURRENT.gen")
-        for _ in range(64):
-            try:
-                entries = [e for e in os.listdir(gen_dir) if e.isdigit()]
-            except FileNotFoundError:
-                entries = []
-            if not entries:
-                try:
-                    with open(os.path.join(root, "_CURRENT")) as fh:
-                        return fh.read().strip() or None
-                except OSError:
-                    return None
-            top = max(entries, key=int)
-            try:
-                with open(os.path.join(gen_dir, top)) as fh:
-                    return fh.read().strip() or None
-            except FileNotFoundError:
-                continue  # pruned between list and read: re-list
-        raise RuntimeError(f"pointer at {root!r} would not settle")
 
-    def manifest(root, sid):
-        with open(os.path.join(root, "_manifests", f"{sid}.json")) as fh:
-            return json.load(fh)
-
-    def walk(root, head, cursor, tolerate_truncation=False):
-        """Manifests head→cursor exclusive, returned OLDEST FIRST,
-        paired with their parent manifests. A truncated (vacuumed)
-        walk raises — the CommitLogConsumer contract for cursor-based
-        streams — unless ``tolerate_truncation`` (the batch
-        replay-the-WALKABLE-history semantic, second r13 review: any
-        long-lived table has been vacuumed, and snapshots() itself
-        treats truncation as the normal post-vacuum state): the walk
-        stops at the horizon and the oldest walkable manifest diffs
-        against NO parent, i.e. its full file list and mask emit as
-        the bootstrap event — exactly what a consumer re-bootstrapping
-        from a snapshot would fold."""
-        chain, sid, seen = [], head, set()
-        truncated = False
-        while sid is not None and sid != cursor:
-            if sid in seen:
-                raise RuntimeError(f"lineage cycle at {sid!r} in {root!r}")
-            seen.add(sid)
-            try:
-                man = manifest(root, sid)
-            except FileNotFoundError:
-                if tolerate_truncation and cursor is None:
-                    truncated = True
-                    break
-                raise RuntimeError(
-                    f"manifest_cdc offset {cursor!r} at {root!r} is "
-                    "behind the vacuum horizon; restart the query from "
-                    "a fresh checkpoint after re-bootstrapping from a "
-                    "snapshot read"
-                ) from None
-            chain.append(man)
-            sid = man.get("parent")
-        if not truncated and sid != cursor and cursor is not None:
-            raise RuntimeError(
-                f"manifest_cdc offset {cursor!r} is not in the live "
-                f"lineage of {root!r}; restart from a fresh checkpoint"
-            )
-        ordered = list(reversed(chain))
-        parents = []
-        if (
-            ordered
-            and not truncated
-            and ordered[0].get("parent") is not None
-        ):
-            try:
-                parents.append(manifest(root, ordered[0]["parent"]))
-            except FileNotFoundError:
-                # the cursor RESOLVED (its child names it) but its own
-                # manifest is reaped: the oldest event cannot be
-                # diffed — same horizon contract as an unresolvable
-                # cursor (mirrors CommitLogConsumer.poll)
-                raise RuntimeError(
-                    f"manifest_cdc offset {cursor!r} at {root!r} is "
-                    "behind the vacuum horizon (its manifest was "
-                    "reaped); restart the query from a fresh "
-                    "checkpoint after re-bootstrapping from a "
-                    "snapshot read"
-                ) from None
-        else:
-            parents.append(None)  # genesis or horizon: bootstrap event
-        parents.extend(ordered[:-1])
-        return list(zip(ordered, parents))
-
-    def events(man, pman):
-        """One row per physical change of this commit (the
-        CommitEvent contract, flattened)."""
-        sid, parent = man["snapshot_id"], man.get("parent")
-        pfiles = set(pman["files"]) if pman else set()
-        pdels = (pman or {}).get("deletes", {}) or {}
-        dels = man.get("deletes", {}) or {}
+def _cdc_rows(triples) -> list[tuple]:
+    """One row per physical change of each ``(event, manifest,
+    parent_manifest)`` triple."""
+    out = []
+    for ev, man, pman in triples:
+        sid, parent = ev.snapshot_id, ev.parent
         meta = man.get("files_meta", {})
         pmeta = (pman or {}).get("files_meta", {})
-        live = set(man["files"])
-        for f in man["files"]:
-            if f not in pfiles:
-                yield (sid, parent, "add_file", f, meta.get(f, {}).get("rows"))
-        for f in sorted(pfiles - live):
-            yield (sid, parent, "remove_file", f, pmeta.get(f, {}).get("rows"))
-        for f, e in dels.items():
-            pe = pdels.get(f, {})
-            before = pe.get("rows", 0)
-            if e["rows"] > before:
-                yield (sid, parent, "dv_add", f, e["rows"] - before)
-            elif e["rows"] < before:
-                yield (sid, parent, "dv_remove", f, before - e["rows"])
-            elif e["rows"] and sorted(e["dv"]) != sorted(pe.get("dv", [])):
-                # same count, different vectors (a restore can swap
-                # WHICH positions are masked): full un-mask + re-mask,
-                # mirroring CommitLogConsumer (fourth r13 review)
-                yield (sid, parent, "dv_remove", f, before)
-                yield (sid, parent, "dv_add", f, e["rows"])
-        for f, pe in pdels.items():
-            if f not in dels and f in live:
-                yield (sid, parent, "dv_remove", f, pe["rows"])
+        out += [
+            (sid, parent, "add_file", f, meta.get(f, {}).get("rows"))
+            for f in ev.added_files
+        ]
+        out += [
+            (sid, parent, "remove_file", f, pmeta.get(f, {}).get("rows"))
+            for f in ev.removed_files
+        ]
+        out += [
+            (sid, parent, "dv_remove", f, n) for f, n in ev.dv_removed.items()
+        ]
+        out += [(sid, parent, "dv_add", f, n) for f, n in ev.dv_added.items()]
+    return out
 
-    def rows_between(root, start_sid, end_sid, tolerate_truncation=False):
-        out = []
-        for man, pman in walk(
-            root, end_sid, start_sid, tolerate_truncation
+
+class _Rows(InputPartition):
+    def __init__(self, rows):
+        self.rows = rows
+
+
+class ManifestCDCStreamReader(SimpleDataSourceStreamReader):
+    def __init__(self, options):
+        self.root = _root(options, "manifest_cdc")
+        self.start_after = options.get("startingsnapshot")
+
+    def initialOffset(self):
+        return {"sid": self.start_after}
+
+    def read(self, start):
+        consumer = CommitLogConsumer(self.root, start.get("sid"))
+        rows = _cdc_rows(consumer.poll_full())
+        return iter(rows), {"sid": consumer.cursor}
+
+    def readBetweenOffsets(self, start, end):
+        if end.get("sid") == start.get("sid"):
+            return iter([])
+        cursor = start.get("sid")
+        triples = CommitLogConsumer(self.root, cursor).poll_full()
+        return iter(_cdc_rows(_through(triples, end["sid"], self.root, cursor)))
+
+    def commit(self, end):
+        pass
+
+
+class ManifestCDCBatchReader(DataSourceReader):
+    def __init__(self, options):
+        self.root = _root(options, "manifest_cdc")
+        self.start_after = options.get("startingsnapshot")
+
+    def partitions(self):
+        # the walk is driver-side metadata work; the rows ship to the
+        # executor as data inside the one partition. With a
+        # startingSnapshot the cursor must resolve exactly, like the
+        # stream's; without one the read replays the history still
+        # walkable after a vacuum: the oldest snapshot diffs against
+        # nothing (the bootstrap event), then a consumer polls after it
+        if self.start_after is not None:
+            consumer = CommitLogConsumer(self.root, self.start_after)
+            triples = consumer.poll_full()
+        else:
+            lineage = snapshots(self.root)
+            triples = []
+            if lineage:
+                first = _manifest(self.root, lineage[0])
+                triples = [(_diff(first, None), first, None)]
+                triples += CommitLogConsumer(self.root, lineage[0]).poll_full()
+        return [_Rows(_cdc_rows(triples))]
+
+    def read(self, partition):
+        return iter(partition.rows)
+
+
+class ManifestCDCDataSource(DataSource):
+    @classmethod
+    def name(cls):
+        return "manifest_cdc"
+
+    def schema(self):
+        return (
+            "snapshot_id string, parent string, change string, "
+            "file string, rows bigint"
+        )
+
+    def simpleStreamReader(self, schema):
+        return ManifestCDCStreamReader(self.options)
+
+    def reader(self, schema):
+        return ManifestCDCBatchReader(self.options)
+
+
+def _parse_bound(raw, tname: str):
+    if tname in ("integer", "long", "short", "byte"):
+        return int(raw)
+    if tname in ("double", "float"):
+        return float(raw)
+    if tname == "date":
+        import datetime
+
+        return datetime.date.fromisoformat(raw)
+    if tname == "string":
+        return raw
+    raise ValueError(
+        f"manifest format cannot parse a {tname!r} prune bound from an "
+        "option string; use read_pruned or .filter instead"
+    )
+
+
+class _FilePart(InputPartition):
+    def __init__(self, abs_file, dv_abs, rel, lo, hi, col, tname):
+        self.abs_file = abs_file
+        self.dv_abs = dv_abs  # absolute dv parquet paths masking rel
+        self.rel = rel  # manifest-relative name (dv rows key on it)
+        self.lo, self.hi, self.col = lo, hi, col
+        self.tname = tname  # prune column's Spark type name
+
+
+class ManifestTableReader(DataSourceReader):
+    def __init__(self, options, schema, sid):
+        self.root = _root(options, "manifest format")
+        # the DataSource pinned ``sid`` at plan time: schema() and
+        # every partitions() call bind the same snapshot, so a commit
+        # landing between plan and (re-)execution cannot pair one
+        # snapshot's schema with another's files
+        self.sid = sid
+        self.start_after = options.get("startingsnapshot")
+        self.prune_col = options.get("prunecol")
+        self.prune_lower = options.get("prunelower")
+        self.prune_upper = options.get("pruneupper")
+        if self.prune_col and (
+            self.prune_lower is None or self.prune_upper is None
         ):
-            out.extend(events(man, pman))
-        return out
-
-    class _Part(InputPartition):
-        def __init__(self, rows):
-            self.rows = rows
-
-    class ManifestCDCStreamReader(SimpleDataSourceStreamReader):
-        def __init__(self, options):
-            self.root = options.get("path")
-            if not self.root:
-                raise ValueError("manifest_cdc requires .option('path', <table root>)")
-            self.start_after = options.get("startingsnapshot")
-
-        def initialOffset(self):
-            return {"sid": self.start_after}
-
-        def read(self, start):
-            head = read_pointer(self.root)
-            cursor = start.get("sid")
-            if head is None or head == cursor:
-                return iter([]), start
-            return iter(rows_between(self.root, cursor, head)), {"sid": head}
-
-        def readBetweenOffsets(self, start, end):
-            return iter(rows_between(self.root, start.get("sid"), end.get("sid")))
-
-        def commit(self, end):
-            pass
-
-    class ManifestCDCBatchReader(DataSourceReader):
-        def __init__(self, options):
-            self.root = options.get("path")
-            if not self.root:
-                raise ValueError("manifest_cdc requires .option('path', <table root>)")
-            self.start_after = options.get("startingsnapshot")
-
-        def partitions(self):
-            # the walk is driver-side metadata work; the rows ship to
-            # executors as data inside the single partition. Without a
-            # startingSnapshot the batch surface replays the WALKABLE
-            # history (horizon-tolerant: the oldest walkable manifest
-            # emits as a bootstrap event); with one, the cursor must
-            # resolve exactly, like the stream
-            head = read_pointer(self.root)
-            rows = (
-                []
-                if head is None
-                else rows_between(
-                    self.root, self.start_after, head,
-                    tolerate_truncation=self.start_after is None,
-                )
+            raise ValueError(
+                "pruneCol requires both pruneLower and pruneUpper"
             )
-            return [_Part(rows)]
+        self.schema_struct = schema
 
-        def read(self, partition):
-            return iter(partition.rows)
+    def partitions(self):
+        if self.sid is None:
+            raise FileNotFoundError(f"no current snapshot at {self.root!r}")
+        man = _manifest(self.root, self.sid)
+        kept = man["files"]
+        if self.start_after is not None:
+            # the read_added face; the pinned snapshot's vectors still
+            # mask the delta below
+            try:
+                kept = added_files(self.root, self.start_after, self.sid)
+            except FileNotFoundError:
+                raise RuntimeError(
+                    f"startingSnapshot {self.start_after!r} at "
+                    f"{self.root!r} is behind the vacuum horizon; read "
+                    "the full snapshot instead and resume increments "
+                    "from its id"
+                ) from None
+        lo = hi = tname = None
+        if self.prune_col:
+            for f in (man.get("schema") or {}).get("fields") or []:
+                if f["name"] == self.prune_col:
+                    t = f["type"]
+                    tname = t if isinstance(t, str) else "other"
+            if tname is None:
+                # a legacy lineage records no schema: type the column
+                # from the declared (footer-inferred) one
+                for f in self.schema_struct.fields:
+                    if f.name == self.prune_col:
+                        tname = f.dataType.typeName()
+            if tname is None:
+                raise ValueError(
+                    f"pruneCol {self.prune_col!r} is not a column of "
+                    f"{self.root!r}"
+                )
+            lo = _parse_bound(self.prune_lower, tname)
+            hi = _parse_bound(self.prune_upper, tname)
+            kept = _zone_kept(man, kept, self.prune_col, lo, hi)
+        dels = man.get("deletes", {}) or {}
+        return [
+            _FilePart(
+                os.path.join(self.root, rel),
+                [
+                    os.path.join(self.root, p)
+                    for p in dels.get(rel, {}).get("dv", [])
+                ],
+                rel, lo, hi, self.prune_col or None, tname,
+            )
+            for rel in kept
+        ]
 
-    class ManifestCDCDataSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "manifest_cdc"
+    def read(self, part):
+        # PySpark calls read(None) when partitions() returned an empty
+        # list (zone maps excluded every file, or an empty delta): that
+        # is the empty DataFrame
+        if part is None:
+            return
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
 
-        def schema(self):
-            return SCHEMA
+        # parquet-level column pruning: the declared columns the file
+        # physically holds, plus the prune column (read for the filter,
+        # dropped from the projection). A file holding no needed column
+        # still reads one physical column, for the row count the NULL
+        # backfill and the vector mask need
+        declared = {f.name for f in self.schema_struct.fields}
+        need = declared | ({part.col} if part.col is not None else set())
+        physical = pq.read_schema(part.abs_file).names
+        sel = sorted(need & set(physical)) or physical[:1]
+        tbl = pq.read_table(part.abs_file, columns=sel)
+        if part.dv_abs:
+            import numpy as np
 
-        def simpleStreamReader(self, schema):
-            return ManifestCDCStreamReader(self.options)
+            # vector rows key on the URL-ENCODED relative path (the
+            # _metadata.file_path form); matching the raw path would
+            # resurrect deleted rows of any path that encodes differently
+            enc = _uri_rel(part.rel)
+            masked = set()
+            for p in part.dv_abs:
+                dv = pq.read_table(p, columns=["f", "pos"])
+                hit = pc.equal(dv.column("f"), pa.scalar(enc))
+                masked.update(dv.filter(hit).column("pos").to_pylist())
+            if masked:
+                keep = np.ones(tbl.num_rows, dtype=bool)
+                keep[np.fromiter(masked, dtype=np.int64)] = False
+                tbl = tbl.filter(pa.array(keep))
+        # residual range filter BEFORE the projection, on the file's
+        # own rows (the prune column may not be declared)
+        if part.col is not None:
+            if part.col in tbl.column_names:
+                at = {
+                    "integer": pa.int32(), "long": pa.int64(),
+                    "short": pa.int16(), "byte": pa.int8(),
+                    "float": pa.float32(), "double": pa.float64(),
+                    "string": pa.string(), "date": pa.date32(),
+                }[part.tname]
+                c = tbl.column(part.col).cast(at)
+                keep = pc.and_kleene(
+                    pc.greater_equal(c, pa.scalar(part.lo, type=at)),
+                    pc.less_equal(c, pa.scalar(part.hi, type=at)),
+                )
+                tbl = tbl.filter(pc.fill_null(keep, False))
+            else:
+                # the file predates the prune column: every value reads
+                # NULL, and a range never matches NULL
+                tbl = tbl.slice(0, 0)
+        # bind to the DECLARED schema (the manifest's recorded one, or
+        # a user-passed subset): declared order and arrow types; a
+        # column the file predates reads NULL
+        cols = {}
+        for f in self.schema_struct.fields:
+            at = to_arrow_type(f.dataType)
+            cols[f.name] = (
+                tbl.column(f.name).cast(at)
+                if f.name in tbl.column_names
+                else pa.nulls(tbl.num_rows, type=at)
+            )
+        yield from pa.table(cols).to_batches()
 
-        def reader(self, schema):
-            return ManifestCDCBatchReader(self.options)
 
-    return ManifestCDCDataSource
+class ManifestTableDataSource(DataSource):
+    """The snapshot is resolved ONCE, at construction (plan time), and
+    every later schema()/partitions() binds it: two actions on one
+    DataFrame read the same table. Re-``load()`` to see a newer
+    snapshot, the ``spark.read`` convention every table format
+    follows."""
+
+    def __init__(self, options):
+        super().__init__(options)
+        root = options.get("path")
+        self._sid = None
+        if root:
+            by_id = options.get("snapshot")
+            by_ts = options.get("timestampasof")
+            if by_id and by_ts:
+                raise ValueError(
+                    "snapshot and timestampAsOf are mutually exclusive — "
+                    "pick one time-travel axis"
+                )
+            self._sid = (
+                snapshot_as_of(root, by_ts)
+                if by_ts
+                else by_id or current_snapshot(root)
+            )
+
+    @classmethod
+    def name(cls):
+        return "manifest"
+
+    def schema(self):
+        root = _root(self.options, "manifest format")
+        if self._sid is None:
+            raise FileNotFoundError(f"no current snapshot at {root!r}")
+        man = _manifest(root, self._sid)
+        if man.get("schema"):
+            from pyspark.sql.types import StructType
+
+            return StructType.fromJson(man["schema"])
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        if not man["files"]:
+            raise ValueError(f"snapshot {self._sid!r} has no files")
+        return from_arrow_schema(
+            pq.read_schema(os.path.join(root, man["files"][0]))
+        )
+
+    def reader(self, schema):
+        return ManifestTableReader(self.options, schema, self._sid)
+
+
+def _register(spark, source) -> None:
+    """Register ``source`` with the package pickled by value. Spark
+    pickles the class once, here, so the by-value scope ends with the
+    call: left on, every later UDF from the package would pickle by
+    value too."""
+    cloudpickle.register_pickle_by_value(db_loader_spark)
+    try:
+        spark.dataSource.register(source)
+    finally:
+        cloudpickle.unregister_pickle_by_value(db_loader_spark)
 
 
 def register_manifest_cdc(spark) -> None:
     """Register the ``manifest_cdc`` format on this session (idempotent
-    per session — Spark replaces a same-name registration)."""
-    spark.dataSource.register(manifest_cdc_source())
+    per session — Spark replaces a same-name registration). Usage::
 
-
-def manifest_table_source():
-    """Build the ``manifest`` BATCH format (VERDICT r14 #5): the
-    manifest table itself as ``spark.read.format("manifest")`` — the
-    DataFrame-reader face of ``sinks.manifest.read_snapshot`` /
-    ``read_pruned`` (manifest.py:981,1006), so a consumer that speaks
-    only ``spark.read`` gets snapshots, time travel, zone-map file
-    pruning, deletion-vector masking, and schema-evolution NULL
-    backfill without importing the library. Usage::
-
-        spark.dataSource.register(manifest_table_source())
-        df = spark.read.format("manifest").option("path", root).load()
-        old = ...option("snapshot", sid)...          # time travel by id
-        ts  = ...option("timestampAsOf", "2026-08-16T12:00:00")...
-                                                     # time travel by time
-        rng = (...option("pruneCol", "k")            # zone-map pruning
-                  .option("pruneLower", "10")
-                  .option("pruneUpper", "99")...)    # + residual filter
-        inc = ...option("startingSnapshot", sid)...  # read_added face
-
-    Scale shape: ``partitions()`` is driver-side metadata work (one
-    manifest JSON; zone maps prune FILES before any task exists — the
-    same file set ``read_pruned`` keeps), then ONE InputPartition per
-    kept data file, each read as ARROW RECORD BATCHES (pyarrow scan +
-    vectorized DV mask + residual range filter) — data crosses the
-    Python boundary as Arrow columns, never row-by-row. The function
-    faces stay the JVM-native scan path (zero Python in the data
-    plane) and remain the recommendation for fact-sized hot paths;
-    this format is the interop face, paying one Arrow hop.
-
-    The pickling constraint of the module docstring applies: classes
-    live in this factory and the manifest walk is self-contained
-    stdlib code; pyarrow/numpy/pyspark imports are worker-safe.
-
-    Pruning option typing: ``pruneLower``/``pruneUpper`` arrive as
-    strings (the DataSource options contract) and are parsed by the
-    PRUNE COLUMN's declared type — int/long/float/double/string/date
-    are supported; prune on other types via ``read_pruned`` or a
-    ``.filter`` over the plain format read. A legacy lineage (no
-    recorded schema) takes its schema from the FIRST file's footer —
-    heterogeneous legacy lineages should use
-    ``read_snapshot(merge_schema=True)`` instead."""
-    import json
-    import os
-
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    def read_pointer(root):
-        gen_dir = os.path.join(root, "_CURRENT.gen")
-        for _ in range(64):
-            try:
-                entries = [e for e in os.listdir(gen_dir) if e.isdigit()]
-            except FileNotFoundError:
-                entries = []
-            if not entries:
-                try:
-                    with open(os.path.join(root, "_CURRENT")) as fh:
-                        return fh.read().strip() or None
-                except OSError:
-                    return None
-            top = max(entries, key=int)
-            try:
-                with open(os.path.join(gen_dir, top)) as fh:
-                    return fh.read().strip() or None
-            except FileNotFoundError:
-                continue
-        raise RuntimeError(f"pointer at {root!r} would not settle")
-
-    def manifest(root, sid):
-        with open(os.path.join(root, "_manifests", f"{sid}.json")) as fh:
-            return json.load(fh)
-
-    def resolve_as_of(root, raw_ts):
-        """Newest lineage snapshot with manifest mtime <= the option
-        value (ISO-8601 string or epoch seconds) — the self-contained
-        twin of ``sinks.manifest.snapshot_as_of`` (same clock, same
-        newest-first walk, same horizon error; the equivalence is
-        pytest-pinned like the CDC walk's)."""
-        import datetime
-
-        try:
-            target = float(raw_ts)
-        except ValueError:
-            dt = datetime.datetime.fromisoformat(raw_ts)
-            if dt.tzinfo is None:
-                dt = dt.replace(tzinfo=datetime.timezone.utc)
-            target = dt.timestamp()
-        # µs-grain comparison, matching snapshot_as_of: a datetime
-        # round-tripped from the mtime clock must hit its own commit
-        target = int(target * 1_000_000)
-        sid = read_pointer(root)
-        if sid is None:
-            raise FileNotFoundError(f"no current snapshot at {root!r}")
-        earliest = None
-        seen = set()
-        while sid is not None:
-            if sid in seen:
-                raise RuntimeError(
-                    f"snapshot lineage cycle at {sid!r} in {root!r}"
-                )
-            seen.add(sid)
-            mpath = os.path.join(root, "_manifests", f"{sid}.json")
-            try:
-                mt = os.path.getmtime(mpath)
-            except FileNotFoundError:
-                if earliest is None:
-                    raise  # pointer names a missing manifest
-                break  # vacuum horizon
-            earliest = (mt, sid)
-            if int(mt * 1_000_000) <= target:
-                return sid  # one stat, no manifest read, on a hit
-            try:
-                sid = manifest(root, sid).get("parent")
-            except FileNotFoundError:
-                break  # reaped between stat and read: horizon
-        raise ValueError(
-            f"timestampAsOf {raw_ts!r} predates the earliest available "
-            f"commit at {root!r} ({earliest[1]!r}, committed epoch "
-            f"{earliest[0]:.3f}) — the requested state is behind the "
-            "vacuum horizon"
-        )
-
-    def parse_bound(raw, spark_type_name):
-        if raw is None:
-            return None
-        t = spark_type_name
-        if t in ("integer", "long", "short", "byte"):
-            return int(raw)
-        if t in ("double", "float"):
-            return float(raw)
-        if t == "date":
-            import datetime
-
-            return datetime.date.fromisoformat(raw)
-        if t == "string":
-            return raw
-        raise ValueError(
-            f"manifest format cannot parse a {t!r} prune bound from an "
-            "option string; use read_pruned or .filter instead"
-        )
-
-    class _FilePart(InputPartition):
-        def __init__(self, abs_file, dv_abs, rel, lo, hi, col, tname):
-            self.abs_file = abs_file
-            self.dv_abs = dv_abs  # absolute dv parquet paths masking rel
-            self.rel = rel  # manifest-relative name (dv rows key on it)
-            self.lo, self.hi, self.col = lo, hi, col
-            self.tname = tname  # prune column's Spark type name
-
-    class ManifestTableReader(DataSourceReader):
-        def __init__(self, options, schema, sid):
-            self.root = options.get("path")
-            if not self.root:
-                raise ValueError(
-                    "manifest format requires .option('path', <table root>)"
-                )
-            # the sid is PINNED by the DataSource at plan time (review
-            # r15 #3): schema() and every partitions() call must bind
-            # the same snapshot, or a concurrent commit between plan
-            # and (re-)execution pairs snapshot A's schema with
-            # snapshot B's files — and two actions on one DataFrame
-            # could read different tables
-            self.sid = sid
-            self.start_after = options.get("startingsnapshot")
-            self.prune_col = options.get("prunecol")
-            self.prune_lower = options.get("prunelower")
-            self.prune_upper = options.get("pruneupper")
-            if self.prune_col and (
-                self.prune_lower is None or self.prune_upper is None
-            ):
-                raise ValueError(
-                    "pruneCol requires both pruneLower and pruneUpper"
-                )
-            self.schema_struct = schema
-
-    # split so partitions() stays readable
-        def partitions(self):
-            sid = self.sid
-            if sid is None:
-                raise FileNotFoundError(
-                    f"no current snapshot at {self.root!r}"
-                )
-            man = manifest(self.root, sid)
-            fields_json = (man.get("schema") or {}).get("fields")
-            meta = man.get("files_meta", {})
-            dels = man.get("deletes", {}) or {}
-            kept = man["files"]
-            if self.start_after is not None:
-                # the INCREMENTAL face (read_added): only the files
-                # added since startingSnapshot — files are immutable,
-                # so path set difference IS the data delta; the PINNED
-                # snapshot's vectors still mask (an incremental
-                # consumer must see the logical table's delta, never
-                # resurrected rows). Composes with zone-map pruning.
-                try:
-                    old = set(manifest(self.root, self.start_after)["files"])
-                except FileNotFoundError:
-                    raise RuntimeError(
-                        f"startingSnapshot {self.start_after!r} at "
-                        f"{self.root!r} is behind the vacuum horizon; "
-                        "read the full snapshot instead and resume "
-                        "increments from its id"
-                    ) from None
-                kept = [f for f in kept if f not in old]
-            lo = hi = None
-            tname = None
-            if self.prune_col:
-                if fields_json:
-                    for f in fields_json:
-                        if f["name"] == self.prune_col:
-                            tname = (
-                                f["type"]
-                                if isinstance(f["type"], str)
-                                else "other"
-                            )
-                if tname is None:
-                    # legacy lineage or unknown column: parse from the
-                    # declared (inferred) Spark schema instead — the
-                    # prune column need NOT be in a user-passed subset
-                    # schema (filter-on-unselected-column, review r15
-                    # #2): read() fetches it for the filter and drops
-                    # it from the projection
-                    for f in self.schema_struct.fields:
-                        if f.name == self.prune_col:
-                            tname = f.dataType.typeName()
-                if tname is None:
-                    raise ValueError(
-                        f"pruneCol {self.prune_col!r} is not a column "
-                        f"of {self.root!r}"
-                    )
-                lo = parse_bound(self.prune_lower, tname)
-                hi = parse_bound(self.prune_upper, tname)
-
-                def may_match(rel):
-                    fm = meta.get(rel, {})
-                    nc = fm.get("nulls", {}).get(self.prune_col)
-                    if nc is not None and nc == fm.get("rows"):
-                        return False  # provably all-NULL: no range hit
-                    st = fm.get("stats", {}).get(self.prune_col)
-                    return st is None or (st[1] >= lo and st[0] <= hi)
-
-                kept = [f for f in kept if may_match(f)]
-            out = []
-            for rel in kept:
-                dv_abs = [
-                    os.path.join(self.root, p)
-                    for p in dels.get(rel, {}).get("dv", [])
-                ]
-                out.append(
-                    _FilePart(
-                        os.path.join(self.root, rel), dv_abs, rel,
-                        lo, hi,
-                        self.prune_col if self.prune_col else None,
-                        tname,
-                    )
-                )
-            return out
-
-        def read(self, part):
-            # an EMPTY partitions() list (zone maps excluded every
-            # file, or an empty incremental delta — the common
-            # no-new-data poll) reaches here as read(None): PySpark's
-            # plan_data_source_read substitutes [None] for an empty
-            # list (review r15 pass 2 #1) — the empty DataFrame, not
-            # an AttributeError
-            if part is None:
-                return
-            import pyarrow as pa
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import to_arrow_type
-
-            # parquet-level column pruning: the declared columns the
-            # file physically holds, plus the prune column (which a
-            # user-passed subset schema may omit — it is read for the
-            # filter and dropped from the projection). A file with NO
-            # needed column — every requested column evolved in after
-            # it — still reads one physical column to carry the row
-            # count the NULL backfill and DV mask need
-            declared = {f.name for f in self.schema_struct.fields}
-            need = declared | ({part.col} if part.col is not None else set())
-            physical = pq.read_schema(part.abs_file).names
-            sel = sorted(need & set(physical)) or physical[:1]
-            tbl = pq.read_table(part.abs_file, columns=sel)
-            if part.dv_abs:
-                import numpy as np
-                from urllib.parse import quote
-
-                # DV rows key on the URL-ENCODED relative path — the
-                # form _metadata.file_path renders (sinks.manifest
-                # _uri_rel); matching the raw path would silently
-                # resurrect deleted rows for any path that encodes
-                # differently (review r15 #1)
-                enc = quote(part.rel, safe="/")
-                masked = set()
-                for p in part.dv_abs:
-                    dv = pq.read_table(p, columns=["f", "pos"])
-                    hit = pc.equal(dv.column("f"), pa.scalar(enc))
-                    masked.update(
-                        dv.filter(hit).column("pos").to_pylist()
-                    )
-                if masked:
-                    keep = np.ones(tbl.num_rows, dtype=bool)
-                    keep[np.fromiter(masked, dtype=np.int64)] = False
-                    tbl = tbl.filter(pa.array(keep))
-            # residual range filter BEFORE the projection, on the
-            # file's own rows (the prune column may not be declared)
-            if part.col is not None:
-                if part.col in tbl.column_names:
-                    at = {
-                        "integer": pa.int32(), "long": pa.int64(),
-                        "short": pa.int16(), "byte": pa.int8(),
-                        "float": pa.float32(), "double": pa.float64(),
-                        "string": pa.string(), "date": pa.date32(),
-                    }[part.tname]
-                    c = tbl.column(part.col).cast(at)
-                    keep = pc.and_kleene(
-                        pc.greater_equal(c, pa.scalar(part.lo, type=at)),
-                        pc.less_equal(c, pa.scalar(part.hi, type=at)),
-                    )
-                    tbl = tbl.filter(pc.fill_null(keep, False))
-                else:
-                    # the file predates the prune column: every value
-                    # reads NULL, and a range never matches NULL (the
-                    # read_pruned all-NULL rule) — stats-less files
-                    # reach here; stats-carrying ones were pruned
-                    tbl = tbl.slice(0, 0)
-            # bind to the DECLARED schema: declared order, declared
-            # arrow types (files may predate evolved columns -> NULL;
-            # physical int32 vs declared long -> cast). The declared
-            # schema is the reader's — the manifest's recorded one by
-            # default, or a user-passed .schema(...) SUBSET, which
-            # therefore column-prunes the arrow hop for free
-            want = [
-                (f.name, to_arrow_type(f.dataType))
-                for f in self.schema_struct.fields
-            ]
-            cols = []
-            for name, at in want:
-                if name in tbl.column_names:
-                    cols.append(tbl.column(name).cast(at))
-                else:
-                    cols.append(pa.nulls(tbl.num_rows, type=at))
-            out = pa.table(dict(zip([n for n, _ in want], cols)))
-            yield from out.to_batches()
-
-    class ManifestTableDataSource(DataSource):
-        """The un-pinned read resolves the pointer ONCE, at
-        construction (plan time), and every later schema()/
-        partitions() binds that snapshot (review r15 #3): resolving
-        per-call would let a commit landing between plan and
-        (re-)execution pair snapshot A's schema with snapshot B's
-        files — and two actions on one DataFrame would read two
-        different tables. Re-``load()`` to see a newer snapshot, the
-        ``spark.read`` convention every table format follows."""
-
-        def __init__(self, options):
-            super().__init__(options)
-            root = options.get("path")
-            self._sid = None
-            if root:
-                by_id = options.get("snapshot")
-                by_ts = options.get("timestampasof")
-                if by_id and by_ts:
-                    raise ValueError(
-                        "snapshot and timestampAsOf are mutually "
-                        "exclusive — pick one time-travel axis"
-                    )
-                if by_ts:
-                    self._sid = resolve_as_of(root, by_ts)
-                else:
-                    self._sid = by_id or read_pointer(root)
-
-        @classmethod
-        def name(cls):
-            return "manifest"
-
-        def schema(self):
-            root = self.options.get("path")
-            if not root:
-                raise ValueError(
-                    "manifest format requires .option('path', <table root>)"
-                )
-            if self._sid is None:
-                raise FileNotFoundError(f"no current snapshot at {root!r}")
-            man = manifest(root, self._sid)
-            if man.get("schema"):
-                from pyspark.sql.types import StructType
-
-                return StructType.fromJson(man["schema"])
-            # legacy lineage: first file's footer (document caveat)
-            import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import from_arrow_schema
-
-            if not man["files"]:
-                raise ValueError(f"snapshot {self._sid!r} has no files")
-            return from_arrow_schema(
-                pq.read_schema(os.path.join(root, man["files"][0]))
-            )
-
-        def reader(self, schema):
-            return ManifestTableReader(self.options, schema, self._sid)
-
-    return ManifestTableDataSource
+        register_manifest_cdc(spark)
+        events = (spark.readStream.format("manifest_cdc")
+                  .option("path", root).load())
+    """
+    _register(spark, ManifestCDCDataSource)
 
 
 def register_manifest_table(spark) -> None:
     """Register the batch ``manifest`` format on this session
     (idempotent per session)."""
-    spark.dataSource.register(manifest_table_source())
+    _register(spark, ManifestTableDataSource)

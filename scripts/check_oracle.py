@@ -4,9 +4,10 @@
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from db_loader_spark.oracle import run_all
 from db_loader_spark.session import get_spark

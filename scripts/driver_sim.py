@@ -1,7 +1,13 @@
-"""Simulate the external driver: vanilla SparkSession, foreign cwd."""
+"""Simulate the external driver: vanilla SparkSession, foreign cwd.
+
+Run it from outside the repository, e.g. ``cd /tmp && python
+<repo>/scripts/driver_sim.py``: it puts its own checkout on ``sys.path``.
+"""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession
 
@@ -54,7 +60,7 @@ for r in results:
 import glob
 import json
 
-for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
     try:
         with open(path) as fh:
             payload = json.load(fh)

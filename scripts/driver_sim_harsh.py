@@ -1,7 +1,8 @@
 """Hostile-harness simulation: the FULL driver window under the
 HARSHEST plausible external-session config — a vanilla SparkSession
 with DEFAULT driver memory (1g) and DEFAULT shuffle partitions (200),
-run from a foreign cwd (copy to /tmp like driver_sim.py).
+run from a foreign cwd (``cd /tmp && python <repo>/scripts/driver_sim_harsh.py``;
+the script puts its own checkout on ``sys.path``).
 
 driver_sim.py mirrors the driver contract at a comfortable 8g;
 this variant exists because the external harness's session config is
@@ -11,9 +12,10 @@ cost two rounds of correctness evidence). A key that only passes with
 a generous driver heap — an oversized collect, an unbounded broadcast
 — fails HERE first. r9 baseline: 50/50 PASS.
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 

@@ -17,10 +17,11 @@ Usage: python scripts/oracle_cost.py [sf_dir] [--window-only]
 """
 
 import json
+import os
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 PER_KEY_TIMEOUT_S = 600

@@ -14,10 +14,11 @@ Same seeded synthetic corpora as the decontamination sweep
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -25,7 +26,7 @@ from db_loader_spark.functions.sketch import kmv_distinct
 from db_loader_spark.queries.textops import lm_score_of
 from db_loader_spark.session import get_spark
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from decontam_scale import synth_docs  # noqa: E402
 
 

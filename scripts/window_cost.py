@@ -16,10 +16,11 @@ NOT in the current window instead — the next round's cohort — so its
 rotation can be pre-ordered before the round starts.
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from db_loader_spark.oracle import compare, duck_connection
 from db_loader_spark.queries import WINDOW, all_queries

@@ -63,6 +63,23 @@ def test_merge_apply_contract_errors_name_merge_apply(spark, tmp_path):
     assert M.snapshots(root) == ["v1"]
 
 
+@pytest.mark.parametrize("verb", ["merge_upsert", "merge_apply"])
+def test_null_merge_key_is_refused_as_null(spark, tmp_path, verb):
+    """A NULL key gets its own error naming the verb, not the
+    duplicate-key error (countDistinct skips NULL)."""
+    root = _table(spark, tmp_path, stats=True)
+    if verb == "merge_upsert":
+        batch = spark.createDataFrame([(None, 5)], "id long, v long")
+    else:
+        batch = spark.createDataFrame(
+            [(None, 5, False)], "id long, v long, _delete boolean"
+        )
+    with pytest.raises(ValueError, match=f"^{verb}.*NULL 'id'") as err:
+        getattr(M, verb)(spark, batch, root, "id")
+    assert "duplicate" not in str(err.value)
+    assert M.snapshots(root) == ["v1"]
+
+
 def test_mor_delete_vectors_are_named_dv(spark, tmp_path):
     """Readers find vectors by the paths the manifest records, so the
     mask-only commit shares the mask-and-append commit's dv- naming."""

@@ -1,9 +1,10 @@
-"""The manifest_cdc Spark data source: readStream/read over a
-manifest table's commit log, offsets checkpointed by Structured
-Streaming itself, events pinned ≡ CommitLogConsumer's (the two
-implementations are deliberately separate — see the pickling note in
-streaming/manifest_source.py — so this equivalence test is what keeps
-them from diverging)."""
+"""The manifest_cdc and manifest Spark data sources: readStream/read
+over a manifest table's commit log and snapshots, offsets checkpointed
+by Structured Streaming itself. Each format face is pinned ≡ its
+function face (CommitLogConsumer, read_snapshot, read_pruned,
+read_added, snapshot_as_of), and the sources must work from a foreign
+cwd, where only the driver can import the package — they are
+registered pickled by value (see streaming/manifest_source.py)."""
 
 from __future__ import annotations
 
@@ -567,3 +568,151 @@ def test_manifest_format_empty_scan_is_empty_frame(spark, tmp_path):
     empty_delta = (spark.read.format("manifest").option("path", root)
                    .option("startingSnapshot", "v1").load())
     assert empty_delta.count() == 0
+
+
+_FOREIGN_CWD_SCRIPT = """\
+import importlib.util
+import json
+import sys
+
+assert importlib.util.find_spec("db_loader_spark") is None
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.driver.memory", "1g")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+from db_loader_spark.streaming.manifest_source import (
+    register_manifest_cdc,
+    register_manifest_table,
+)
+
+register_manifest_cdc(spark)
+register_manifest_table(spark)
+root = {root!r}
+out = {{}}
+out["cdc_batch"] = [
+    list(r) for r in spark.read.format("manifest_cdc")
+    .option("path", root).load().collect()
+]
+q = (
+    spark.readStream.format("manifest_cdc").option("path", root).load()
+    .writeStream.format("memory").queryName("cdc")
+    .trigger(availableNow=True).start()
+)
+q.awaitTermination(120)
+out["cdc_stream"] = [list(r) for r in spark.sql("select * from cdc").collect()]
+out["table"] = [
+    list(r) for r in spark.read.format("manifest").option("path", root)
+    .option("pruneCol", "id").option("pruneLower", "5")
+    .option("pruneUpper", "150").option("timestampAsOf", {ts!r})
+    .load().collect()
+]
+with open({out!r}, "w") as fh:
+    json.dump(out, fh)
+spark.stop()
+"""
+
+
+def test_sources_work_from_a_foreign_cwd(spark, tmp_path):
+    """Python workers started from a cwd that cannot import the package
+    (and a PYTHONPATH without the repository) still run a batch
+    ``manifest_cdc`` read, an ``availableNow`` ``manifest_cdc`` stream,
+    and a ``manifest`` read with ``pruneCol`` and ``timestampAsOf``;
+    each equals its in-process function face."""
+    import json
+    import os
+    import subprocess
+    import sys
+    import time
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    root = _base(spark, tmp_path)
+    _dml_sequence(spark, root)
+    now = time.time()
+    lineage = M.snapshots(root)
+    for i, sid in enumerate(lineage):  # one commit per minute
+        t = now - 60 * (len(lineage) - i)
+        os.utime(os.path.join(root, "_manifests", f"{sid}.json"), (t, t))
+    ts = str(now - 60 * (len(lineage) - 2) + 30)  # just after d1
+    assert M.snapshot_as_of(root, ts) == "d1"
+    out = tmp_path / "out.json"
+    work = tmp_path / "cwd"
+    work.mkdir()
+    script = _FOREIGN_CWD_SCRIPT.format(
+        repo=repo, root=root, ts=ts, out=str(out)
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != repo
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=600, cwd=str(work), env=env,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    got = json.loads(out.read_text())
+
+    want = sorted(
+        (t[0], t[2], t[3], t[4] if len(t) > 4 else None)
+        for t in _consumer_rows(root)
+    )
+    for face in ("cdc_batch", "cdc_stream"):
+        rows = sorted((s, c, f, n) for s, _, c, f, n in got[face])
+        assert [r[:3] for r in rows] == [w[:3] for w in want], face
+        assert [r for r in rows if r[1].startswith("dv_")] == [
+            w for w in want if w[1].startswith("dv_")
+        ], face
+    fn = M.read_pruned(spark, root, "id", 5, 150, sid="d1")
+    assert sorted(map(tuple, got["table"])) == sorted(
+        map(tuple, fn.collect())
+    )
+    assert got["table"]
+
+
+def test_format_strings_live_only_in_sinks_manifest():
+    """Only ``sinks/manifest.py`` names the pointer and manifest files."""
+    import ast
+    from pathlib import Path
+
+    owner = Path(M.__file__)
+    pkg = owner.parents[1]
+    names = {"_CURRENT.gen", "_CURRENT", "_manifests"}
+    offenders = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != owner
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant) and node.value in names
+    ]
+    assert offenders == []
+
+
+def test_registered_source_classes_pickle_small(spark):
+    """Each DataSource and reader class pickles by value without
+    capturing a module object (one drags its whole namespace along),
+    and registration leaves the package pickled by reference."""
+    from pyspark import cloudpickle
+
+    import db_loader_spark
+    from db_loader_spark.streaming import manifest_source as S
+
+    S.register_manifest_cdc(spark)
+    S.register_manifest_table(spark)
+    assert "db_loader_spark" not in cloudpickle.list_registry_pickle_by_value()
+    classes = (
+        S.ManifestCDCDataSource, S.ManifestCDCStreamReader,
+        S.ManifestCDCBatchReader, S.ManifestTableDataSource,
+        S.ManifestTableReader,
+    )
+    cloudpickle.register_pickle_by_value(db_loader_spark)
+    try:
+        sizes = {c.__name__: len(cloudpickle.dumps(c)) for c in classes}
+    finally:
+        cloudpickle.unregister_pickle_by_value(db_loader_spark)
+    assert all(n < 48_000 for n in sizes.values()), sizes
