@@ -336,18 +336,6 @@ PNG_FEATURE_SCHEMA = (
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
-def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
-    return (
-        struct.pack(">I", len(data))
-        + ctype
-        + data
-        + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-    )
-
-
 def synth_png(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Deterministic 8-bit RGB PNG payloads built with ``struct`` +
     ``zlib`` only — REAL PNGs (signature, IHDR, zlib-deflated IDAT with
@@ -372,6 +360,10 @@ def synth_png(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
             if pa <= pb and pa <= pc:
                 return a
             return b if pb <= pc else c
+
+        def chunk(ctype: bytes, data: bytes) -> bytes:
+            crc = zlib.crc32(ctype + data) & 0xFFFFFFFF
+            return struct.pack(">I", len(data)) + ctype + data + struct.pack(">I", crc)
 
         for pdf in batches:
             payloads = []
@@ -413,9 +405,9 @@ def synth_png(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
                 ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
                 png = (
                     _PNG_SIG
-                    + _png_chunk(b"IHDR", ihdr)
-                    + _png_chunk(b"IDAT", zlib.compress(bytes(raw_stream)))
-                    + _png_chunk(b"IEND", b"")
+                    + chunk(b"IHDR", ihdr)
+                    + chunk(b"IDAT", zlib.compress(bytes(raw_stream)))
+                    + chunk(b"IEND", b"")
                 )
                 payloads.append(png)
             yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})

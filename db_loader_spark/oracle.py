@@ -169,7 +169,9 @@ def run_all(
     spark: SparkSession, sf_dir: str, only: list[str] | None = None
 ) -> list[CompareResult]:
     """Compare every registry query (or the ``only`` names, which may
-    also be diagnostics-tier specs) against its oracle."""
+    also be diagnostics-tier specs) against its oracle. A query that
+    raises is recorded as a failed ``CompareResult`` (rows -1, the
+    exception's repr as detail) and the sweep goes on to the next."""
     from db_loader_spark.queries import all_queries, diagnostic_queries
 
     specs = all_queries()
@@ -183,12 +185,15 @@ def run_all(
     for name, spec in specs.items():
         if only and name not in only:
             continue
-        df = spec.spark(spark, sf_dir)
-        if spec.oracle is None:
-            n = df.count()
-            results.append(CompareResult(name, n >= 0, n, -1, "rows-only"))
-        else:
-            results.append(compare(name, df, spec.oracle, con))
+        try:
+            df = spec.spark(spark, sf_dir)
+            if spec.oracle is None:
+                n = df.count()
+                results.append(CompareResult(name, n >= 0, n, -1, "rows-only"))
+            else:
+                results.append(compare(name, df, spec.oracle, con))
+        except Exception as e:  # noqa: BLE001 - recorded, sweep goes on
+            results.append(CompareResult(name, False, -1, -1, repr(e)))
     return results
 
 

@@ -32,25 +32,24 @@ Commit protocol details that carry the correctness weight:
 - The manifest (one JSON object per snapshot) is written COMPLETE
   before the pointer moves; a crash between the two leaves the old
   pointer valid.
-- The pointer is a GENERATION LOG (``_CURRENT.gen/<n>``, r12): commit
+- The pointer is a GENERATION LOG (``_CURRENT.gen/<n>``): commit
   = compare-and-swap via ``os.link`` of a fully-written scratch file
   onto the next generation number — atomic-exclusive, so exactly one
   writer wins each generation. On an object store each generation
   entry maps to a conditional PUT (If-None-Match) of that key — the
   one mutation primitive such stores provide. A best-effort legacy
-  ``_CURRENT`` mirror file is kept for humans and pre-r12 roots
-  (which the reader falls back to as generation 0).
+  ``_CURRENT`` mirror file is kept for humans and for roots that
+  predate the log (which the reader falls back to as generation 0).
 - Readers never list ``data/``: ``read_current`` loads the manifest's
   explicit file list, so partial uploads and stale files cannot leak
   into a scan.
-- CONCURRENCY CONTRACT (r12, upgraded from single-writer-per-root):
-  concurrent COMMITS against one root are safe and serialize through
-  the pointer CAS. Concurrent APPEND commits all land — a loser
+- CONCURRENCY CONTRACT: concurrent COMMITS against one root are safe
+  and serialize through the pointer CAS. Concurrent APPEND commits all land — a loser
   rebuilds its manifest on the fresh parent and re-CASes (its staged
   files are parent-independent). A losing MERGE or COMPACTION — whose
   content was DERIVED from the superseded parent — auto-REBASES
-  (r12b, the Delta/Iceberg OCC retry loop): ``merge_upsert`` /
-  ``compact_snapshot`` catch the typed ``ConcurrentPublishError``,
+  (the Delta/Iceberg OCC retry loop, ``_occ_loop``): the DML verbs
+  and ``compact_snapshot`` catch the typed ``ConcurrentPublishError``,
   re-read the fresh current, RE-DERIVE their content against it, and
   re-commit, up to ``rebase_retries`` times. Re-derivation IS the
   conflict resolution: the retry literally re-executes the operation
@@ -68,6 +67,12 @@ Commit protocol details that carry the correctness weight:
   writers — it reaps unreferenced data prefixes, which is exactly
   what an in-flight commit's staged files look like (the same
   retention caveat every table format documents).
+- ONE TOKEN RULE: every commit path asks ``_replayed`` whether its
+  ``snapshot_id`` already committed — ``publish`` before staging,
+  ``_occ_loop`` (DML, compaction, restore, schema evolution) before
+  every derivation — so a replay is judged the same way everywhere:
+  landed tokens no-op, provable residue is replaced, and a token the
+  lineage walk cannot prove (vacuum horizon) is refused.
 """
 
 from __future__ import annotations
@@ -106,16 +111,12 @@ _REBASE_RETRIES = 3
 
 # Sentinel for publish's ``_require_parent``: "this commit's content
 # was derived from NO parent" (an empty table at derivation time).
-# ``None`` can't express that — it means "no pin at all" — so before
-# this sentinel the empty-table merge path committed unpinned: a
-# concurrent first-writer landing between the OCC loop's
-# current_snapshot() read (None) and publish's own pointer read was
-# observed as current, passed the disabled pre-check, and had its
-# rows silently dropped by the batch-only child (ADVICE r12 #1, a
-# lost update the module's serializability contract forbids). With
-# the sentinel, publish requires the observed current to STILL be
-# None and raises ConcurrentPublishError otherwise, so the OCC loop
-# rebases into the real merge path against the interloper.
+# ``None`` can't express that — it means "no pin at all" — and an
+# unpinned empty-table merge would drop the rows of a first writer
+# that landed between the OCC loop's read and publish's: with the
+# sentinel, publish requires the observed current to STILL be None
+# and raises ConcurrentPublishError otherwise, so the OCC loop rebases
+# into the real merge path against the interloper.
 _NO_PARENT = "<derived-from-empty-table>"
 
 
@@ -126,11 +127,11 @@ class ConcurrentPublishError(RuntimeError):
     the NEW current and retry (``merge_upsert``/``compact_snapshot``
     do this automatically via their ``rebase_retries`` loop).
 
-    Typed (vs the bare RuntimeError it subclasses, for compatibility
-    with pre-r12b callers matching the message) so the OCC retry loop
-    can catch exactly the re-derivable failure and let every other
-    error — the horizon-truncated token refusal, pathological-
-    contention exhaustion, IO faults — propagate untouched."""
+    Typed (it subclasses RuntimeError, so callers matching the message
+    keep working) so the OCC retry loop can catch exactly the
+    re-derivable failure and let every other error — the
+    horizon-truncated token refusal, pathological-contention
+    exhaustion, IO faults — propagate untouched."""
 
 
 def _read_pointer(root: str) -> tuple[int, str | None]:
@@ -608,27 +609,29 @@ def publish(
     """Write ``df`` as a new snapshot of the table at ``root`` and
     atomically make it current. Returns the snapshot id.
 
-    ``_require_parent`` (internal, r12): commits whose CONTENT was
-    derived from a specific parent snapshot (merge_upsert's survivor
-    rows, compact_snapshot's rewrite) pass the snapshot they read.
-    If the pointer has already moved past it by publish time, the
-    commit raises the concurrent-publish error instead of silently
-    committing stale derivations on top of the interloper — the gap
-    between the caller's derivation read and publish's own parent
-    capture that the pre-CAS single-writer contract papered over.
-
     ``snapshot_id`` doubles as the idempotent retry token (the
-    at-least-once foreachBatch contract): a replay of a snapshot that
-    fully committed is a pure no-op — restaging would transiently
-    delete live files out from under concurrent readers — while a
-    replay after a pre-commit crash overwrites its own (unreferenced,
-    reader-invisible) staged files and re-points. The pointer advance
-    is a CAS on the generation log (r12), so concurrent commits
-    SERIALIZE: append losers rebuild on the fresh parent and retry
-    inside ``_commit_staged`` (all appends land); an overwrite that
-    lost the race with ``parent_check`` (default) fails loudly
+    at-least-once foreachBatch contract). Before anything is staged,
+    ``_replayed`` — the one token rule every commit path shares —
+    decides whether the token already committed: a replay of a landed
+    commit (current, superseded, or finished here from a torn
+    pre-flip state) is a pure no-op returning ``snapshot_id``, since
+    restaging would delete live files out from under concurrent
+    readers; provable residue of a lost attempt is removed and the
+    token commits fresh; a token the lineage walk cannot prove
+    (truncated at the vacuum horizon) is refused with a RuntimeError.
+    The pointer advance is a CAS on the generation log, so concurrent
+    commits SERIALIZE: append losers rebuild on the fresh parent and
+    retry inside ``_commit_staged`` (all appends land); an overwrite
+    that lost the race with ``parent_check`` (default) fails loudly
     instead of silently clobbering, and the manifest records the
     snapshot it superseded.
+
+    ``_require_parent`` (internal): commits whose CONTENT was derived
+    from a specific parent snapshot (the copy-on-write DML rewrite,
+    compact_snapshot) pass the snapshot they read. If the pointer has
+    already moved past it by publish time, the commit raises
+    ``ConcurrentPublishError`` instead of committing stale derivations
+    on top of the interloper.
 
     ``stats_cols`` adds per-file ZONE MAPS to the manifest (rows +
     min/max per column, harvested from the parquet footers already
@@ -649,9 +652,8 @@ def publish(
     the delta files only, never rescanning the corpus (the Iceberg
     incremental-scan design operators/cdc.py argues from).
 
-    SCHEMA-ON-MANIFEST (r12b — the production extension read_snapshot
-    always named): every commit records its snapshot schema, so reads
-    bind to the manifest's contract with ZERO footer reads (at
+    SCHEMA-ON-MANIFEST: every commit records its snapshot schema, so
+    reads bind to the manifest's contract with ZERO footer reads (at
     millions of files the metadata win the manifest exists for).
     Appends validate against the parent's recorded schema: identical
     types on shared names (no implicit casts), new columns only with
@@ -661,128 +663,15 @@ def publish(
     data_dir, man_dir, _ = _paths(root)
     os.makedirs(man_dir, exist_ok=True)
     sid = snapshot_id or _new_sid()
-    observed_gen, observed = _read_pointer(root)
-    if _require_parent is not None:
-        # _NO_PARENT pins "derived from an empty table": the observed
-        # current must still be None, else a first-writer interloper
-        # landed since the derivation and an unpinned commit here
-        # would drop its rows (ADVICE r12 #1).
-        expected = None if _require_parent == _NO_PARENT else _require_parent
-        if observed != expected and observed != sid:
-            raise ConcurrentPublishError(
-                f"concurrent publish detected at {root!r}: this commit's "
-                f"content was derived from "
-                f"{'an empty table' if expected is None else repr(expected)}"
-                f" but current is {observed!r}; re-derive on top of the "
-                "new current snapshot"
-            )
-    if observed == sid:
-        # Idempotent replay of the CURRENT snapshot (same epoch token):
-        # the pointer move is the LAST step of the protocol, so the
-        # pointer reading ``sid`` proves the staged files and manifest
-        # are complete. Restaging here would delete the very directory
-        # the live manifest's file list points to — a concurrent reader
-        # resolving the pointer mid-restage would hit missing files,
-        # violating the "complete old snapshot or complete new one"
-        # contract. The correct idempotent behavior is a pure no-op
-        # (same-token replays carry the same batch by the foreachBatch
-        # epoch contract). A crash BEFORE the pointer moved leaves
-        # observed != sid and takes the normal path, where overwriting
-        # the staged prefix is safe: no reader can reference it yet.
+    if snapshot_id is not None and _replayed(root, sid):
         return sid
-    if os.path.exists(os.path.join(man_dir, f"{sid}.json")):
-        # A manifest for this token exists but the pointer is elsewhere:
-        # either the token committed earlier and was since SUPERSEDED
-        # (e.g. foreachBatch restarted with a fresh checkpoint against
-        # an existing table root), or a crash hit the one-instruction
-        # window between manifest write and pointer flip. In the
-        # superseded case the LIVE lineage inherits data/<sid> files by
-        # reference — restaging would delete files concurrent readers
-        # resolve (torn reads) and an append would list data/<sid>
-        # twice (inherited from parent + new_files), double-counting
-        # rows. The two cases ARE locally distinguishable (r9, ADVICE
-        # r8): the on-disk manifest records the snapshot it superseded,
-        # and no operation ever moves the pointer BACKWARD (every
-        # publish/merge/compact commits a child of the observed
-        # current; vacuum keeps manifests), so
-        #   manifest.parent == observed  ⇔  the pointer never flipped —
-        # the crash case. Manifest and staged data are complete (the
-        # manifest is written AFTER its data files, both atomically),
-        # so the correct recovery is to FINISH the commit: flip the
-        # pointer and return. Treating this as unretryable made a
-        # persistent-checkpoint stream permanently wedged — foreachBatch
-        # derives sid from the epoch id and cannot mint a fresh token,
-        # so the restart re-raised forever until manual cleanup.
-        # Any other parent splits three ways, adjudicated below by a
-        # lineage walk (r12b): committed-then-superseded (idempotent
-        # no-op — the commit already landed), the crash residue of a
-        # LOST commit attempt (adopt — delete and commit fresh), or
-        # unprovable at the vacuum horizon (refuse).
-        # (restore_snapshot keeps these adjudications sound by never
-        # moving the pointer backward: a rollback is a NEW child
-        # commit inheriting the target's files, so history stays
-        # linear and no tombstoning is needed.)
-        if _manifest(root, sid).get("parent") == observed:
-            # Finish the torn commit via the CAS (r12): the pointer
-            # advance is conditional on the generation we observed, so
-            # the r9-r11 read-then-flip residual window — a concurrent
-            # writer committing a child of `observed` between our
-            # re-check and our flip, silently orphaned by the blind
-            # os.replace — is ELIMINATED, not narrowed: if any other
-            # commit landed first, our link loses and we re-read.
-            # Two benign post-loss outcomes: a CONCURRENT REPLAY OF
-            # THIS SAME TOKEN finished the flip (current == sid — the
-            # commit is done; raising would spuriously crash an
-            # at-least-once restart that cannot mint a fresh token),
-            # or a different child committed: fall through to the
-            # unretryable error.
-            if _advance_pointer(root, observed_gen, sid):
-                return sid
-            if _read_pointer(root)[1] == sid:
-                return sid  # a same-token replay completed the commit
-            observed_gen, observed = _read_pointer(root)
-        # Residue vs superseded (r12b): the manifest's parent is not
-        # the current snapshot, so either the token COMMITTED earlier
-        # and was since superseded, or it is the residue of a commit
-        # attempt that LOST its pointer race and crashed before the
-        # OCC scrub. The two are distinguishable because committed
-        # snapshots form the EXACT linear history of the pointer (each
-        # commit's parent is the generation value it replaced): a
-        # COMPLETE parent walk from current that meets ``sid`` proves
-        # it committed — the replay already HAPPENED, so the
-        # at-least-once answer is an idempotent no-op success (raising
-        # here permanently wedged a multi-writer stream whose epoch
-        # landed and was then superseded by another in-contract
-        # writer; foreachBatch cannot mint a fresh token — the r12
-        # close review). A walk that completes WITHOUT meeting it
-        # proves pure residue — never reader-visible, safe to adopt:
-        # delete it and commit this replay fresh on the current
-        # lineage. A walk truncated at the vacuum horizon
-        # (FileNotFoundError only, the r11 rule) proves nothing —
-        # refuse conservatively.
-        landed = _committed_in_lineage(root, sid, observed)
-        if landed is True:
-            return sid  # this epoch's commit is already in history
-        if landed is False:
-            os.unlink(os.path.join(man_dir, f"{sid}.json"))
-        else:
-            raise RuntimeError(
-                f"snapshot token {sid!r} has a manifest at {root!r} but "
-                f"is not the current snapshot ({observed!r}) and the "
-                "lineage walk truncated at the vacuum horizon — cannot "
-                "prove it superseded vs lost-race residue; retry with a "
-                "fresh snapshot_id"
-            )
-    staged = os.path.join(data_dir, sid)
-    if os.path.isdir(staged) and _prefix_live(root, sid):
-        # No manifest for this token (the adjudications above all
-        # passed), yet its staged prefix is REFERENCED by the live
-        # lineage: the token committed, was superseded, and vacuum
-        # reaped its manifest while keeping its inherited files.
-        # Restaging would overwrite live data (and an append would
-        # land the batch a second time). Idempotent no-op (r13 review).
-        return sid
+    if _require_parent is None:
+        observed_gen, observed = _read_pointer(root)
+    else:
+        observed = None if _require_parent == _NO_PARENT else _require_parent
+        observed_gen = _pinned_gen(root, observed, "commit's content")
     # stage: snapshot-unique prefix; overwrite = idempotent retry
+    staged = os.path.join(data_dir, sid)
     df.write.mode("overwrite").parquet(staged)
     files = sorted(
         f for f in os.listdir(staged) if f.endswith(".parquet")
@@ -814,9 +703,81 @@ def publish(
         # (pre-schema) lineage must not record the survivors' frame as
         # the table contract — carried files may hold columns it lacks
         # (the legacy-stays-legacy rule _merge_schemas applies to
-        # appends; r12 close review)
+        # appends)
         schema=_schema_json(df) if _record_schema else None,
         merge_schema=merge_schema,
+    )
+
+
+def _pinned_gen(root: str, parent: str | None, what: str) -> int:
+    """The pointer generation a commit whose ``what`` was derived from
+    ``parent`` (None: an empty table) CASes from. Raises
+    ``ConcurrentPublishError`` when the pointer has moved since the
+    derivation read, so the OCC loop re-derives on the new current."""
+    gen, observed = _read_pointer(root)
+    if observed != parent:
+        src = "an empty table" if parent is None else repr(parent)
+        raise ConcurrentPublishError(
+            f"concurrent publish detected at {root!r}: current is "
+            f"{observed!r}, but this {what} derived from {src}; "
+            "re-derive on top of the new current snapshot"
+        )
+    return gen
+
+
+def _replayed(root: str, sid: str) -> bool:
+    """Whether replay token ``sid`` has already committed — the one
+    token rule. ``publish`` asks it before staging and ``_occ_loop``
+    before every derivation, so every commit path reaches it. In order:
+
+    1. The pointer names ``sid``: the pointer moves last, so the
+       commit is complete.
+    2. A manifest for ``sid`` whose parent is the current snapshot is
+       a torn commit — the manifest is written only after its data, so
+       both are complete and only the pointer flip is missing. Finish
+       it with the CAS; a lost CAS still counts as landed when a
+       same-token twin finished it.
+    3. Any other manifest is either a commit since superseded or the
+       residue of a lost attempt. Committed snapshots are exactly the
+       pointer's linear history (each commit's parent is the
+       generation value its CAS replaced, and nothing moves the
+       pointer backward), so a parent walk from the current snapshot
+       decides: meeting ``sid`` means landed; completing without it
+       proves residue, which is removed. A walk truncated at the
+       vacuum horizon proves neither — overwriting a possibly
+       committed manifest would write a cycle into the chain — so the
+       token is refused with a RuntimeError.
+    4. No manifest, but ``data/<sid>`` is referenced by the live
+       lineage: the token committed and vacuum reaped its manifest
+       while its files live on (``_prefix_live``).
+
+    False means no committed life of the token is visible: stage and
+    commit it."""
+    gen, cur = _read_pointer(root)
+    if cur == sid:
+        return True
+    man_path = os.path.join(root, _MANIFESTS, f"{sid}.json")
+    if os.path.exists(man_path):
+        if _manifest(root, sid).get("parent") == cur:
+            if _advance_pointer(root, gen, sid):
+                return True
+            _, cur = _read_pointer(root)
+            if cur == sid:
+                return True  # a same-token twin finished the commit
+        landed = _committed_in_lineage(root, sid, cur)
+        if landed is None:
+            raise RuntimeError(
+                f"snapshot token {sid!r} has a manifest at {root!r} but "
+                f"is not the current snapshot ({cur!r}) and the lineage "
+                "walk truncated at the vacuum horizon — cannot prove it "
+                "superseded vs lost-race residue; retry with a fresh "
+                "snapshot_id"
+            )
+        if landed:
+            return True
+        os.unlink(man_path)
+    return os.path.isdir(os.path.join(root, _DATA, sid)) and _prefix_live(
+        root, sid
     )
 
 
@@ -837,8 +798,10 @@ def _commit_staged(
     deletes: dict | None = None,
 ) -> str:
     """Commit already-staged data files as snapshot ``sid``: write the
-    manifest, then CAS the pointer. This is the multi-writer half of
-    ``publish`` (r12, upgrading the r9-r11 single-writer contract):
+    manifest, then CAS the pointer — the one loop over
+    ``_COMMIT_RETRIES`` in the module. Callers have already asked
+    ``_replayed`` about ``sid`` (``publish`` directly, the DML,
+    restore and evolve paths through ``_occ_loop``).
 
     - The pointer advance is a compare-and-swap on the generation log
       (``_advance_pointer``), so two concurrent commits SERIALIZE —
@@ -850,9 +813,9 @@ def _commit_staged(
       re-attempted — concurrent appends ALL land, serialized, each
       lineage step containing the union so far.
     - A lost race on an overwrite with ``parent_check`` (default) or
-      on a merge commit (``inherit_files`` — content DERIVED from the
-      parent, unsafe to re-point blindly) raises the loud concurrent-
-      publish error; the caller re-derives against the new current.
+      on an ``inherit_files`` commit (content DERIVED from the parent,
+      unsafe to re-point blindly) raises ``ConcurrentPublishError``;
+      ``_occ_loop`` re-derives against the new current.
       ``parent_check=False`` overwrites retry like appends (last-
       writer-wins, but serialized — both snapshots exist in the
       lineage, one supersedes).
@@ -866,11 +829,9 @@ def _commit_staged(
 
     Side effect on a lost+raised race: ``sid``'s manifest file remains
     on disk (parent = the superseded snapshot) — inert residue,
-    unreferenced by any pointer, reaped by vacuum. A same-token retry
-    no longer wedges on it (r12b): the OCC rebase loop scrubs it
-    before re-deriving, and publish itself adjudicates residue vs
-    committed-then-superseded by lineage walk, adopting provable
-    residue instead of refusing it.
+    unreferenced by any pointer, reaped by vacuum. ``_occ_loop``
+    scrubs it before re-deriving, and ``_replayed`` removes any that a
+    crash left behind once its lineage walk proves it never committed.
     """
     man_dir = os.path.join(root, _MANIFESTS)
     for _ in range(_COMMIT_RETRIES):
@@ -922,7 +883,7 @@ def _commit_staged(
         if meta:
             manifest["files_meta"] = meta
             if len(meta) == len(manifest["files"]):
-                # LOGICAL rows (r13 review): files_meta records physical
+                # LOGICAL rows: files_meta records physical
                 # per-file counts, but the snapshot's row count is what
                 # a reader gets — masked deletion-vector positions
                 # subtract, or metadata tooling disagrees with
@@ -963,8 +924,8 @@ def _committed_in_lineage(root: str, sid: str, cur: str | None) -> bool | None:
     generation value its CAS replaced, and nothing moves the pointer
     backward). None — the walk was truncated at the vacuum retention
     horizon: ONLY ``FileNotFoundError`` on an ancestor manifest means
-    truncation (the r11 rule); any other error is transient IO and
-    propagates rather than masquerading as an adjudication."""
+    truncation; any other error is transient IO and propagates rather
+    than masquerading as an adjudication."""
     seen: set[str] = set()
     while cur is not None and cur not in seen:
         if cur == sid:
@@ -1081,8 +1042,8 @@ def _prefix_live(root: str, sid: str) -> bool:
     under ``data/<sid>/`` — data files inherited forward by appends/
     merges, or deletion-vector sidecars still masking live files.
 
-    This is the local adjudicator for the one replay case the
-    manifest-exists walks cannot see (r13 review): a token whose
+    This is step 4 of ``_replayed``, the one replay case the
+    manifest-exists walks cannot see: a token whose
     manifest was VACUUM-REAPED but whose staged files live on because
     newer manifests reference them. Staging ``data/<sid>`` again
     (mode=overwrite) would destroy files concurrent readers resolve —
@@ -1094,9 +1055,8 @@ def _prefix_live(root: str, sid: str) -> bool:
     documented out-of-contract case every table format shares."""
     prefix = f"{_DATA}/{sid}/"
     # one inline parent walk, newest first — snapshots() + per-sid
-    # re-reads would parse every manifest twice (second r13 review,
-    # the poll() double-read shape); the horizon break mirrors
-    # snapshots()' normal post-vacuum truncation
+    # re-reads would parse every manifest twice; the horizon break
+    # mirrors snapshots()' normal post-vacuum truncation
     cur = current_snapshot(root)
     seen: set[str] = set()
     while cur is not None and cur not in seen:
@@ -1121,8 +1081,9 @@ def _scrub_lost_attempt(
     root: str, sid: str | None, derived_parent: str | None
 ) -> None:
     """Remove the manifest residue a LOST same-token commit attempt
-    left behind, so an OCC rebase retry of that token isn't refused by
-    publish's superseded-token check. Only scrubs a manifest provably
+    left behind, so an OCC rebase retry of that token does not have to
+    prove it residue by a lineage walk (a walk truncated at the vacuum
+    horizon could not). Only scrubs a manifest provably
     written by the lost attempt: its recorded parent must equal the
     parent the attempt derived against. A manifest from an earlier
     COMMITTED life of the token can never satisfy that — its parent is
@@ -1145,31 +1106,21 @@ def _scrub_lost_attempt(
 def _occ_loop(
     root: str, snapshot_id: str | None, retries: int | None, attempt
 ) -> tuple[str, bool]:
-    """The OCC retry protocol every derived commit speaks: read the
-    current snapshot, honor the exactly-once replay guard (``parent ==
-    snapshot_id`` — the token already committed, possibly finished by
-    a twin mid-rebase; re-deriving would apply the batch to ITS OWN
-    RESULT), run ``attempt(parent)`` (the op-specific derive + commit,
-    returning ``(sid, committed)``), and on a lost pointer race scrub
-    the same-token residue and re-derive on the fresh current, up to
-    ``retries`` times (None means ``_REBASE_RETRIES``). Exhaustion
-    re-raises the final ``ConcurrentPublishError``. A replay resolved
-    here returns ``(snapshot_id, False)``: this call minted nothing."""
+    """The OCC retry protocol every derived commit speaks — the DML
+    verbs, compaction, restore and schema evolution: read the current
+    snapshot, ask ``_replayed`` whether the token already committed
+    (re-deriving a landed token would apply the batch to ITS OWN
+    RESULT; an unprovable token raises), run ``attempt(parent)`` (the
+    op-specific derive + commit, returning ``(sid, committed)``), and
+    on a lost pointer race scrub the same-token residue and re-derive
+    on the fresh current, up to ``retries`` times (None means
+    ``_REBASE_RETRIES``). Exhaustion re-raises the final
+    ``ConcurrentPublishError``. A replay resolved here returns
+    ``(snapshot_id, False)``: this call minted nothing."""
     retries = _REBASE_RETRIES if retries is None else retries
     for i in range(retries + 1):
         parent = current_snapshot(root)
-        if snapshot_id is not None and parent == snapshot_id:
-            return snapshot_id, False
-        if (
-            snapshot_id is not None
-            and os.path.exists(
-                os.path.join(root, _MANIFESTS, f"{snapshot_id}.json")
-            )
-            and _committed_in_lineage(root, snapshot_id, parent) is True
-        ):
-            # committed then SUPERSEDED by another writer: publish
-            # would no-op this anyway (lineage-walk adjudication), but
-            # only after attempt() re-ran the full derivation
+        if snapshot_id is not None and _replayed(root, snapshot_id):
             return snapshot_id, False
         try:
             return attempt(parent)
@@ -1545,14 +1496,12 @@ def _row_dml(
     on_empty=None,
 ) -> tuple[str, bool]:
     """The DML core every row-level verb runs through, inside the OCC
-    loop: a table with no snapshot runs ``on_empty`` (FileNotFoundError
-    without one); the parent's manifest is pinned; a replay of a
-    committed token whose manifest vacuum reaped — its ``data/<sid>``
-    still referenced by the live lineage — is a no-op, decided FIRST
-    so it pays no Spark work and never restages a prefix whose files
-    or vectors the current manifest resolves; ``derive(pm)`` validates
-    against the parent and returns the ``_Edit`` (None: a no-op); the
-    copy-on-write or merge-on-read writer commits it. ``src``, the
+    loop (whose ``_replayed`` check settles a replayed token before
+    any Spark work): a table with no snapshot runs ``on_empty``
+    (FileNotFoundError without one); the parent's manifest is pinned;
+    ``derive(pm)`` validates against the parent and returns the
+    ``_Edit`` (None: a no-op); the copy-on-write or merge-on-read
+    writer commits it. ``src``, the
     caller's batch, stays persisted for the whole call so every
     consumer reads the SAME materialization.
 
@@ -1567,9 +1516,6 @@ def _row_dml(
             return on_empty(), True
         pm = _manifest(root, parent)
         sid = snapshot_id or _new_sid()
-        staged = os.path.join(root, _DATA, sid)
-        if os.path.isdir(staged) and _prefix_live(root, sid):
-            return sid, False  # committed, superseded, manifest reaped
         edit = derive(pm)
         if edit is None:
             return parent, False
@@ -1824,8 +1770,8 @@ def _mor_mask_append_commit(
     """The merge-on-read commit tail: stage ``batch`` as the appended
     data files, move the freshly written vector parts in beside them
     under ``dv-`` names, harvest zone maps for the new files, extend
-    the parent's delete map, precheck the pointer against the
-    derivation parent, and CAS-commit the parent's file list verbatim
+    the parent's delete map, pin the pointer to the derivation parent,
+    and CAS-commit the parent's file list verbatim
     plus the appends."""
     from urllib.parse import unquote
 
@@ -1874,16 +1820,6 @@ def _mor_mask_append_commit(
             os.path.join(_DATA, sid, f"dv-{p}") for p in r["parts"]
         ]
         entry["rows"] += r["n"]
-    # the derivation pin: the positions were read from ``parent``
-    observed_gen, observed = _read_pointer(root)
-    if observed == sid:
-        return sid  # a same-token twin finished this commit
-    if observed != parent:
-        raise ConcurrentPublishError(
-            f"concurrent publish detected at {root!r}: this {verb}'s "
-            f"positions were derived from {parent!r} but current is "
-            f"{observed!r}; re-derive on top of the new current snapshot"
-        )
     return _commit_staged(
         root,
         sid,
@@ -1893,8 +1829,9 @@ def _mor_mask_append_commit(
         parent_check=True,
         inherit_files=list(pm["files"]),
         inherit_meta=dict(meta),
-        observed_gen=observed_gen,
-        observed=observed,
+        # the derivation pin: the positions were read from ``parent``
+        observed_gen=_pinned_gen(root, parent, f"{verb}'s positions"),
+        observed=parent,
         schema=pm.get("schema"),
         deletes=deletes,
     )
@@ -2194,21 +2131,24 @@ def restore_snapshot(
     """RESTORE (Delta ``RESTORE TABLE ... TO VERSION``, Iceberg
     rollback): make the table's current state equal snapshot ``sid``
     again, as a NEW commit — metadata only, zero data movement. The
-    new manifest inherits the target's file list by reference (files
-    are immutable and, within the vacuum retention window, still on
-    disk), so a 100 TB rollback is one JSON write + one pointer CAS.
+    new manifest inherits the target's file list, zone maps, schema and
+    deletion vectors by reference (files are immutable and, within the
+    vacuum retention window, still on disk), so a 100 TB rollback is
+    one JSON write + one pointer CAS.
 
-    CRITICALLY, the pointer never moves BACKWARD: restore mints a
-    fresh snapshot that is a CHILD of the current one. That keeps the
-    lineage linear and every adjudication in this module sound — the
-    torn-commit test (``manifest.parent == observed`` ⇔ never
-    flipped), the residue-vs-superseded lineage walk, and the
-    ``snapshots()`` cycle guard all rely on monotonic history. A
-    restore that re-pointed at the OLD sid would need manifest
-    tombstones; a restore that REUSED a committed token would write a
-    cycle into the parent chain — both are refused here.
+    The pointer never moves BACKWARD: restore mints a fresh snapshot
+    that is a CHILD of the current one. That keeps the lineage linear,
+    which every adjudication in ``_replayed`` and the ``snapshots()``
+    cycle guard rely on. A restore that re-pointed at the OLD sid
+    would need manifest tombstones; a restore that REUSED a committed
+    token would write a cycle into the parent chain — both are refused.
 
     Rules:
+    - ``snapshot_id`` is the replay token, judged by ``_replayed``
+      before the target is looked at: a replay of a restore that
+      already committed no-ops even if the TARGET has since been
+      vacuumed (the committed restore carries the files under its own
+      manifest), and an unprovable token is refused.
     - The target must be a COMMITTED snapshot in the current lineage
       (walk-proven). A residue manifest, or a target past the vacuum
       horizon (manifest reaped — FileNotFoundError — or any listed
@@ -2216,99 +2156,54 @@ def restore_snapshot(
       over missing files would tear every future read.
     - Restoring to the current snapshot is a documented no-op
       returning ``sid`` (nothing to change; Delta's behavior).
-    - A lost pointer race retries on the fresh parent: the inherited
-      content is derived from the immutable TARGET, not from the
-      parent, so the rebuild is pure metadata (the same reason append
-      losers retry inside ``_commit_staged`` — restore loops here
-      because that guard conservatively pins every ``inherit_files``
-      commit, whose usual source is merge derivation).
+    - The restore runs on ``_occ_loop`` with ``_COMMIT_RETRIES``
+      retries: its content derives from the immutable TARGET, not
+      from the parent, so a lost pointer race costs only a metadata
+      rebuild on the fresh current.
     """
-    man_dir = os.path.join(root, _MANIFESTS)
     new_sid = snapshot_id or _new_sid()
-    # Replay guards BEFORE target validation (r12 close review): an
-    # at-least-once replay of a restore that already committed must
-    # no-op even if the TARGET has since been vacuumed — the committed
-    # restore carries the files under its own manifest.
-    _, observed = _read_pointer(root)
-    if observed == new_sid:
-        return new_sid  # replayed restore: already committed
-    if observed == sid:
-        return sid  # already AT the target state: no-op
-    if (
-        snapshot_id is not None
-        and os.path.exists(os.path.join(man_dir, f"{new_sid}.json"))
-        and _committed_in_lineage(root, new_sid, observed) is True
-    ):
-        return new_sid  # committed then superseded: idempotent no-op
-    tm = _manifest(root, sid)  # FileNotFoundError: reaped target
-    needed = list(tm["files"]) + sorted(
-        # the target's deletion vectors are part of its state: a
-        # restore that lost them would RESURRECT the deleted rows
-        {p for e in tm.get("deletes", {}).values() for p in e["dv"]}
-    )
-    missing = [
-        f for f in needed
-        if not os.path.exists(os.path.join(root, f))
-    ]
-    if missing:
-        raise FileNotFoundError(
-            f"cannot restore {root!r} to {sid!r}: {len(missing)} of its "
-            f"data/deletion-vector files were vacuumed "
-            f"(first: {missing[0]!r})"
+
+    def attempt(parent):
+        if parent == sid:
+            return sid, False  # already AT the target state: no-op
+        tm = _manifest(root, sid)  # FileNotFoundError: reaped target
+        needed = list(tm["files"]) + sorted(
+            # the target's deletion vectors are part of its state: a
+            # restore that lost them would RESURRECT the deleted rows
+            {p for e in tm.get("deletes", {}).values() for p in e["dv"]}
         )
-    for _ in range(_COMMIT_RETRIES):
-        observed_gen, observed = _read_pointer(root)
-        if observed == new_sid:
-            return new_sid  # replayed restore: already committed
-        if observed == sid:
-            return sid  # already AT the target state: no-op
-        if _committed_in_lineage(root, sid, observed) is not True:
+        missing = [
+            f for f in needed
+            if not os.path.exists(os.path.join(root, f))
+        ]
+        if missing:
+            raise FileNotFoundError(
+                f"cannot restore {root!r} to {sid!r}: {len(missing)} of "
+                f"its data/deletion-vector files were vacuumed "
+                f"(first: {missing[0]!r})"
+            )
+        if _committed_in_lineage(root, sid, parent) is not True:
             raise RuntimeError(
                 f"cannot restore {root!r} to {sid!r}: not a committed "
                 "snapshot of the live lineage (a lost-commit residue "
                 "manifest, or the walk truncated at the vacuum horizon)"
             )
-        if os.path.exists(os.path.join(man_dir, f"{new_sid}.json")):
-            # same adjudication as publish: a committed-then-superseded
-            # token already DID its restore — idempotent no-op (it must
-            # never recommit: its manifest is load-bearing history, and
-            # overwriting writes a CYCLE into the chain); provable
-            # crash residue of a lost restore is adopted; an
-            # unprovable (horizon-truncated) case refuses.
-            landed = _committed_in_lineage(root, new_sid, observed)
-            if landed is True:
-                return new_sid
-            if landed is False:
-                os.unlink(os.path.join(man_dir, f"{new_sid}.json"))
-            else:
-                raise RuntimeError(
-                    f"snapshot token {new_sid!r} already has a manifest "
-                    f"at {root!r} and the lineage walk truncated at the "
-                    "vacuum horizon; restoring over it could corrupt "
-                    "the lineage — use a fresh snapshot_id"
-                )
-        try:
-            return _commit_staged(
-                root,
-                new_sid,
-                [],
-                new_meta={},
-                append=False,
-                parent_check=True,
-                inherit_files=list(tm["files"]),
-                inherit_meta=dict(tm.get("files_meta", {})),
-                observed_gen=observed_gen,
-                observed=observed,
-                schema=tm.get("schema"),  # the restored contract
-                deletes=dict(tm.get("deletes", {})),  # restored mask
-            )
-        except ConcurrentPublishError:
-            continue  # metadata-only rebuild: re-read, re-commit
-    raise ConcurrentPublishError(
-        f"restore of {root!r} to {sid!r} lost {_COMMIT_RETRIES} "
-        "consecutive pointer races — the root is pathologically "
-        "contended"
-    )
+        return _commit_staged(
+            root,
+            new_sid,
+            [],
+            new_meta={},
+            append=False,
+            parent_check=True,
+            inherit_files=list(tm["files"]),
+            inherit_meta=dict(tm.get("files_meta", {})),
+            observed_gen=_pinned_gen(root, parent, "restore"),
+            observed=parent,
+            schema=tm.get("schema"),  # the restored contract
+            deletes=dict(tm.get("deletes", {})),  # restored mask
+        ), True
+
+    return _occ_loop(root, snapshot_id, _COMMIT_RETRIES, attempt)[0]
 
 
 def evolve_schema(root: str, add, snapshot_id: str | None = None) -> str:
@@ -2320,8 +2215,7 @@ def evolve_schema(root: str, add, snapshot_id: str | None = None) -> str:
     through the recorded schema (``_manifest_reader``), exactly as a
     ``merge_schema=True`` append would bind them, but without needing
     rows to carry. The CDC apply side uses this to make a replica
-    follow its source's evolution before applying an evolved range
-    (VERDICT r14 #3).
+    follow its source's evolution before applying an evolved range.
 
     Rules (the ``_merge_schemas`` append contract): an added name
     that already exists must have the IDENTICAL type (conflict = loud
@@ -2329,9 +2223,10 @@ def evolve_schema(root: str, add, snapshot_id: str | None = None) -> str:
     documented idempotent no-op returning the current sid; a legacy
     lineage (no recorded schema) cannot evolve by metadata — its old
     files' columns are unknown — use a ``merge_schema`` append there.
-    Same retry-on-lost-race loop and exactly-once ``snapshot_id``
-    token as restore (pure-metadata rebuilds are free to re-derive)."""
-    from pyspark.sql.types import StructField, StructType
+    Runs on ``_occ_loop`` with ``_COMMIT_RETRIES`` retries, as restore
+    does: ``snapshot_id`` is judged by ``_replayed``, and a lost
+    pointer race re-merges the schema on the fresh current."""
+    from pyspark.sql.types import StructType
 
     if isinstance(add, StructType):
         add_json = add.jsonValue()
@@ -2339,34 +2234,12 @@ def evolve_schema(root: str, add, snapshot_id: str | None = None) -> str:
         add_json = StructType(list(add)).jsonValue()
     else:
         add_json = add
-    man_dir = os.path.join(root, _MANIFESTS)
     new_sid = snapshot_id or _new_sid()
-    for _ in range(_COMMIT_RETRIES):
-        observed_gen, observed = _read_pointer(root)
-        if observed is None:
+
+    def attempt(parent):
+        if parent is None:
             raise FileNotFoundError(f"no current snapshot at {root!r}")
-        if observed == new_sid:
-            return new_sid  # replayed evolution: already committed
-        if os.path.exists(os.path.join(man_dir, f"{new_sid}.json")):
-            # full token adjudication, the restore_snapshot contract
-            # (review r15 pass 2 #3): committed-then-superseded is an
-            # idempotent no-op; provable crash residue is removed and
-            # re-derived; a walk TRUNCATED at the vacuum horizon
-            # (None) is unprovable — overwriting a possibly-committed
-            # manifest would write a cycle into the chain, so refuse
-            landed = _committed_in_lineage(root, new_sid, observed)
-            if landed is True:
-                return new_sid
-            if landed is False:
-                os.unlink(os.path.join(man_dir, f"{new_sid}.json"))
-            else:
-                raise RuntimeError(
-                    f"snapshot token {new_sid!r} already has a manifest "
-                    f"at {root!r} and the lineage walk truncated at the "
-                    "vacuum horizon; evolving over it could corrupt "
-                    "the lineage — use a fresh snapshot_id"
-                )
-        pm = _manifest(root, observed)
+        pm = _manifest(root, parent)
         if pm.get("schema") is None:
             raise ValueError(
                 f"cannot evolve {root!r} by metadata: the lineage has no "
@@ -2376,29 +2249,23 @@ def evolve_schema(root: str, add, snapshot_id: str | None = None) -> str:
         merged = _merge_schemas(pm["schema"], add_json, True, root)
         existing = {f["name"] for f in pm["schema"]["fields"]}
         if all(f["name"] in existing for f in add_json["fields"]):
-            return observed  # every column already present: no-op
-        try:
-            return _commit_staged(
-                root,
-                new_sid,
-                [],
-                new_meta={},
-                append=False,
-                parent_check=True,
-                inherit_files=list(pm["files"]),
-                inherit_meta=dict(pm.get("files_meta", {})),
-                observed_gen=observed_gen,
-                observed=observed,
-                schema=merged,
-                deletes=dict(pm.get("deletes", {})),
-            )
-        except ConcurrentPublishError:
-            continue  # metadata-only rebuild: re-read, re-merge, re-commit
-    raise ConcurrentPublishError(
-        f"schema evolution of {root!r} lost {_COMMIT_RETRIES} "
-        "consecutive pointer races — the root is pathologically "
-        "contended"
-    )
+            return parent, False  # every column already present: no-op
+        return _commit_staged(
+            root,
+            new_sid,
+            [],
+            new_meta={},
+            append=False,
+            parent_check=True,
+            inherit_files=list(pm["files"]),
+            inherit_meta=dict(pm.get("files_meta", {})),
+            observed_gen=_pinned_gen(root, parent, "schema evolution"),
+            observed=parent,
+            schema=merged,
+            deletes=dict(pm.get("deletes", {})),
+        ), True
+
+    return _occ_loop(root, snapshot_id, _COMMIT_RETRIES, attempt)[0]
 
 
 def added_files(root: str, from_sid: str | None, to_sid: str) -> list[str]:

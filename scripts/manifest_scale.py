@@ -6,7 +6,7 @@ arguments but no measured slopes; this sweep measures the claims on a
 synthetic orders-shaped table whose ROW COUNT scales while the CDC
 batch and the pruned-read range stay FIXED:
 
-  - publish (base snapshot, range-clustered, zone maps): ~linear in n
+  - publish (base snapshot, range-partitioned, zone maps): ~linear in n
     (it writes the data; the footer walk is per-file, file count grows
     with n at constant file size).
   - merge_upsert of a FIXED, key-localized CDC batch: ~flat wall — the
@@ -44,8 +44,12 @@ PRUNE_LO, PRUNE_HI = 1_000, 3_000  # fixed pruned-read range
 
 
 def synth(spark, scale: int):
+    # one contiguous key range per partition, fixed by n and the file
+    # count alone: the base's file boundaries (and so every touched set
+    # and committed byte after them) cannot depend on the session's
+    # history, as a sampled repartitionByRange's would
     n = BASE_ROWS * scale
-    return spark.range(n).select(
+    return spark.range(0, n, 1, FILES_PER_SCALE * scale).select(
         F.col("id").alias("k"),
         F.expr("concat('P', pmod(hash(concat('pr:', id)), 5))").alias("pr"),
         F.expr("CAST(pmod(hash(concat('c:', id)), 100000) AS BIGINT)").alias(
@@ -63,12 +67,24 @@ def timed(label: str, fn) -> None:
 def sweep(spark, scale: int) -> None:
     root = tempfile.mkdtemp(prefix=f"manifest_scale_{scale}x_")
     shutil.rmtree(root, ignore_errors=True)
+
+    def staged_bytes(sid: str) -> str:
+        # the scale-invariant witness: bytes this commit physically
+        # wrote, from its own data/<sid> prefix
+        d = os.path.join(root, "data", sid)
+        total = sum(
+            os.path.getsize(os.path.join(d, f))
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        )
+        return f"[committed {total / 1e6:.2f} MB, {total} B]"
+
     base = synth(spark, scale)
     n = BASE_ROWS * scale
     timed(
         f"publish {scale}x",
         lambda: M.publish(
-            base.repartitionByRange(FILES_PER_SCALE * scale, F.col("k")),
+            base,
             root,
             snapshot_id="base",
             stats_cols=["k"],
@@ -88,7 +104,8 @@ def sweep(spark, scale: int) -> None:
         f"merge_upsert {scale}x (fixed {BATCH_KEYS}-key batch)",
         lambda: M.merge_upsert(
             spark, upd.unionByName(ins), root, "k", snapshot_id="merged"
-        ),
+        )
+        + " " + staged_bytes("merged"),
     )
     timed(
         f"read_pruned {scale}x (fixed range)",
@@ -120,7 +137,8 @@ def sweep(spark, scale: int) -> None:
             root,
             f"k >= {PRUNE_LO} AND k < {PRUNE_HI}",
             snapshot_id="deleted",
-        ),
+        )
+        + " " + staged_bytes("deleted"),
     )
     timed(
         f"restore {scale}x (metadata-only rollback)",
@@ -134,17 +152,6 @@ def sweep(spark, scale: int) -> None:
     # apart from the predicate scan). The read-back after MOR prices
     # the anti-join readers pay until OPTIMIZE absorbs the vectors.
     scattered = f"pmod(hash(concat('s:', k)), {n}) < 2000"  # ~2000 rows, all files
-
-    def staged_bytes(sid: str) -> str:
-        # the SCALE-INVARIANT witness (VERDICT r12 #6's point): bytes
-        # this commit physically wrote, from its own data/<sid> prefix
-        d = os.path.join(root, "data", sid)
-        total = sum(
-            os.path.getsize(os.path.join(d, f))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-        return f"[committed {total / 1e6:.2f} MB]"
 
     timed(
         f"delete_where COW {scale}x (scattered ~2000 rows)",

@@ -141,3 +141,21 @@ def test_dml_reaches_commit_staged_only_through_the_mor_tail():
 
 def test_one_snapshot_id_formula():
     assert MANIFEST.read_text().count("time.time() * 1000") == 1
+
+
+def test_one_token_adjudicator():
+    """The replay-token rule lives in ``_replayed``: only it asks
+    whether a token's files are live, only it and restore's target
+    check walk the lineage for a snapshot, and ``_commit_staged`` is
+    the one loop over the pointer-race budget."""
+    tree = _tree()
+    assert _callers(tree, "_prefix_live") == ["_replayed"]
+    assert sorted(_callers(tree, "_committed_in_lineage")) == [
+        "_replayed", "restore_snapshot",
+    ]
+    loops = [
+        fn.name for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        and "range(_COMMIT_RETRIES)" in ast.unparse(fn)
+    ]
+    assert loops == ["_commit_staged"]

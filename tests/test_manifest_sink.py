@@ -1093,6 +1093,71 @@ def test_publish_refuses_residue_when_lineage_walk_truncates(spark, tmp_path):
     assert M.current_snapshot(root) == "e2"  # untouched
 
 
+def _ghost_commit(spark, root, verb: str):
+    """Run ``verb`` against ``root`` with the replay token ``ghost``."""
+    from pyspark.sql.types import StringType, StructField
+
+    ids = spark.range(2)
+    flagged = ids.select("id", F.lit(False).alias("_delete"))
+    name, _, mode = verb.partition("-")
+    kw = {"snapshot_id": "ghost"}
+    if mode:
+        kw["mode"] = mode
+    return {
+        "publish": lambda: M.publish(ids, root, append=True, **kw),
+        "delete_where": lambda: M.delete_where(spark, root, "id < 2", **kw),
+        "update_where": lambda: M.update_where(
+            spark, root, "id < 2", {"id": "id + 100"}, **kw
+        ),
+        "merge_upsert": lambda: M.merge_upsert(spark, ids, root, "id", **kw),
+        "merge_apply": lambda: M.merge_apply(spark, flagged, root, "id", **kw),
+        "compact_snapshot": lambda: M.compact_snapshot(spark, root, 1, **kw),
+        "restore_snapshot": lambda: M.restore_snapshot(root, "e2", **kw),
+        "evolve_schema": lambda: M.evolve_schema(
+            root, [StructField("w", StringType())], **kw
+        ),
+    }[name]()
+
+
+@pytest.mark.parametrize(
+    "verb",
+    [
+        "publish",
+        "delete_where-cow", "delete_where-mor",
+        "update_where-cow", "update_where-mor",
+        "merge_upsert-cow", "merge_upsert-mor",
+        "merge_apply",
+        "compact_snapshot",
+        "restore_snapshot",
+        "evolve_schema",
+    ],
+)
+def test_every_commit_path_refuses_a_token_it_cannot_prove(
+    spark, tmp_path, verb
+):
+    """A token whose manifest is neither current nor provably residue
+    (the lineage walk stops at the vacuum horizon) is refused by every
+    commit path, merge-on-read included: none of them overwrites the
+    manifest or moves the pointer."""
+    root = str(tmp_path / "tbl")
+    for i in range(4):
+        M.publish(
+            spark.range(5 * i, 5 * i + 5), root, snapshot_id=f"e{i}",
+            append=True, stats_cols=["id"],
+        )
+    M.vacuum(root, keep=2)  # e0/e1 manifests reaped: the walk truncates
+    with open(os.path.join(root, "_manifests", "ghost.json"), "w") as fh:
+        json.dump(
+            {"snapshot_id": "ghost", "parent": "e1",
+             "files": [], "row_count": None},
+            fh,
+        )
+    with pytest.raises(RuntimeError, match="vacuum horizon"):
+        _ghost_commit(spark, root, verb)
+    assert M.current_snapshot(root) == "e3"
+    assert M._manifest(root, "ghost")["parent"] == "e1"
+
+
 def test_concurrent_merges_all_land_serialized(spark, tmp_path):
     """r12b, the OCC loop under REAL thread concurrency: N writers
     race full merge_upsert commits (distinct tokens, disjoint insert

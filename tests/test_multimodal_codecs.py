@@ -331,3 +331,77 @@ def test_jpeg_color_interleaved_roundtrip(spark):
     assert (w2, h2, nb2) == (16, 16, 4)
     for s, p in zip(sums2, gen):
         assert abs(s - p.sum()) <= 2 * p.size
+
+
+_FOREIGN_CWD_SCRIPT = """\
+import importlib.util
+import json
+import sys
+
+assert importlib.util.find_spec("db_loader_spark") is None
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.driver.memory", "1g")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+from db_loader_spark.functions import multimodal as mm
+
+docs = spark.createDataFrame({docs!r}, "doc_id long, text string")
+out = {{}}
+for name, synth, decode in (
+    ("png", mm.synth_png, mm.decode_png),
+    ("jpeg", mm.synth_jpeg, mm.decode_jpeg),
+    ("bmp", mm.synth_bmp, mm.decode_image),
+    ("wav", mm.synth_wav, mm.decode_audio),
+):
+    out[name] = sorted(list(r) for r in decode(synth(docs)).collect())
+with open({out!r}, "w") as fh:
+    json.dump(out, fh)
+spark.stop()
+"""
+
+
+def test_codecs_work_from_a_foreign_cwd(spark, tmp_path):
+    """Python workers started from a cwd that cannot import the package
+    (and a PYTHONPATH without the repository) run the PNG, JPEG, BMP and
+    WAV synth + decode paths, and each equals its in-process result —
+    so no ``mapInPandas`` closure reaches a module-level helper."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from db_loader_spark.functions import multimodal as mm
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    rows = [(i, "text " * i) for i in range(1, 9)]
+    out = tmp_path / "out.json"
+    work = tmp_path / "cwd"
+    work.mkdir()
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != repo
+    )
+    r = subprocess.run(
+        [sys.executable, "-c",
+         _FOREIGN_CWD_SCRIPT.format(repo=repo, docs=rows, out=str(out))],
+        capture_output=True, text=True, timeout=600, cwd=str(work), env=env,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    got = json.loads(out.read_text())
+    docs = _docs(spark, rows)
+    for name, synth, decode in (
+        ("png", mm.synth_png, mm.decode_png),
+        ("jpeg", mm.synth_jpeg, mm.decode_jpeg),
+        ("bmp", mm.synth_bmp, mm.decode_image),
+        ("wav", mm.synth_wav, mm.decode_audio),
+    ):
+        want = sorted(list(r) for r in decode(synth(docs)).collect())
+        assert got[name] == json.loads(json.dumps(want)), name
+        assert len(got[name]) == len(rows), name
