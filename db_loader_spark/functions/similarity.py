@@ -395,22 +395,6 @@ def _pack_centroids(cents: DataFrame) -> DataFrame:
     return cents.agg(F.collect_list(F.struct("cid", "m")).alias("cents_list"))
 
 
-def ivf_centroids(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    n_bits: int = 4,
-    dim: int = EMBEDDING_DIM,
-) -> DataFrame:
-    """IVF seed centroids: exact-integer means of the 2^n_bits
-    sign-pattern cells (a deterministic, RNG-free k-means++ stand-in —
-    seeds are spread across orthants by construction)."""
-    zc = emb.select(
-        F.expr(km_codes_sql(vec_col)).alias("z"),
-        F.expr(sign_bucket_sql(vec_col, n_bits)).alias("cid"),
-    )
-    return _int_mean_centroids(zc, dim)
-
-
 def kmeans_centroids(
     emb: DataFrame,
     vec_col: str = "embedding",

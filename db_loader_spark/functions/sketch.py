@@ -3,9 +3,9 @@
 The training-pipeline question this answers at 100 TB: "how many
 distinct tokens / urls / doc fingerprints does this corpus have, per
 group, without holding the distinct set anywhere?" The classical KMV
-estimator (Bar-Yossef et al., RANDOM'02; the ancestor of the theta
-sketch) keeps only the k smallest hash values per group: if the k-th
-smallest of n uniform hashes in [0,1) is h_k, then n ≈ (k-1)/h_k.
+estimator (Bar-Yossef et al., RANDOM'02) keeps only the k smallest
+hash values per group: if the k-th smallest of n uniform hashes in
+[0,1) is h_k, then n ≈ (k-1)/h_k.
 
 Why KMV and not HLL here: Spark's datasketches HLL is a black-box
 binary whose estimate no other engine reproduces — a rows-only check
@@ -52,10 +52,9 @@ def kmv_nibsum_sql(hex_col: str = "hx") -> str:
     """DuckDB mirror of kmv_hash's decode: the 13-nibble md5 prefix in
     ``hex_col`` as an exact 52-bit-mantissa integer (divide by
     KMV_DENOM to get the [0,1) fraction). THE single source for every
-    oracle that replays the hash (KMV vocab, quantile sketch, theta
-    set ops — r11 review: three verbatim copies had grown); a change
-    to KMV_BITS now breaks loudly in one place instead of silently in
-    a missed copy."""
+    oracle that replays the hash (KMV vocab, quantile sketch); a change
+    to KMV_BITS breaks loudly in one place instead of silently in a
+    missed copy."""
     return " + ".join(
         f"(instr('0123456789abcdef', substr({hex_col}, {i + 1}, 1)) - 1)"
         f" * {float(16 ** (12 - i))!r}"
@@ -78,11 +77,11 @@ def kmv_distinct(
     estimator falls back to the exact count (which the sketch holds
     verbatim in that regime — standard KMV behavior).
 
-    NULL values are EXCLUDED before hashing (r11 review): a null is
-    not a value — and left in, its null hash would sort FIRST in
-    Spark's row_number window but LAST in DuckDB's, shifting every
-    rank and (if the null lands at rank k) collapsing theta to the
-    small-group fallback: a silent cross-engine estimate divergence.
+    NULL values are EXCLUDED before hashing: a null is not a value —
+    and left in, its null hash would sort FIRST in Spark's row_number
+    window but LAST in DuckDB's, shifting every rank and (if the null
+    lands at rank k) collapsing the estimate to the small-group
+    fallback: a silent cross-engine estimate divergence.
     The oracle mirrors the exclusion."""
     d = (
         pairs.select(F.col(group_col).alias("grp"), F.col(value_col).alias("val"))
@@ -104,133 +103,6 @@ def kmv_distinct(
         F.col("n_exact").cast("long").alias("n_exact"),
         est.cast("long").alias("kmv_estimate"),
         F.round(est.cast("double") / F.col("n_exact"), 3).alias("rel_err"),
-    )
-
-
-def kmv_set_ops(
-    pairs: DataFrame,
-    group_col: str,
-    value_col: str,
-    k: int = 64,
-) -> DataFrame:
-    """Theta-style SET OPERATIONS over per-group KMV samples (the
-    standard theta-sketch estimator — Dasgupta et al., "Theta-Sketch
-    Framework", 2016 — on this package's deterministic md5 hash):
-    distinct-intersection / union / Jaccard estimates for every group
-    pair WITHOUT joining the groups' full value sets.
-
-    Per group: sample = the k smallest hashes of its distinct values,
-    theta = the k-th min (1.0 when the group has < k distinct values —
-    the sample is then exhaustive). Per pair: theta = least(theta_a,
-    theta_b); the union/intersection of the samples RESTRICTED to
-    hashes below theta is a uniform coordinated sample of the union,
-    so count/theta estimates the distinct cardinality. When both
-    groups are small (theta = 1.0) the estimates are EXACT by
-    construction.
-
-    Engine-portable for the same reason as kmv_distinct: the hash is
-    md5-deterministic, so DuckDB replays the whole estimator and a
-    value check compares ESTIMATES exactly, not just error bounds.
-    All divisions are single IEEE ops on exactly-representable inputs
-    (52-bit-mantissa hashes, integer counts) stated identically in
-    both engines; every output is nonnegative by construction, so no
-    signed-zero guard is needed.
-
-    At 100 TB: one shuffle to distinct (group, value) grain builds the
-    samples; everything after is sample-sized (k rows per group) — the
-    pairwise full-outer hash merge moves k·|groups| rows, never data.
-    This is the "how much do these two sources/splits overlap"
-    primitive a dedup/curation pipeline asks constantly, priced at a
-    scan instead of a |A|×|B| join. Exact self-eval channels
-    (inter_exact/union_exact, the ann_recall pattern) ride along for
-    the diagnostics tier; a production deployment drops them.
-
-    NULL values are EXCLUDED before hashing (r11 review, same contract
-    as kmv_distinct): left in, the null hash sorts FIRST in Spark's
-    window but LAST in DuckDB's, shifting ranks — and a null at rank k
-    nulls the k-th hash so theta collapses to 1.0, silently wrecking
-    the estimates for a large group. The oracle mirrors the
-    exclusion."""
-    d = (
-        pairs.select(F.col(group_col).alias("grp"), F.col(value_col).alias("val"))
-        .filter(F.col("val").isNotNull())
-        .distinct()
-    )
-    h = d.select("grp", "val", kmv_hash("val").alias("h"))
-    w = W.partitionBy("grp").orderBy("h")
-    ranked = h.withColumn("rn", F.row_number().over(w))
-    sample = ranked.filter(F.col("rn") <= k).select("grp", "h")
-    thetas = ranked.groupBy("grp").agg(
-        F.coalesce(
-            F.max(F.when(F.col("rn") == k, F.col("h"))), F.lit(1.0)
-        ).alias("theta")
-    )
-    pair_theta = (
-        thetas.select(F.col("grp").alias("grp_a"), F.col("theta").alias("ta"))
-        .join(
-            thetas.select(
-                F.col("grp").alias("grp_b"), F.col("theta").alias("tb")
-            ),
-            F.col("grp_a") < F.col("grp_b"),
-        )
-        .select("grp_a", "grp_b", F.least("ta", "tb").alias("theta"))
-    )
-    a_h = (
-        pair_theta.join(
-            sample.select(F.col("grp").alias("grp_a"), "h"), "grp_a"
-        )
-        .filter(F.col("h") < F.col("theta"))
-        .select("grp_a", "grp_b", "h", F.lit(1).alias("in_a"))
-    )
-    b_h = (
-        pair_theta.join(
-            sample.select(F.col("grp").alias("grp_b"), "h"), "grp_b"
-        )
-        .filter(F.col("h") < F.col("theta"))
-        .select("grp_a", "grp_b", "h", F.lit(1).alias("in_b"))
-    )
-    merged = a_h.join(b_h, ["grp_a", "grp_b", "h"], "full_outer")
-    counts = merged.groupBy("grp_a", "grp_b").agg(
-        F.count("*").alias("n_union_s"),
-        F.sum(
-            F.when(
-                F.col("in_a").isNotNull() & F.col("in_b").isNotNull(), 1
-            ).otherwise(0)
-        ).alias("n_inter_s"),
-    )
-    # exact self-eval channels (test-SF diagnostics; dropped at scale)
-    exact_inter = (
-        d.select(F.col("grp").alias("grp_a"), "val")
-        .join(d.select(F.col("grp").alias("grp_b"), "val"), "val")
-        .filter(F.col("grp_a") < F.col("grp_b"))
-        .groupBy("grp_a", "grp_b")
-        .agg(F.count("*").alias("inter_exact"))
-    )
-    sizes = d.groupBy("grp").agg(F.count("*").alias("n"))
-    est = (
-        counts.join(pair_theta, ["grp_a", "grp_b"])
-        .join(exact_inter, ["grp_a", "grp_b"], "left")
-        .join(sizes.select(F.col("grp").alias("grp_a"), F.col("n").alias("na")), "grp_a")
-        .join(sizes.select(F.col("grp").alias("grp_b"), F.col("n").alias("nb")), "grp_b")
-    )
-    inter_exact = F.coalesce(F.col("inter_exact"), F.lit(0))
-    return est.select(
-        F.col("grp_a").alias(f"{group_col}_a"),
-        F.col("grp_b").alias(f"{group_col}_b"),
-        inter_exact.cast("long").alias("inter_exact"),
-        F.round(F.col("n_inter_s") / F.col("theta"))
-        .cast("long")
-        .alias("inter_est"),
-        (F.col("na") + F.col("nb") - inter_exact)
-        .cast("long")
-        .alias("union_exact"),
-        F.round(F.col("n_union_s") / F.col("theta"))
-        .cast("long")
-        .alias("union_est"),
-        F.when(
-            F.col("n_union_s") > 0,
-            F.round(F.col("n_inter_s") / F.col("n_union_s"), 4),
-        ).alias("jaccard_est"),
     )
 
 
@@ -492,89 +364,33 @@ def bloom_probe(
     )
 
 
-# ---- Hash-rate sample quantiles ----
-#
-# The quantile member of the sketch family (KMV = distinct, CMS =
-# frequency, HLL = distinct-compact, Bloom = membership): estimate
-# per-group quantiles from a DETERMINISTIC 1/16 Bernoulli sample —
-# every row whose md5 first hex digit is '0' is in the sample, an
-# exact binary fraction identical in any engine. Unlike a
-# min-k/row_number sample (a full per-group sort — no cheaper than
-# the exact quantile it estimates), the rate sample is a pure
-# MAP-SIDE FILTER: no shuffle, no sort, union-mergeable by
-# construction (a sample of a union is the union of samples), and the
-# 100 TB cost is reading 1/16 of the values into a small per-group
-# percentile. Expected rank error ~1/(2*sqrt(rate*n)).
-
-SAMPLE_HEX_DIGITS = 1  # 1 hex digit == exact rate 1/16
-
-
-def quantile_sample(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    key_col: str,
-    quantiles: tuple[float, ...] = (0.25, 0.5, 0.95),
-) -> DataFrame:
-    """Per-group quantile estimates from the 1/16 hash-rate sample,
-    with the exact quantiles alongside (the self-evaluation every
-    estimator here ships — the ann_recall pattern), in ONE scan:
-    the sampled-percentile and exact-percentile aggregates share a
-    single Aggregate node via the CASE-masked column. The exact side
-    is the small-SF verifier luxury; a production deployment ships
-    only the sampled aggregate."""
-    in_sample = F.expr(
-        f"substring(md5('qs:' || CAST({key_col} AS STRING)), 1, {SAMPLE_HEX_DIGITS})"
-        f" = '{'0' * SAMPLE_HEX_DIGITS}'"
-    )
-    qarr = ", ".join(f"{q}D" for q in quantiles)
-    base = df.select(
-        F.col(group_col).alias("grp"),
-        F.col(value_col).alias("v"),
-        F.when(in_sample, F.col(value_col)).alias("sv"),
-    )
-    agg = base.groupBy("grp").agg(
-        F.count("sv").cast("long").alias("n_sample"),
-        F.expr(f"percentile(sv, array({qarr}))").alias("qe"),
-        F.expr(f"percentile(v, array({qarr}))").alias("qx"),
-    )
-    cols = [F.col("grp").alias(group_col), F.col("n_sample")]
-    for i, q in enumerate(quantiles, start=1):
-        tag = f"p{int(q * 100)}"
-        cols.append(F.round(F.element_at("qe", i), 4).alias(f"{tag}_est"))
-        cols.append(F.round(F.element_at("qx", i), 4).alias(f"{tag}_exact"))
-    return agg.select(*cols)
-
 # ---- Bottom-k canonical quantile sketch (Cohen & Kaplan, 2007) ----
 #
-# The STORED-STATE quantile member of the family (KMV: distinct, CMS:
-# frequency, HLL: distinct-compact, Bloom: membership, rate-sample:
-# one-shot quantiles). quantile_sample above is a map-side filter
-# whose SAMPLE GROWS WITH n — at 100 TB a 1/16 sample is still ~6 TB,
-# too big to store per table as a profile, and `percentile` over it
-# collects per-group value lists. This sketch is the opposite
-# tradeoff: CONSTANT state — the k rows with the smallest
-# deterministic hash per group — that a profiling pass can persist
-# next to every snapshot and maintain incrementally (bottom-k of
-# (stored sketch ∪ new batch's bottom-k) = bottom-k of the union;
-# exactly the KMV merge identity, applied to rows instead of distinct
-# values).
+# The quantile member of the family (KMV: distinct, CMS: frequency,
+# HLL: distinct-compact, Bloom: membership). A rate sample GROWS WITH
+# n — at 100 TB a 1/16 sample is still ~6 TB, too big to store per
+# table as a profile. This sketch keeps CONSTANT state — the k rows
+# with the smallest deterministic hash per group — that a profiling
+# pass can persist next to every snapshot and maintain incrementally
+# (bottom-k of (stored sketch ∪ new batch's bottom-k) = bottom-k of
+# the union; exactly the KMV merge identity, applied to rows instead
+# of distinct values).
 #
-# Why bottom-k and not KLL/t-digest (Karnin-Lang-Liberty 2016; the
-# verdict's suggestion): KLL's compactor state is a function of
-# ARRIVAL AND MERGE ORDER — two correct engines (or two shardings of
-# the same corpus) legitimately hold different bytes, so its merge
-# theorem can only ever be tested statistically, and a cross-engine
-# value-hash equality (this repo's entire external evidence model) is
+# Why bottom-k and not a compaction sketch (t-digest, MRL-style
+# compactors): compactor state is a function of ARRIVAL AND MERGE
+# ORDER — two correct engines (or two shardings of the same corpus)
+# legitimately hold different bytes, so its merge theorem can only
+# ever be tested statistically, and a cross-engine value-hash
+# equality (this repo's entire external evidence model) is
 # unobtainable. Bottom-k is a CANONICAL function of the row multiset:
 # any sharding, any merge tree, any engine lands the identical k
 # rows. The price is rank error O(sqrt(q(1-q)/k)) (uniform-sample
-# order statistics) instead of KLL's O(1/k) at equal k — stated, not
-# hidden; at the profile-sketch sizes this repo ships (k=128) that is
-# ~4% rank error, the regime where column profiles live. The driver
-# row for a_quantile_sketch witnesses the merge theorem itself: Spark
-# runs the sharded two-level plan, DuckDB replays the one-pass form,
-# and the hashes must agree bit-for-bit.
+# order statistics) instead of a compactor's O(1/k) at equal k —
+# stated, not hidden; at the profile-sketch sizes this repo ships
+# (k=128) that is ~4% rank error, the regime where column profiles
+# live. The driver row for a_quantile_sketch witnesses the merge
+# theorem itself: Spark runs the sharded two-level plan, DuckDB
+# replays the one-pass form, and the hashes must agree bit-for-bit.
 
 QSK_K = 128  # per-group stored rows; rank error ~ sqrt(q(1-q)/k)
 QSK_SHARDS = 8  # stage-1 fan-in of the two-level demonstration plan
@@ -693,240 +509,3 @@ def quantile_sketch(
         tag = f"p{round(q * 100)}"
         cols += [F.col(f"{tag}_est"), F.col(f"{tag}_exact")]
     return est.join(exact, "grp").select(*cols)
-
-
-# ---------------------------------------------------------------------------
-# Deterministic KLL-style compaction sketch (the O(polylog/k) rank-error
-# member beside bottom-k's O(sqrt(q(1-q)/k)); VERDICT r9 #8).
-#
-# The accepted tradeoff ledger, stated plainly:
-# - bottom_k_sketch (above) is CANONICAL — shard-count-invariant,
-#   order-free, replayable in one SQL window — which is why IT holds
-#   the external driver slot. Its rank error is the Bernoulli-sampling
-#   rate O(sqrt(q(1-q)/k)).
-# - Compaction sketches (MRL'98 lineage; KLL = Karnin-Lang-Liberty,
-#   FOCS'16) reach far smaller error per stored row, but compaction is
-#   inherently ORDER-DEPENDENT, and the randomized KLL is additionally
-#   seed-dependent — neither is replayable by an engine that does not
-#   implement the identical algorithm, so per the engine-portability
-#   design rule (module docstring) it cannot take a DuckDB-oracled
-#   registry slot, and it does NOT displace one (pytest-tier only).
-#
-# What makes THIS variant engine-portable in the text_kmv_vocab sense
-# (spec-replayable, bit-for-bit) is that every degree of freedom is
-# pinned by the spec rather than by runtime nondeterminism:
-# 1. no random coins — compaction keeps odd/even positions by a
-#    per-level ALTERNATING parity clock (the classical deterministic
-#    MRL schedule; adjacent compactions at a level cancel error to
-#    first order, giving worst-case rank error O(k) after compacting
-#    w·k items ... i.e. relative error O(log^2(n/k)/k));
-# 2. a CANONICAL feed order — values enter in ascending
-#    (md5-hash, key) order (qsk_hash), a property of the DATA, not of
-#    partition layout or scheduler timing;
-# 3. a CANONICAL plan shape — exactly KLL_SHARDS pmod(key) shards,
-#    each fed in canonical order, merged in shard order 0..S-1. The
-#    shard count is part of the spec (unlike bottom-k it is NOT
-#    semantics-free), so it is a named constant, not a tunable.
-# Any engine that implements this page reproduces the sketch
-# bit-for-bit; tests/test_kll.py witnesses that by replaying the spec
-# in plain single-process Python (pandas-free) and hash-comparing
-# against the distributed applyInPandas plan, plus input-order /
-# repartitioning invariance and measured-vs-stated error bounds.
-#
-# Weight exactness invariant: a compaction always consumes an EVEN
-# number of items (odd buffers retain their largest item at the same
-# level), and every kept item doubles its weight — so total stored
-# weight equals the exact row count n at all times; n is never
-# tracked out-of-band and cannot drift from the sketch.
-# ---------------------------------------------------------------------------
-
-KLL_K = 128  # per-level buffer capacity
-KLL_SHARDS = 8  # part of the spec: fixed two-level fan-in
-
-
-def kll_helpers(k: int = KLL_K):
-    """The sketch spec as a dict of CLOSURES (the multimodal codec
-    pattern: cloudpickle ships closure cells by value, so Spark Python
-    workers never need this package importable — the driver contract).
-
-    State is a plain JSON-able pair ``(levels, parities)``: ``levels``
-    a list of value-lists (level i items carry weight 2^i, unsorted
-    between compactions — compaction sorts), ``parities`` the per-level
-    alternating offset clocks. Exposed ops: ``new() / update(state, v)
-    / merge(state, other) / quantile(state, q) / total(state)``."""
-
-    def new():
-        return ([[]], [0])
-
-    def _compact(levels, parities, i):
-        if i + 1 == len(levels):
-            levels.append([])
-            parities.append(0)
-        buf = sorted(levels[i])
-        if len(buf) % 2:
-            # retain the largest at this level: weight-exact, and the
-            # retained choice is part of the spec (deterministic)
-            levels[i] = [buf[-1]]
-            buf = buf[:-1]
-        else:
-            levels[i] = []
-        levels[i + 1].extend(buf[parities[i]::2])
-        parities[i] ^= 1
-        if len(levels[i + 1]) > k:
-            _compact(levels, parities, i + 1)
-
-    def update(state, v):
-        levels, parities = state
-        levels[0].append(v)
-        if len(levels[0]) > k:
-            _compact(levels, parities, 0)
-        return state
-
-    def merge(state, other):
-        """Inject ``other``'s levels into ``state`` bottom-up; the
-        ACCUMULATOR's parity clocks keep ticking (merge order is fixed
-        by the plan spec, so this is deterministic)."""
-        levels, parities = state
-        olevels, _ = other
-        for i, buf in enumerate(olevels):
-            while i >= len(levels):
-                levels.append([])
-                parities.append(0)
-            levels[i].extend(buf)
-        for i in range(len(levels)):
-            while len(levels[i]) > k:
-                _compact(levels, parities, i)
-        return state
-
-    def total(state):
-        return sum(len(buf) << i for i, buf in enumerate(state[0]))
-
-    def quantile(state, q):
-        """Weighted type-1 (lower empirical) quantile: the smallest
-        stored value whose cumulative weight reaches ceil(q*n)."""
-        import math as _math
-
-        levels, _ = state
-        n = total(state)
-        if n == 0:
-            return None
-        target = max(1, _math.ceil(q * n))
-        weighted = sorted(
-            (v, 1 << i) for i, buf in enumerate(levels) for v in buf
-        )
-        cum = 0
-        for v, w in weighted:
-            cum += w
-            if cum >= target:
-                return v
-        return weighted[-1][0]
-
-    return {
-        "new": new,
-        "update": update,
-        "merge": merge,
-        "total": total,
-        "quantile": quantile,
-    }
-
-
-def kll_group_quantiles(
-    pairs: DataFrame,
-    group_col: str,
-    value_col: str,
-    key_col: str,
-    k: int = KLL_K,
-    shards: int = KLL_SHARDS,
-    quantiles: tuple[float, ...] = (0.25, 0.5, 0.9, 0.99),
-) -> DataFrame:
-    """Per-group quantile estimates via the deterministic compaction
-    sketch, as the canonical two-level plan: stage 1 builds one sketch
-    per (group, pmod-shard) from rows fed in ascending (md5-hash, key)
-    order — the per-executor state, O(k log(n/k)) rows each — stage 2
-    merges each group's shard sketches in shard order and reads the
-    estimates. ``value_col`` must be integer-valued so outputs are
-    BIGINTs any engine compares exactly.
-
-    At 100 TB: stage 1 is one shuffle to (group, shard) grain with the
-    in-shard sort local to each pandas group; stage 2 moves only
-    sketches (kilobytes per group), never data. The canonical feed
-    order costs a per-shard sort — the price of spec-pinned
-    determinism; drop-in randomized KLL would shave the sort but lose
-    the replayability this package's design rule demands.
-
-    PRECONDITION (r11, ADVICE r10 — same contract as bottom_k's ROW
-    key): ``key_col`` must be UNIQUE and NON-NULL. Duplicate keys tie
-    on the (h, key) feed sort and fall back to pandas group arrival
-    order — nondeterministic across runs, diverging from the pure-
-    Python spec replay; null keys hash/shard to null and drop or
-    diverge silently. ``build_shard`` checks both and raises."""
-    import json as _json
-
-    helpers = kll_helpers(k)
-    qs = list(quantiles)
-
-    rows = pairs.select(
-        F.col(group_col).cast("string").alias("grp"),
-        F.col(value_col).cast("long").alias("v"),
-        F.col(key_col).cast("long").alias("key"),
-    )
-    sharded = rows.withColumn("shard", F.pmod("key", F.lit(shards))).withColumn(
-        "h", qsk_hash("key")
-    )
-
-    def build_shard(pdf):
-        import pandas as _pd
-
-        # Cheap defensive check of the docstring's determinism
-        # precondition: a violated contract must fail loudly, not
-        # produce run-to-run-unstable estimates. O(shard) vs the
-        # O(shard log shard) sort below.
-        if pdf["key"].isna().any():
-            raise ValueError(
-                "kll_group_quantiles: key_col contains nulls — the "
-                "deterministic feed order requires unique non-null keys"
-            )
-        if pdf["key"].duplicated().any():
-            raise ValueError(
-                "kll_group_quantiles: key_col is not unique — duplicate "
-                "keys tie on the feed sort and break determinism"
-            )
-        pdf = pdf.sort_values(["h", "key"], kind="mergesort")
-        st = helpers["new"]()
-        for v in pdf["v"]:
-            helpers["update"](st, int(v))
-        return _pd.DataFrame(
-            {
-                "grp": [pdf["grp"].iloc[0]],
-                "shard": [int(pdf["shard"].iloc[0])],
-                "sketch": [_json.dumps(st)],
-            }
-        )
-
-    stage1 = sharded.groupBy("grp", "shard").applyInPandas(
-        build_shard, schema="grp string, shard int, sketch string"
-    )
-
-    def merge_group(pdf):
-        import pandas as _pd
-
-        pdf = pdf.sort_values("shard", kind="mergesort")
-        st = helpers["new"]()
-        for s in pdf["sketch"]:
-            helpers["merge"](st, _json.loads(s))
-        out = {
-            "grp": [pdf["grp"].iloc[0]],
-            "n": [helpers["total"](st)],
-        }
-        for q in qs:
-            out[f"p{round(q * 100)}_est"] = [helpers["quantile"](st, q)]
-        return _pd.DataFrame(out)
-
-    est_schema = "grp string, n long, " + ", ".join(
-        f"p{round(q * 100)}_est long" for q in qs
-    )
-    return (
-        stage1.groupBy("grp")
-        .applyInPandas(merge_group, schema=est_schema)
-        .withColumnRenamed("grp", group_col)
-    )

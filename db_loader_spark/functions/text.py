@@ -76,20 +76,12 @@ def quality_score_of(toks: Column) -> Column:
     return F.lit(0.5) * length_part + F.lit(0.5) * stopword_ratio_of(toks)
 
 
-def stopword_count(text: Column, words: tuple[str, ...] = STOPWORDS) -> Column:
-    return stopword_count_of(tokens(text), words)
-
-
 def stopword_ratio(text: Column, words: tuple[str, ...] = STOPWORDS) -> Column:
     return stopword_ratio_of(tokens(text), words)
 
 
 def avg_token_len(text: Column) -> Column:
     return avg_token_len_of(tokens(text))
-
-
-def quality_score(text: Column) -> Column:
-    return quality_score_of(tokens(text))
 
 
 def lang_id(text: Column) -> Column:

@@ -877,38 +877,6 @@ FROM events WHERE user_id % 10 = 0
 """
 
 
-def a_quantile_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type quantiles estimated from the deterministic 1/16
-    hash-rate sample, exact quantiles alongside in the same single
-    scan — the quantile member of the sketch family (see
-    functions/sketch.py module comment: map-side filter, no sort,
-    union-mergeable; the scalable alternative to a_quantiles' exact
-    per-group sorts)."""
-    from db_loader_spark.functions.sketch import quantile_sample
-
-    e = load_table(spark, sf_dir, "events").select("event_type", "value", "event_id")
-    return quantile_sample(e, "event_type", "value", "event_id")
-
-
-_QUANTILE_SAMPLE_ORACLE = """
-WITH b AS (
-  SELECT event_type, value,
-         CASE WHEN substring(md5('qs:' || CAST(event_id AS VARCHAR)), 1, 1) = '0'
-              THEN value END AS sv
-  FROM events
-)
-SELECT event_type,
-       CAST(COUNT(sv) AS BIGINT) AS n_sample,
-       ROUND(quantile_cont(sv, 0.25), 4) AS p25_est,
-       ROUND(quantile_cont(value, 0.25), 4) AS p25_exact,
-       ROUND(quantile_cont(sv, 0.5), 4) AS p50_est,
-       ROUND(quantile_cont(value, 0.5), 4) AS p50_exact,
-       ROUND(quantile_cont(sv, 0.95), 4) AS p95_est,
-       ROUND(quantile_cont(value, 0.95), 4) AS p95_exact
-FROM b GROUP BY event_type
-"""
-
-
 def a_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type quantiles from the STORED bottom-k canonical
     sketch (functions.sketch.quantile_sketch) — the constant-state,
@@ -1032,123 +1000,18 @@ QUERIES: dict[str, QuerySpec] = {
     ),
 }
 
-# r8 steady-state demotions (pytest-oracle tier; registry → 100 keys,
-# VERDICT r7 #2): a_stratified_sample's per-class deterministic-hash
-# gate is the windowed a_hash_sample's predicate applied per group
-# (and the weighted form is windowed as curation_weighted_sample);
-# t_tumbling_counts is t_sliding_counts with step = width — the
-# sliding key exercises the strictly more general window assignment.
-# Both keep their DuckDB value checks in tests/test_oracle_queries.py.
-# r9 slot payment (VERDICT r8 #7): a_quantile_sample funds the
-# a_quantile_sketch slot — both answer "per-group quantiles without
-# exact per-group sorts", and the sketch is the strictly stronger
-# family member (constant state vs a sample that grows with n,
-# exactly mergeable vs union-only, and its driver row witnesses the
-# merge theorem cross-engine). The rate-sample's estimator keeps its
-# full DuckDB value check here.
-def a_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theta-sketch set operations over the audience-overlap question
-    ("how many distinct users do these two event types share?") —
-    functions.sketch.kmv_set_ops at k=32 over (event_type, user_id).
-    Distinct-intersection / union / Jaccard estimates for every type
-    pair from k-sized coordinated samples, WITHOUT joining the full
-    user sets; exact self-eval channels ride along (the ann_recall
-    pattern — a deployment drops them). Diagnostics-tier (r11, new
-    capability beside the KMV/HLL/CMS/quantile sketch family): the
-    estimator is deterministic end-to-end (md5 hashes), so the DuckDB
-    oracle replays it and the value check compares ESTIMATES exactly.
-    At sf0.001 every event type has > k distinct users, so the
-    genuinely-estimating path (theta < 1) is what the check hashes."""
-    from db_loader_spark.functions.sketch import kmv_set_ops
-
-    e = load_table(spark, sf_dir, "events").select(
-        "event_type", F.col("user_id").cast("string").alias("uid")
-    )
-    return kmv_set_ops(e, "event_type", "uid", k=32)
-
-
-# Mirror of functions.sketch.kmv_hash (shared generator — r11 review).
-_THETA_NIBSUM = _kmv_nibsum_sql()
-
-_THETA_K = 32
-
-_THETA_SET_OPS_ORACLE = f"""
-WITH d AS MATERIALIZED (
-  SELECT DISTINCT event_type AS grp, CAST(user_id AS VARCHAR) AS val
-  FROM events WHERE user_id IS NOT NULL
-),
-h AS (
-  SELECT grp, ({_THETA_NIBSUM}) / 4503599627370496.0 AS h
-  FROM (SELECT grp, substr(md5(val), 1, 13) AS hx FROM d)
-),
-r AS MATERIALIZED (
-  SELECT grp, h, ROW_NUMBER() OVER (PARTITION BY grp ORDER BY h) AS rn FROM h
-),
-s AS MATERIALIZED (SELECT grp, h FROM r WHERE rn <= {_THETA_K}),
-t AS MATERIALIZED (
-  SELECT grp, COALESCE(MAX(CASE WHEN rn = {_THETA_K} THEN h END), 1.0) AS theta
-  FROM r GROUP BY grp
-),
-pt AS MATERIALIZED (
-  SELECT a.grp AS grp_a, b.grp AS grp_b, LEAST(a.theta, b.theta) AS theta
-  FROM t a JOIN t b ON a.grp < b.grp
-),
-ah AS (
-  SELECT pt.grp_a, pt.grp_b, s.h FROM pt JOIN s ON s.grp = pt.grp_a
-  WHERE s.h < pt.theta
-),
-bh AS (
-  SELECT pt.grp_a, pt.grp_b, s.h FROM pt JOIN s ON s.grp = pt.grp_b
-  WHERE s.h < pt.theta
-),
-m AS (
-  SELECT COALESCE(ah.grp_a, bh.grp_a) AS grp_a,
-         COALESCE(ah.grp_b, bh.grp_b) AS grp_b,
-         (ah.h IS NOT NULL AND bh.h IS NOT NULL) AS in_both
-  FROM ah FULL OUTER JOIN bh
-    ON ah.grp_a = bh.grp_a AND ah.grp_b = bh.grp_b AND ah.h = bh.h
-),
-c AS (
-  SELECT grp_a, grp_b, COUNT(*) AS n_union_s,
-         SUM(CASE WHEN in_both THEN 1 ELSE 0 END) AS n_inter_s
-  FROM m GROUP BY 1, 2
-),
-ie AS (
-  SELECT a.grp AS grp_a, b.grp AS grp_b, COUNT(*) AS inter_exact
-  FROM d a JOIN d b ON a.val = b.val AND a.grp < b.grp GROUP BY 1, 2
-),
-sz AS MATERIALIZED (SELECT grp, COUNT(*) AS n FROM d GROUP BY grp)
-SELECT c.grp_a AS event_type_a, c.grp_b AS event_type_b,
-       CAST(COALESCE(ie.inter_exact, 0) AS BIGINT) AS inter_exact,
-       CAST(ROUND(c.n_inter_s / pt.theta) AS BIGINT) AS inter_est,
-       CAST(sa.n + sb.n - COALESCE(ie.inter_exact, 0) AS BIGINT) AS union_exact,
-       CAST(ROUND(c.n_union_s / pt.theta) AS BIGINT) AS union_est,
-       CASE WHEN c.n_union_s > 0
-            THEN ROUND(c.n_inter_s / CAST(c.n_union_s AS DOUBLE), 4)
-       END AS jaccard_est
-FROM c
-JOIN pt ON pt.grp_a = c.grp_a AND pt.grp_b = c.grp_b
-LEFT JOIN ie ON ie.grp_a = c.grp_a AND ie.grp_b = c.grp_b
-JOIN sz sa ON sa.grp = c.grp_a
-JOIN sz sb ON sb.grp = c.grp_b
-"""
-
-
+# Diagnostics (pytest-oracle tier): a_stratified_sample's per-class
+# deterministic-hash gate is the windowed a_hash_sample's predicate
+# applied per group (and the weighted form is windowed as
+# curation_weighted_sample); t_tumbling_counts is t_sliding_counts with
+# step = width — the sliding key exercises the strictly more general
+# window assignment. Both keep their DuckDB value checks in
+# tests/test_oracle_queries.py.
 DIAGNOSTICS: dict[str, QuerySpec] = {
     "a_stratified_sample": QuerySpec(
         a_stratified_sample, _STRATIFIED_ORACLE, "per-class deterministic sampling"
     ),
     "t_tumbling_counts": QuerySpec(
         t_tumbling_counts, _TUMBLING_ORACLE, "event-time tumbling-window agg"
-    ),
-    "a_quantile_sample": QuerySpec(
-        a_quantile_sample,
-        _QUANTILE_SAMPLE_ORACLE,
-        "hash-rate-sampled quantile estimates with exact self-eval",
-    ),
-    "a_theta_set_ops": QuerySpec(
-        a_theta_set_ops,
-        _THETA_SET_OPS_ORACLE,
-        "theta-sketch pairwise distinct intersection/union/Jaccard",
     ),
 }

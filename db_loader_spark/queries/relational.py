@@ -1491,12 +1491,6 @@ QUERIES: dict[str, QuerySpec] = {
     ),
 }
 
-# Demoted to the pytest-oracle DIAGNOSTICS tier in r7 (steady-state
-# window math): the exact-quantile surface is ALREADY under the
-# driver hash — a_quantile_sample (windowed) computes exact per-group
-# quantiles alongside its sampled estimates in the same scan — so
-# this key's slot bought no new external evidence. Value check
-# retained by tests/test_oracle_queries.py.
 def t_mor_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read DELETE + row-level UPDATE, oracle-graded:
     an orderkey-clustered orders snapshot gets a scattered MOR delete
@@ -1851,6 +1845,10 @@ FROM t2 GROUP BY 1
 """
 
 
+# a_quantiles is a diagnostic: the registry key a_quantile_sketch
+# computes exact per-group quantiles alongside its sketch estimates,
+# so a slot for this key would buy no new external evidence. Value
+# check retained by tests/test_oracle_queries.py.
 DIAGNOSTICS: dict[str, QuerySpec] = {
     "a_quantiles": QuerySpec(
         a_quantiles, _QUANTILES_ORACLE, "exact grouped quantiles (diagnostic)"

@@ -95,11 +95,6 @@ def jdbc_read_options(
     return opts
 
 
-def jdbc_read(spark, **kwargs) -> DataFrame:
-    """Build the JDBC source DataFrame from ``jdbc_read_options``."""
-    return spark.read.format("jdbc").options(**jdbc_read_options(**kwargs)).load()
-
-
 def insert_sql(table: str, columns: list[str], dialect: str = "ansi") -> str:
     cols = ", ".join(columns)
     ph = ", ".join(["?"] * len(columns))

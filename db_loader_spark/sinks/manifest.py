@@ -1708,10 +1708,13 @@ def _mor_write(
             # write share one scan
             matched = matched.persist()
         # one shuffle sized to the MATCHED ROWS: positions hash-cluster
-        # by data file so each file's mask lives in exactly one sidecar
-        hits = matched.select(
-            F.col(rc).alias("f"), F.col(pc).alias("pos")
-        ).repartition(_DV_FILES, "f")
+        # by data file so each file's mask lives in exactly one sidecar;
+        # the sort fixes row order (and bytes) against shuffle order
+        hits = (
+            matched.select(F.col(rc).alias("f"), F.col(pc).alias("pos"))
+            .repartition(_DV_FILES, "f")
+            .sortWithinPartitions("f", "pos")
+        )
     try:
         hits.write.mode("overwrite").parquet(dv_tmp)
         # the driver-bounded per-data-file association: (f, n, parts)

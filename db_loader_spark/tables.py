@@ -125,9 +125,3 @@ def decode_ts(dt):
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     names = names or TABLE_NAMES
     return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register each table as a temp view for the SQL API."""
-    for name, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(name)

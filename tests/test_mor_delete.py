@@ -973,3 +973,30 @@ def test_merge_apply_net_zero_batch_commits_nothing(spark, tmp_path):
     M.merge_apply(spark, real, root, "id", snapshot_id="x1")
     assert M.merge_apply(spark, real, root, "id") == "x1"  # no new commit
     assert M.snapshots(root) == ["v1", "x1"]
+
+
+def test_mor_vectors_are_written_in_file_position_order(spark, tmp_path):
+    """A deletion-vector sidecar's rows are in (f, pos) order, so the
+    same commit writes the same bytes whatever order the shuffle
+    delivered them in. Later files are larger here, so the scan's tasks
+    (largest split first) run in reverse file order and an unsorted
+    write would put a higher-named file's positions first."""
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "tbl")
+    base = spark.range(0, 4_000, 1, 8).select(
+        "id", F.expr("repeat('x', CAST(id DIV 20 AS INT))").alias("pad")
+    )
+    M.publish(base, root, snapshot_id="v1", stats_cols=["id"])
+    assert len(M._manifest(root, "v1")["files"]) == 8
+    M.delete_where(spark, root, "id % 7 = 0", mode="mor", snapshot_id="d1")
+    d1 = M._manifest(root, "d1")
+    sidecars = {p for e in d1["deletes"].values() for p in e["dv"]}
+    assert len(sidecars) > 1
+    rows = 0
+    for p in sorted(sidecars):
+        t = pq.read_table(os.path.join(root, p)).to_pydict()
+        got = list(zip(t["f"], t["pos"]))
+        assert got == sorted(got), p
+        rows += len(got)
+    assert rows == len(range(0, 4_000, 7))

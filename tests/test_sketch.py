@@ -206,27 +206,6 @@ def test_bloom_false_positive_rate_bounded(spark):
     assert fp / 1_000 < 0.01
 
 
-def test_quantile_sample_rate_and_accuracy(spark):
-    """On 20k uniform values per group: the 1/16 hash sample must land
-    within 3x the binomial sd of the expected size, the sampled median
-    must be within ~5 rank-percent of the exact one, and the exact
-    columns must equal a direct percentile computation."""
-    from db_loader_spark.functions.sketch import quantile_sample
-
-    df = spark.range(20_000).select(
-        F.lit("g").alias("grp"),
-        F.col("id").cast("double").alias("v"),
-        F.col("id").alias("key"),
-    )
-    out = quantile_sample(df, "grp", "v", "key").first()
-    expect = 20_000 / 16
-    sd = (20_000 * (1 / 16) * (15 / 16)) ** 0.5
-    assert abs(out["n_sample"] - expect) <= 3 * sd
-    assert out["p50_exact"] == 9999.5  # (n-1)*0.5 interpolation
-    assert abs(out["p50_est"] - out["p50_exact"]) <= 0.05 * 20_000
-    assert abs(out["p95_est"] - out["p95_exact"]) <= 0.05 * 20_000
-
-
 def test_sliding_hll_merge_equals_direct_recompute(spark, sf_dir):
     """The mergeability theorem the operator rests on: each window's
     estimate from MERGED per-hour register shards must equal the HLL
@@ -351,59 +330,14 @@ def test_quantile_sketch_rank_error_within_envelope(spark):
             assert exact == vals[max(1, math.ceil(q * n)) - 1]
 
 
-def test_theta_set_ops_exact_and_estimating_regimes(spark):
-    """r11: kmv_set_ops' two regimes. (a) Groups smaller than k have
-    theta = 1.0 and the 'estimates' are EXACT by construction —
-    intersection, union, and Jaccard all equal ground truth. (b) In
-    the genuinely-estimating regime (groups >> k, partial overlap),
-    the coordinated-sample estimates land within the theta-sketch
-    error envelope and respect the structural invariants. The hash is
-    deterministic, so both regimes are fixed values — re-running
-    yields the identical frame (also asserted)."""
-    from db_loader_spark.functions.sketch import kmv_set_ops
-
-    # (a) exact regime: |A|=10, |B|=8, |A∩B|=4, k=64 > both
-    a_vals = [f"u{i}" for i in range(10)]
-    b_vals = [f"u{i}" for i in range(6, 14)]
-    small = spark.createDataFrame(
-        [("A", v) for v in a_vals] + [("B", v) for v in b_vals],
-        "g string, v string",
-    )
-    r = kmv_set_ops(small, "g", "v", k=64).collect()[0]
-    assert (r["inter_exact"], r["inter_est"]) == (4, 4)
-    assert (r["union_exact"], r["union_est"]) == (14, 14)
-    assert abs(r["jaccard_est"] - round(4 / 14, 4)) < 1e-9
-
-    # (b) estimating regime: 5000 vs 4000 with 2000 shared, k=64
-    big = spark.createDataFrame(
-        [("A", f"x{i}") for i in range(5000)]
-        + [("B", f"x{i}") for i in range(3000, 7000)],
-        "g string, v string",
-    )
-    out = kmv_set_ops(big, "g", "v", k=64)
-    r1 = out.collect()[0]
-    assert r1["inter_exact"] == 2000 and r1["union_exact"] == 7000
-    # structural invariants of the estimator
-    assert 0 < r1["inter_est"] <= r1["union_est"]
-    assert 0.0 <= r1["jaccard_est"] <= 1.0
-    # error envelope: union error ~1/sqrt(k); intersection error
-    # ~1/sqrt(k * jaccard) — generous 2x headroom on both
-    assert abs(r1["union_est"] - 7000) / 7000 <= 2.0 / (64**0.5)
-    jacc = 2000 / 7000
-    assert abs(r1["inter_est"] - 2000) / 2000 <= 2.0 / ((64 * jacc) ** 0.5)
-    # determinism: the md5 hash fixes every value
-    r2 = kmv_set_ops(big, "g", "v", k=64).collect()[0]
-    assert r1 == r2
-
-
 def test_kmv_estimators_exclude_nulls(spark):
     """r11 review: a null value is not a value. Left in, its null hash
     sorts FIRST in Spark's window but LAST in DuckDB's — shifting
     every rank — and a null landing at rank k nulls the k-th hash so
     theta collapses to the small-group fallback: a silent cross-engine
-    estimate divergence. Both estimators must produce results
+    estimate divergence. The estimator must produce results
     identical to the same input with nulls dropped."""
-    from db_loader_spark.functions.sketch import kmv_distinct, kmv_set_ops
+    from db_loader_spark.functions.sketch import kmv_distinct
 
     rows = [("A", f"u{i}") for i in range(40)] + [
         ("B", f"u{i}") for i in range(20, 60)
@@ -418,6 +352,3 @@ def test_kmv_estimators_exclude_nulls(spark):
     want_d = sorted(map(tuple, kmv_distinct(clean, "g", "v", k=k).collect()))
     got_d = sorted(map(tuple, kmv_distinct(dirty, "g", "v", k=k).collect()))
     assert got_d == want_d
-    want_s = sorted(map(tuple, kmv_set_ops(clean, "g", "v", k=k).collect()))
-    got_s = sorted(map(tuple, kmv_set_ops(dirty, "g", "v", k=k).collect()))
-    assert got_s == want_s
