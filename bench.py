@@ -43,6 +43,7 @@ from db_loader_spark.staging import (
     stage_current,
     stage_path,
 )
+from db_loader_spark.trace import trace
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -191,21 +192,20 @@ def _samples_for_projection(
 
 
 def _timed_runs(
-    fn, reset=None, cleanup=None, n: int = N_TIMED
-) -> tuple[float, float]:
-    """Median and relative spread of ``n`` timed executions of ``fn``.
+    spark, fn, reset=None, cleanup=None, n: int = N_TIMED
+) -> tuple[float, float, dict]:
+    """Median and relative spread of ``n`` timed executions of ``fn``,
+    and the ``trace.trace`` of all of them (its ``runs`` field says how
+    many).
 
     ``reset`` runs BEFORE the clock starts and ``cleanup`` (given
-    ``fn``'s return value) AFTER it stops (r9, ADVICE r8: the main
-    loop had folded its cache reset and unpersist into the timed
-    closure — negligible for today's dict-clear resets, but it would
-    silently tax rows if a costlier reset were ever registered).
+    ``fn``'s return value) AFTER it stops, so neither taxes the row.
 
-    Sub-second rows get two extra samples: the r8 measurement showed
-    they carry most of the suite's relative spread (layout microbench
-    rows at 40-65% — one scheduler hiccup is a large fraction of a
-    0.1 s row), and two more runs tighten their median at negligible
-    absolute cost exactly where single samples distort most."""
+    Sub-second rows get two extra samples: they carry most of the
+    suite's relative spread (one scheduler hiccup is a large fraction
+    of a 0.1 s row), and two more runs tighten their median at
+    negligible absolute cost exactly where single samples distort
+    most."""
     runs = []
 
     def one() -> None:
@@ -217,25 +217,25 @@ def _timed_runs(
         if cleanup is not None:
             cleanup(out)
 
-    for _ in range(n):
-        one()
-    # the sub-second top-up only applies at full sample count: a
-    # deadline-degraded row must not win back the samples the budget
-    # shed (and a 1-sample "median" has no meaningful range anyway)
-    if n >= N_TIMED and sorted(runs)[len(runs) // 2] < 0.5:
-        one()
-        one()
+    with trace(spark) as traced:
+        for _ in range(n):
+            one()
+        # the sub-second top-up only applies at full sample count: a
+        # deadline-degraded row must not win back the samples the budget
+        # shed (and a 1-sample "median" has no meaningful range anyway)
+        if n >= N_TIMED and sorted(runs)[len(runs) // 2] < 0.5:
+            one()
+            one()
+    traced["runs"] = len(runs)
     runs.sort()
     # lower-middle median: identical for odd counts; for a deadline-
-    # degraded 2-sample row it takes the MIN (the pre-r8 min-of-2
-    # methodology) rather than the max, which would bias degraded rows
-    # slow relative to their full-sample history
+    # degraded 2-sample row it takes the MIN rather than the max, which
+    # would bias degraded rows slow relative to their full-sample history
     med = runs[(len(runs) - 1) // 2]
     if len(runs) > n:
         # adaptive rows: the FULL range grows with sample count by
         # construction (a 5-sample max-min reads wider than a 3-sample
-        # one on identical noise — measured: suite band 0.171 → 0.229
-        # from the extra samples alone), which would make the band
+        # one on identical noise), which would make the band
         # incomparable across row types. Trim one extreme per side so
         # the reported spread is the middle-3 range — the same
         # statistic the 3-sample rows report — while the median keeps
@@ -243,7 +243,7 @@ def _timed_runs(
         spread = (runs[-2] - runs[1]) / med if med > 0 else 0.0
     else:
         spread = (runs[-1] - runs[0]) / med if med > 0 else 0.0
-    return round(med, 4), round(spread, 3)
+    return round(med, 4), round(spread, 3), traced
 
 
 def _stage(path: str, stamp: str, build) -> str:
@@ -265,6 +265,9 @@ def _events_stamp(sf_dir: str) -> str:
 # for file-level pruning, matching row groups for footer-stat skipping.
 # These are deterministic properties of the layout, not weather.
 SCAN_UNITS: dict[str, dict] = {}
+# Where each row's timed runs went: the ``trace.trace`` of all of a
+# row's samples (jobs, SQL executions, driver gap, py4j commands, ...).
+TRACES: dict[str, dict] = {}
 
 
 def _file_units(df) -> dict:
@@ -310,7 +313,7 @@ def _time_agg_variants(spark, variants, timings, spreads) -> None:
         agg = df.groupBy("event_type").agg(F.round(F.sum("value"), 2).alias("v"))
         agg.count()  # warm
         spark._jvm.System.gc()
-        timings[name], spreads[name] = _timed_runs(lambda: agg.count())
+        timings[name], spreads[name], TRACES[name] = _timed_runs(spark, lambda: agg.count())
 
 
 def _bucketed_fact_tables(spark, sf_dir: str):
@@ -386,7 +389,7 @@ def _bench_bucketed(spark, sf_dir: str, timings, spreads) -> None:
         for name, make in variants.items():
             make().count()  # warm codegen
             spark._jvm.System.gc()  # same GC discipline as the main loop
-            timings[name], spreads[name] = _timed_runs(lambda: make().count())
+            timings[name], spreads[name], TRACES[name] = _timed_runs(spark, lambda: make().count())
 
 
 def _bench_partitioned(spark, sf_dir: str, timings, spreads) -> None:
@@ -682,7 +685,7 @@ def _bench_runtime_filters(spark, sf_dir: str, timings, spreads) -> None:
         with scoped_conf(spark, confs):
             make().count()  # warm
             spark._jvm.System.gc()
-            timings[name], spreads[name] = _timed_runs(lambda: make().count())
+            timings[name], spreads[name], TRACES[name] = _timed_runs(spark, lambda: make().count())
 
 
 def _bench_manifest_zonemap(spark, sf_dir: str, timings, spreads) -> None:
@@ -731,7 +734,7 @@ def _bench_manifest_zonemap(spark, sf_dir: str, timings, spreads) -> None:
         agg = df.groupBy("event_type").agg(F.sum("cents").alias("s"))
         agg.count()  # warm
         spark._jvm.System.gc()
-        timings[name], spreads[name] = _timed_runs(lambda: agg.count())
+        timings[name], spreads[name], TRACES[name] = _timed_runs(spark, lambda: agg.count())
 
 
 def _bench_mor_read(spark, sf_dir: str, timings, spreads) -> None:
@@ -799,7 +802,7 @@ def _bench_mor_read(spark, sf_dir: str, timings, spreads) -> None:
         agg = df.groupBy("event_type").agg(F.sum("cents").alias("s"))
         agg.count()  # warm
         spark._jvm.System.gc()
-        timings[name], spreads[name] = _timed_runs(lambda: agg.count())
+        timings[name], spreads[name], TRACES[name] = _timed_runs(spark, lambda: agg.count())
 
 
 SCALED_WITNESSES = ("g_pagerank_x8", "curation_e2e_x4")
@@ -907,8 +910,8 @@ def _bench_scaled_datapath(spark, sf_dir: str, timings, spreads) -> None:
             assert df.count() >= 0
             return df
 
-        timings[name], spreads[name] = _timed_runs(
-            run_once, cleanup=lambda df: df.unpersist(), n=2
+        timings[name], spreads[name], TRACES[name] = _timed_runs(
+            spark, run_once, cleanup=lambda df: df.unpersist(), n=2
         )
         print(
             f"[bench] {name} med={timings[name]}s",
@@ -978,7 +981,8 @@ def main() -> None:
             return df
 
         t_row = time.perf_counter()
-        timings[name], spreads[name] = _timed_runs(
+        timings[name], spreads[name], TRACES[name] = _timed_runs(
+            spark,
             run_once,
             reset=RESET_BEFORE_TIMING.get(name),
             cleanup=lambda df: df.unpersist(),
@@ -1045,6 +1049,7 @@ def main() -> None:
         # layout properties; compare THESE across rounds, not the
         # sub-noise wall-clock of the cheap pairs.
         "scan_units": SCAN_UNITS,
+        "trace": TRACES,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     # The external driver captures only the LAST ~2000 chars of stdout

@@ -49,6 +49,8 @@ import warnings
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
+from db_loader_spark import trace
+
 _TLS = threading.local()
 
 
@@ -76,6 +78,11 @@ def plan_only():
         yield
     finally:
         _PLAN_ONLY = prev
+
+
+def planning() -> bool:
+    """True inside :func:`plan_only`."""
+    return _PLAN_ONLY
 
 
 def track(df: DataFrame) -> DataFrame:
@@ -140,8 +147,9 @@ def free_local_checkpoint(df: DataFrame) -> None:
     ``LogicalRDD``, so there are no checkpoint blocks to free and the
     caller's storage bound would silently not hold. The release itself
     goes through ``LogicalRDD.rdd()``, which is internal API; if that
-    reach-through fails, a ``RuntimeWarning`` says so and the blocks
-    stay until the ContextCleaner reclaims them."""
+    reach-through fails, a ``RuntimeWarning`` says so, every open
+    ``trace.trace`` counts it in ``checkpoint_release_failures``, and
+    the blocks stay until the ContextCleaner reclaims them."""
     plan = df._jdf.queryExecution().analyzed()
     if plan.nodeName() != "LogicalRDD":
         raise ValueError(
@@ -151,6 +159,7 @@ def free_local_checkpoint(df: DataFrame) -> None:
     try:
         plan.rdd().unpersist(False)
     except Py4JError as exc:
+        trace.count("checkpoint_release_failures")
         warnings.warn(
             f"free_local_checkpoint could not release the checkpoint blocks ({exc}); "
             "they stay in executor storage until the ContextCleaner reclaims them",

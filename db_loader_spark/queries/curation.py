@@ -264,7 +264,7 @@ def _curation_e2e_sized(spark, sf_dir, D, TX, PACK_BUDGET, pack_doc_bins) -> Dat
     # pass depends only on the benchmark split, yet it ran as a
     # blocking step BETWEEN the CC fixpoint and the settle — ~0.4 s of
     # execution plus ~0.4 s of planning on the sf0.1 critical path
-    # (event-log probe, scripts/job_gap_probe.py). Submit it from a
+    # (scripts/probe.py). Submit it from a
     # one-thread pool now so it materializes the eval-shingle cache
     # while the components rounds run; decontaminate() consumes the
     # finished row via prepared=. The frame is tracked on THIS thread

@@ -28,9 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from db_loader_spark import cache
 from db_loader_spark.operators.ids import assign_file_ids
 from db_loader_spark.plans.ecj import ecj_log_eav
-from db_loader_spark.queries import QuerySpec
+from db_loader_spark.queries import QuerySpec, settle
 from db_loader_spark.tables import load_table
 
 
@@ -38,18 +39,16 @@ def ecj_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → synthetic ECJ logs → generations EAV joined to the dim
     star: (expid, logname, n_name, genid, param, value).
 
-    r16 shared-subtree fold (guide §3.3 "materialising an intermediate
-    truncates the plan"; VERDICT r15 #5): assign_file_ids(mode='dense')
-    derives its file list from ``parsed``, so the un-folded plan ran
-    the whole line-build → continuation-merge → boundary-window chain
-    TWICE — once under the dense-id mapping's broadcast and once as
-    the probe side. A lazy ``localCheckpoint`` materializes the chain
-    once and both consumers read the blocks. The r15 sf0.1 negative
-    (1.215 → 1.255 s) did not survive a construction-inclusive
-    noop-sink A/B (scripts/ecj_scale.py): the fold wins at every
-    measured size — 1.27→1.10 s at 1x, 2.30→1.88 at 8x, 5.27→4.44 at
-    32x (medians, non-overlapping ranges at 8x/32x) — and the margin
-    grows with input, exactly the duplicated-chain cost."""
+    ``assign_file_ids(mode='dense')`` derives its file list from
+    ``parsed``, so without a fold the line-build → continuation-merge →
+    boundary-window chain runs twice: once under the dense-id mapping's
+    broadcast and once as the probe side. A lazy ``localCheckpoint``
+    computes the chain once for both (a construction-inclusive noop-sink
+    A/B, scripts/ecj_scale.py, measured 1.27→1.10 s at 1x and 5.27→4.44 s
+    at 32x). The result is settled so the checkpoint's blocks can be
+    freed before returning. Under ``cache.plan_only()`` no checkpoint is
+    taken: AQE runs a checkpoint's shuffle stages as soon as it is
+    taken, even a lazy one, and a plan build must run no job."""
     e = load_table(spark, sf_dir, "events")
     payload = F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)")
     lines = e.select(
@@ -66,7 +65,9 @@ def ecj_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.concat(F.col("event_type"), F.lit(": "), payload))
         .alias("line"),
     )
-    parsed = ecj_log_eav(lines).localCheckpoint(eager=False)
+    parsed = ecj_log_eav(lines)
+    if not cache.planning():
+        parsed = parsed.localCheckpoint(eager=False)
     exps = assign_file_ids(parsed, file_col="file", mode="dense")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_nationkey")
@@ -74,7 +75,7 @@ def ecj_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey"), F.col("n_name")
     )
-    return (
+    star = (
         exps.withColumn("userid", F.col("file").cast("long"))
         .join(F.broadcast(cust), F.col("userid") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
@@ -87,6 +88,11 @@ def ecj_star(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
+    if cache.planning():
+        return star
+    out = settle(star)
+    cache.free_local_checkpoint(parsed)
+    return out
 
 
 _ECJ_ORACLE = r"""

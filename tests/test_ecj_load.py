@@ -171,3 +171,23 @@ def test_schemas_lockstep_with_ddl():
         ]
         got = [(f.name, f.dataType.simpleString()) for f in schema.fields]
         assert got == ddl_cols, f"{name}: schemas.py vs ddl.py drift"
+
+
+def test_ecj_star_plans_without_jobs_and_frees_its_checkpoint(spark, sf_dir):
+    """Under AQE even a lazy localCheckpoint runs its shuffle stages when
+    it is taken, so a plan build must take none; and a collected result
+    must leave no checkpoint blocks behind."""
+    from db_loader_spark import cache
+    from db_loader_spark.queries.ecj import ecj_star
+    from db_loader_spark.trace import trace
+
+    with cache.plan_only():
+        ecj_star(spark, sf_dir)  # warm: table schemas
+        with trace(spark) as traced:
+            ecj_star(spark, sf_dir)
+    assert traced["jobs"] == 0, traced
+    with trace(spark) as traced:
+        df = ecj_star(spark, sf_dir)
+        df.collect()
+        df.unpersist()
+    assert traced["rdds_held"] == 0, traced

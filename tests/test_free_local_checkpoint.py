@@ -14,6 +14,7 @@ import pytest
 from py4j.protocol import Py4JError
 
 from db_loader_spark.cache import free_local_checkpoint
+from db_loader_spark.trace import trace
 
 
 def _storage_rdds(spark) -> int:
@@ -35,9 +36,10 @@ def test_rejects_frame_that_is_not_a_checkpoint(spark):
         free_local_checkpoint(spark.range(3))
 
 
-def test_warns_when_release_cannot_reach_the_rdd():
+def test_warns_when_release_cannot_reach_the_rdd(spark):
     """A plan that is a LogicalRDD but whose RDD accessor fails (the
-    internal API moved) is reported as a RuntimeWarning."""
+    internal API moved) is reported as a RuntimeWarning and counted in
+    the open trace."""
 
     def broken_rdd():
         raise Py4JError("no rdd accessor")
@@ -45,5 +47,6 @@ def test_warns_when_release_cannot_reach_the_rdd():
     plan = SimpleNamespace(nodeName=lambda: "LogicalRDD", rdd=broken_rdd)
     qe = SimpleNamespace(analyzed=lambda: plan)
     df = SimpleNamespace(_jdf=SimpleNamespace(queryExecution=lambda: qe))
-    with pytest.warns(RuntimeWarning, match="could not release"):
+    with trace(spark) as traced, pytest.warns(RuntimeWarning, match="could not release"):
         free_local_checkpoint(df)
+    assert traced["checkpoint_release_failures"] == 1

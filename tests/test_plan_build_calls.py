@@ -15,12 +15,11 @@ from __future__ import annotations
 
 import gc
 
-from py4j import protocol
-
 from db_loader_spark import cache
 from db_loader_spark.functions import dedup as D
 from db_loader_spark.queries.dedup import dedup_minhash_lsh
 from db_loader_spark.tables import load_table
+from db_loader_spark.trace import trace
 
 MAX_COMMANDS = 300
 
@@ -35,40 +34,31 @@ SUCCESS at generation 0
 """
 
 
-def _build_commands(spark, monkeypatch, build) -> int:
+def _build_commands(spark, build) -> int:
     build()  # warm-up
-    client = spark.sparkContext._gateway._gateway_client
-    sent = []
-    send = client.send_command
-
-    def counting(command, *args, **kwargs):
-        sent.append(command)
-        return send(command, *args, **kwargs)
-
     gc.collect()
-    with monkeypatch.context() as m:
-        m.setattr(client, "send_command", counting)
+    with trace(spark) as traced:
         build()
-    return sum(not c.startswith(protocol.MEMORY_COMMAND_NAME) for c in sent)
+    return traced["py4j_commands"]
 
 
-def test_minhash_lsh_plan_builds_in_few_commands(spark, sf_dir, monkeypatch):
+def test_minhash_lsh_plan_builds_in_few_commands(spark, sf_dir):
     def build():
         with cache.plan_only():
             dedup_minhash_lsh(spark, sf_dir)
 
-    n = _build_commands(spark, monkeypatch, build)
+    n = _build_commands(spark, build)
     assert n <= MAX_COMMANDS, n
 
 
-def test_clojush_plan_builds_in_few_commands(spark, monkeypatch, tmp_path):
+def test_clojush_plan_builds_in_few_commands(spark, tmp_path):
     from db_loader_spark.plans.clojush import parse_clojush_logs
 
     for i in range(3):
         (tmp_path / f"run_u{i}.log").write_text(CLOJUSH_LOG)
     path = str(tmp_path / "*.log")
     n = _build_commands(
-        spark, monkeypatch, lambda: parse_clojush_logs(spark, path, problem_map={"demo": "1"})
+        spark, lambda: parse_clojush_logs(spark, path, problem_map={"demo": "1"})
     )
     assert n <= MAX_COMMANDS, n
 

@@ -11,23 +11,17 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from db_loader_spark.session import scoped_conf
 from db_loader_spark.tables import load_table
+from db_loader_spark.trace import trace
+
 
 def _jobs(spark, fn) -> int:
-    """Number of Spark jobs ``fn`` runs on this thread."""
-    sc = spark.sparkContext
-    group = f"schema-memo-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "schema memo test")
-    try:
+    """Number of Spark jobs ``fn`` runs."""
+    with trace(spark) as traced:
         fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return traced["jobs"]
 
 
 def _shipped(src_dir: str, tmp_path, name: str) -> str:
