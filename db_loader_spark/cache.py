@@ -95,17 +95,24 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
-def settle_drained(result: DataFrame, *extra: DataFrame) -> DataFrame:
+def settle_drained(
+    result: DataFrame, *extra: DataFrame, checkpoints: tuple[DataFrame, ...] = ()
+) -> DataFrame:
     """The registry-wrapper epilogue: materialize the small ``result``
     while the tracked caches are hot, then release them (plus any
-    ``extra`` stage frames the wrapper persisted itself). No-op under
+    ``extra`` stage frames the wrapper persisted itself) and free the
+    ``checkpoints``, the ``localCheckpoint`` frames ``result`` was
+    computed from (:func:`free_local_checkpoint`). No-op under
     :func:`plan_only`."""
     if _PLAN_ONLY:
         _tracked().clear()
         return result
     from db_loader_spark.queries import settle
 
-    return settle(result, *extra, *drain())
+    out = settle(result, *extra, *drain())
+    for df in checkpoints:
+        free_local_checkpoint(df)
+    return out
 
 
 def drain() -> tuple[DataFrame, ...]:

@@ -570,17 +570,16 @@ def connected_components(
     one-hop propagation needs 32). Same fixpoint as plain propagation —
     min id per component — so the recursive-CTE oracle is unchanged.
 
-    r15 round-cost shave (guide §1.2 per-task work): each round is ONE
-    job, not two. The round frame is a LAZY ``localCheckpoint`` whose
-    materializing action is a shuffle-free decimal SUM of the label
-    column, which doubles as the convergence test — labels are
-    per-node monotone non-increasing, so the sum strictly decreases
-    iff any node changed (the old shape checkpointed eagerly and then
-    ran a second join+count job per round against the previous
-    labels; at sf0.1 the fold halved the fixed cost of every round:
-    components inside curation_e2e 3.4 → ~1.8 s). DECIMAL(38,0)
-    keeps the signature exact at any node count a cluster can hold —
-    a LONG sum would overflow silently at billions of 63-bit ids.
+    Each round is ONE job, not two. The round frame is a LAZY
+    ``localCheckpoint`` whose materializing action is a shuffle-free
+    decimal SUM of the label column, which doubles as the convergence
+    test — labels are per-node monotone non-increasing, so the sum
+    strictly decreases iff any node changed (a second join+count job
+    per round would cost the fixed per-round overhead twice; at sf0.1
+    the fold measured components inside curation_e2e 3.4 → ~1.8 s).
+    DECIMAL(38,0) keeps the signature exact at any node count a cluster
+    can hold — a LONG sum would overflow silently at billions of 63-bit
+    ids.
     The per-round checkpoint still truncates lineage every round
     (each round's plan references the previous labels three times, so
     anything less re-expands the tree 3^k-fold — measured as a
@@ -588,7 +587,7 @@ def connected_components(
     is the one operator family (iterative fixpoint) that SQL can't
     express — the oracle uses a recursive CTE instead.
 
-    r16 storage bound (guide §5; VERDICT r15 #3): once round k's
+    Storage bound: once round k's
     checkpoint has materialized (the signature job), round k-1's
     checkpoint blocks are dead weight — but they stay live until the
     ContextCleaner GCs the superseded frame, so a long fixpoint held
@@ -597,6 +596,10 @@ def connected_components(
     (cache.free_local_checkpoint), holding exactly one live label
     table plus the one being built. Fault tolerance is unchanged:
     local checkpoints were never recomputable after executor loss.
+
+    The returned frame IS the final round's checkpoint, so a caller
+    frees its blocks once it has settled its own result: pass it as
+    ``checkpoints=`` to ``cache.settle_drained``.
     """
     _sig = F.coalesce(
         F.sum(F.col("component_id").cast("decimal(38,0)")),
@@ -610,8 +613,7 @@ def connected_components(
         .distinct()
         .persist()
     )
-    # r16 fused first round (guide §1.2 — don't compute what a cheaper
-    # pass gives exactly): with identity initial labels, round 1's
+    # Fused first round: with identity initial labels, round 1's
     # hop is min(id, min over neighbors of label(dst)=dst) and its
     # pointer jump goes through the identity table (a no-op), so
     # labels_1 = least(src, min(dst)) — ONE map-side-combined
@@ -625,7 +627,7 @@ def connected_components(
         edges.groupBy("src")
         .agg(F.min("dst").alias("mn"))
         .select(
-            F.col("src").alias("id"),
+            F.col("src").alias("doc_id"),
             F.least(F.col("src"), F.col("mn")).alias("component_id"),
         )
         .localCheckpoint(eager=False)
@@ -634,11 +636,11 @@ def connected_components(
     converged = False
     for _ in range(max_iter):
         prop = edges.join(
-            labels, edges.dst == labels.id, "inner"
-        ).select(F.col("src").alias("id"), "component_id")
+            labels, edges.dst == labels.doc_id, "inner"
+        ).select(F.col("src").alias("doc_id"), "component_id")
         hop = (
             labels.unionByName(prop)
-            .groupBy("id")
+            .groupBy("doc_id")
             .agg(F.min("component_id").alias("component_id"))
         )
         # Pointer jump: follow the label one more step through the label
@@ -646,18 +648,18 @@ def connected_components(
         # label(id) — monotone toward the same fixpoint, but compressing
         # 2 chain hops per round instead of 1.
         jump = labels.select(
-            F.col("id").alias("j_id"), F.col("component_id").alias("j_cid")
+            F.col("doc_id").alias("j_id"), F.col("component_id").alias("j_cid")
         )
         new_labels = (
             hop.join(jump, hop.component_id == F.col("j_id"), "inner")
-            .select("id", F.col("j_cid").alias("component_id"))
+            .select("doc_id", F.col("j_cid").alias("component_id"))
             .localCheckpoint(eager=False)
         )
         # one job: materializes the checkpoint AND evaluates the test
         new_sig = new_labels.agg(_sig).first()["sig"]
         # round k is materialized: round k-1's blocks are superseded —
         # free them now instead of leaving O(rounds) label tables to
-        # the ContextCleaner (r16; see the docstring)
+        # the ContextCleaner (see the docstring)
         from db_loader_spark import cache
 
         cache.free_local_checkpoint(labels)
@@ -674,7 +676,7 @@ def connected_components(
             f"connected_components did not converge in {max_iter} iterations; "
             "raise max_iter (graph diameter exceeds it)"
         )
-    return labels.select(F.col("id").alias("doc_id"), "component_id")
+    return labels
 
 
 SIMHASH_BAND_BITS = 16  # 65,536 buckets per band — the scale knob

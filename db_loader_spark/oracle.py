@@ -26,6 +26,9 @@ class CompareResult:
     spark_rows: int
     oracle_rows: int
     detail: str = ""
+    # the first check that failed, in ``compare``'s order: "columns",
+    # "rows", "dtypes", "values"; "raised" when the query raised
+    failed: str = ""
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -141,9 +144,12 @@ def compare(
         return CompareResult(
             name, False, len(sp), len(du),
             f"column mismatch: spark={sorted(sp.columns)} duck={sorted(du.columns)}",
+            "columns",
         )
     if len(sp) != len(du):
-        return CompareResult(name, False, len(sp), len(du), "row count mismatch")
+        return CompareResult(
+            name, False, len(sp), len(du), "row count mismatch", "rows"
+        )
     # Strict dtype parity (pre-normalization): the driver's schema check
     # may distinguish int32 from int64 etc. — catch it locally first.
     for c in sorted(sp.columns):
@@ -152,6 +158,7 @@ def compare(
             return CompareResult(
                 name, False, len(sp), len(du),
                 f"dtype mismatch in {c!r}: spark={a} duck={b}",
+                "dtypes",
             )
     nsp, ndu = _normalize(sp), _normalize(du)
     for col in nsp.columns:
@@ -161,6 +168,7 @@ def compare(
                 return CompareResult(
                     name, False, len(sp), len(du),
                     f"value mismatch in {col!r} row {i}: spark={a!r} duck={b!r}",
+                    "values",
                 )
     return CompareResult(name, True, len(sp), len(du))
 
@@ -193,7 +201,7 @@ def run_all(
             else:
                 results.append(compare(name, df, spec.oracle, con))
         except Exception as e:  # noqa: BLE001 - recorded, sweep goes on
-            results.append(CompareResult(name, False, -1, -1, repr(e)))
+            results.append(CompareResult(name, False, -1, -1, repr(e), "raised"))
     return results
 
 

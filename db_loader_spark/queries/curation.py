@@ -326,7 +326,7 @@ def _curation_e2e_sized(spark, sf_dir, D, TX, PACK_BUDGET, pack_doc_bins) -> Dat
     )
     from db_loader_spark import cache
 
-    return cache.settle_drained(report, s1)
+    return cache.settle_drained(report, s1, checkpoints=(comps,))
 
 
 def _curation_e2e_oracle() -> str:

@@ -394,7 +394,8 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # threshold inside the band join (residual predicate) — low-sim
         # collisions never leave the join operator
         pairs = D.lsh_candidate_pairs(sig, num_hashes=8, band_size=2, min_est_sim=0.5)
-        return cache.settle_drained(D.connected_components(pairs))
+        comps = D.connected_components(pairs)
+        return cache.settle_drained(comps, checkpoints=(comps,))
 
 
 _COMPONENTS_ORACLE = f"""

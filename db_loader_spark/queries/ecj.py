@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from db_loader_spark import cache
 from db_loader_spark.operators.ids import assign_file_ids
 from db_loader_spark.plans.ecj import ecj_log_eav
-from db_loader_spark.queries import QuerySpec, settle
+from db_loader_spark.queries import QuerySpec
 from db_loader_spark.tables import load_table
 
 
@@ -88,11 +88,7 @@ def ecj_star(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    if cache.planning():
-        return star
-    out = settle(star)
-    cache.free_local_checkpoint(parsed)
-    return out
+    return cache.settle_drained(star, checkpoints=(parsed,))
 
 
 _ECJ_ORACLE = r"""

@@ -438,10 +438,9 @@ def dedup_embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     with data_sized_shuffle(spark, os.path.join(sf_dir, "embeddings.parquet")):
         pairs = S.lsh_near_pairs(emb, threshold=0.4, n_bits=8, n_tables=4)
-        out = connected_components(pairs, src_col="vec_a", dst_col="vec_b").select(
-            F.col("doc_id").alias("vec_id"), "component_id"
-        )
-        return cache.settle_drained(out)
+        comps = connected_components(pairs, src_col="vec_a", dst_col="vec_b")
+        out = comps.select(F.col("doc_id").alias("vec_id"), "component_id")
+        return cache.settle_drained(out, checkpoints=(comps,))
 
 
 _EMB_COMPONENTS_ORACLE = f"""

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from db_loader_spark.functions.dedup import connected_components
 
 
@@ -99,6 +101,24 @@ def test_components_frees_superseded_round_checkpoints(spark):
         f"superseded round checkpoints leaked: {before} persisted RDDs "
         f"before, {after} after (expected at most +1, the final labels)"
     )
+
+
+@pytest.mark.parametrize(
+    "key", ["curation_e2e", "dedup_embedding_components", "dedup_components"]
+)
+def test_component_keys_free_the_final_checkpoint(spark, sf_dir, key):
+    """The returned labels are the last round's local checkpoint: once a
+    caller has settled its result, nothing of the fixpoint may still
+    hold storage."""
+    from db_loader_spark.queries import all_queries, diagnostic_queries
+    from db_loader_spark.trace import trace
+
+    spec = {**all_queries(), **diagnostic_queries()}[key]
+    with trace(spark) as traced:
+        df = spec.spark(spark, sf_dir)
+        df.collect()
+        df.unpersist()
+    assert traced["rdds_held"] == 0, traced
 
 
 def test_decontaminate_flags_overlap(spark):

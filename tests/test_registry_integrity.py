@@ -30,25 +30,81 @@ def test_every_registry_entry_well_formed():
 
 def test_driver_window_is_exactly_sized_and_fronted():
     """The driver witnesses exactly the first DRIVER_WINDOW_SIZE
-    registry keys: WINDOW must hold exactly that many names, NEXT_UP
-    must follow immediately, and neither may overlap the other or name
-    a key outside the registry — a miscounted window edit silently
-    changes which keys get external evidence."""
+    registry keys: WINDOW must hold exactly that many names and front
+    the registry — a miscounted window edit silently changes which keys
+    get external evidence."""
     from db_loader_spark.queries import (
         DRIVER_WINDOW_SIZE,
-        NEXT_UP,
         WINDOW,
         all_queries,
         diagnostic_queries,
     )
 
     assert len(WINDOW) == DRIVER_WINDOW_SIZE
-    assert not set(WINDOW) & set(NEXT_UP)
     ordered = list(all_queries())
     assert ordered[:DRIVER_WINDOW_SIZE] == WINDOW
-    assert ordered[DRIVER_WINDOW_SIZE : DRIVER_WINDOW_SIZE + len(NEXT_UP)] == NEXT_UP
     # diagnostics live outside the driver registry entirely
     assert not set(diagnostic_queries()) & set(ordered)
+
+
+def test_committed_window_is_derived_from_the_committed_evidence():
+    """WINDOW is derive_window's output over the committed CORRECTNESS
+    files and sweep artifact, and that sweep is a green run of exactly
+    the registry's keys."""
+    import json
+    import os
+
+    from db_loader_spark.queries import (
+        GREEN,
+        REPO,
+        SWEEP,
+        WINDOW,
+        all_queries,
+        derive_window,
+    )
+
+    with open(os.path.join(REPO, SWEEP)) as fh:
+        sweep = json.load(fh)
+    assert set(sweep) == set(all_queries())
+    assert [k for k, row in sweep.items() if not all(row[f] for f in GREEN)] == []
+    assert derive_window()[0] == WINDOW
+
+
+def test_derive_window_rules(tmp_path):
+    """Oldest green evidence first: empty and unreadable artifacts are
+    no evidence, a red newest row falls back to the older green one,
+    never-green keys come first, ties keep registry order, and the
+    window runs cheapest-first."""
+    import json
+
+    from db_loader_spark.queries import DRIVER_WINDOW_SIZE, GREEN, SWEEP, derive_window
+
+    keys = [f"k{i:02d}" for i in range(60)]
+    green = dict.fromkeys(GREEN, True)
+    red = {**green, "hash_match": False}
+
+    def artifact(n: int, rows) -> None:
+        (tmp_path / f"CORRECTNESS_r{n:02d}.json").write_text(json.dumps(rows))
+
+    artifact(1, {k: green for k in keys[:59]})
+    artifact(2, {})
+    (tmp_path / "CORRECTNESS_r03.json").write_text("{")
+    artifact(4, {k: red if k in ("k05", "k07") else green for k in keys[:59]})
+    artifact(5, {k: green for k in keys[20:59]})
+    (tmp_path / SWEEP).parent.mkdir()
+    # cost falls with registry position
+    (tmp_path / SWEEP).write_text(
+        json.dumps({k: {"s": (60 - i) / 10} for i, k in enumerate(keys)})
+    )
+
+    window, ignored = derive_window(str(tmp_path), keys)
+    assert ignored == ["CORRECTNESS_r02.json", "CORRECTNESS_r03.json"]
+    # k59 never green; k05/k07 newest green r01; k00-k19 r04; k20-k58
+    # r05, of which registry order admits the first 29
+    fronted = ["k59", "k05", "k07"] + [k for k in keys[:20] if k not in ("k05", "k07")]
+    members = fronted + keys[20 : DRIVER_WINDOW_SIZE - len(fronted) + 20]
+    assert len(members) == DRIVER_WINDOW_SIZE
+    assert window == sorted(members, reverse=True)
 
 
 def test_bench_headline_names_resolve():
