@@ -28,10 +28,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL equivalent for each query (omitted for
-    genuinely non-SQL-expressible ops → rows-only check)."""
-    return {
-        name: spec.oracle
-        for name, spec in all_queries().items()
-        if spec.oracle is not None
-    }
+    """DuckDB-runnable ANSI SQL equivalent for each query."""
+    return {name: spec.oracle for name, spec in all_queries().items()}

@@ -43,6 +43,7 @@ from db_loader_spark.staging import (
     stage_current,
     stage_path,
 )
+from db_loader_spark.tables import replica
 from db_loader_spark.trace import trace
 
 HEADLINE = [
@@ -819,93 +820,30 @@ def _totals(timings: dict) -> tuple[float, float]:
 
 
 def _bench_scaled_datapath(spark, sf_dir: str, timings, spreads) -> None:
-    """Data-path witnesses above the bench SF (r16, VERDICT r15 #6):
-    the r15 scaling block proved the suite's slowest keys measure
-    FIXED COST at sf0.1 (8c/32c ratios ≈ 1), so data-path wins on the
-    changed-shape keys were invisible in the driver's artifact. These
-    two rows run the REGISTRY implementations of the two keys whose
-    shapes the optimization rounds changed — g_pagerank (broadcast
-    iteration, dst-clustered contrib) and curation_e2e (CC fixpoint,
-    overlap-sized decontamination) — over a staged, deterministic
-    k-fold replica of their input tables, where the data path is a
-    measurable fraction of the wall:
+    """Data-path witnesses above the bench SF: the registry
+    implementations of g_pagerank and curation_e2e over replicas of
+    their input tables (``tables.replica``), where the data path is a
+    measurable fraction of the wall — lineitem ×8 (eight disjoint
+    copies of the co-occurrence graph) and documents ×4 (the replica
+    token in the text keeps the copies from collapsing in exact dedup,
+    so they reach the MinHash/CC stages as near-duplicates).
 
-    - lineitem ×8 with orderkey/partkey shifted per replica — eight
-      DISJOINT copies of the co-occurrence graph (8× nodes and edges,
-      identical degree structure);
-    - documents ×4 with shifted doc_id and a per-replica token
-      appended to the text (without the perturbation, stage-1 exact
-      dedup would collapse the replicas and the pipeline would
-      process 1× data again; with it, replicas survive to the
-      MinHash/CC stages as genuine near-duplicates).
-
-    Staging is one-time derived-layout work, source-stamped and
-    excluded from the timings like every other staged layout here.
-    ADDITIONS ONLY: existing keys, methodology, and the output
-    contract are untouched. These two rows are deliberately timed at
-    n=2 samples (they cost ~10-13 s each; a third sample would buy
-    ~35 s of suite wall for witnesses whose job is direction, not a
-    tight median) and are EXCLUDED from the suite noise band so the
-    band stays comparable across rounds; TAIL_RESERVE_S covers their
-    wall so the headline loop's deadline projection stays honest."""
-    from urllib.parse import urlparse
-
-    from pyspark.sql import functions as F
-
-    from db_loader_spark.tables import load_table
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    stamp = source_stamp(
-        os.path.join(sf_dir, "lineitem.parquet"),
-        os.path.join(sf_dir, "documents.parquet"),
-    ) + ":li8:doc4:v1"
-
-    def build(scratch: str) -> None:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        (
-            li.withColumn("rep", F.explode(F.expr("sequence(0, 7)")))
-            .select(
-                (
-                    F.col("l_orderkey").cast("long")
-                    + F.col("rep").cast("long") * 1_000_000_000
-                ).alias("l_orderkey"),
-                (
-                    F.col("l_partkey").cast("long")
-                    + F.col("rep").cast("long") * 1_000_000_000
-                ).alias("l_partkey"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(scratch, "lineitem.parquet"))
-        )
-        docs = load_table(spark, sf_dir, "documents")
-        (
-            docs.withColumn("rep", F.explode(F.expr("sequence(0, 3)")))
-            .select(
-                (
-                    F.col("doc_id").cast("long")
-                    + F.col("rep").cast("long") * 1_000_000_000
-                ).alias("doc_id"),
-                F.concat(
-                    F.col("text"), F.lit(" replica"), F.col("rep")
-                ).alias("text"),
-                *[c for c in docs.columns if c not in ("doc_id", "text")],
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(scratch, "documents.parquet"))
-        )
-
-    root = _stage(os.path.join(warehouse, "bench_scaled_datapath"), stamp, build)
+    Staging is source-stamped and untimed, like every staged layout
+    here. The two rows run 2 samples each and are summed apart from
+    the headline (``_totals``); TAIL_RESERVE_S covers their wall."""
+    roots = {
+        "g_pagerank": replica(spark, sf_dir, 8, tables=("lineitem",)),
+        "curation_e2e": replica(spark, sf_dir, 4, tables=("documents",)),
+    }
     registry = all_queries()
     for name, key in zip(SCALED_WITNESSES, ("g_pagerank", "curation_e2e")):
-        spec = registry[key]
+        spec, root = registry[key], roots[key]
         warm = spec.spark(spark, root)
         warm.count()
         warm.unpersist()
         spark._jvm.System.gc()
 
-        def run_once(spec=spec):
+        def run_once(spec=spec, root=root):
             df = spec.spark(spark, root)
             assert df.count() >= 0
             return df

@@ -1,8 +1,7 @@
 """Query registry: every operator from SURVEY.md §2 as a named query.
 
 Each entry pairs a Spark implementation (``(spark, sf_dir) -> DataFrame``)
-with an equivalent ANSI-SQL oracle for DuckDB (or ``None`` for genuinely
-non-SQL-expressible operators, which get a weaker rows-only check).
+with an equivalent ANSI-SQL oracle for DuckDB.
 
 Determinism rules (the driver hash-compares values order-insensitively):
 - every computed column is aliased identically in Spark and oracle SQL;
@@ -36,10 +35,10 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 @dataclass(frozen=True)
 class QuerySpec:
-    """A named query: Spark impl + DuckDB oracle SQL (None = rows-only)."""
+    """A named query: Spark impl + DuckDB oracle SQL."""
 
     spark: SparkQuery
-    oracle: str | None
+    oracle: str
     doc: str = ""
 
 
@@ -109,56 +108,56 @@ GREEN = ("rows_match", "schema_match", "hash_match")
 # a CORRECTNESS file changes, and paste what it prints.
 DRIVER_WINDOW_SIZE = 50
 WINDOW = [
-    "jn2_contains_join",  # 0.24s
-    "dedup_exact",  # 0.28s
-    "a_hash_sample",  # 0.28s
-    "a3_filtered_count",  # 0.30s
-    "a_histogram",  # 0.34s
-    "jn7_fk_validation",  # 0.35s
-    "multimodal_frame_sample",  # 0.36s
-    "a_salted_agg",  # 0.39s
-    "t_sliding_counts",  # 0.39s
-    "a_moments",  # 0.40s
-    "w_running_sum",  # 0.41s
-    "curation_weighted_sample",  # 0.44s
-    "multimodal_features",  # 0.47s
-    "jn4_anti_join_idempotence",  # 0.47s
-    "jn_fuzzy_join",  # 0.47s
-    "t_snapshot_upsert",  # 0.50s
-    "a2_max_id",  # 0.51s
-    "q5_region_revenue",  # 0.51s
-    "a_table_fingerprint",  # 0.57s
-    "t_session_window",  # 0.58s
-    "text_cms_topk",  # 0.64s
-    "text_quality_score",  # 0.65s
-    "jn1_dim_lookup_join",  # 0.65s
-    "scan_manifest_pruned",  # 0.65s
-    "curation_shard_assign",  # 0.67s
-    "a_hll_distinct",  # 0.68s
-    "q1_pricing_summary",  # 0.70s
-    "w_moving_avg",  # 0.71s
-    "t_snapshot_incremental",  # 0.79s
-    "cdc_snapshot_diff",  # 0.81s
-    "p_parse_suite",  # 0.84s
-    "text_lm_score",  # 1.06s
-    "a_profile_stats",  # 1.07s
-    "a_quantile_sketch",  # 1.13s
-    "dedup_bloom_prefilter",  # 1.18s
-    "text_bm25_topk",  # 1.35s
-    "ann_bruteforce_topk",  # 1.36s
-    "t_sliding_hll",  # 1.43s
-    "t_stream_lakehouse",  # 2.23s
+    "a2_max_id",  # 0.18s
+    "a3_filtered_count",  # 0.28s
+    "curation_shard_assign",  # 0.32s
+    "w_moving_avg",  # 0.35s
+    "curation_weighted_sample",  # 0.38s
+    "multimodal_frame_sample",  # 0.41s
+    "q1_pricing_summary",  # 0.42s
+    "text_quality_score",  # 0.42s
+    "jn1_dim_lookup_join",  # 0.43s
+    "dedup_exact",  # 0.49s
+    "a_salted_agg",  # 0.58s
+    "jn4_anti_join_idempotence",  # 0.63s
+    "w_running_sum",  # 0.64s
+    "jn_fuzzy_join",  # 0.64s
+    "a_moments",  # 0.66s
+    "t_session_window",  # 0.72s
+    "t_sliding_counts",  # 0.74s
+    "a_histogram",  # 0.75s
+    "jn7_fk_validation",  # 0.78s
+    "q5_region_revenue",  # 0.78s
+    "a_hash_sample",  # 0.78s
+    "a_table_fingerprint",  # 0.82s
+    "a_hll_distinct",  # 0.83s
+    "a_profile_stats",  # 0.90s
+    "cdc_snapshot_diff",  # 0.94s
+    "p_parse_suite",  # 1.00s
+    "text_lm_score",  # 1.05s
+    "scan_manifest_pruned",  # 1.10s
+    "dedup_bloom_prefilter",  # 1.14s
+    "text_bm25_topk",  # 1.23s
+    "a_quantile_sketch",  # 1.23s
+    "jn2_contains_join",  # 1.30s
+    "t_snapshot_incremental",  # 1.34s
+    "t_sliding_hll",  # 1.47s
+    "ann_bruteforce_topk",  # 1.51s
+    "multimodal_features",  # 1.94s
+    "t_stream_lakehouse",  # 1.97s
+    "text_bpe_pack",  # 2.21s
+    "text_cms_topk",  # 2.24s
     "t_stream_mview",  # 2.26s
-    "text_pack_bins",  # 2.27s
-    "text_bpe_pack",  # 2.38s
-    "t_stream_ann_index",  # 2.46s
-    "dedup_semantic",  # 2.53s
-    "ann_ivf_disk_topk",  # 3.16s
-    "curation_funnel",  # 3.32s
-    "ann_pq_topk",  # 3.62s
-    "ann_ivfpq_topk",  # 4.11s
-    "t_stream_sessions",  # 9.73s
-    "g_triangle_count",  # 22.39s
+    "curation_funnel",  # 2.61s
+    "g_triangle_count",  # 2.63s
+    "text_pack_bins",  # 2.67s
+    "dedup_semantic",  # 3.19s
+    "ann_ivf_disk_topk",  # 3.23s
+    "t_snapshot_upsert",  # 3.23s
+    "t_stream_ann_index",  # 4.95s
+    "ann_pq_topk",  # 6.27s
+    "t_stream_sessions",  # 6.48s
+    "ann_ivfpq_topk",  # 10.38s
 ]
 
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

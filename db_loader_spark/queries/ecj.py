@@ -44,8 +44,10 @@ def ecj_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary-window chain runs twice: once under the dense-id mapping's
     broadcast and once as the probe side. A lazy ``localCheckpoint``
     computes the chain once for both (a construction-inclusive noop-sink
-    A/B, scripts/ecj_scale.py, measured 1.27→1.10 s at 1x and 5.27→4.44 s
-    at 32x). The result is settled so the checkpoint's blocks can be
+    A/B measured 1.27→1.10 s at 1x and 5.27→4.44 s at 32x with the
+    since-deleted scripts/ecj_scale.py, last at aaf5f59; ``scripts/probe.py
+    ecj_star --sf DIR --x 1,4,16`` sweeps the shipped shape, with the
+    per-scale wall in bench_history/pr15_scale.jsonl). The result is settled so the checkpoint's blocks can be
     freed before returning. Under ``cache.plan_only()`` no checkpoint is
     taken: AQE runs a checkpoint's shuffle stages as soon as it is
     taken, even a lazy one, and a plan build must run no job."""

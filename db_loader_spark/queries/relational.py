@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from db_loader_spark.queries import QuerySpec
-from db_loader_spark.session import local_frame
+from db_loader_spark.session import data_sized_shuffle, local_frame
 from db_loader_spark.tables import load_table
 
 
@@ -1195,65 +1195,68 @@ def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from db_loader_spark import cache
     from db_loader_spark.queries import settle
 
-    broadcast_limit_bytes = 256 << 20
+    # sized to the input like curation_e2e: ~20 jobs over a small graph
+    # would otherwise each pay the session's shuffle width in tasks
+    with data_sized_shuffle(spark, os.path.join(sf_dir, "lineitem.parquet")):
+        broadcast_limit_bytes = 256 << 20
 
-    e = cache.track(_cooccurrence_edges(spark, sf_dir))
-    n_edges = e.count()  # cached here; also the output stat
-    deg = cache.track(
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
-    n_nodes = deg.count()  # cached; also the output stat
-
-    def _hint(df: DataFrame, est_bytes: int) -> DataFrame:
-        return F.broadcast(df) if est_bytes <= broadcast_limit_bytes else df
-
-    deg_b = _hint(deg, 48 * n_nodes)
-    ed = (
-        e.join(deg_b.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), "a")
-        .join(deg_b.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), "b")
-    )
-    lower_a = F.struct(F.col("da"), F.col("a")) < F.struct(F.col("db"), F.col("b"))
-    oriented = ed.select(
-        F.when(lower_a, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(lower_a, F.col("b")).otherwise(F.col("a")).alias("dst"),
-    )
-    # adjacency-array formulation: for each oriented edge (u,v) the
-    # triangles it is the LOWEST edge of are |N+(u) ∩ N+(v)| (each
-    # triangle x<y<z is counted exactly once, at edge (x,y)). Wedges
-    # never materialize as shuffle rows — out-neighborhoods travel as
-    # sorted arrays and intersect JVM-side per edge (array_intersect),
-    # which cut the wedge-row version's bench time ~2x; broadcasting
-    # the adjacency (total size = m entries, one per oriented edge)
-    # keeps the per-edge probe shuffle-free. The probe derives each
-    # edge (src, dst) by EXPLODING adj itself — the exploded row
-    # already carries src's neighbor array, so only dst's array needs
-    # a join: one broadcast join instead of two, and `oriented` drops
-    # to a single consumer (the adj build) so it is not cached.
-    adj = cache.track(
-        oriented.groupBy("src").agg(
-            F.sort_array(F.collect_list("dst")).alias("nbrs")
+        e = cache.track(_cooccurrence_edges(spark, sf_dir))
+        n_edges = e.count()  # cached here; also the output stat
+        deg = cache.track(
+            e.select(F.col("a").alias("node"))
+            .unionAll(e.select(F.col("b").alias("node")))
+            .groupBy("node")
+            .agg(F.count("*").alias("deg"))
         )
-    )
-    adj_b = _hint(adj, 16 * n_edges + 48 * n_nodes)
-    per_edge = (
-        adj.select(F.col("nbrs").alias("nu"), F.explode("nbrs").alias("v"))
-        .join(
-            adj_b.select(F.col("src").alias("v"), F.col("nbrs").alias("nv")),
-            "v",
+        n_nodes = deg.count()  # cached; also the output stat
+
+        def _hint(df: DataFrame, est_bytes: int) -> DataFrame:
+            return F.broadcast(df) if est_bytes <= broadcast_limit_bytes else df
+
+        deg_b = _hint(deg, 48 * n_nodes)
+        ed = (
+            e.join(deg_b.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), "a")
+            .join(deg_b.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), "b")
         )
-        .select(F.size(F.array_intersect("nu", "nv")).cast("long").alias("k"))
-    )
-    out = per_edge.agg(
-        F.coalesce(F.sum("k"), F.lit(0)).cast("long").alias("n_triangles")
-    ).select(
-        F.lit(n_nodes).cast("long").alias("n_nodes"),
-        F.lit(n_edges).cast("long").alias("n_edges"),
-        "n_triangles",
-    )
-    return settle(out, *cache.drain())
+        lower_a = F.struct(F.col("da"), F.col("a")) < F.struct(F.col("db"), F.col("b"))
+        oriented = ed.select(
+            F.when(lower_a, F.col("a")).otherwise(F.col("b")).alias("src"),
+            F.when(lower_a, F.col("b")).otherwise(F.col("a")).alias("dst"),
+        )
+        # adjacency-array formulation: for each oriented edge (u,v) the
+        # triangles it is the LOWEST edge of are |N+(u) ∩ N+(v)| (each
+        # triangle x<y<z is counted exactly once, at edge (x,y)). Wedges
+        # never materialize as shuffle rows — out-neighborhoods travel as
+        # sorted arrays and intersect JVM-side per edge (array_intersect),
+        # which cut the wedge-row version's bench time ~2x; broadcasting
+        # the adjacency (total size = m entries, one per oriented edge)
+        # keeps the per-edge probe shuffle-free. The probe derives each
+        # edge (src, dst) by EXPLODING adj itself — the exploded row
+        # already carries src's neighbor array, so only dst's array needs
+        # a join: one broadcast join instead of two, and `oriented` drops
+        # to a single consumer (the adj build) so it is not cached.
+        adj = cache.track(
+            oriented.groupBy("src").agg(
+                F.sort_array(F.collect_list("dst")).alias("nbrs")
+            )
+        )
+        adj_b = _hint(adj, 16 * n_edges + 48 * n_nodes)
+        per_edge = (
+            adj.select(F.col("nbrs").alias("nu"), F.explode("nbrs").alias("v"))
+            .join(
+                adj_b.select(F.col("src").alias("v"), F.col("nbrs").alias("nv")),
+                "v",
+            )
+            .select(F.size(F.array_intersect("nu", "nv")).cast("long").alias("k"))
+        )
+        out = per_edge.agg(
+            F.coalesce(F.sum("k"), F.lit(0)).cast("long").alias("n_triangles")
+        ).select(
+            F.lit(n_nodes).cast("long").alias("n_nodes"),
+            F.lit(n_edges).cast("long").alias("n_edges"),
+            "n_triangles",
+        )
+        return settle(out, *cache.drain())
 
 
 _TRIANGLE_ORACLE = f"""

@@ -79,6 +79,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -587,6 +588,22 @@ def _file_stats(path: str, cols: list[str]) -> dict:
     return out
 
 
+# Spark names each written file ``part-<i>-<job uuid>-c000...`` (and its
+# checksum ``.part-...crc``); the uuid is random per write.
+_JOB_UUID = re.compile(r"^(\.?part-\d+)-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}")
+
+
+def _write_files(df: DataFrame, path: str) -> None:
+    """Write ``df`` as parquet files at ``path`` (replacing it) named
+    without Spark's per-write job UUID, e.g. ``part-00000-c000.snappy.
+    parquet``. The snapshot id is already the directory, so the same
+    frame committed under the same id writes the same names, and the
+    deletion vectors that name those files write the same bytes."""
+    df.write.mode("overwrite").parquet(path)
+    for f in os.listdir(path):
+        os.replace(os.path.join(path, f), os.path.join(path, _JOB_UUID.sub(r"\1", f)))
+
+
 def _new_sid() -> str:
     """A fresh snapshot id: millisecond commit time, then a random tag."""
     return f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
@@ -672,7 +689,7 @@ def publish(
         observed_gen = _pinned_gen(root, observed, "commit's content")
     # stage: snapshot-unique prefix; overwrite = idempotent retry
     staged = os.path.join(data_dir, sid)
-    df.write.mode("overwrite").parquet(staged)
+    _write_files(df, staged)
     files = sorted(
         f for f in os.listdir(staged) if f.endswith(".parquet")
     )
@@ -1716,7 +1733,7 @@ def _mor_write(
             .sortWithinPartitions("f", "pos")
         )
     try:
-        hits.write.mode("overwrite").parquet(dv_tmp)
+        _write_files(hits, dv_tmp)
         # the driver-bounded per-data-file association: (f, n, parts)
         assoc = (
             spark.read.schema("f string, pos long").parquet(dv_tmp)
@@ -1786,7 +1803,7 @@ def _mor_mask_append_commit(
     # residue first, so the move must come after). batch=None is the
     # mask-only commit: no data file is written, not even a 0-row part.
     if batch is not None:
-        batch.write.mode("overwrite").parquet(staged)
+        _write_files(batch, staged)
     else:
         shutil.rmtree(staged, ignore_errors=True)  # prior-attempt residue
         os.makedirs(staged, exist_ok=True)

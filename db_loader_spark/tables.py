@@ -15,9 +15,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructType
 
-from db_loader_spark.staging import source_stamp
+from db_loader_spark.staging import build_stage, source_stamp, stage_path
 
 TABLE_NAMES = (
     "region",
@@ -120,6 +120,74 @@ def decode_ts(dt):
     # TIMESTAMP_NTZ: naive→instant under the session timezone; identity
     # on the naive value for formatting/roundtrip, exact under UTC.
     return F.col("ts").cast("timestamp")
+
+
+REPLICA_STRIDE = 1_000_000_000
+
+
+def replica(
+    spark: SparkSession, sf_dir: str, x: int, tables: tuple[str, ...] = TABLE_NAMES
+) -> str:
+    """Stage an ``x``-fold replica of ``tables`` from ``sf_dir`` and
+    return its directory, which every query reads like an sf dir.
+
+    Replica ``rep`` (0 .. x-1) of a table is a copy with every int64
+    column named ``*key`` or ``*_id`` shifted by ``rep * REPLICA_STRIDE``,
+    so the copies are disjoint and every foreign-key join stays inside
+    its copy. A table with no such column (``nation``, ``region``) is
+    copied once. Two more columns change, so that copies are not exact
+    duplicates of each other: ``documents.text`` gets ``' replica<rep>'``
+    appended, and ``embeddings.embedding`` is rotated ``rep`` components
+    to the left.
+
+    Each table is its own stage (``staging.build_stage``), stamped with
+    its source file, so it is built once per source version and a
+    second call runs no job."""
+    out = stage_path(sf_dir, f"replica_x{x}")
+    os.makedirs(out, exist_ok=True)
+    for name in tables:
+        src = os.path.join(sf_dir, f"{name}.parquet")
+
+        def build(scratch: str, name=name) -> None:
+            # the raw columns: a copy keeps its source's physical types
+            _replicate(_read_parquet(spark, src), x).write.mode(
+                "overwrite"
+            ).parquet(scratch)
+
+        build_stage(
+            os.path.join(out, f"{name}.parquet"),
+            f"{source_stamp(src)}:replica:v2",  # bump when the rule changes
+            build,
+        )
+    return out
+
+
+def _replicate(df: DataFrame, x: int) -> DataFrame:
+    """One scan per copy, unioned: each copy keeps the source's files
+    and splits, so an x-fold table is read by at least x tasks."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    ids = [
+        f.name
+        for f in df.schema
+        if isinstance(f.dataType, LongType) and f.name.endswith(("key", "_id"))
+    ]
+    if not ids:
+        return df
+
+    def copy(rep: int) -> DataFrame:
+        shifted = {c: F.col(c) + F.lit(rep * REPLICA_STRIDE) for c in ids}
+        if "text" in df.columns:
+            shifted["text"] = F.concat(F.col("text"), F.lit(f" replica{rep}"))
+        if "embedding" in df.columns:
+            shifted["embedding"] = F.expr(
+                f"transform(embedding, (v, i) -> embedding[(i + {rep}) % size(embedding)])"
+            )
+        return df.select(*[shifted.get(c, F.col(c)).alias(c) for c in df.columns])
+
+    return reduce(DataFrame.unionAll, [copy(rep) for rep in range(x)])
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

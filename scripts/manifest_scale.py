@@ -18,8 +18,8 @@ batch and the pruned-read range stay FIXED:
   - append + read_added fold: ~flat in parent size (delta-sized scan).
   - snapshot_diff base vs merged: ~linear (full-outer join over n).
 
-Deterministic hash-based data (no RNG state), same methodology as
-graph_scale.py / decontam_scale.py.
+Deterministic hash-based data (no RNG state): a warm 1x pass, then
+System.gc before each measured scale.
 """
 
 from __future__ import annotations

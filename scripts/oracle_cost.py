@@ -36,8 +36,7 @@ def main() -> int:
     window_only = "--window-only" in sys.argv
     from db_loader_spark.queries import WINDOW, all_queries
 
-    registry = all_queries()
-    names = [n for n in (WINDOW if window_only else registry) if registry[n].oracle]
+    names = list(WINDOW if window_only else all_queries())
     worst: list = []
     for name in names:
         try:

@@ -15,7 +15,7 @@ The interesting number is the SLOPE: the single-window wall grows with
 the head language's total mass (one reducer does it all — on a real
 cluster that is the whole pipeline's critical path; local[32] already
 shows the serialization), while the blocked wall tracks corpus/cores.
-Deterministic hash-based data, same methodology as graph_scale.py.
+Deterministic hash-based data (no RNG state).
 """
 
 from __future__ import annotations

@@ -14,7 +14,7 @@ operator exists to find). The within-cell pair join is timed twice:
 The capped path must also produce a SUPERSET-equal dup verdict for
 truly identical vectors (identical rows share all sign bits, so they
 always co-assign); the sweep asserts the identical-pair count match.
-Deterministic hash-based data, same methodology as graph_scale.py.
+Deterministic hash-based data (no RNG state).
 """
 
 from __future__ import annotations

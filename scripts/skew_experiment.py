@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from db_loader_spark.operators.skew import salted_join
-from db_loader_spark.session import get_spark
+from db_loader_spark.session import get_spark, scoped_conf
 
 N = 2_000_000
 N_KEYS = 200
@@ -64,41 +64,48 @@ def timed(spark, make, runs: int = 2) -> float:
     return round(best, 3)
 
 
+# Force a shuffle join and scale the skew trip wire to the local data.
+SKEW_CONFS = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "16m",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+}
+
+
 def main() -> None:
     spark = get_spark("skew-exp")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m"
-    )
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
+
+    def skew_join(on: bool):
+        return scoped_conf(spark, {"spark.sql.adaptive.skewJoin.enabled": str(on).lower()})
 
     out = {}
-    for label, skewed in (("skewed", True), ("balanced", False)):
-        fact, dim = build(spark, skewed)
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        out[f"plain_{label}"] = timed(
-            spark, lambda: fact.join(dim, "k").select(F.sum("v"))
-        )
-        out[f"salted_{label}"] = timed(
-            spark, lambda: salted_join(fact, dim, "k", n_salts=16).select(F.sum("v"))
-        )
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        out[f"aqe_{label}"] = timed(
-            spark, lambda: fact.join(dim, "k").select(F.sum("v"))
-        )
+    with scoped_conf(spark, SKEW_CONFS):
+        for label, skewed in (("skewed", True), ("balanced", False)):
+            fact, dim = build(spark, skewed)
+            with skew_join(False):
+                out[f"plain_{label}"] = timed(
+                    spark, lambda: fact.join(dim, "k").select(F.sum("v"))
+                )
+                out[f"salted_{label}"] = timed(
+                    spark, lambda: salted_join(fact, dim, "k", n_salts=16).select(F.sum("v"))
+                )
+            with skew_join(True):
+                out[f"aqe_{label}"] = timed(
+                    spark, lambda: fact.join(dim, "k").select(F.sum("v"))
+                )
 
-    # plan evidence: the skewed AQE arm actually split
-    fact, dim = build(spark, skewed=True)
-    j = fact.join(dim, "k")
-    j.collect()
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        j.explain()
+        # plan evidence: the skewed AQE arm actually split
+        fact, dim = build(spark, skewed=True)
+        j = fact.join(dim, "k")
+        buf = io.StringIO()
+        with skew_join(True):
+            j.collect()
+            with contextlib.redirect_stdout(buf):
+                j.explain()
     print("skew=true in final plan:", "skew=true" in buf.getvalue())
     for k, v in out.items():
         print(f"{k:18s} {v:.3f} s")
-
 
 if __name__ == "__main__":
     main()

@@ -1000,3 +1000,25 @@ def test_mor_vectors_are_written_in_file_position_order(spark, tmp_path):
         assert got == sorted(got), p
         rows += len(got)
     assert rows == len(range(0, 4_000, 7))
+
+
+def test_same_commits_write_the_same_files(spark, tmp_path):
+    """Staged files carry no per-write job id: the same frame published
+    under the same snapshot id into two fresh roots, then the same MOR
+    delete, lists the same files, and every deletion-vector sidecar
+    (whose rows name the data files) is byte-identical."""
+    base = spark.range(0, 2_000, 1, 4).select("id", (F.col("id") * 3).alias("v"))
+    trees = []
+    for name in ("a", "b"):
+        root = str(tmp_path / name)
+        M.publish(base, root, snapshot_id="v1", stats_cols=["id"])
+        M.delete_where(spark, root, "id % 11 = 0", mode="mor", snapshot_id="d1")
+        d1 = M._manifest(root, "d1")
+        sidecars = sorted({p for e in d1["deletes"].values() for p in e["dv"]})
+        assert sidecars and all(os.path.basename(p).startswith("dv-part-") for p in sidecars)
+        trees.append((root, d1["files"], sidecars))
+    (ra, files_a, dv_a), (rb, files_b, dv_b) = trees
+    assert files_a == files_b and dv_a == dv_b
+    for p in dv_a:
+        with open(os.path.join(ra, p), "rb") as fa, open(os.path.join(rb, p), "rb") as fb:
+            assert fa.read() == fb.read(), p

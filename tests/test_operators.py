@@ -298,6 +298,24 @@ def test_triangle_count_known_graphs(spark, sf_dir):
     assert tri_of([[0, 1], [0, 2], [0, 3], [1, 2]]) == 1
 
 
+def test_triangle_count_sizes_its_own_shuffles(spark, sf_dir):
+    """``g_triangle_count`` scopes its shuffle width to the lineitem
+    bytes, so a session left at Spark's default 200 shuffle partitions
+    does not make each of its ~20 jobs run 200 tasks per exchange (about
+    2,600 tasks for one warm call at sf0.001 before the scope)."""
+    from db_loader_spark.queries.relational import g_triangle_count
+    from db_loader_spark.session import scoped_conf
+    from db_loader_spark.trace import trace
+
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "200"}):
+        g_triangle_count(spark, sf_dir).unpersist()  # warm
+        with trace(spark) as traced:
+            df = g_triangle_count(spark, sf_dir)
+            df.collect()
+        df.unpersist()
+    assert traced["tasks"] < 800, traced
+
+
 def test_pagerank_known_graph_properties(spark):
     """On a star graph the hub must outrank every leaf, leaves must tie
     exactly (symmetry), and total mass must stay ~1 (stochasticity —

@@ -26,18 +26,20 @@ def test_run_all_records_a_raising_query_and_goes_on(spark, sf_dir, monkeypatch)
         raise ValueError("boom")
 
     specs = {
-        "boom": Q.QuerySpec(boom, None),
+        "boom": Q.QuerySpec(boom, "SELECT 1 AS id"),
         "bad_oracle": Q.QuerySpec(
             lambda s, d: s.range(1), "SELECT * FROM no_such_table"
         ),
-        "fine": Q.QuerySpec(lambda s, d: s.range(3), None),
+        "fine": Q.QuerySpec(
+            lambda s, d: s.range(3), "SELECT CAST(range AS BIGINT) AS id FROM range(3)"
+        ),
     }
     monkeypatch.setattr(Q, "all_queries", lambda: specs)
     results = run_all(spark, sf_dir)
     assert [(r.name, r.ok, r.spark_rows, r.oracle_rows) for r in results] == [
         ("boom", False, -1, -1),
         ("bad_oracle", False, -1, -1),
-        ("fine", True, 3, -1),
+        ("fine", True, 3, 3),
     ]
     assert results[0].detail == repr(ValueError("boom"))
     assert "no_such_table" in results[1].detail

@@ -23,9 +23,9 @@ def test_every_registry_entry_well_formed():
             if p.default is inspect.Parameter.empty
         ]
         assert len(params) == 2, f"{name}: signature must be (spark, sf_dir)"
-        assert spec.oracle is None or (
-            isinstance(spec.oracle, str) and "SELECT" in spec.oracle.upper()
-        ), f"{name}: oracle must be SQL or None"
+        assert isinstance(spec.oracle, str) and "SELECT" in spec.oracle.upper(), (
+            f"{name}: oracle must be SQL"
+        )
 
 
 def test_driver_window_is_exactly_sized_and_fronted():

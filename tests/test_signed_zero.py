@@ -77,11 +77,7 @@ def duck_sf001():
 @pytest.fixture(scope="module")
 def oracle_frames(duck_sf001):
     """Every registry oracle's output at sf0.01, fetched once."""
-    out = {}
-    for name, spec in all_queries().items():
-        if spec.oracle is not None:
-            out[name] = duck_sf001.execute(spec.oracle).df()
-    return out
+    return {name: duck_sf001.execute(spec.oracle).df() for name, spec in all_queries().items()}
 
 
 def test_no_negative_zero_in_any_oracle_output(oracle_frames):

@@ -1,9 +1,8 @@
 """``staging.py`` is the only module that knows where a stage lives, how
 a source is fingerprinted and how a stage is installed.
 
-Scans the package, ``bench.py`` and ``scripts/ann_scale.py`` (the
-scripts that stage or clean up layouts) for the formats and for the
-retired install protocols."""
+Scans the package and ``bench.py`` (the code that stages or cleans up
+layouts) for the formats and for the retired install protocols."""
 
 from __future__ import annotations
 
@@ -18,10 +17,7 @@ from db_loader_spark.staging import source_stamp, stage_path
 
 ROOT = Path(__file__).resolve().parents[1]
 STAGING = ROOT / "db_loader_spark" / "staging.py"
-SCANNED = sorted((ROOT / "db_loader_spark").rglob("*.py")) + [
-    ROOT / "bench.py",
-    ROOT / "scripts" / "ann_scale.py",
-]
+SCANNED = sorted((ROOT / "db_loader_spark").rglob("*.py")) + [ROOT / "bench.py"]
 # The lakehouse table format keeps its own commit pointer, also named
 # _CURRENT; it is a table's snapshot log, not a stage install.
 MANIFEST_FORMAT = {
