@@ -7,9 +7,8 @@ eval-shingle set) register it here via :func:`track` instead of calling
 tracked frame the moment the (small) result is materialized::
 
     from db_loader_spark import cache
-    from db_loader_spark.queries import settle
     ...
-    return settle(result, *cache.drain())
+    return cache.settle_drained(result)
 
 This is the cache-lifetime discipline: without it, each
 ``materialize=True`` operator call would pin MEMORY_AND_DISK blocks
@@ -98,27 +97,35 @@ def track(df: DataFrame) -> DataFrame:
 def settle_drained(
     result: DataFrame, *extra: DataFrame, checkpoints: tuple[DataFrame, ...] = ()
 ) -> DataFrame:
-    """The registry-wrapper epilogue: materialize the small ``result``
+    """The registry-wrapper epilogue: materialize the SMALL ``result``
     while the tracked caches are hot, then release them (plus any
     ``extra`` stage frames the wrapper persisted itself) and free the
     ``checkpoints``, the ``localCheckpoint`` frames ``result`` was
-    computed from (:func:`free_local_checkpoint`). No-op under
-    :func:`plan_only`."""
+    computed from (:func:`free_local_checkpoint`).
+
+    Without it, queries that persist big intermediates would pin
+    MEMORY_AND_DISK blocks for the whole session, and in a driver run
+    of 70+ queries those leaks accumulate and skew later timings.
+    Afterwards the only block still pinned is the result itself, and
+    the caller's later ``.collect()`` reads that tiny cache instead of
+    recomputing the released stages. Only for results that are small
+    by construction (counts, top-k), never fact-sized frames. No-op
+    under :func:`plan_only`: nothing persists and no job runs."""
     if _PLAN_ONLY:
         _tracked().clear()
         return result
-    from db_loader_spark.queries import settle
-
-    out = settle(result, *extra, *drain())
+    out = result.persist()
+    out.count()  # one cheap job: stages are hot, result is tiny
+    for df in (*extra, *drain()):
+        df.unpersist()
     for df in checkpoints:
         free_local_checkpoint(df)
     return out
 
 
 def drain() -> tuple[DataFrame, ...]:
-    """Hand the tracked frames to the caller (who unpersists them —
-    usually by passing them to ``queries.settle``) and clear the
-    registry."""
+    """Hand the tracked frames to the caller (who unpersists them) and
+    clear the registry."""
     reg = _tracked()
     out = tuple(reg)
     reg.clear()

@@ -405,7 +405,7 @@ def lsh_candidate_pairs(
     (``band_size=None``) persists it, because the tuner reads it three
     times before the join; with ``materialize`` (the default) that
     frame is registered in :mod:`db_loader_spark.cache` — registry
-    wrappers release it via ``settle(result, *cache.drain())``,
+    wrappers release it via ``cache.settle_drained(result)``,
     sessions driving this function directly call ``cache.release()``.
     ``materialize=False`` recomputes the signature per read instead.
     """
@@ -784,8 +784,7 @@ def simhash_near_pairs(
     ends in a ``groupBy(id)`` exchange that both join sides reuse; this
     signature is a shuffle-free projection, so there is no exchange to
     reuse. The frame is tracked in :mod:`db_loader_spark.cache` and
-    released by the registry wrappers' ``settle(result,
-    *cache.drain())``."""
+    released by the registry wrappers' ``cache.settle_drained``."""
     if materialize:
         from db_loader_spark import cache
 

@@ -120,7 +120,7 @@ def lsh_near_pairs(
     each re-running the scan + unrolled norm/bucket arithmetic — the
     simhash/minhash cache policy: the frame is tracked in
     :mod:`db_loader_spark.cache` and released by the registry wrappers'
-    ``settle(result, *cache.drain())`` the moment the pair result is
+    ``cache.settle_drained(result)`` the moment the pair result is
     materialized (this is the BIG cache of the family — n_tables ×
     corpus rows including the full vector — so an unreleased session
     lifetime here is exactly the leak VERDICT r4 flagged). At cluster

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from db_loader_spark.operators.ids import assign_file_ids
@@ -37,6 +37,19 @@ MARKER = r"-\*-"  # generation header marker (src/db_loader.clj:171,231)
 DELIM = r";+$"  # section delimiter (src/db_loader.clj:229)
 STATUS = r"(SUCCESS|FAILURE) at generation (\d+)"  # P9, regex fixed
 GEN_NO = r"(\d+)\s*$"  # generation number ending a marker line
+
+
+def run_status(line: Column | str) -> tuple[Column, Column]:
+    """P9 summary-line parse (summary-vals, src/db_loader.clj:204-209):
+    the ``SUCCESS``/``FAILURE`` word and the generation number of
+    ``line``, each ``''`` where ``line`` is no status line."""
+    return F.regexp_extract(line, STATUS, 1), F.regexp_extract(line, STATUS, 2)
+
+
+def run_uuid(filename: Column) -> Column:
+    """P16: the run uuid in a log file name, the token after a ``_``
+    and before the next ``.`` (src/db_loader.clj:273,283)."""
+    return F.regexp_extract(filename, r"_([^_.]+)\.", 1)
 
 
 class _KV(NamedTuple):
@@ -79,8 +92,6 @@ def parse_clojush_logs(
     spark: SparkSession,
     path: str,
     skip_nils: bool = True,
-    id_mode: str = "hash",
-    base_id: int = 0,
     user: str = "spark",
     problem_map: dict[str, str] | None = None,
     problem_name: str | None = None,
@@ -97,8 +108,6 @@ def parse_clojush_logs(
         spark,
         lines,
         skip_nils=skip_nils,
-        id_mode=id_mode,
-        base_id=base_id,
         user=user,
         problem_map=problem_map,
         problem_name=problem_name,
@@ -110,8 +119,6 @@ def parse_clojush_lines(
     spark: SparkSession,
     lines: DataFrame,
     skip_nils: bool = True,
-    id_mode: str = "hash",
-    base_id: int = 0,
     user: str = "spark",
     problem_map: dict[str, str] | None = None,
     problem_name: str | None = None,
@@ -146,14 +153,15 @@ def parse_clojush_lines(
     # resulting plain columns.
     if "file_mtime" not in lines.columns:
         lines = lines.withColumn("file_mtime", F.lit(None).cast("timestamp"))
+    status, status_gen = run_status("line")
     lines = (
         lines.withColumn("_delim_line", F.regexp_like("line", F.lit(DELIM)))
         .withColumn("_marker_line", F.regexp_like("line", F.lit(MARKER)))
         .withColumn("_gen_no", F.regexp_extract("line", GEN_NO, 1))
-        .withColumn("_status", F.regexp_extract("line", STATUS, 1))
-        .withColumn("_status_gen", F.regexp_extract("line", STATUS, 2))
+        .withColumn("_status", status)
+        .withColumn("_status_gen", status_gen)
     )
-    lines = assign_file_ids(lines, mode=id_mode, base_id=base_id)
+    lines = assign_file_ids(lines)
     routed = route_sections(
         seq_split(lines, F.expr("_delim_line")), F.expr("_marker_line")
     )
@@ -247,8 +255,6 @@ def append_sidecar_params(
     # uuid comes from the BASENAME — a directory component containing
     # '_…'.' would otherwise match first and yield a wrong uuid
     basename = F.element_at(F.split(F.col("logfile_location"), "/"), -1)
-    runs = experiments.select(
-        "id", F.regexp_extract(basename, r"_([^_.]+)\.", 1).alias("uuid")
-    )
+    runs = experiments.select("id", run_uuid(basename).alias("uuid"))
     extra = runs.join(F.broadcast(index), "uuid").select("id", "parameter", "value")
     return experiment.unionByName(extra)

@@ -10,7 +10,7 @@ guards (JN4) are broadcast/anti joins against the dim tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
@@ -20,6 +20,13 @@ from db_loader_spark.operators.sessionize import merge_continuations
 from db_loader_spark.sources.text_logs import read_log_lines
 
 BOUNDARY = r"Generation:|of Run:"  # P15 (src/parse_logs_ecj.clj:98-99)
+
+
+def normalize_key(key: Column) -> Column:
+    """P13 key normalization: ``key`` with every whitespace run removed,
+    'Fitness Mean' -> 'FitnessMean' (clean-data,
+    src/parse_logs_ecj.clj:118-123)."""
+    return F.regexp_replace(key, r"\s+", "")
 
 
 def parse_ecj_params(spark: SparkSession, path: str) -> DataFrame:
@@ -74,7 +81,7 @@ def ecj_log_eav(lines: DataFrame) -> DataFrame:
         .select(
             "file",
             "gen_group",
-            F.regexp_replace(F.trim(parts.getItem(0)), r"\s+", "").alias("param"),
+            normalize_key(F.trim(parts.getItem(0))).alias("param"),
             F.trim(parts.getItem(1)).alias("value"),
         )
         .filter((F.col("param") != "") & F.col("value").isNotNull())

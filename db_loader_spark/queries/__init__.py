@@ -42,27 +42,6 @@ class QuerySpec:
     doc: str = ""
 
 
-def settle(result: DataFrame, *stages: DataFrame) -> DataFrame:
-    """Cache-lifetime discipline for multi-stage queries: eagerly
-    materialize a SMALL result while the staged caches are hot, then
-    unpersist the corpus-sized intermediates before returning.
-
-    Queries that persist big intermediates (funnel stages, encoder
-    output) would otherwise pin MEMORY_AND_DISK blocks for the whole
-    session — in a driver run executing 70+ queries those leaks
-    accumulate and skew later timings. After ``settle`` the only block
-    still pinned is the result itself (a few rows), and the caller's
-    later ``.collect()`` reads that tiny cache instead of recomputing
-    the released stages. Only use on results that are small by
-    construction (counts, top-k); never on fact-sized frames.
-    """
-    out = result.persist()
-    out.count()  # one cheap job: stages are hot, result is tiny
-    for s in stages:
-        s.unpersist()
-    return out
-
-
 def diagnostic_queries() -> dict[str, QuerySpec]:
     """Verifier and diagnostic specs, value-checked against their DuckDB
     oracles by pytest (tests/test_oracle_queries.py) but kept out of the
@@ -108,56 +87,56 @@ GREEN = ("rows_match", "schema_match", "hash_match")
 # a CORRECTNESS file changes, and paste what it prints.
 DRIVER_WINDOW_SIZE = 50
 WINDOW = [
-    "a2_max_id",  # 0.18s
-    "a3_filtered_count",  # 0.28s
-    "curation_shard_assign",  # 0.32s
-    "w_moving_avg",  # 0.35s
-    "curation_weighted_sample",  # 0.38s
-    "multimodal_frame_sample",  # 0.41s
-    "q1_pricing_summary",  # 0.42s
-    "text_quality_score",  # 0.42s
-    "jn1_dim_lookup_join",  # 0.43s
-    "dedup_exact",  # 0.49s
-    "a_salted_agg",  # 0.58s
-    "jn4_anti_join_idempotence",  # 0.63s
-    "w_running_sum",  # 0.64s
-    "jn_fuzzy_join",  # 0.64s
-    "a_moments",  # 0.66s
-    "t_session_window",  # 0.72s
-    "t_sliding_counts",  # 0.74s
-    "a_histogram",  # 0.75s
-    "jn7_fk_validation",  # 0.78s
-    "q5_region_revenue",  # 0.78s
-    "a_hash_sample",  # 0.78s
-    "a_table_fingerprint",  # 0.82s
-    "a_hll_distinct",  # 0.83s
-    "a_profile_stats",  # 0.90s
-    "cdc_snapshot_diff",  # 0.94s
-    "p_parse_suite",  # 1.00s
-    "text_lm_score",  # 1.05s
-    "scan_manifest_pruned",  # 1.10s
-    "dedup_bloom_prefilter",  # 1.14s
-    "text_bm25_topk",  # 1.23s
-    "a_quantile_sketch",  # 1.23s
-    "jn2_contains_join",  # 1.30s
-    "t_snapshot_incremental",  # 1.34s
-    "t_sliding_hll",  # 1.47s
-    "ann_bruteforce_topk",  # 1.51s
-    "multimodal_features",  # 1.94s
-    "t_stream_lakehouse",  # 1.97s
-    "text_bpe_pack",  # 2.21s
-    "text_cms_topk",  # 2.24s
-    "t_stream_mview",  # 2.26s
-    "curation_funnel",  # 2.61s
-    "g_triangle_count",  # 2.63s
-    "text_pack_bins",  # 2.67s
-    "dedup_semantic",  # 3.19s
-    "ann_ivf_disk_topk",  # 3.23s
-    "t_snapshot_upsert",  # 3.23s
-    "t_stream_ann_index",  # 4.95s
-    "ann_pq_topk",  # 6.27s
-    "t_stream_sessions",  # 6.48s
-    "ann_ivfpq_topk",  # 10.38s
+    "a3_filtered_count",  # 0.19s
+    "a_hash_sample",  # 0.25s
+    "dedup_exact",  # 0.31s
+    "a2_max_id",  # 0.32s
+    "w_running_sum",  # 0.36s
+    "a_histogram",  # 0.38s
+    "curation_weighted_sample",  # 0.40s
+    "text_quality_score",  # 0.41s
+    "multimodal_frame_sample",  # 0.42s
+    "q5_region_revenue",  # 0.44s
+    "a_moments",  # 0.44s
+    "t_sliding_counts",  # 0.47s
+    "jn2_contains_join",  # 0.48s
+    "jn4_anti_join_idempotence",  # 0.48s
+    "jn7_fk_validation",  # 0.50s
+    "jn_fuzzy_join",  # 0.50s
+    "q1_pricing_summary",  # 0.51s
+    "a_salted_agg",  # 0.55s
+    "jn1_dim_lookup_join",  # 0.56s
+    "text_cms_topk",  # 0.58s
+    "t_session_window",  # 0.61s
+    "a_table_fingerprint",  # 0.63s
+    "w_moving_avg",  # 0.64s
+    "a_hll_distinct",  # 0.64s
+    "p_parse_suite",  # 0.77s
+    "a_profile_stats",  # 0.84s
+    "scan_manifest_pruned",  # 0.94s
+    "text_lm_score",  # 0.95s
+    "cdc_snapshot_diff",  # 1.09s
+    "dedup_bloom_prefilter",  # 1.11s
+    "a_quantile_sketch",  # 1.16s
+    "text_bm25_topk",  # 1.21s
+    "t_sliding_hll",  # 1.23s
+    "t_snapshot_incremental",  # 1.29s
+    "ann_bruteforce_topk",  # 1.33s
+    "multimodal_features",  # 1.51s
+    "t_snapshot_upsert",  # 1.79s
+    "t_stream_lakehouse",  # 1.83s
+    "t_stream_ann_index",  # 1.88s
+    "curation_shard_assign",  # 2.01s
+    "t_stream_mview",  # 2.10s
+    "text_pack_bins",  # 2.22s
+    "text_bpe_pack",  # 2.58s
+    "curation_funnel",  # 2.72s
+    "ann_ivf_disk_topk",  # 2.94s
+    "g_triangle_count",  # 3.63s
+    "dedup_semantic",  # 4.60s
+    "ann_pq_topk",  # 6.23s
+    "t_stream_sessions",  # 6.85s
+    "ann_ivfpq_topk",  # 10.91s
 ]
 
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

@@ -3,17 +3,24 @@
 The reference's signature operator is `seq-split` (J1,
 src/db_loader.clj:54-63): split an ordered stream into sections on
 delimiter rows. Here the ordered stream is `events` per user (ordered by
-event_id) and the delimiter is `event_type = 'error'` — the exact
-cumulative-sum-window formulation the real log pipeline
-(db_loader_spark.plans.clojush) uses on text lines.
+event_id) and the delimiter is `event_type = 'error'`. The witnesses
+call the operators and parse rules the log pipelines ship
+(operators.sessionize, plans.clojush, plans.ecj) with Column flags over
+`events` in place of regexes over text lines.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
+from db_loader_spark.operators.sessionize import (
+    merge_continuations,
+    route_sections,
+    seq_split,
+)
+from db_loader_spark.plans.clojush import run_status, run_uuid
+from db_loader_spark.plans.ecj import normalize_key
 from db_loader_spark.queries import QuerySpec
 from db_loader_spark.session import local_frame
 from db_loader_spark.tables import load_table
@@ -23,28 +30,23 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
 
-def _with_sections(e: DataFrame) -> DataFrame:
-    """J1 core: section_id = running count of delimiters at-or-before row."""
-    is_delim = F.when(F.col("event_type") == "error", 1).otherwise(0)
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("event_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+def _sectioned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J1 core: each user's events split on their ``error`` events by
+    :func:`seq_split`, the delimiters consumed."""
+    return seq_split(
+        _events(spark, sf_dir),
+        F.col("event_type") == "error",
+        file_col="user_id",
+        order_col="event_id",
     )
-    return e.withColumn("section_id", F.sum(is_delim).over(w))
 
 
 def j1_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 seq-split: delimiter-based sessionization, delimiter consumed
     (src/db_loader.clj:54-63,229)."""
-    e = _with_sections(_events(spark, sf_dir))
-    return (
-        e.filter(F.col("event_type") != "error")
-        .groupBy("user_id", "section_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("session_value"),
-        )
+    return _sectioned(spark, sf_dir).groupBy("user_id", "section_id").agg(
+        F.count("*").alias("n_events"),
+        F.round(F.sum("value"), 2).alias("session_value"),
     )
 
 
@@ -63,31 +65,19 @@ GROUP BY user_id, section_id
 
 def j2_section_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: positional/content section routing (parse-log,
-    src/db_loader.clj:228-243): classify each section as header (first),
-    summary (last), or generation (contains the marker) per user."""
-    e = _with_sections(_events(spark, sf_dir)).filter(F.col("event_type") != "error")
-    per_user = W.partitionBy("user_id")
-    sec = (
-        e.groupBy("user_id", "section_id")
-        .agg(
-            F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-                "has_marker_i"
-            )
-        )
-        .withColumn("min_sec", F.min("section_id").over(per_user))
-        .withColumn("max_sec", F.max("section_id").over(per_user))
+    src/db_loader.clj:228-243): :func:`route_sections` classifies each
+    section as header (first), summary (last), or generation (contains
+    a ``purchase`` marker) per user."""
+    routed = route_sections(
+        _sectioned(spark, sf_dir),
+        F.col("event_type") == "purchase",
+        file_col="user_id",
     )
-    routed = sec.select(
-        "user_id",
-        "section_id",
-        F.when(F.col("section_id") == F.col("min_sec"), "header")
-        .when(F.col("section_id") == F.col("max_sec"), "summary")
-        .when(F.col("has_marker_i") == 1, "generation")
-        .otherwise("noise")
-        .alias("section_kind"),
-    )
-    return routed.groupBy("user_id", "section_kind").agg(
-        F.count("*").alias("n_sections")
+    return (
+        routed.select("user_id", "section_id", "section_kind")
+        .distinct()
+        .groupBy("user_id", "section_kind")
+        .agg(F.count("*").alias("n_sections"))
     )
 
 
@@ -167,7 +157,8 @@ FROM (
 def p9_summary_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P9: SUCCESS/FAILURE summary-line parse (summary-vals,
     src/db_loader.clj:204-209, with the reference's char-class regex bug
-    fixed): build status lines from events, parse them back, aggregate."""
+    fixed): build status lines from events, parse them back with the
+    Clojush plan's :func:`run_status`, aggregate."""
     e = _events(spark, sf_dir)
     line = F.concat(
         F.when(F.col("event_type") == "purchase", F.lit("SUCCESS")).otherwise(
@@ -176,12 +167,9 @@ def p9_summary_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(" at generation "),
         (F.col("event_id") % 100).cast("string"),
     )
+    status, gen = run_status(line)
     parsed = e.select(
-        (F.regexp_extract(line, r"(SUCCESS|FAILURE) at generation (\d+)", 1) == "SUCCESS"
-         ).alias("successp"),
-        F.regexp_extract(line, r"(SUCCESS|FAILURE) at generation (\d+)", 2)
-        .cast("int")
-        .alias("maxgen"),
+        (status == "SUCCESS").alias("successp"), gen.cast("int").alias("maxgen")
     )
     return parsed.groupBy("successp").agg(
         F.count("*").alias("n_runs"), F.max("maxgen").alias("max_maxgen")
@@ -204,11 +192,11 @@ FROM lines GROUP BY 1
 
 
 def p13_key_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P13: whitespace-strip key normalization ('Fitness Mean'→'FitnessMean',
-    clean-data src/parse_logs_ecj.clj:118-123) applied to part names."""
+    """P13: the ECJ plan's key normalization (:func:`normalize_key`,
+    'Fitness Mean'→'FitnessMean') applied to part names."""
     p = load_table(spark, sf_dir, "part")
     return (
-        p.select(F.regexp_replace(F.col("p_name"), r"\s+", "").alias("norm_name"))
+        p.select(normalize_key(F.col("p_name")).alias("norm_name"))
         .groupBy("norm_name")
         .agg(F.count("*").alias("cnt"))
     )
@@ -222,31 +210,19 @@ FROM part GROUP BY 1
 
 def p14_continuation_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P14: continuation-line merge (group-gen,
-    src/parse_logs_ecj.clj:107-116): non-anchor rows ('view' events) fold
-    into the most recent anchor row; bodies concatenate in order."""
-    e = _events(spark, sf_dir)
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("event_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    src/parse_logs_ecj.clj:107-116) by :func:`merge_continuations`:
+    non-anchor rows ('view' events) fold into the most recent anchor
+    row; bodies concatenate in order."""
+    merged = merge_continuations(
+        _events(spark, sf_dir),
+        F.col("event_type") != "view",
+        file_col="user_id",
+        order_col="event_id",
+        line_col="event_type",
     )
-    anchored = e.withColumn(
-        "anchor_id",
-        F.max(F.when(F.col("event_type") != "view", F.col("event_id"))).over(w),
-    ).filter(F.col("anchor_id").isNotNull())
-    merged = (
-        anchored.groupBy("user_id", "anchor_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("event_id", "event_type"))),
-                    lambda s: s.event_type,
-                ),
-                " ",
-            ).alias("merged_line")
-        )
+    return merged.groupBy(F.col("event_type").alias("merged_line")).agg(
+        F.count("*").alias("cnt")
     )
-    return merged.groupBy("merged_line").agg(F.count("*").alias("cnt"))
 
 
 _P14_ORACLE = """
@@ -267,12 +243,12 @@ SELECT merged_line, COUNT(*) AS cnt FROM merged GROUP BY 1
 
 
 def p16_uuid_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P16: filename→uuid extraction (token after last '_', before first
-    '.', src/db_loader.clj:273,283) over synthesized run filenames."""
+    """P16: the Clojush plan's filename→uuid extraction
+    (:func:`run_uuid`) over synthesized run filenames."""
     d = load_table(spark, sf_dir, "documents")
     fname = F.concat(F.lit("run_"), F.col("source"), F.lit(".log"))
     return (
-        d.select(F.regexp_extract(fname, r"_([^_.]+)\.", 1).alias("uuid"))
+        d.select(run_uuid(fname).alias("uuid"))
         .groupBy("uuid")
         .agg(F.count("*").alias("n_files"))
     )
@@ -491,10 +467,10 @@ FROM ev GROUP BY gennum
 
 
 def p_parse_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION-COMPATIBLE MERGE of the six single-expression parser keys
-    (r8 steady-state consolidation, VERDICT r7 #2 option 2): P1/P2 kv
-    split, P5/P6/P12 nil-skip, P7 trailing int, P13 key normalize, P16
-    uuid extract, P18 datetime format — each parser's FULL value
+    """UNION-COMPATIBLE MERGE of the six single-expression parser keys:
+    P1/P2 kv split, P5/P6/P12 nil-skip, P7 trailing int, P13 key
+    normalize, P16 uuid extract, P18 datetime format (P13 and P16 by
+    the log plans' own rules) — each parser's FULL value
     distribution lands in one hashed frame tagged by parser name, so
     the merge spends one driver slot without weakening any parser's
     external evidence (the per-parser functions stay importable and

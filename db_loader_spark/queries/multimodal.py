@@ -82,18 +82,16 @@ def multimodal_embed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length("text") > 0)
     )
-    # persist: brute_force_topk references the embedding frame from both
+    # tracked: brute_force_topk references the embedding frame from both
     # its query and corpus branches, which would run the mapInPandas
     # encoder twice -- with a real model that doubles the single most
-    # expensive stage. CacheManager dedups the entry by plan across
-    # repeated builds.
-    from db_loader_spark.queries import settle
+    # expensive stage. The settle keeps the top-k rows and releases the
+    # encoder output.
+    from db_loader_spark import cache
 
-    emb = extract_embedding(attach_binary(docs)).persist()
+    emb = cache.track(extract_embedding(attach_binary(docs)))
     topk = brute_force_topk(emb, F.col("vec_id") < 5, k=3, dim=EMBED_DIM)
-    # top-k rows persist; the encoder-output cache is released (ADVICE
-    # r2: the persisted embedding frame leaked for the session lifetime).
-    return settle(topk, emb)
+    return cache.settle_drained(topk)
 
 
 # byte-histogram embedding in SQL. Testdata text is ASCII, so per-char

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from db_loader_spark.operators.idempotence import anti_join_new, fk_violations
 from db_loader_spark.queries import QuerySpec
 from db_loader_spark.session import data_sized_shuffle, local_frame
 from db_loader_spark.tables import load_table
@@ -395,14 +396,15 @@ GROUP BY word
 
 
 def jn4_anti_join_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JN4: exists-check-then-insert as a left-anti join
+    """JN4: exists-check-then-insert as :func:`anti_join_new`
     (src/parse_logs_ecj.clj:51-59,71-77): orders not yet present in the
     'already loaded' set (orders that have lineitems)."""
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    return o.join(
-        l.select("l_orderkey").distinct(), o.o_orderkey == F.col("l_orderkey"), "left_anti"
-    ).agg(F.count("*").alias("new_cnt"))
+    loaded = _t(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("o_orderkey")
+    )
+    return anti_join_new(_t(spark, sf_dir, "orders"), loaded, ["o_orderkey"]).agg(
+        F.count("*").alias("new_cnt")
+    )
 
 
 _JN4_ORACLE = """
@@ -412,23 +414,19 @@ WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
 
 
 def jn7_fk_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JN7: declared-FK integrity as validation anti-joins
+    """JN7: declared-FK integrity as :func:`fk_violations` anti-joins
     (scripts/create_tables.sql:20,35-37,45,53)."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    v1 = (
-        l.join(o.select("o_orderkey"), l.l_orderkey == F.col("o_orderkey"), "left_anti")
-        .agg(F.count("*").alias("violations"))
-        .select(F.lit("lineitem->orders").alias("fk"), "violations")
+
+    def violations(child: str, parent: str, fk: str, pk: str) -> DataFrame:
+        return (
+            fk_violations(_t(spark, sf_dir, child), _t(spark, sf_dir, parent), fk, pk)
+            .agg(F.count("*").alias("violations"))
+            .select(F.lit(f"{child}->{parent}").alias("fk"), "violations")
+        )
+
+    return violations("lineitem", "orders", "l_orderkey", "o_orderkey").unionByName(
+        violations("customer", "nation", "c_nationkey", "n_nationkey")
     )
-    v2 = (
-        c.join(n.select("n_nationkey"), c.c_nationkey == F.col("n_nationkey"), "left_anti")
-        .agg(F.count("*").alias("violations"))
-        .select(F.lit("customer->nation").alias("fk"), "violations")
-    )
-    return v1.unionByName(v2)
 
 
 _JN7_ORACLE = """
@@ -1180,7 +1178,7 @@ def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     The edge list feeds FOUR consumers (degree count, orientation,
     the closing-edge probe, n_edges); without pinning it, Spark
     re-runs the edge-build (a shuffle + two distincts) per consumer.
-    Tracked-cache contract: released by settle before returning.
+    Tracked-cache contract: released by settle_drained before returning.
 
     Broadcasts are MEASURED decisions (the decontaminate pattern,
     functions/dedup.py): the edge count m and node count n — needed
@@ -1193,7 +1191,6 @@ def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor memory (100 TB shape: billions of edges).
     """
     from db_loader_spark import cache
-    from db_loader_spark.queries import settle
 
     # sized to the input like curation_e2e: ~20 jobs over a small graph
     # would otherwise each pay the session's shuffle width in tasks
@@ -1256,7 +1253,7 @@ def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(n_edges).cast("long").alias("n_edges"),
             "n_triangles",
         )
-        return settle(out, *cache.drain())
+        return cache.settle_drained(out)
 
 
 _TRIANGLE_ORACLE = f"""
@@ -1298,7 +1295,7 @@ def g_pagerank(
     broadcast-vector SpMV via `aggregate` HOFs (interpreted, not
     codegen'd; plus Catalyst map lookup is a LINEAR scan — 190 s).
 
-    r15 exchange elimination (guide §2.4 "two operations keyed the
+    Exchange elimination (guide §2.4 "two operations keyed the
     same way share one exchange"): when the score table is broadcast-
     sized (measured gate on n AND m — n budgeted for all `iterations`
     concurrently-live relations, m bounding the per-broadcast build
@@ -1324,7 +1321,6 @@ def g_pagerank(
     by node id on both sides, so the selected set is deterministic.
     """
     from db_loader_spark import cache
-    from db_loader_spark.queries import settle
 
     e = cache.track(_cooccurrence_edges(spark, sf_dir))
     directed = e.select(
@@ -1335,7 +1331,7 @@ def g_pagerank(
     m = e.count()  # cached by the line above — a metadata-cost job
     teleport = (1.0 - damping) / n
     # Measured broadcast gate (~48 bytes per score row), sized for the
-    # WORST case the single lazily-declared plan creates (r15 review):
+    # WORST case the single lazily-declared plan creates:
     #  - memory: every iteration's BroadcastExchange stays referenced
     #    by the one plan until the job finishes, so ALL `iterations`
     #    score relations are live at once — the 256 MB budget divides
@@ -1397,7 +1393,7 @@ def g_pagerank(
         .orderBy(F.desc("score_ppm"), F.asc("node"))
         .limit(20)
     )
-    return settle(out, *cache.drain())
+    return cache.settle_drained(out)
 
 
 def _pagerank_oracle(iterations: int = 6, damping: float = 0.85) -> str:

@@ -120,23 +120,18 @@ def stream_event_rollup(
     ``append`` + a real sink, where the watermark also bounds state;
     complete mode keeps all windows in state by design.
 
-    ``ts`` decode is schema-adaptive (nanos-as-long legacy or native
-    TIMESTAMP micros), same as tables.load_table.
+    ``ts`` is read and decoded as tables.load_table reads it
+    (nanos-as-long legacy or native TIMESTAMP micros).
     """
-    from db_loader_spark.tables import decode_ts
+    from db_loader_spark.tables import decode_ts, read_raw_events
 
+    static = read_raw_events(spark, events_dir)
     # The streaming file source wants a directory; events.parquet sits in
     # the sf dir next to the other tables, so glob-filter within it.
     base = events_dir
     glob = None
     if base.endswith(".parquet"):
         base, glob = os.path.dirname(base), os.path.basename(base)
-    try:
-        static = spark.read.parquet(os.path.join(base, glob) if glob else base)
-    except Exception:
-        # TIMESTAMP(NANOS) file on a vanilla session — see tables._load_events.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        static = spark.read.parquet(os.path.join(base, glob) if glob else base)
     reader = spark.readStream.schema(static.schema)
     if glob:
         reader = reader.option("pathGlobFilter", glob)

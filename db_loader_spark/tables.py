@@ -92,15 +92,21 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     agree exactly with DuckDB's naive TIMESTAMP (verified by the r1/r2
     hash-matched correctness rows).
     """
+    df = read_raw_events(spark, path)
+    return df.withColumn("ts", decode_ts(df.schema["ts"].dataType))
+
+
+def read_raw_events(spark: SparkSession, path: str) -> DataFrame:
+    """The events parquet at ``path`` (a file or a directory) with
+    ``ts`` as stored; :func:`decode_ts` of its type canonicalizes it."""
     try:
-        df = _read_parquet(spark, path)
+        return _read_parquet(spark, path)
     except Exception:
         # Vanilla session + TIMESTAMP(NANOS) file: the read itself throws
         # PARQUET_TYPE_ILLEGAL. nanosAsLong has no per-read form, so the
         # fallback is unavoidably session-wide; only touched on failure.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, path)
-    return df.withColumn("ts", decode_ts(df.schema["ts"].dataType))
+        return _read_parquet(spark, path)
 
 
 def decode_ts(dt):

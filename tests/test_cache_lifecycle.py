@@ -3,7 +3,7 @@
 The operators that persist shared intermediates (MinHash/SimHash
 signatures, the embedding-LSH prepared frame, decontamination's eval
 shingles) register them in db_loader_spark.cache; registry wrappers
-release them via ``settle(result, *cache.drain())`` the moment the
+release them via ``cache.settle_drained(result)`` the moment the
 small result is materialized. These tests pin that contract: after the
 dedup/ANN registry queries run, the ONLY DataFrame-cache entries alive
 are the settled results themselves (caller-owned — unpersisting them
@@ -95,4 +95,19 @@ def test_release_escape_hatch(spark):
     assert pairs.count() >= 0
     assert len(cache._tracked()) == 1
     assert cache.release() == 1
+    assert not cache._tracked()
+
+
+def test_multimodal_embed_ann_plans_without_jobs(spark):
+    """A plan-only build of the settling multimodal wrapper persists
+    nothing and runs no job: its settle honours ``plan_only``."""
+    from db_loader_spark.queries import diagnostic_queries
+    from db_loader_spark.trace import trace
+
+    build = diagnostic_queries()["multimodal_embed_ann"].spark
+    with cache.plan_only():
+        build(spark, SF)  # warm: table schemas
+        with trace(spark) as traced:
+            build(spark, SF)
+    assert traced["jobs"] == 0, traced
     assert not cache._tracked()

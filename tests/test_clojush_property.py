@@ -14,6 +14,7 @@ from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from db_loader_spark.cache import free_local_checkpoint
+from db_loader_spark.operators.ids import assign_file_ids
 from db_loader_spark.plans.clojush import parse_clojush_lines
 from db_loader_spark.session import local_frame
 
@@ -33,11 +34,11 @@ def _kv(line: str, sep: str) -> tuple[str, str] | None:
 
 def model(files: dict[str, list[str]], skip_nils: bool) -> dict[str, list[tuple]]:
     out: dict[str, list[tuple]] = {t: [] for t in ("experiment", "experiments", "generations", "summary")}
-    # dense ids (base 0) rank the files that have at least one line
-    for rid, name in enumerate(sorted(f for f in files if files[f]), start=1):
+    # rows carry their file's name where the engine carries its run id
+    for rid in sorted(files):
         sections: dict[int, list[str]] = {}
         sec = 0
-        for line in files[name]:
+        for line in files[rid]:
             if DELIM.search(line):
                 sec += 1
             else:
@@ -75,17 +76,20 @@ def model(files: dict[str, list[str]], skip_nils: bool) -> dict[str, list[tuple]
 def _engine(spark, files: dict[str, list[str]], skip_nils: bool, persist: bool) -> dict[str, list[tuple]]:
     rows = [(f, n, line) for f, lines in files.items() for n, line in enumerate(lines)]
     lines = local_frame(spark, rows, "file string, line_no long, line string")
-    tables = parse_clojush_lines(
-        spark, lines, skip_nils=skip_nils, id_mode="dense", persist_shared=persist
-    )
+    tables = parse_clojush_lines(spark, lines, skip_nils=skip_nils, persist_shared=persist)
     shared = tables.pop("_shared", None)
+    names = local_frame(spark, [(f,) for f in files], "file string")
+    file_of = {r["id"]: r["file"] for r in assign_file_ids(names).collect()}
     cols = {
         "experiment": ("id", "parameter", "value"),
         "experiments": ("id", "problem_name", "clojush_version"),
         "generations": ("id", "gennum", "parameter", "value"),
         "summary": ("id", "successp", "maxgen"),
     }
-    out = {t: [tuple(r) for r in tables[t].select(*c).collect()] for t, c in cols.items()}
+    out = {
+        t: [(file_of[r[0]], *r[1:]) for r in tables[t].select(*c).collect()]
+        for t, c in cols.items()
+    }
     if shared is not None:
         free_local_checkpoint(shared)
     return out

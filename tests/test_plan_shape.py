@@ -548,13 +548,14 @@ def test_triangle_count_joins_all_broadcast(plans):
     big oriented-edge frame never re-shuffles, and nothing
     degenerates to a nested loop. Count basis: TREE nodes only (the
     detail section prints each node a second time), and plan_only
-    expands the uncached ``adj`` subtree under both sides of the
-    probe join, so the 3 logical joins appear as 8 tree nodes — an
-    exact pin, so a shape change (a dropped broadcast, a
-    re-duplicated probe) fails loudly instead of hiding inside a >=."""
+    expands the uncached ``adj`` subtree, with its two degree joins,
+    under both sides of the probe join, so the 3 logical joins appear
+    as 2 + 2 + 1 = 5 tree nodes — an exact pin, so a shape change (a
+    dropped broadcast, a re-duplicated probe) fails loudly instead of
+    hiding inside a >=."""
     s = plans("g_triangle_count")
     tree_joins = s.count("BroadcastHashJoin Inner BuildRight (")
-    assert tree_joins == 8, f"{tree_joins} tree BroadcastHashJoin nodes:\n{s}"
+    assert tree_joins == 5, f"{tree_joins} tree BroadcastHashJoin nodes:\n{s}"
     assert "SortMergeJoin" not in s, s
     assert "CartesianProduct" not in s and "BroadcastNestedLoopJoin" not in s, s
 

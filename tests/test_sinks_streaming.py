@@ -228,7 +228,7 @@ def test_stream_log_tables_exactly_once(spark, tmp_path):
 
     from db_loader_spark.streaming.file_ingest import stream_log_tables
 
-    q = stream_log_tables(spark, str(in_dir), out_dir, ckpt, id_mode="hash")
+    q = stream_log_tables(spark, str(in_dir), out_dir, ckpt)
     q.awaitTermination(120)
     exp1 = spark.read.parquet(f"{out_dir}/experiment")
     assert exp1.count() == 2  # p1, Clojush version
@@ -236,7 +236,7 @@ def test_stream_log_tables_exactly_once(spark, tmp_path):
 
     # second file arrives; rerun with same checkpoint → ONLY it is ingested (T2)
     (in_dir / "run_two.log").write_text(LOG.replace("aaa", "bbb"))
-    q2 = stream_log_tables(spark, str(in_dir), out_dir, ckpt, id_mode="hash")
+    q2 = stream_log_tables(spark, str(in_dir), out_dir, ckpt)
     q2.awaitTermination(120)
     exp2 = spark.read.parquet(f"{out_dir}/experiment")
     assert exp2.count() == 4  # 2 + 2, no re-processing of run_one

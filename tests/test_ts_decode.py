@@ -91,3 +91,28 @@ def test_real_testdata_reads(spark, sf_dir):
     df = load_table(spark, sf_dir, "events")
     assert isinstance(df.schema["ts"].dataType, TimestampType)
     assert df.limit(1).count() == 1
+
+
+def test_stream_rollup_reads_nanos_events_like_micros(spark, tmp_path):
+    """stream_event_rollup reads events through the same reader as
+    load_table: a TIMESTAMP(NANOS) file on a session that does not read
+    nanos as long rolls up exactly as the MICROS file of the same
+    instants."""
+    from db_loader_spark.session import scoped_conf
+    from db_loader_spark.streaming.file_ingest import stream_event_rollup
+
+    def rollup(ts_array, name: str) -> set:
+        d = tmp_path / name
+        d.mkdir()
+        _write_events(d, ts_array)
+        q = stream_event_rollup(spark, str(d / "events.parquet"), query_name=name)
+        q.awaitTermination()
+        return {tuple(r) for r in spark.table(name).collect()}
+
+    micros = rollup(pa.array(_US, pa.timestamp("us")), "rollup_micros")
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "false"}):
+        nanos = rollup(
+            pa.array([us * 1000 + 789 for us in _US], pa.timestamp("ns")),
+            "rollup_nanos",
+        )
+    assert nanos == micros and len(micros) == 2
